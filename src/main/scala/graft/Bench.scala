@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-contract benchmark: runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
@@ -13,28 +11,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // without this, a cached (leased) frame's plan compiles WITHOUT AQE:
-      // its static shuffle.partitions exchanges and unadapted joins then
-      // execute inside whichever consumer job cold-builds the cache —
-      // measured 14.8-23.7 executor-CPU-s vs 4.4-4.9 for q99's pair lease
-      // under the CC pin job at sf0.1 (Q99Prof), same results either way
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // r21: the JVM-wide generated-class cache defaults to 100 entries
-      // and q188's composed chain alone generates 101 distinct classes —
-      // it evicts ITSELF, so even the warm pass re-runs Janino (measured
-      // 319 ms of recompiles on q188 pass-2, 360 ms on q189, and zero at
-      // 2000 entries; CodegenProf). A code cache, not a result cache:
-      // every pass still computes from the parquet inputs.
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // JVM/codegen warmup on the smallest query so the first measured entry
@@ -113,7 +90,7 @@ object Bench {
           // pass pins ~650 MB (150 MB leg) / ~4.4 GB (1 GB leg) of row
           // blocks that GedcomGraph's contract says a long-lived caller
           // must release per batch; unreleased, pass N timed pass N-1's
-          // eviction/spill storm (GedLeg A/B: warm passes 5.0-18.7 s
+          // eviction/spill storm (repeat-pass A/B: warm passes 5.0-18.7 s
           // leaked vs 3.4-7.2 s released on the same quiet machine). The
           // release runs AFTER the timestamp, outside the timed pass.
           res.graph.release()

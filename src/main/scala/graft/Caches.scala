@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
   * cannot unpersist themselves: the frames must stay resident until the
   * RETURNED DataFrame is consumed (an action the builder never sees), so
   * the release point is necessarily the caller's. The gate harnesses
-  * (Bench/Verify/ScaleBench/QTime) call `spark.catalog.clearCache()`
+  * (Bench/Verify/ScaleBench/Prof) call `spark.catalog.clearCache()`
   * after every query; a LIBRARY caller composing these operators calls
   * [[Caches.release]] after consuming each result instead — without it,
   * repeated calls accumulate MEMORY_AND_DISK blocks (one or two leased

@@ -4,12 +4,12 @@ import org.apache.spark.sql.DataFrame
 
 /** Plan-evidence tap for operators whose REGISTERED frame is an eager
   * `localCheckpoint` LogicalRDD (the iterative graph family): the
-  * interesting physical plans — the loop-round joins, the wedge closure —
+  * interesting physical plans — the loop-round joins, the triangle closing —
   * execute while the frame is being BUILT and are invisible to a
   * top-level `explain` on the returned frame. Operators call
   * [[PlanProbe.emit]] at their key internal frames; the call is a
   * thread-local null check (zero cost) unless a harness installed a sink
-  * via [[PlanProbe.withSink]] (tools/PlanDump captures
+  * via [[PlanProbe.withSink]] (`graft.tools.Prof` counts
   * `explain("formatted")` of every emitted frame for the optimization
   * round's before/after plan records).
   */

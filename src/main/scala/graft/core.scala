@@ -56,13 +56,18 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 
+  /** File bytes per spread partition: [[documentsSpread]] 64 KB,
+    * [[lineitemSpread]] 1 MB. */
+  private val DocSpreadBytes = 1L << 16
+  private val LineitemSpreadBytes = 1L << 20
+
   /** [[documents]] spread for heavy fused scan work — OPT-IN per call
     * site (tokenize/shingle/signature pipelines), not the default:
     * consumers whose per-row work is light (q158's map-side
     * canonicalization, fixture generators) would pay the exchange for
     * nothing, and several pin their exchange counts. */
   def documentsSpread(s: SparkSession, d: String): DataFrame =
-    spread(s, d, "documents", "doc_id", "spark.graft.docSpreadBytes", 1L << 16)
+    spread(s, d, "documents", "doc_id", DocSpreadBytes)
 
   /** [[lineitem]] spread for the graph-prelude pair generators — OPT-IN
     * per call site, same gate as [[documentsSpread]]. The co-purchase /
@@ -76,7 +81,7 @@ object Tables {
     * both sides. Relational consumers keep the bare scan (their fused
     * work is cheap arithmetic; several pin exchange counts). */
   def lineitemSpread(s: SparkSession, d: String): DataFrame =
-    spread(s, d, "lineitem", "l_orderkey", "spark.graft.lineitemSpreadBytes", 1L << 20)
+    spread(s, d, "lineitem", "l_orderkey", LineitemSpreadBytes)
 
   /** Spread a small single-file scan across the session parallelism before
     * expensive per-row work. The driver testdata ships each table as ONE
@@ -108,10 +113,10 @@ object Tables {
     *
     * The partition COUNT is derived from the data, not the core count
     * (r20 verdict item 2): ceil(fileBytes / chunk) capped at
-    * shuffle.partitions, where `chunk` (`chunkConf`, per-table default —
-    * file bytes per spread partition, sized to the table's fused per-row
-    * work) keeps per-task fixed costs (sort/hash init, shuffle segment
-    * setup, codegen entry) amortized over real work. The previous
+    * shuffle.partitions, where `chunk` (per table: file bytes per spread
+    * partition, sized to the table's fused per-row work) keeps per-task
+    * fixed costs (sort/hash init, shuffle segment setup, codegen entry)
+    * amortized over real work. The previous
     * n = shuffle.partitions fanned a 0.6 MB documents file over 32 tasks
     * at 32 cores: the driver's 8-vs-32-core scaling block read the cost
     * directly (spread queries ran FASTER at 8 cores — q65 0.39, q141-143
@@ -119,7 +124,7 @@ object Tables {
     * didn't. A data-derived n is the same at every core count, so the
     * measurement follows the data. */
   private def spread(s: SparkSession, d: String, name: String,
-      key: String, chunkConf: String, chunkDefault: Long): DataFrame = {
+      key: String, chunk: Long): DataFrame = {
     val df = table(s, d, name)
     val bytes =
       try java.nio.file.Files.size(java.nio.file.Paths.get(s"$d/$name.parquet"))
@@ -133,9 +138,6 @@ object Tables {
       catch { case _: Exception => 128L * 1024 * 1024 }
     if (bytes >= maxN.toLong * split) df // production file: splits naturally
     else {
-      val chunk = s.conf.getOption(chunkConf)
-        .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
-        .getOrElse(chunkDefault)
       val n = math.max(1L, math.min(maxN.toLong,
         (bytes + chunk - 1L) / chunk)).toInt
       if (n <= 1) df else df.repartition(n, col(key))

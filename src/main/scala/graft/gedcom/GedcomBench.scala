@@ -2,16 +2,10 @@ package graft.gedcom
 
 import java.io.{BufferedWriter, FileWriter}
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
-/** GEDCOM-path throughput bench against the reference's headline number
-  * (~145 MB in ~6 s => ~24 MB/s single-node parse->CSV, BASELINE.md).
-  *
-  * Usage: graft.gedcom.GedcomBench [targetMB] [outDir]
-  * Generates a synthetic GEDCOM of roughly targetMB (default 150),
-  * runs parse -> flatten -> per-tag CSV fan-out, prints one JSON line with
-  * wall-clock and MB/s.
+/** Synthetic GEDCOM input for the throughput legs measured against the
+  * reference's headline number (~145 MB in ~6 s => ~24 MB/s single-node
+  * parse->CSV, BASELINE.md): Bench's `gedcom_150m`/`gedcom_1g` legs
+  * generate their files here, and `graft.tools.Prof --ged` profiles them.
   */
 object GedcomBench {
 
@@ -51,88 +45,5 @@ object GedcomBench {
     w.write("0 TRLR\n")
     w.close()
     new java.io.File(path).length()
-  }
-
-  def main(args: Array[String]): Unit = {
-    val targetMB = args.headOption.map(_.toInt).getOrElse(150)
-    val outDir = args.lift(1).getOrElse("/tmp/gedbench-csvs")
-    val ged = s"/tmp/gedbench-${targetMB}mb.ged"
-    val size = generate(ged, targetMB.toLong << 20)
-
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // GEDBENCH_PROBE=1: time the pipeline's layers separately (raw line
-    // scan, scala-side flatten, SQL encode) to localize throughput costs
-    if (sys.env.contains("GEDBENCH_PROBE")) {
-      import spark.implicits._
-      val minParts = spark.sparkContext.defaultParallelism * 2
-      def t(name: String)(f: => Any): Unit = {
-        val s0 = System.nanoTime(); f
-        System.err.println(f"[probe] $name: ${(System.nanoTime() - s0) / 1e9}%.2f s")
-      }
-      t("raw-line-count") { spark.sparkContext.textFile(ged, minParts).count() }
-      t("flatten-count") {
-        val acc = new GedcomGraph.BoundsAccumulator
-        spark.sparkContext.register(acc, "probeBounds")
-        GedcomGraph.containedRecords(
-          spark.sparkContext.textFile(ged, minParts), acc).count()
-      }
-      // isolate the CSV phase's extraction cost from its formatting+write
-      // cost: same scan + per-key map lookups, noop sink
-      val g = GedcomGraph.fromFile(spark, ged)
-      val indiKeys = g.keysByTag.get("INDI")
-      val indiCols = CsvSink.nodeColumns(indiKeys)
-        .map(k => org.apache.spark.sql.functions.col("props").getItem(k).as(k))
-      t("indi-extract-noop") {
-        g.nodes.filter(org.apache.spark.sql.functions.col("rawTag") === "INDI")
-          .select(indiCols: _*)
-          .write.format("noop").mode("overwrite").save()
-      }
-      t("indi-extract-csv") {
-        g.nodes.filter(org.apache.spark.sql.functions.col("rawTag") === "INDI")
-          .select(indiCols: _*)
-          .write.mode("overwrite").option("header", true).csv("/tmp/gedprobe-indi")
-      }
-      spark.stop(); sys.exit(0)
-    }
-
-    val t0 = System.nanoTime()
-    def phase(name: String)(f: => Unit): Unit = {
-      val s = System.nanoTime(); f
-      if (sys.env.contains("GEDBENCH_PHASES"))
-        System.err.println(f"[phase] $name: ${(System.nanoTime() - s) / 1e9}%.2f s")
-    }
-    var res: GedcomPipeline.Result = null
-    if (sys.env.contains("GEDBENCH_PHASES")) {
-      var g: GedcomGraph.Graph = null
-      phase("parse+flatten")({ g = GedcomGraph.fromFile(spark, ged); g.flat.count() })
-      phase("csv")({ val o = CsvSink.write(g, outDir)
-        res = GedcomPipeline.Result(g, o, CsvSink.importArgs(o)) })
-      // warm re-run isolates extraction+write cost from cache materialization
-      if (sys.env.contains("GEDBENCH_REPEAT"))
-        phase("csv-warm")(CsvSink.write(g, outDir + "2"))
-    } else res = GedcomPipeline.run(spark, ged, outDir)
-    // diagnostics come from the parse pass's folded stats when available;
-    // otherwise one scan of the checkpointed flat frame
-    // (sql.functions.size spelled out: the local `size` val shadows it)
-    val (nodes, edges) = res.graph.counts.getOrElse {
-      val cnt = res.graph.flat.agg(
-        sum(when(!col("skipped") &&
-            org.apache.spark.sql.functions.size(map_keys(col("props"))) > 0, 1L)
-          .otherwise(0L)).as("n"),
-        sum(org.apache.spark.sql.functions.size(col("edges"))).as("e")).head()
-      (cnt.getLong(0), cnt.getLong(1))
-    }
-    val sec = (System.nanoTime() - t0) / 1e9
-    val mb = size / 1e6
-    println(f"""{"metric":"gedcom_throughput","value":${mb / sec}%.1f,"unit":"MB/s","mb":$mb%.1f,"sec":$sec%.2f,"nodes":$nodes,"edges":$edges}""")
-    spark.stop()
   }
 }

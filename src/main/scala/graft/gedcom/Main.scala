@@ -61,13 +61,7 @@ object Main {
       if (!opts.quiet) println(s"Reading from STDIN (staged to $tmp)")
       tmp.toString
     }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("ged2neo")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.builder().appName("ged2neo").getOrCreate()
     spark.sparkContext.setLogLevel(if (opts.verbose) "INFO" else "WARN")
 
     val code = run(opts.copy(src = Some(src)), spark)

@@ -155,13 +155,17 @@ object IterativeGraph {
       : (DataFrame, RDD[InternalRow]) = {
     // prelude plans execute inside this pin job and are invisible to a
     // top-level explain on the returned LogicalRDD — operators label
-    // their INITIAL pin so PlanDump can record the staged subtree
+    // their INITIAL pin so a probe sink can record the staged subtree
     if (probe != null) graft.PlanProbe.emit(probe, df)
     val rdd = df.queryExecution.toRdd.map(_.copy())
       .persist(StorageLevel.MEMORY_AND_DISK)
     rdd.localCheckpoint()
     (GraftSqlBridge.internalCreateDataFrame(df.sparkSession, rdd, df.schema), rdd)
   }
+
+  /** Bytes per [[pinPartitioned]] partition: 64 MB, the AQE advisory
+    * partition size default. */
+  private val PinPartitionBytes = 1L << 26
 
   /** [[pin]] with the rows repartitioned by `keys` and that hash
     * distribution DECLARED on the rebuilt frame — the loop-state shape
@@ -175,8 +179,8 @@ object IterativeGraph {
     *
     * The partition count is DERIVED FROM THE MEASURED relation, not the
     * core count: the rows are first pinned plain and counted, then laid
-    * out in ~`spark.graft.pinPartitionBytes` (default 64 MB, the AQE
-    * advisory default) chunks capped at `spark.sql.shuffle.partitions`.
+    * out in ~[[PinPartitionBytes]] chunks capped at
+    * `spark.sql.shuffle.partitions`.
     * A fixed n = cores would fan every round's fixed per-task costs
     * (sort/hash init, shuffle segment setup) across the full core count
     * even for a toy edge set — measured 2x total CPU on the sf0.1 loop
@@ -198,10 +202,8 @@ object IterativeGraph {
     val rows = rdd0.count()
     val rowBytes = 16L + 8L * df.schema.length // UnsafeRow, fixed-width cols
     val maxN = spark.conf.get("spark.sql.shuffle.partitions").toLong
-    val target = spark.conf.getOption("spark.graft.pinPartitionBytes")
-      .map(_.toLong).getOrElse(1L << 26)
-    val n = math.max(1L,
-      math.min(maxN, (rows * rowBytes + target - 1L) / target)).toInt
+    val n = math.max(1L, math.min(maxN,
+      (rows * rowBytes + PinPartitionBytes - 1L) / PinPartitionBytes)).toInt
     val rdd = df0.repartition(n, keys.map(col): _*)
       .queryExecution.toRdd.map(_.copy())
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -764,12 +766,12 @@ object IterativeGraph {
     * The triangle join uses the degree-ordered orientation (Suri &
     * Vassilvitskii, "Counting Triangles and the Curse of the Last
     * Reducer", WWW'11): orient every edge from its lower-(degree, id)
-    * endpoint to the higher one, enumerate wedges only at each edge's
-    * SOURCE, and close them against the oriented edge set. Out-degree
-    * under this orientation is O(sqrt(m)) for every vertex — including
-    * hubs — so the wedge fan-out per task is bounded and the "last
-    * reducer" hot spot of the naive adjacency join cannot form. Each
-    * triangle is counted exactly once (its minimum-rank vertex owns it).
+    * endpoint to the higher one, then count, per oriented edge, the
+    * common out-neighbors of its two endpoints. Out-degree under this
+    * orientation is O(sqrt(m)) for every vertex — including hubs — so
+    * the per-edge work is bounded and the "last reducer" hot spot of the
+    * naive adjacency join cannot form. Each triangle is counted exactly
+    * once (at the edge between its two lowest-rank vertices).
     *
     * All stages are equi joins + partial aggregations on vertex keys; the
     * edge set is pinned once and reread by the degree pass, the
@@ -804,12 +806,9 @@ object IterativeGraph {
         deg.select(col("x").as("v"), col("d").as("dv")), nVerts, ROW_BYTES), "v")
       .select(
         when(lowFirst, col("u")).otherwise(col("v")).as("a"),
-        when(lowFirst, col("v")).otherwise(col("u")).as("b"),
-        when(lowFirst, col("dv")).otherwise(col("du")).as("rb")))
-    // Closing kernel (conf-switched; results identical, spec-pinned):
-    //
-    // "adjacency" (default) — edge-iterator closing: per oriented vertex
-    // its out-neighbors become ONE sorted long array (total payload = m
+        when(lowFirst, col("v")).otherwise(col("u")).as("b")))
+    // Closing kernel — edge-iterator closing: per oriented vertex its
+    // out-neighbors become ONE sorted long array (total payload = m
     // longs, the edge set itself), each oriented edge (a, b) attaches
     // adj(a) and adj(b) via sized build sides and counts their common
     // out-neighbors with the allocation-free sorted merge
@@ -817,71 +816,28 @@ object IterativeGraph {
     // seen exactly once, at edge (x,y): z ∈ adj(x) ∩ adj(y), while at
     // (x,z) and (y,z) the third vertex is not an out-neighbor of the
     // higher-ranked endpoint. The wedge stream — sum od^2 rows, the
-    // largest relation the previous shape touched (46M rows / 17
+    // largest relation a wedge-closing shape touches (46M rows / 17
     // executor-CPU-s at sf0.1 even after its joins were sized) — is
     // never materialized: the same comparisons run as primitive long
     // merges inside one codegen stage.
-    //
-    // "wedge" — the previous shape, kept as the A/B surface and spec
-    // fallback: enumerate wedges at the lower-ranked endpoint, close
-    // each against the edge set (packed-long probe when ids fit 2^31).
-    val kernel = pairs.sparkSession.conf
-      .get("spark.graft.triangleKernel", "adjacency")
-    val tri = if (kernel == "wedge") {
-      val wl = ori.select(col("a"), col("b").as("wa"), col("rb").as("ra"))
-      val wr = ori.select(col("a"), col("b").as("wb"), col("rb").as("rw"))
-      // both wedge enumeration and the closing join build on the EDGE
-      // set (m rows) while streaming the WEDGE relation: sized build
-      // sides keep the wedge relation out of every exchange under the
-      // cap (it is generated and closed within one map stage), and above
-      // the cap SHUFFLE_HASH still never SORTS it — the SortMergeJoin
-      // default would sort the largest relation this operator touches
-      // (measured 146 executor-CPU-s at sf0.1, dominated by that sort).
-      val wedges = wl.join(sizedBuildSide(wr, m, ROW_BYTES), Seq("a"))
-        .filter(col("ra") < col("rw") ||
-          (col("ra") === col("rw") && col("wa") < col("wb")))
-        .select(col("wa").as("a"), col("wb").as("b"))
-      // the closing probe runs once per wedge — the hottest expression
-      // in this shape. When every id fits an unsigned int (one tiny agg
-      // over the pinned vertex frame decides), both sides key on ONE
-      // packed long so the build side is a LongHashedRelation
-      // (primitive-long lookups) instead of a two-field UnsafeRow
-      // relation (hash + row compare per probe); id ranges past 2^31
-      // keep the general two-key join. Packing is injective on
-      // [0, 2^31), so the join matches exactly the same (a, b) pairs.
-      val idRange = deg.agg(min(col("x")), max(col("x"))).head()
-      val packable = !idRange.isNullAt(0) &&
-        idRange.getLong(0) >= 0L && idRange.getLong(1) < (1L << 31)
-      def packed(f: DataFrame) = f.select(
-        shiftleft(col("a"), 32).bitwiseOR(col("b")).as("ab"))
-      (if (packable)
-          packed(wedges).join(
-            sizedBuildSide(packed(ori), m, ROW_BYTES), Seq("ab"))
-        else
-          wedges.join(
-            sizedBuildSide(ori.select(col("a"), col("b")), m, ROW_BYTES),
-            Seq("a", "b")))
-        .agg(count(lit(1)).as("n_triangles"))
-    } else {
-      import graft.functions.expressions.SortedLongIntersectSize.sortedLongIntersectSize
-      // array_sort, not sort_array: the merge kernel's contract is
-      // nulls-LAST order (none occur here — collect_list skips nulls —
-      // but the contract is pinned once, in the expression's spec)
-      val adj = ori.groupBy(col("a"))
-        .agg(array_sort(collect_list(col("b"))).as("nb"))
-      // the adjacency relation is vertex-cardinality in rows but its
-      // payload is exactly the m oriented edges, so the build-side rule
-      // prices it on m — same rule, same cap as every other side here.
-      // An edge whose head has no out-neighbors closes nothing, so the
-      // inner join dropping it is exact.
-      ori.select(col("a"), col("b"))
-        .join(sizedBuildSide(
-          adj.select(col("a"), col("nb").as("na")), m, ROW_BYTES), Seq("a"))
-        .join(sizedBuildSide(
-          adj.select(col("a").as("b"), col("nb")), m, ROW_BYTES), Seq("b"))
-        .select(sortedLongIntersectSize(col("na"), col("nb")).as("t"))
-        .agg(coalesce(sum(col("t")), lit(0L)).as("n_triangles"))
-    }
+    import graft.functions.expressions.SortedLongIntersectSize.sortedLongIntersectSize
+    // array_sort, not sort_array: the merge kernel's contract is
+    // nulls-LAST order (none occur here — collect_list skips nulls —
+    // but the contract is pinned once, in the expression's spec)
+    val adj = ori.groupBy(col("a"))
+      .agg(array_sort(collect_list(col("b"))).as("nb"))
+    // the adjacency relation is vertex-cardinality in rows but its
+    // payload is exactly the m oriented edges, so the build-side rule
+    // prices it on m — same rule, same cap as every other side here.
+    // An edge whose head has no out-neighbors closes nothing, so the
+    // inner join dropping it is exact.
+    val tri = ori
+      .join(sizedBuildSide(
+        adj.select(col("a"), col("nb").as("na")), m, ROW_BYTES), Seq("a"))
+      .join(sizedBuildSide(
+        adj.select(col("a").as("b"), col("nb")), m, ROW_BYTES), Seq("b"))
+      .select(sortedLongIntersectSize(col("na"), col("nb")).as("t"))
+      .agg(coalesce(sum(col("t")), lit(0L)).as("n_triangles"))
     val stats = deg
       .agg(count(lit(1)).as("n_vertices"),
         sum(expr("d * (d - 1) div 2")).as("n_wedges"))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.Multimodal
@@ -15,12 +14,7 @@ import graft.functions.Multimodal
 object DhashScale {
   def main(args: Array[String]): Unit = {
     val maxScale = args.headOption.map(_.toInt).getOrElse(16)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     println("scale  images   pairs   pass1_s pass2_s")
     var s = 1

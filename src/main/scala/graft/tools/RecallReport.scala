@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry
@@ -11,9 +10,7 @@ import graft.SparkEntry
 object RecallReport {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -350,15 +350,7 @@ object ScaleBench {
     val maxK = args.lift(1).map(_.toInt).getOrElse(8)
     // args beyond (base, maxK) restrict the roster — single-query iteration
     val roster = if (args.length > 2) args.drop(2).toSeq else Queries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val ks = Iterator.iterate(1)(_ * 2).takeWhile(_ <= maxK).toSeq

@@ -88,10 +88,7 @@ object ScaleUp {
     val srcDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outBase = args.lift(1).getOrElse("/tmp/graft-scale")
     val maxK = args.lift(2).map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Iterator.iterate(1)(_ * 2).takeWhile(_ <= maxK).foreach { k =>
       val out = s"$outBase/x$k"

@@ -3,7 +3,7 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.functions._
 
 import graft.sources.Warc
@@ -28,12 +28,8 @@ object WarcScale {
     val nFiles = args.headOption.map(_.toInt).getOrElse(256)
     val docsPer = args.lift(1).map(_.toInt).getOrElse(256)
     val passes = args.lift(2).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = graft.Session.defaultCpus
+    val spark = graft.Session.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val dir = Paths.get(s"/tmp/warcscale-${nFiles}x$docsPer")
@@ -79,6 +75,7 @@ object WarcScale {
         .select(octet_length(col("h.body")).as("n"))
       recs.write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
+      GraftSqlBridge.drainListeners(spark.sparkContext)
       val bytes = Files.list(dir).mapToLong(p => Files.size(p)).sum()
       println(f"pass $p: ${dt}%.2f s  ${bytes / 1e6 / dt}%.1f MB/s  " +
         s"stageTasks=${taskCounts.toList.sortBy(-_).take(3)} cpus=$cpus")

@@ -20,6 +20,12 @@ object GraftSqlBridge {
     ext.registerFunctions(
       spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry)
 
+  /** Block until the listener bus has delivered every posted event, so
+    * counters a listener folds are complete for the actions already run
+    * (`listenerBus` is `private[spark]`). */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** DataFrame straight from an RDD of InternalRows (UnsafeRow-compatible),
     * bypassing the Scala-object encoder entirely — `internalCreateDataFrame`
     * is `private[sql]`. Caller guarantees rows match `schema`. */

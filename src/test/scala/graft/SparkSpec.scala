@@ -10,20 +10,13 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  // one session for the whole forked test JVM
+  // one session for the whole forked test JVM: the runtime surfaces'
+  // configuration at 4 cores, plus a throwaway warehouse
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = Session.builder(4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      // match the runtime surfaces (Bench/Verify): leased frames plan
-      // with AQE when cold-built inside a consumer job
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -12,6 +12,4 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
-exec java $ADD_OPENS -Xmx${SPARK_DRIVER_MEM:-8g} \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "$CP" "$@"
+exec java $ADD_OPENS -Xmx${SPARK_DRIVER_MEM:-8g} -cp "$CP" "$@"
