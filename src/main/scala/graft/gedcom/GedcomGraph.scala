@@ -12,9 +12,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * graph (nodes + edges + diagnostics), the Spark analog of the reference's
   * streaming CsvWriter stage (SURVEY §3.2).
   *
-  * One shuffle total (groupByKey on recordNo); per-record work is bounded
-  * by record size, so the stage scales linearly with records across any
-  * number of executors.
+  * Text input ([[fromTextRdd]]) is one pass with no shuffle: each split
+  * assembles the records it holds, and the driver stitches the records
+  * that straddle split boundaries. The same pass folds a [[SplitStats]]
+  * summary (per-tag column union, row counts, diagnostics), so the CSV
+  * sink and the CLI need no further scan. Pre-parsed lines ([[fromLines]])
+  * take one hash shuffle on recordNo and fold nothing. Per-record work is
+  * bounded by record size either way.
   */
 object GedcomGraph {
 
@@ -25,10 +29,9 @@ object GedcomGraph {
       skipped: DataFrame, // recordNo, rawTag
       unusedTags: DataFrame,      // tag (distinct)
       missingTemples: DataFrame,  // code (distinct)
-      // populated by the text fast path's parse pass (None => derive by
-      // scanning): per-tag union of node prop keys, (nodeRows, edgeRows)
-      keysByTag: Option[Map[String, Set[String]]] = None,
-      counts: Option[(Long, Long)] = None,
+      // folded by the text fast path's parse pass; None (the shuffle path)
+      // means every figure in it has to be scanned from the frames above
+      summary: Option[SplitStats] = None,
       // frees the pinned row blocks backing `flat`. Dataset.unpersist
       // cannot do it: the frames are pinned at the RDD level (LogicalRDD),
       // which the SQL CacheManager knows nothing about. Long-lived callers
@@ -130,8 +133,7 @@ object GedcomGraph {
     // union of pinned blocks + a driver-local handful needs no re-pinning
     fromFlat(containedDF.unionByName(spark.createDataset(boundaryFlat).toDF()),
       pinned = true,
-      keysByTag = Some(stats.keysByTag),
-      counts = Some((stats.nodes, stats.edges)),
+      summary = Some(stats),
       release0 = () => pinnedRdd.unpersist(blocking = false))
   }
 
@@ -170,11 +172,14 @@ object GedcomGraph {
   }
 
   /** Per-split output summary, folded while the records stream by: node
-    * prop-key union per raw tag (drives the CSV sinks' schemas), plus node
-    * and edge row counts — all deterministic functions of the split, so
-    * last-wins-per-pi accumulation stays retry-safe. */
-  private[gedcom] final case class SplitStats(
-      keysByTag: Map[String, Set[String]], nodes: Long, edges: Long) {
+    * prop-key union per raw tag (drives the CSV sink's schemas), node, edge
+    * and skipped-record counts, and the distinct unused tags and missing
+    * temple codes (the CLI's diagnostics) — all deterministic functions of
+    * the split, so last-wins-per-pi accumulation stays retry-safe. Each
+    * field equals the matching scan of the [[Graph]] frames. */
+  final case class SplitStats(
+      keysByTag: Map[String, Set[String]], nodes: Long, edges: Long,
+      skipped: Long, unusedTags: Set[String], missingTemples: Set[String]) {
     def add(r: RecordAssembler.FlatRecord): SplitStats = {
       val isNode = !r.skipped && r.props.nonEmpty
       SplitStats(
@@ -183,18 +188,22 @@ object GedcomGraph {
             keysByTag.getOrElse(r.rawTag, Set.empty) ++ r.props.keysIterator)
         else keysByTag,
         nodes + (if (isNode) 1 else 0),
-        edges + r.edges.size)
+        edges + r.edges.size,
+        skipped + (if (r.skipped) 1 else 0),
+        unusedTags ++ r.unusedTags,
+        missingTemples ++ r.missingTemples)
     }
   }
-  private[gedcom] object SplitStats {
-    val empty: SplitStats = SplitStats(Map.empty, 0L, 0L)
+  object SplitStats {
+    val empty: SplitStats = SplitStats(Map.empty, 0L, 0L, 0L, Set.empty, Set.empty)
     def of(rs: Iterable[RecordAssembler.FlatRecord]): SplitStats =
       rs.foldLeft(empty)(_.add(_))
     def merge(a: SplitStats, b: SplitStats): SplitStats = SplitStats(
       b.keysByTag.foldLeft(a.keysByTag) { case (m, (t, ks)) =>
         m.updated(t, m.getOrElse(t, Set.empty) ++ ks)
       },
-      a.nodes + b.nodes, a.edges + b.edges)
+      a.nodes + b.nodes, a.edges + b.edges, a.skipped + b.skipped,
+      a.unusedTags ++ b.unusedTags, a.missingTemples ++ b.missingTemples)
   }
 
   /** A split's boundary fragments: the lines before its first level-0 line
@@ -293,8 +302,7 @@ object GedcomGraph {
   private def fromFlat(
       flatIn: DataFrame,
       pinned: Boolean = false,
-      keysByTag: Option[Map[String, Set[String]]] = None,
-      counts: Option[(Long, Long)] = None,
+      summary: Option[SplitStats] = None,
       release0: () => Unit = () => ()): Graph = {
     // Pin raw UnsafeRow blocks, NOT the columnar cache: the cache would
     // re-encode every props map and edge array into column builders
@@ -327,7 +335,7 @@ object GedcomGraph {
     val missingTemples = flat.select(explode(col("missingTemples")).as("code")).distinct()
 
     Graph(flat, nodes, edges, skipped, unusedTags, missingTemples,
-      keysByTag, counts, release)
+      summary, release)
   }
 
   def fromFile(spark: SparkSession, path: String): Graph = {

@@ -79,12 +79,18 @@ object Main {
     def log(s: String): Unit = if (!opts.quiet) println(s)
 
     log(f"Finished writing intermediate csv files. Time elapsed: ${(System.nanoTime() - t0) / 1e9}%.2fs")
-    log(s"nodes: ${res.graph.nodes.count()}  edges: ${res.graph.edges.count()}  " +
-      s"skipped: ${res.graph.skipped.count()}")
-    val unused = res.graph.unusedTags.collect().map(_.getString(0)).sorted
-    if (unused.nonEmpty) log(s"Missing Tags: ${unused.mkString(", ")}")
-    val missing = res.graph.missingTemples.collect().map(_.getString(0)).sorted
-    if (missing.nonEmpty) log(s"Missing Temple Codes: ${missing.mkString(", ")}")
+    // the parse pass folded these; only the shuffle path has to scan
+    val g = res.graph
+    val stats = g.summary.getOrElse {
+      def strings(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.getString(0)).toSet
+      GedcomGraph.SplitStats(Map.empty, g.nodes.count(), g.edges.count(),
+        g.skipped.count(), strings(g.unusedTags), strings(g.missingTemples))
+    }
+    log(s"nodes: ${stats.nodes}  edges: ${stats.edges}  skipped: ${stats.skipped}")
+    if (stats.unusedTags.nonEmpty)
+      log(s"Missing Tags: ${stats.unusedTags.toSeq.sorted.mkString(", ")}")
+    if (stats.missingTemples.nonEmpty)
+      log(s"Missing Temple Codes: ${stats.missingTemples.toSeq.sorted.mkString(", ")}")
     res.outputs.foreach(o => log(s"generated ${o.kind}-${o.rawTag}: ${o.path}"))
 
     // -d: the reference's end-to-end load (index.js:91-108) — import into

@@ -1,0 +1,172 @@
+package graft
+
+import java.io.File
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.GraftSqlBridge
+import org.apache.spark.sql.functions._
+
+import graft.gedcom._
+
+/** The one-job CSV sink against the per-tag `DataFrameWriter.csv` loop it
+  * replaced: for every output dir, the header bytes and the multiset of
+  * data records must be identical, in raw and typed-date mode. m3.ged
+  * carries the quoting corners: an EVEN TYPE with a comma, quotes and a
+  * leading space (it becomes a column-name prefix), values with a
+  * backslash, quotes, an embedded newline and a trailing space, an empty
+  * value, and keys missing on one row. */
+class CsvSinkSpec extends SparkSpec {
+
+  private def resource(name: String): String = getClass.getResource(s"/$name").getPath
+
+  private val fixtures = Seq("m1.ged", "m2.ged", "m3.ged")
+
+  /** The per-tag writer loop: one node job per tag, one partitioned edge
+    * job; the reference layout the sink must keep. */
+  private def referenceWrite(graph: GedcomGraph.Graph, outDir: String,
+      typedDates: Boolean): Unit = {
+    graph.summary.get.keysByTag.foreach { case (tag, keys) =>
+      graph.nodes.filter(col("rawTag") === tag)
+        .select(CsvSink.typedNodeColumns(keys, typedDates): _*)
+        .write.mode("overwrite").option("header", true).csv(s"$outDir/nodes-$tag")
+    }
+    graph.edges.select(col("rawTag"), col("src").as(":START_ID"),
+        col("dst").as(":END_ID"), col("relType").as(":TYPE"))
+      .write.partitionBy("rawTag").mode("overwrite").option("header", true)
+      .csv(s"$outDir/relationships")
+  }
+
+  /** CSV records of a file, split on newlines outside quoted fields (the
+    * writer escapes quotes inside a field with a backslash). */
+  private def records(s: String): Seq[String] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    var start = 0
+    var quoted = false
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (quoted && c == '\\') i += 1
+      else if (c == '"') quoted = !quoted
+      else if (c == '\n' && !quoted) { out += s.substring(start, i); start = i + 1 }
+      i += 1
+    }
+    if (start < s.length) out += s.substring(start)
+    out.toSeq
+  }
+
+  /** Per output dir (relative to `root`): the distinct header records of
+    * its part files and the multiset of their data records. */
+  private def contents(root: File): Map[String, (Set[String], Map[String, Int])] = {
+    def dirs(d: File): Seq[File] =
+      d +: Option(d.listFiles()).toSeq.flatten.filter(_.isDirectory).flatMap(dirs)
+    dirs(root).flatMap { d =>
+      val parts = Option(d.listFiles()).toSeq.flatten
+        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".csv"))
+      if (parts.isEmpty) None
+      else {
+        val recs = parts.map(f => records(
+          new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)))
+        val rel = root.toPath.relativize(d.toPath).toString
+        Some(rel -> (recs.flatMap(_.headOption).toSet,
+          recs.flatMap(_.drop(1)).groupBy(identity).map { case (r, rs) => r -> rs.size }))
+      }
+    }.toMap
+  }
+
+  private def tmp(prefix: String): File = Files.createTempDirectory(prefix).toFile
+
+  for (fixture <- fixtures; typedDates <- Seq(false, true)) {
+    val mode = if (typedDates) "typed-date" else "raw"
+    test(s"$fixture ($mode): headers and data records match the per-tag writer") {
+      val graph = GedcomGraph.fromFile(spark, resource(fixture))
+      try {
+        val (got, want) = (tmp("csv-sink"), tmp("csv-ref"))
+        val outputs = CsvSink.write(graph, got.getPath, typedDates)
+        referenceWrite(graph, want.getPath, typedDates)
+        val (g, w) = (contents(got), contents(want))
+        assert(g.keySet == w.keySet)
+        g.foreach { case (dir, (headers, recs)) =>
+          assert(headers.size == 1, s"$dir: parts disagree on the header")
+          assert(headers == w(dir)._1, s"$dir: header")
+          assert(recs == w(dir)._2, s"$dir: data records")
+        }
+        // the Output list: every node tag, then every written edge dir
+        def rel(p: String) = got.toPath.relativize(Paths.get(p)).toString
+        assert(outputs.map(o => (o.kind, o.rawTag, rel(o.path))) ==
+          w.keySet.toSeq.sorted.map { d =>
+            if (d.startsWith("nodes-")) ("nodes", d.stripPrefix("nodes-"), d)
+            else ("relationships", d.stripPrefix("relationships/rawTag="), d)
+          }.sortBy(o => (o._1, o._2)))
+      } finally graph.release()
+    }
+  }
+
+  test("an EVEN type with a comma, quotes and a leading space is one quoted header field") {
+    val graph = GedcomGraph.fromFile(spark, resource("m3.ged"))
+    try {
+      val out = tmp("csv-sink")
+      CsvSink.write(graph, out.getPath)
+      val (headers, recs) = contents(out)("nodes-INDI")
+      // written like the DataFrame writer does: quoted, inner quotes
+      // escaped, leading space trimmed
+      assert(headers.head.contains(""","Moved, \"far\" Date",""""), headers.head)
+      // every record has as many fields as the header (the CSV reader
+      // agrees with the writer on the quoting)
+      val indi = spark.read.option("header", true).option("multiLine", true)
+        .option("escape", "\\").csv(s"$out/nodes-INDI")
+      assert(indi.count() == recs.values.sum)
+      val eve = indi.filter(col("Gedcom Id:ID") === "I20").head()
+      assert(eve.getAs[String]("Note") == "line one \nline \"two\"")
+      // an empty value is written as "", a missing key as nothing
+      assert(recs.keys.exists(r => r.startsWith("I20,") && r.contains(""","",""")))
+      assert(recs.keys.exists(r => r.startsWith("I21,") && !r.contains("\"")))
+    } finally graph.release()
+  }
+
+  test("an input without edges writes no relationships output and no error") {
+    val ged = Files.createTempFile("no-edges", ".ged")
+    Files.writeString(ged, "0 HEAD\n1 SOUR t\n0 @I1@ INDI\n1 NAME A /B/\n0 TRLR\n")
+    val graph = GedcomGraph.fromFile(spark, ged.toString)
+    try {
+      val out = tmp("csv-sink")
+      val outputs = CsvSink.write(graph, out.getPath)
+      assert(outputs.map(o => (o.kind, o.rawTag)).toSet == Set(("nodes", "HEAD"), ("nodes", "INDI")))
+      assert(!new File(out, "relationships").exists())
+      assert(CsvSink.importArgs(outputs).count(_ == "--relationships") == 0)
+    } finally graph.release()
+  }
+
+  test("a rerun into the same dir replaces the earlier CSVs and keeps other files") {
+    val graph = GedcomGraph.fromFile(spark, resource("m1.ged"))
+    try {
+      val out = tmp("csv-sink")
+      Files.writeString(out.toPath.resolve("precious.txt"), "user data")
+      CsvSink.write(graph, out.getPath)
+      val first = contents(out)
+      CsvSink.write(graph, out.getPath)
+      assert(contents(out) == first)
+      assert(out.listFiles().map(_.getName).toSet ==
+        Set("precious.txt", "relationships") ++ first.keySet.filter(_.startsWith("nodes-")))
+    } finally graph.release()
+  }
+
+  test("Main.run without -d runs two Spark jobs: the parse and the CSV write") {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    GraftSqlBridge.drainListeners(sc)
+    sc.addSparkListener(listener)
+    try {
+      val opts = Main.Opts(src = Some(resource("m1.ged")), tmpDir = tmp("csv-cli").getPath,
+        quiet = true)
+      assert(Main.run(opts, spark) == 0)
+      GraftSqlBridge.drainListeners(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get <= 2, s"${jobs.get} jobs")
+  }
+}

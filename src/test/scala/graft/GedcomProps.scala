@@ -130,13 +130,28 @@ object GedcomProps extends Properties("gedcom") {
           .map(r => (r.getString(0), r.getAs[Map[String, String]](1))).toSet
       def edgeSet(g: GedcomGraph.Graph) =
         g.edges.collect().map(_.toSeq).toSet
+      def strings(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.getString(0)).toSet
+      // the summary the parse pass folded == the same figures scanned from
+      // the shuffle path's frames (which fold nothing)
+      val folded = viaBoundary.summary.get
+      val scannedKeys = viaShuffle.nodes.select("rawTag", "props").collect()
+        .groupBy(_.getString(0))
+        .map { case (t, rs) => t -> rs.flatMap(_.getAs[Map[String, String]](1).keys).toSet }
       // counts too: set equality alone is blind to dropped/doubled
       // duplicates of structurally identical records
-      nodeSet(viaBoundary) == nodeSet(viaShuffle) &&
+      viaShuffle.summary.isEmpty &&
+        nodeSet(viaBoundary) == nodeSet(viaShuffle) &&
         edgeSet(viaBoundary) == edgeSet(viaShuffle) &&
         viaBoundary.nodes.count() == viaShuffle.nodes.count() &&
         viaBoundary.edges.count() == viaShuffle.edges.count() &&
-        viaBoundary.skipped.count() == viaShuffle.skipped.count()
+        viaBoundary.skipped.count() == viaShuffle.skipped.count() &&
+        folded.nodes == viaShuffle.nodes.count() &&
+        folded.edges == viaShuffle.edges.count() &&
+        folded.skipped == viaShuffle.skipped.count() &&
+        folded.keysByTag == scannedKeys &&
+        folded.unusedTags == strings(viaShuffle.unusedTags) &&
+        folded.missingTemples == strings(viaShuffle.missingTemples)
     }
 
   /** The split-count guard: past maxStitchSplits, fromTextRdd must refuse
@@ -153,7 +168,7 @@ object GedcomProps extends Properties("gedcom") {
       def nodeSet(g: GedcomGraph.Graph) =
         g.nodes.select("rawTag", "props").collect()
           .map(r => (r.getString(0), r.getAs[Map[String, String]](1))).toSet
-      viaFallback.counts.isEmpty && viaStitch.counts.nonEmpty &&
+      viaFallback.summary.isEmpty && viaStitch.summary.nonEmpty &&
         nodeSet(viaFallback) == nodeSet(viaStitch) &&
         viaFallback.edges.count() == viaStitch.edges.count() &&
         viaFallback.skipped.count() == viaStitch.skipped.count()
