@@ -169,9 +169,10 @@ object Bench {
       // queries that cache intermediates (token relations, LSH codes) must
       // not leave them resident: later queries would run under their memory
       // pressure and a second pass would measure a half-warm hybrid.
-      // Caches.release() drops the lease registry's DataFrame references
-      // too — clearCache alone frees the blocks but leaves the driver-side
-      // plan objects accumulating across a 160-query x 2-pass run.
+      // Caches.release() frees the query-scope lease too: the graph
+      // loops' checkpointed results, which clearCache cannot reach, and
+      // the leased frames' driver-side plan objects, which would
+      // otherwise accumulate across a 160-query x 2-pass run.
       spark.catalog.clearCache()
       graft.Caches.release()
       sec

@@ -20,7 +20,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       } finally {
         spark.catalog.clearCache() // no cross-query cache residue
-        graft.Caches.release() // and no lease-registry reference growth
+        graft.Caches.release() // and no query-scope pin or reference left
       }
     }
     // oracle-support tables (trained codebooks): always dumped — cheap

@@ -1558,17 +1558,16 @@ object Dedup {
     * is measured in DedupSpec. */
   def semdedup(e: DataFrame, clusterTarget: Long, thresh: Double): DataFrame = {
     val (idx, removed) = semdedupAssignments(e, clusterTarget, thresh)
-    val out = idx.select(col("cid"), col("vec_id"))
+    // materialize the bounded result (one row per cluster, <= the 65536
+    // codebook clamp) so the corpus-sized idx cache can be released now
+    // instead of at the caller's release
+    val out = graft.Caches.checkpoint(idx.select(col("cid"), col("vec_id"))
       .join(removed.withColumn("rm", lit(true)), Seq("cid", "vec_id"), "left")
       .groupBy(col("cid"))
       .agg(count(lit(1)).as("n_vecs"),
         sum(when(col("rm"), 1L).otherwise(0L)).as("n_removed"))
-      .orderBy(col("cid"))
-      // materialize the bounded result (one row per cluster, <= the 65536
-      // codebook clamp) so the corpus-sized idx cache can be released now
-      // instead of accumulating across registered-query runs
-      .localCheckpoint(true)
-    idx.unpersist()
+      .orderBy(col("cid")))
+    graft.Caches.free(idx)
     out
   }
 
@@ -1579,20 +1578,19 @@ object Dedup {
   def auxDefs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "aux_semdedup_centroids" -> ((s, d) => {
       import s.implicits._
-      val e = Similarity.prepared(s, d).cache()
-      val nAux = e.count()
-      val c = semdedupCells(nAux, SEMDEDUP_CLUSTER)
-      val cents = Similarity.trainCentroids(e, c, Similarity.LLOYD_ROUNDS,
-        knownTotal = nAux)
-      e.unpersist()
+      val cents = graft.Lease.scoped { l =>
+        val e = l.cache(Similarity.prepared(s, d))
+        val nAux = e.count()
+        Similarity.trainCentroids(e, semdedupCells(nAux, SEMDEDUP_CLUSTER),
+          Similarity.LLOYD_ROUNDS, knownTotal = nAux)
+      }
       cents.zipWithIndex.map { case (v, i) => (i, v) }.toDF("cid", "cent")
     }))
 
   /** The (cid-indexed corpus, removal list) pair behind [[semdedup]] —
     * exposed so DedupSpec can measure removal recall against the exact
-    * all-pairs baseline. `idx` comes back cached (two consumers): the
-    * CALLER owns that cache and must `idx.unpersist()` once both frames
-    * have been consumed ([[semdedup]] does). */
+    * all-pairs baseline. `idx` comes back leased in [[graft.Caches]] (two
+    * consumers); [[semdedup]] frees it once both frames are consumed. */
   def semdedupAssignments(e: DataFrame, clusterTarget: Long,
       thresh: Double, probesOverride: Option[Int] = None): (DataFrame, DataFrame) = {
     // `e` deliberately NOT leased (measured, r20): columnar-caching the

@@ -75,18 +75,6 @@ object Fuzzy {
     * interpolated into their oracles — one definition. */
   private val FEED_OFFSET = 1L << 40
 
-  /** Unpersist every leased intermediate (the SNM sorted/ranked frames
-    * among them). The frames MUST stay cached until the returned join is
-    * consumed (an action), which the builder never sees, so the release
-    * point is necessarily the caller's: the gate harnesses clearCache
-    * per query, and library callers call this (= [[graft.Caches.release]])
-    * after consuming the frame [[snmMatch]] returns — without it,
-    * repeated calls accumulate MEMORY_AND_DISK blocks (two ranked + two
-    * sorted frames per [[snmMatch]]). */
-  def snmRelease(): Unit = graft.Caches.release()
-
-  private def snmRegister(df: DataFrame): DataFrame = graft.Caches.lease(df)
-
   /** One sorted-neighborhood pass (Hernández & Stolfo, "The Merge/Purge
     * Problem for Large Databases", SIGMOD 1995): order records by a sort
     * key, pair every record with the w-1 records that follow it. The
@@ -107,7 +95,7 @@ object Fuzzy {
     // ranked cache's materialization re-sorts from scratch — two sorts
     // where one suffices. Cached here, the count job lands the blocks
     // and the ranked materialization reads them.
-    val sorted = snmRegister(keyed.repartitionByRange(col("k"), col("id"))
+    val sorted = graft.Caches.lease(keyed.repartitionByRange(col("k"), col("id"))
       .sortWithinPartitions("k", "id"))
     // CACHE the ranked frame: it crosses an RDD boundary (createDataFrame
     // gives Catalyst no stats) and is consumed TWICE (probe + build side
@@ -119,7 +107,7 @@ object Fuzzy {
     // global ordinals in the internal row domain (r21, guide §4) — same
     // count-job + prefix-offset shape as zipWithIndex, minus the
     // decode-to-Row / re-encode codec passes over every record
-    val ranked = snmRegister(Ordinals.appendGlobalOrdinal(sorted, "r"))
+    val ranked = graft.Caches.lease(Ordinals.appendGlobalOrdinal(sorted, "r"))
     val probes = ranked.select(col("id").as("a_id"), col("name").as("a_name"),
       col("is_feed").as("a_feed"), col("r"),
       explode(sequence(col("r") + 1, col("r") + (w - 1))).as("rr"))
@@ -292,9 +280,7 @@ object Fuzzy {
             .selectExpr(s"cast(p_partkey + $FEED_OFFSET as bigint) AS id",
               s"$CORRUPT AS name")
             .withColumn("is_feed", lit(1)))
-          .cache()
-        try snmMatch(recs)
-        finally recs.unpersist(false)
+        graft.Lease.scoped(l => snmMatch(l.cache(recs)))
       },
       Some(s"""
         WITH recs AS (

@@ -699,19 +699,21 @@ object Similarity {
   def auxDefs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "aux_ivf_centroids" -> ((s, d) => {
       import s.implicits._
-      val e = prepared(s, d).cache()
-      val nAux = e.count()
-      val cents = trainCentroids(e, centroidsForCorpus(nAux), LLOYD_ROUNDS,
-        knownTotal = nAux)
-      e.unpersist()
+      val cents = graft.Lease.scoped { l =>
+        val e = l.cache(prepared(s, d))
+        val nAux = e.count()
+        trainCentroids(e, centroidsForCorpus(nAux), LLOYD_ROUNDS,
+          knownTotal = nAux)
+      }
       cents.zipWithIndex.map { case (v, i) => (i, v) }.toDF("cid", "cent")
     }),
     "aux_pq_books" -> ((s, d) => {
       import s.implicits._
-      val e = prepared(s, d).cache()
-      val n = e.count()
-      val books = trainSubCentroidsL2All(e, pqKForCorpus(n), LLOYD_ROUNDS, knownTotal = n)
-      e.unpersist()
+      val books = graft.Lease.scoped { l =>
+        val e = l.cache(prepared(s, d))
+        val n = e.count()
+        trainSubCentroidsL2All(e, pqKForCorpus(n), LLOYD_ROUNDS, knownTotal = n)
+      }
       books.zipWithIndex.flatMap { case (book, m) =>
         book.zipWithIndex.map { case (v, cid) => (m, cid, v) }
       }.toDF("m", "cid", "cent")

@@ -105,14 +105,13 @@ object Tokenizer {
   private[graft] def bpeTrainOf(s: SparkSession, docs: DataFrame): DataFrame =
     mergesToDf(s, collectMerges(s, docs))
 
-  private def collectMerges(s: SparkSession, docs: DataFrame): Seq[MergeRow] = {
-    val wf = docs
-      .select(explode(TextAnalysis.tokens(col("text"))).as("w"))
-      .filter(col("w").rlike(WORD_RE))
-      .groupBy(col("w")).agg(count(lit(1)).as("f"))
-      .select(symbolized(col("w")).as("sym"), col("f"))
-      .cache()
-    try {
+  private def collectMerges(s: SparkSession, docs: DataFrame): Seq[MergeRow] =
+    graft.Lease.scoped { lease =>
+      val wf = lease.cache(docs
+        .select(explode(TextAnalysis.tokens(col("text"))).as("w"))
+        .filter(col("w").rlike(WORD_RE))
+        .groupBy(col("w")).agg(count(lit(1)).as("f"))
+        .select(symbolized(col("w")).as("sym"), col("f")))
       val merges = scala.collection.mutable.ArrayBuffer.empty[MergeRow]
       var sym: Column = col("sym")
       var step = 1
@@ -145,8 +144,7 @@ object Tokenizer {
         }
       }
       merges.toSeq
-    } finally wf.unpersist()
-  }
+    }
 
   /** Corpus token accounting under the TRAINED vocabulary — the step a
     * mixture-weighting pipeline actually needs from its tokenizer:

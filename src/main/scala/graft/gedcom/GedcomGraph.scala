@@ -1,7 +1,7 @@
 package graft.gedcom
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
@@ -23,7 +23,7 @@ import org.apache.spark.unsafe.types.UTF8String
 object GedcomGraph {
 
   final case class Graph(
-      flat: DataFrame,    // one row per record, cached; everything below derives from it
+      flat: DataFrame,    // one row per record, pinned; everything below derives from it
       nodes: DataFrame,   // recordNo, rawTag, label, props(map)
       edges: DataFrame,   // src, dst, relType, rawTag
       skipped: DataFrame, // recordNo, rawTag
@@ -31,17 +31,22 @@ object GedcomGraph {
       missingTemples: DataFrame,  // code (distinct)
       // folded by the text fast path's parse pass; None (the shuffle path)
       // means every figure in it has to be scanned from the frames above
-      summary: Option[SplitStats] = None,
-      // frees the pinned row blocks backing `flat`. Dataset.unpersist
-      // cannot do it: the frames are pinned at the RDD level (LogicalRDD),
-      // which the SQL CacheManager knows nothing about. Long-lived callers
-      // (streaming ingest) MUST call this per batch.
-      release: () => Unit = () => ())
+      summary: Option[SplitStats],
+      lease: graft.Lease) {
+
+    /** Closes `lease`, freeing the RDD-level row pin behind `flat` (and so
+      * behind every frame above), which clearCache cannot reach; on a
+      * graph built on `graft.Caches` this ends the whole query scope.
+      * Long-lived callers MUST free each batch's graph, by this or by
+      * building it on a lease they close (the streaming ingest does). */
+    def release(): Unit = lease.close()
+  }
 
   /** General path for pre-parsed line Datasets: one hash shuffle on
     * recordNo + one Tungsten sort per partition, then streaming assembly
-    * over contiguous ordered groups. */
-  def fromLines(lines: Dataset[GedLine]): Graph = {
+    * over contiguous ordered groups. The row pin goes to `lease`. */
+  def fromLines(lines: Dataset[GedLine],
+      lease: graft.Lease = new graft.Lease): Graph = {
     val spark = lines.sparkSession
     import spark.implicits._
     val flat = lines
@@ -59,7 +64,7 @@ object GedcomGraph {
           }
         }
       }
-    fromFlat(flat.toDF())
+    fromFlat(lease.pin(flat.toDF())._1, lease, None)
   }
 
   /** Above this split count the stitch path's driver state stops being
@@ -87,13 +92,15 @@ object GedcomGraph {
     *
     * Inputs wider than `maxStitchSplits` fall back to [[fromLines]] (the
     * shuffle path) so driver fragment memory stays bounded; GedcomProps
-    * proves the two paths produce identical graphs.
+    * proves the two paths produce identical graphs. The row pin goes to
+    * `lease`; a registered query passes `graft.Caches`.
     */
   def fromTextRdd(spark: SparkSession, raw: RDD[String],
-      maxStitchSplits: Int = MAX_STITCH_SPLITS): Graph = {
+      maxStitchSplits: Int = MAX_STITCH_SPLITS,
+      lease: graft.Lease = new graft.Lease): Graph = {
     import spark.implicits._
     if (raw.getNumPartitions > maxStitchSplits)
-      return fromLines(GedcomParser.fromLineRdd(spark, raw))
+      return fromLines(GedcomParser.fromLineRdd(spark, raw), lease)
     val acc = new BoundsAccumulator
     spark.sparkContext.register(acc, "gedcomBounds")
     // hot path: InternalRows built by hand — the reflective product encoder
@@ -116,11 +123,11 @@ object GedcomGraph {
       }
       it.map(r => proj(toInternal(r, intern)).copy(): InternalRow)
     }
-    // pin the rows at the RDD level (releasable, unlike a Dataset
-    // localCheckpoint) and truncate physical lineage once materialized
-    val pinnedRdd = unsafeRows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pinnedRdd.localCheckpoint()
-    val containedDF = GraftSqlBridge.internalCreateDataFrame(spark, pinnedRdd, schema)
+    // pin the rows at the RDD level: raw UnsafeRow blocks, NOT the
+    // columnar cache, which would re-encode every props map and edge
+    // array into column builders (measured ~6 s of the 150 MB bench) for
+    // zero pruning benefit — every consumer reads the map columns whole
+    val (containedDF, pinnedRdd) = lease.pin(unsafeRows, schema, spark)
     // EAGER materialization = the one real job over the text; afterwards
     // the accumulator holds every split's boundary fragments for the stitch
     pinnedRdd.count()
@@ -132,9 +139,7 @@ object GedcomGraph {
       .reduce(SplitStats.merge)
     // union of pinned blocks + a driver-local handful needs no re-pinning
     fromFlat(containedDF.unionByName(spark.createDataset(boundaryFlat).toDF()),
-      pinned = true,
-      summary = Some(stats),
-      release0 = () => pinnedRdd.unpersist(blocking = false))
+      lease, Some(stats))
   }
 
   /** Schema of the flat frame — taken from the case-class encoder so the
@@ -296,31 +301,12 @@ object GedcomGraph {
       }
   }
 
-  /** Derived outputs — pure Column algebra over the cached row frame, so no
-    * pass deserializes the per-record maps back into JVM objects (a
-    * typed-lambda version spent most of its runtime doing exactly that). */
-  private def fromFlat(
-      flatIn: DataFrame,
-      pinned: Boolean = false,
-      summary: Option[SplitStats] = None,
-      release0: () => Unit = () => ()): Graph = {
-    // Pin raw UnsafeRow blocks, NOT the columnar cache: the cache would
-    // re-encode every props map and edge array into column builders
-    // (measured ~6 s of the 150 MB bench) for zero pruning benefit —
-    // every consumer reads the map columns whole. RDD-level persist (not
-    // Dataset.localCheckpoint) so Graph.release() can actually free the
-    // blocks. Lazy: materialized by the first downstream action.
-    // `pinned` callers (fromTextRdd) already hold their blocks.
-    val (flat, release) =
-      if (pinned) (flatIn, release0)
-      else {
-        val rdd = flatIn.queryExecution.toRdd.map(_.copy())
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        rdd.localCheckpoint() // truncate physical lineage once materialized
-        (GraftSqlBridge.internalCreateDataFrame(flatIn.sparkSession, rdd, flatIn.schema),
-          () => rdd.unpersist(blocking = false): Unit)
-      }
-
+  /** Derived outputs — pure Column algebra over the pinned row frame, so
+    * no pass deserializes the per-record maps back into JVM objects (a
+    * typed-lambda version spent most of its runtime doing exactly that).
+    * `flat` reads blocks `lease` holds. */
+  private def fromFlat(flat: DataFrame, lease: graft.Lease,
+      summary: Option[SplitStats]): Graph = {
     val nodes = flat
       .filter(!col("skipped") && size(map_keys(col("props"))) > 0)
       .select(col("recordNo"), col("rawTag"), col("label"), col("props"))
@@ -335,12 +321,13 @@ object GedcomGraph {
     val missingTemples = flat.select(explode(col("missingTemples")).as("code")).distinct()
 
     Graph(flat, nodes, edges, skipped, unusedTags, missingTemples,
-      summary, release)
+      summary, lease)
   }
 
-  def fromFile(spark: SparkSession, path: String): Graph = {
+  def fromFile(spark: SparkSession, path: String,
+      lease: graft.Lease = new graft.Lease): Graph = {
     val minParts = spark.sparkContext.defaultParallelism * 2
-    fromTextRdd(spark, spark.sparkContext.textFile(path, minParts))
+    fromTextRdd(spark, spark.sparkContext.textFile(path, minParts), lease = lease)
   }
 
   /** Wide, directly queryable table for one record type: the union of the

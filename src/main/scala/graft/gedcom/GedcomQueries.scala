@@ -76,7 +76,7 @@ object GedcomQueries {
   val defs: Seq[QueryDef] = Seq(
     QueryDef(
       "q63_gedcom_pipeline",
-      (s, _) => summarize(GedcomGraph.fromFile(s, FixturePath))
+      (s, _) => summarize(GedcomGraph.fromFile(s, FixturePath, graft.Caches))
         .orderBy(col("section"), col("name")),
       Some(GedcomOracle.SQL),
       "full GEDCOM parse->flatten->graph pipeline summary over the checked-in fixture"),
@@ -84,7 +84,7 @@ object GedcomQueries {
     QueryDef(
       "q72_gedcom_semantics",
       (s, _) => {
-        val g = GedcomGraph.fromFile(s, Fixture2Path)
+        val g = GedcomGraph.fromFile(s, Fixture2Path, graft.Caches)
         val kv = g.nodes.select(explode(col("props")).as(Seq("k", "v")))
         val props = kv.filter(col("k").isin(PinnedValueKeys: _*))
           .groupBy(concat(col("k"), lit("="), col("v")).as("name"))

@@ -4,11 +4,14 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.{Caches, Lease}
 
 /** Iterative graph algorithms expressed purely in the DataFrame API —
   * the Catalyst-planned alternative to GraphX's RDD machinery for the
   * simple label-propagation family.
+  * Each algorithm pins in one [[Lease.scoped]], freed when it returns or
+  * throws; its result is a query-scope [[Caches.checkpoint]].
   */
 object IterativeGraph {
 
@@ -73,8 +76,8 @@ object IterativeGraph {
     * u itself) to m. minS(u, m) already IS the distinct (u, m) row set,
     * so only the relinked neighbors join.
     *
-    * Pointer jump (`spark.graft.ccShortcut`, default on): the round's
-    * output is path-compressed through ITSELF before the distinct —
+    * Pointer jump: the round's output is path-compressed through ITSELF
+    * before the distinct —
     * f(x) = min target of x over the round's own rows, and every row
     * (u, v) relabels to (u, min(v, f(v))). One vertex-cardinality
     * aggregation + one sized join per round (union-find path halving,
@@ -97,8 +100,8 @@ object IterativeGraph {
     * fails to converge rather than mislabeling. Measured: q61's graph
     * converges in 2 rounds instead of 3 with round-1 output 95k rows
     * instead of 482k (the jump collapses chains before the distinct);
-    * agreement with the unshortcut shape is spec-pinned on randomized
-    * graphs (IterativeGraphSpec). */
+    * agreement with a union-find reference is spec-pinned on random, hub
+    * and chain graphs (IterativeGraphSpec). */
   private def starRound(e: DataFrame, nEdges: Long): DataFrame = {
     import graft.functions.Dedup.sizedBuildSide
     val sym = e.select(col("u"), col("v"))
@@ -120,19 +123,13 @@ object IterativeGraph {
       .filter(col("v") =!= col("m"))
       .select(col("v").as("u"), col("m").as("v"))
       .union(minS.select(col("u"), col("m").as("v")))
-    val jump = e.sparkSession.conf
-      .get("spark.graft.ccShortcut", "true").toBoolean
-    val out =
-      if (!jump) out0
-      else {
-        val f = out0.groupBy(col("u")).agg(min(col("v")).as("__fv"))
-          .select(col("u").as("__ju"), col("__fv"))
-        out0.join(sizedBuildSide(f, nVertBound, KEY_ROW_BYTES),
-            col("v") === col("__ju"), "left")
-          .select(col("u"),
-            least(col("v"), coalesce(col("__fv"), col("v"))).as("v"))
-      }
-    out.distinct()
+    val f = out0.groupBy(col("u")).agg(min(col("v")).as("__fv"))
+      .select(col("u").as("__ju"), col("__fv"))
+    out0.join(sizedBuildSide(f, nVertBound, KEY_ROW_BYTES),
+        col("v") === col("__ju"), "left")
+      .select(col("u"),
+        least(col("v"), coalesce(col("__fv"), col("v"))).as("v"))
+      .distinct()
   }
 
   /** ~bytes per built hash-relation row of 2-3 longs (the Dedup-family
@@ -142,86 +139,14 @@ object IterativeGraph {
     * a pinned LogicalRDD has no stats. */
   private val KEY_ROW_BYTES = 28L
 
-  /** Pin a frame's rows and rebuild it lineage-free: rows must be copied
-    * (toRdd reuses per-partition buffers) before persisting. The RDD
-    * localCheckpoint truncates PHYSICAL lineage at first materialization,
-    * so a lost block late in an iterative loop cannot cascade
-    * recomputation through every earlier round. Shared by every
-    * fixed-point/fixed-iteration loop in this module: a pinned frame is
-    * referenced many times across rounds, and without the pin each lazy
-    * reference would re-execute the whole upstream subtree.
-    */
-  private[operators] def pin(df: DataFrame, probe: String = null)
-      : (DataFrame, RDD[InternalRow]) = {
-    // prelude plans execute inside this pin job and are invisible to a
-    // top-level explain on the returned LogicalRDD — operators label
-    // their INITIAL pin so a probe sink can record the staged subtree
-    if (probe != null) graft.PlanProbe.emit(probe, df)
-    val rdd = df.queryExecution.toRdd.map(_.copy())
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    rdd.localCheckpoint()
-    (GraftSqlBridge.internalCreateDataFrame(df.sparkSession, rdd, df.schema), rdd)
-  }
-
-  /** Bytes per [[pinPartitioned]] partition: 64 MB, the AQE advisory
-    * partition size default. */
-  private val PinPartitionBytes = 1L << 26
-
-  /** [[pin]] with the rows repartitioned by `keys` and that hash
-    * distribution DECLARED on the rebuilt frame — the loop-state shape
-    * (guide §2.4: operations keyed the same way share one exchange). A
-    * plain pin is a LogicalRDD with UnknownPartitioning, so EVERY
-    * per-round join re-exchanges (and, under SortMergeJoin, re-sorts) the
-    * pinned edge set — the largest relation the loop touches, shuffled
-    * once per iteration at any scale. Declaring the distribution lets
-    * each round's state-onto-edges join plan with NO exchange and no
-    * sort on the pinned side; only the O(V) state side moves.
-    *
-    * The partition count is DERIVED FROM THE MEASURED relation, not the
-    * core count: the rows are first pinned plain and counted, then laid
-    * out in ~[[PinPartitionBytes]] chunks capped at
-    * `spark.sql.shuffle.partitions`.
-    * A fixed n = cores would fan every round's fixed per-task costs
-    * (sort/hash init, shuffle segment setup) across the full core count
-    * even for a toy edge set — measured 2x total CPU on the sf0.1 loop
-    * queries, which is exactly the wall cost at the driver's lower-core
-    * scaling bench — while a huge input still gets the full parallelism.
-    *
-    * Truthfulness of the declaration: the rows really are distributed
-    * `HashPartitioning(keys, n)` because the pin itself runs an explicit
-    * `repartition(n, keys)` — a user-numbered repartition AQE never
-    * coalesces or splits — immediately before capturing the rows.
-    *
-    * Cost: one extra pass over the pinned rows (staging pin + count +
-    * repartition) — paid once, against `iters` saved per-round exchanges
-    * and sorts of the same rows. NOT lazy: builds run two jobs. */
-  private[graft] def pinPartitioned(df: DataFrame, keys: Seq[String],
-      probe: String = null): (DataFrame, RDD[InternalRow]) = {
-    val spark = df.sparkSession
-    val (df0, rdd0) = pin(df, probe)
-    val rows = rdd0.count()
-    val rowBytes = 16L + 8L * df.schema.length // UnsafeRow, fixed-width cols
-    val maxN = spark.conf.get("spark.sql.shuffle.partitions").toLong
-    val n = math.max(1L, math.min(maxN,
-      (rows * rowBytes + PinPartitionBytes - 1L) / PinPartitionBytes)).toInt
-    val rdd = df0.repartition(n, keys.map(col): _*)
-      .queryExecution.toRdd.map(_.copy())
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    rdd.localCheckpoint()
-    rdd.count() // materialize before releasing the staging copy
-    rdd0.unpersist(blocking = false)
-    (GraftSqlBridge.internalCreateDataFramePartitioned(
-      spark, rdd, df.schema, keys, n), rdd)
-  }
-
   def connectedComponents(edges: DataFrame, maxIter: Int = 50,
-      roundHook: (Int, Long, Long) => Unit = null): DataFrame = {
+      roundHook: (Int, Long, Long) => Unit = null): DataFrame = Lease.scoped { l =>
 
     // canonical orientation u >= v; pinned WITH self-loops so the final
     // vertex derivation reads these blocks instead of re-running the
     // caller's (possibly expensive) edge subtree twice. The loop itself
     // runs on the self-loop-free view.
-    val (canon, canonRdd) = pin(probe = "cc.prelude", df = edges
+    val (canon, _) = l.pin(probe = "cc.prelude", df = edges
       .select(greatest(col("src"), col("dst")).as("u"),
         least(col("src"), col("dst")).as("v"))
       .distinct())
@@ -251,7 +176,7 @@ object IterativeGraph {
       // The pin is what keeps every subtree computed exactly once.
       val roundF = starRound(e, curEdges)
       graft.PlanProbe.emit("cc.round", roundF)
-      val (mat, matRdd) = pin(roundF)
+      val (mat, matRdd) = l.pin(roundF)
       // ONE job: computes the round, fills the persisted blocks, and runs
       // the exact star test over them. A vertex breaks the star iff it
       // appears as u more than once, or as both u and v; sum of breakers
@@ -260,7 +185,7 @@ object IterativeGraph {
       // degree frame is ITSELF pinned: at the fixpoint it already holds
       // the roots (nu == 0) and the vertex set, so the final labeling
       // reads these blocks instead of re-deriving either with a shuffle.
-      val (degF, degRddNew) = pin(mat
+      val (degF, degRddNew) = l.pin(mat
         .select(col("u").as("x"), lit(1L).as("us"))
         .union(mat.select(col("v").as("x"), lit(0L).as("us")))
         .groupBy(col("x"))
@@ -270,8 +195,8 @@ object IterativeGraph {
         coalesce(sum(when(col("nu") > 1 ||
           (col("nu") > 0 && col("nu") < col("nt")), 1L).otherwise(0L)), lit(0L)))
         .head()
-      if (eRdd != null) eRdd.unpersist(blocking = false)
-      if (degRdd != null) degRdd.unpersist(blocking = false)
+      if (eRdd != null) l.free(eRdd)
+      if (degRdd != null) l.free(degRdd)
       e = mat
       eRdd = matRdd
       deg = degF
@@ -281,12 +206,10 @@ object IterativeGraph {
       iter += 1
       if (roundHook != null) roundHook(iter, row.getLong(0), System.nanoTime() - t0)
     }
-    if (!converged) {
-      if (eRdd != null) eRdd.unpersist(blocking = false) // don't leak the pinned blocks on failure
+    if (!converged)
       throw new IllegalStateException(
         s"connectedComponents: no fixpoint after $maxIter rounds " +
           "(intermediate edge sets carry conflicting labels; raise maxIter)")
-    }
 
     // at the fixpoint e maps every non-root vertex to its component root,
     // and the pinned degree frame already distinguishes roots (vertices
@@ -314,15 +237,10 @@ object IterativeGraph {
           .select(col("xref"), col("xref").as("component"))
         labeled.union(selfOnly)
       }
-    // materialize the O(V) label set eagerly and release every pinned
-    // O(E) block: the pins are raw RDD persists, which a runner-level
-    // spark.catalog.clearCache() cannot see — returning a lazy frame over
-    // them would leak an edge-set copy per invocation across a bench run.
-    val out = full.localCheckpoint(true)
-    if (eRdd != null) eRdd.unpersist(blocking = false)
-    if (degRdd != null) degRdd.unpersist(blocking = false)
-    canonRdd.unpersist(blocking = false)
-    out
+    // materialize the O(V) label set eagerly so the scope can free every
+    // pinned O(E) block: a lazy frame over them would hold an edge-set
+    // copy per invocation until the caller's release
+    Caches.checkpoint(full)
   }
 
   /** Fixed-iteration PageRank over a symmetric `(src, dst)` edge set, in
@@ -342,7 +260,7 @@ object IterativeGraph {
     * oracle reproduces it row for row).
     *
     * Physical shape (what must survive 100 TB):
-    *   - edges and degrees are pinned ONCE ([[pin]]) — each of the
+    *   - edges and degrees are pinned ONCE ([[Lease.pin]]) — each of the
     *     `iters` rounds rereads the pinned blocks instead of re-running
     *     the caller's edge derivation;
     *   - one round = one shuffle-join of ranks onto edges by src (both
@@ -361,7 +279,7 @@ object IterativeGraph {
     * Returns `(v: long, r: long)` — rank in scale units, materialized
     * eagerly so the pinned edge/degree blocks can be released.
     */
-  def pageRank(edgesSym: DataFrame, iters: Int, scale: Long): DataFrame = {
+  def pageRank(edgesSym: DataFrame, iters: Int, scale: Long): DataFrame = Lease.scoped { l =>
     require(iters >= 1, s"pageRank: iters must be >= 1, got $iters")
     require(scale > 0 && scale % 100L == 0,
       s"pageRank: scale must be positive and divisible by 100, got $scale")
@@ -369,15 +287,15 @@ object IterativeGraph {
     // contributions join (and the initial degree aggregation) then plans
     // with no exchange over the O(E) side — one repartition at pin time
     // replaces `iters` per-round edge shuffles (guide §2.4)
-    val (e, eRdd) =
-      pinPartitioned(edgesSym.select(col("src"), col("dst")).distinct(),
+    val (e, _) =
+      l.pinPartitioned(edgesSym.select(col("src"), col("dst")).distinct(),
         Seq("src"), "pagerank.prelude")
     // the out-degree RIDES IN the rank state (it is per-vertex constant),
     // so a round needs only ONE keyed join (state onto edges) + one
     // partial-agg sum + one left join back — not a second ranks-to-degree
     // join per round (the pinned state is a LogicalRDD with no stats, so
     // that join would plan as a full shuffle every round)
-    var (ranks, ranksRdd) = pin(e.groupBy(col("src").as("v"))
+    var (ranks, ranksRdd) = l.pin(e.groupBy(col("src").as("v"))
       .agg(count(lit(1)).as("d"))
       .select(col("v"), col("d"), lit(scale).as("r")))
     // materializing the initial pin yields V for free, arming the
@@ -410,16 +328,13 @@ object IterativeGraph {
           (lit(15L * (scale / 100L)) +
             expr("(85 * coalesce(s, cast(0 as bigint))) div 100")).as("r"))
       graft.PlanProbe.emit("pagerank.round", roundF)
-      val (nr, nrRdd) = pin(roundF)
+      val (nr, nrRdd) = l.pin(roundF)
       nrRdd.count()
-      ranksRdd.unpersist(blocking = false)
+      l.free(ranksRdd)
       ranks = nr
       ranksRdd = nrRdd
     }
-    val out = ranks.select(col("v"), col("r")).localCheckpoint(true)
-    eRdd.unpersist(blocking = false)
-    ranksRdd.unpersist(blocking = false)
-    out
+    Caches.checkpoint(ranks.select(col("v"), col("r")))
   }
 
   /** [[pageRank]] over WEIGHTED symmetric edges `(src, dst, w)` with
@@ -430,16 +345,16 @@ object IterativeGraph {
     * weight rides on the pinned edge rows; total out-weights ride in the
     * rank state). `scale * maxWeight * V` must fit a long.
     */
-  def pageRankWeighted(edgesSym: DataFrame, iters: Int, scale: Long): DataFrame = {
+  def pageRankWeighted(edgesSym: DataFrame, iters: Int, scale: Long): DataFrame = Lease.scoped { l =>
     require(iters >= 1, s"pageRankWeighted: iters must be >= 1, got $iters")
     require(scale > 0 && scale % 100L == 0,
       s"pageRankWeighted: scale must be positive and divisible by 100, got $scale")
     // declared src distribution: see pageRank — kills the per-round edge
     // exchange and the initial out-weight aggregation's exchange
-    val (e, eRdd) = pinPartitioned(edgesSym
+    val (e, _) = l.pinPartitioned(edgesSym
       .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w")),
       Seq("src"), "pagerank_weighted.prelude")
-    var (ranks, ranksRdd) = pin(e.groupBy(col("src").as("v"))
+    var (ranks, ranksRdd) = l.pin(e.groupBy(col("src").as("v"))
       .agg(sum(col("w")).as("tw"))
       .select(col("v"), col("tw"), lit(scale).as("r")))
     // arm the documented sizing rule with the ACTUAL graph: ranks are
@@ -474,17 +389,16 @@ object IterativeGraph {
           (lit(15L * (scale / 100L)) +
             expr("(85 * coalesce(s, cast(0 as bigint))) div 100")).as("r"))
       graft.PlanProbe.emit("pagerank_weighted.round", roundF)
-      val (nr, nrRdd) = pin(roundF)
+      val (nr, nrRdd) = l.pin(roundF)
       nrRdd.count()
-      ranksRdd.unpersist(blocking = false)
+      l.free(ranksRdd)
       ranks = nr
       ranksRdd = nrRdd
     }
-    val out = ranks.select(col("v"), col("r")).localCheckpoint(true)
-    eRdd.unpersist(blocking = false)
-    ranksRdd.unpersist(blocking = false)
-    out
+    Caches.checkpoint(ranks.select(col("v"), col("r")))
   }
+
+  private val LpaPivotLabels = 64 // most seed labels the pivoted LPA round takes
 
   /** Semi-supervised label propagation (Zhu & Ghahramani 2002 shape) over
     * a symmetric `(src, dst)` edge set: `seeds` pins `(v, seed)` labels
@@ -507,9 +421,9 @@ object IterativeGraph {
     * the recurrence can ever assign is a SEED label (init copies seeds;
     * updates pick a neighbor's label or keep the previous one — induction
     * over rounds), so when the distinct seed labels fit a small constant
-    * (`spark.graft.lpaPivotLabels`, default 64; 0 disables) the plurality
-    * round PIVOTS: one `groupBy(v)` with a count column per label and the
-    * argmax as a `greatest(struct(c_i, -i, label_i))` projection. That
+    * ([[LpaPivotLabels]]) the plurality round PIVOTS: one `groupBy(v)`
+    * with a count column per label and the argmax as a
+    * `greatest(struct(c_i, -i, label_i))` projection. That
     * (a) cuts the round's aggregation shuffle from <= |labels| rows x 3
     * cols per vertex to ONE row per vertex, and (b) deletes the second
     * per-round exchange + aggregate (the (v,lbl)->v argmax regroup)
@@ -517,41 +431,38 @@ object IterativeGraph {
     * bit-identical: labels are enumerated ascending, so on equal counts
     * the larger -i (= smaller label) wins, exactly `max(struct(c,
     * -lbl))`. The general two-aggregation path remains for unbounded
-    * label spaces and is pinned output-identical in IterativeGraphSpec.
+    * label spaces; IterativeGraphSpec pins both against a driver-side
+    * reference of the recurrence.
     *
     * Returns `(v: long, lbl: long)` with lbl null where no label ever
     * arrived, materialized eagerly so the pinned blocks can be released.
     */
   def labelPropagation(edgesSym: DataFrame, seeds: DataFrame,
-      iters: Int, roundHook: (Int, Long) => Unit = null): DataFrame = {
+      iters: Int, roundHook: (Int, Long) => Unit = null): DataFrame = Lease.scoped { l =>
     require(iters >= 1, s"labelPropagation: iters must be >= 1, got $iters")
     // declared src distribution: every round's labels-onto-edges join
     // (and the initial vertex distinct) plans with no exchange over the
     // O(E) side — see pageRank
-    val (e, eRdd) =
-      pinPartitioned(edgesSym.select(col("src"), col("dst")).distinct(),
+    val (e, _) =
+      l.pinPartitioned(edgesSym.select(col("src"), col("dst")).distinct(),
         Seq("src"), "lpa.prelude")
     // the clamp RIDES IN the label state (seed is per-vertex constant):
     // a round is one labels-onto-edges join, one (v, lbl) partial-agg
     // count, one aggregate argmax, and one left join back — no per-round
     // seeds join (the pinned seed frame is a LogicalRDD with no stats,
     // so that join would plan as a full shuffle every round)
-    var (labels, labelsRdd) = pin(e.select(col("src").as("v")).distinct()
+    var (labels, labelsRdd) = l.pin(e.select(col("src").as("v")).distinct()
       .join(seeds.select(col("v"), col("seed")).distinct(), Seq("v"), "left")
       .select(col("v"), col("seed"), col("seed").as("lbl")))
     // bounded-label-space probe (one tiny job over the seed frame): the
     // distinct non-null seed labels, ascending, iff they fit the pivot
     // cap — otherwise empty and every round takes the general path
-    val spark = edgesSym.sparkSession
-    val pivotCap = spark.conf.get("spark.graft.lpaPivotLabels", "64").toInt
     val seedType = seeds.schema(seeds.schema.fieldIndex("seed")).dataType
-    val pivotLabels: Seq[Any] =
-      if (pivotCap <= 0) Nil
-      else {
-        val rows = seeds.select(col("seed")).filter(col("seed").isNotNull)
-          .distinct().orderBy(col("seed")).limit(pivotCap + 1).collect()
-        if (rows.length > pivotCap) Nil else rows.map(_.get(0)).toSeq
-      }
+    val pivotLabels: Seq[Any] = {
+      val rows = seeds.select(col("seed")).filter(col("seed").isNotNull)
+        .distinct().orderBy(col("seed")).limit(LpaPivotLabels + 1).collect()
+      if (rows.length > LpaPivotLabels) Nil else rows.map(_.get(0)).toSeq
+    }
     def litOf(v: Any) = GraftSqlBridge.column(
       org.apache.spark.sql.catalyst.expressions.Literal.create(v, seedType))
     var round = 1
@@ -604,7 +515,7 @@ object IterativeGraph {
           when(col("seed").isNotNull, col("seed"))
             .otherwise(coalesce(col("blbl"), col("prev"))).as("lbl"))
       graft.PlanProbe.emit("lpa.round", roundF)
-      val (nl, nlRdd) = pin(roundF)
+      val (nl, nlRdd) = l.pin(roundF)
       val prevOrd = nl.schema.fieldIndex("prev")
       val lblOrd = nl.schema.fieldIndex("lbl")
       val lblType = nl.schema(lblOrd).dataType // scalar by contract
@@ -622,15 +533,12 @@ object IterativeGraph {
       // trivially by the absorbing property, so it cannot catch a dead
       // exit)
       if (roundHook != null) roundHook(round, moved.value)
-      labelsRdd.unpersist(blocking = false)
+      l.free(labelsRdd)
       labels = nl
       labelsRdd = nlRdd
       round += 1
     }
-    val out = labels.select(col("v"), col("lbl")).localCheckpoint(true)
-    eRdd.unpersist(blocking = false)
-    labelsRdd.unpersist(blocking = false)
-    out
+    Caches.checkpoint(labels.select(col("v"), col("lbl")))
   }
 
   /** Multi-source BFS over a symmetric `(src, dst)` edge set: the exact
@@ -646,20 +554,20 @@ object IterativeGraph {
     * depth k keeps d=k through every later min), so the k-th round's
     * output is exactly the BFS level sets — engine-independent, which
     * puts a traversal algorithm under the hash gate. Each round's state
-    * is pinned ([[pin]]) so round k+1's two references to it (frontier +
+    * is pinned ([[Lease.pin]]) so round k+1's two references to it (frontier +
     * union) read blocks instead of recomputing the whole prefix of the
     * loop.
     */
   def bfsDistances(edgesSym: DataFrame, sources: DataFrame,
-      maxDepth: Int): DataFrame = {
+      maxDepth: Int): DataFrame = Lease.scoped { l =>
     require(maxDepth >= 1, s"bfsDistances: maxDepth must be >= 1, got $maxDepth")
     // declared src distribution: every round's frontier join (and the
     // vertex-set distinct) plans with no exchange over the O(E) side
-    val (e, eRdd) =
-      pinPartitioned(edgesSym.select(col("src"), col("dst")).distinct(),
+    val (e, _) =
+      l.pinPartitioned(edgesSym.select(col("src"), col("dst")).distinct(),
         Seq("src"), "bfs.prelude")
-    val (verts, vertsRdd) = pin(e.select(col("src").as("v")).distinct())
-    var (dist, distRdd) = pin(verts
+    val (verts, _) = l.pin(e.select(col("src").as("v")).distinct())
+    var (dist, distRdd) = l.pin(verts
       .join(sources.select(col("v")).distinct(), Seq("v"), "left_semi")
       .select(col("v"), lit(0L).as("d")))
     var prevCount = distRdd.count() // materializes the initial pin too
@@ -673,7 +581,7 @@ object IterativeGraph {
       val roundF = dist.unionAll(next)
         .groupBy(col("v")).agg(min(col("d")).as("d"))
       graft.PlanProbe.emit("bfs.round", roundF)
-      val (nd, ndRdd) = pin(roundF)
+      val (nd, ndRdd) = l.pin(roundF)
       // materialize before releasing the previous round (see pageRank);
       // the same count doubles as the FIXPOINT test: a reached vertex's
       // d can never change (BFS levels are monotone — any shorter path
@@ -684,18 +592,13 @@ object IterativeGraph {
       val n = ndRdd.count()
       converged = n == prevCount
       prevCount = n
-      distRdd.unpersist(blocking = false)
+      l.free(distRdd)
       dist = nd
       distRdd = ndRdd
       k += 1
     }
-    val out = verts.join(dist, Seq("v"), "left")
-      .select(col("v"), coalesce(col("d"), lit(-1L)).as("d"))
-      .localCheckpoint(true)
-    eRdd.unpersist(blocking = false)
-    vertsRdd.unpersist(blocking = false)
-    distRdd.unpersist(blocking = false)
-    out
+    Caches.checkpoint(verts.join(dist, Seq("v"), "left")
+      .select(col("v"), coalesce(col("d"), lit(-1L)).as("d")))
   }
 
   /** Bounded k-core peeling of an undirected graph given as canonical
@@ -709,14 +612,14 @@ object IterativeGraph {
     * their graph family in a spec (one more peel == identity).
     *
     * One round = a degree partial-agg + two semi joins on the vertex
-    * keys; state is pinned per round ([[pin]]). Returns the surviving
+    * keys; state is pinned per round ([[Lease.pin]]). Returns the surviving
     * edge set `(u, v)`, from which vertex membership and census both
     * derive.
     */
-  def kCoreEdges(pairs: DataFrame, k: Int, rounds: Int): DataFrame = {
+  def kCoreEdges(pairs: DataFrame, k: Int, rounds: Int): DataFrame = Lease.scoped { l =>
     require(k >= 1 && rounds >= 1,
       s"kCoreEdges: k and rounds must be >= 1, got k=$k rounds=$rounds")
-    var (e, eRdd) = pin(probe = "kcore.prelude", df =
+    var (e, eRdd) = l.pin(probe = "kcore.prelude", df =
       pairs.select(col("u"), col("v")).filter(col("u") < col("v")).distinct())
     var prevCount = eRdd.count() // materializes the initial pin too
     var r = 1
@@ -738,7 +641,7 @@ object IterativeGraph {
           2L * prevCount, KEY_ROW_BYTES), Seq("v"), "left_semi")
         .select(col("u"), col("v"))
       graft.PlanProbe.emit("kcore.round", roundF)
-      val (ne, neRdd) = pin(roundF)
+      val (ne, neRdd) = l.pin(roundF)
       // materialize before releasing the previous round (see pageRank);
       // the count doubles as the FIXPOINT test: peeling only removes
       // edges, so an unchanged edge count means no vertex fell below k
@@ -747,14 +650,12 @@ object IterativeGraph {
       val n = neRdd.count()
       converged = n == prevCount
       prevCount = n
-      eRdd.unpersist(blocking = false)
+      l.free(eRdd)
       e = ne
       eRdd = neRdd
       r += 1
     }
-    val out = e.localCheckpoint(true)
-    eRdd.unpersist(blocking = false)
-    out
+    Caches.checkpoint(e)
   }
 
   /** Exact triangle census of an undirected graph given as canonical
@@ -777,13 +678,13 @@ object IterativeGraph {
     * edge set is pinned once and reread by the degree pass, the
     * orientation pass, and the closing join.
     */
-  def triangleStats(pairs: DataFrame): DataFrame = {
-    val (e, eRdd) = pin(probe = "triangles.prelude", df =
+  def triangleStats(pairs: DataFrame): DataFrame = Lease.scoped { l =>
+    val (e, eRdd) = l.pin(probe = "triangles.prelude", df =
       pairs.select(col("u"), col("v")).filter(col("u") < col("v")).distinct())
     // materializing the pin yields the exact edge count for free — it
     // prices every join side below (and replaces the n_edges re-scan)
     val m = eRdd.count()
-    val (deg, degRdd) = pin(
+    val (deg, degRdd) = l.pin(
       e.select(col("u").as("x")).union(e.select(col("v").as("x")))
         .groupBy(col("x")).agg(count(lit(1)).as("d")))
     val nVerts = degRdd.count()
@@ -799,7 +700,7 @@ object IterativeGraph {
       (col("du") === col("dv") && col("u") < col("v"))
     // degree sides are vertex-cardinality: broadcast under the cap keeps
     // the edge set out of BOTH orientation exchanges (it streams once)
-    val (ori, oriRdd) = pin(e
+    val (ori, _) = l.pin(e
       .join(sizedBuildSide(
         deg.select(col("x").as("u"), col("d").as("du")), nVerts, ROW_BYTES), "u")
       .join(sizedBuildSide(
@@ -847,10 +748,6 @@ object IterativeGraph {
         col("n_triangles"))
     graft.PlanProbe.emit("triangles.closing", tri)
     graft.PlanProbe.emit("triangles.stats", stats)
-    val out = stats.localCheckpoint(true)
-    eRdd.unpersist(blocking = false)
-    degRdd.unpersist(blocking = false)
-    oriRdd.unpersist(blocking = false)
-    out
+    Caches.checkpoint(stats)
   }
 }

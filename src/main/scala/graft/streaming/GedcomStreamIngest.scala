@@ -32,25 +32,23 @@ object GedcomStreamIngest {
         // keep the file's natural line order — a repartition here would
         // shuffle lines and break record contiguity. CRLF/CR/LF all split
         // (batch must match what sc.textFile does for the batch path).
-        // The line RDD is cached for the batch: the assembly makes two
+        // The line RDD is persisted for the batch: the assembly makes two
         // passes plus the emptiness probe, and the lineage re-reads and
-        // re-splits the whole file otherwise.
-        val lines = batch.rdd
-          .flatMap(_.getString(0).split("\\r\\n|\\r|\\n", -1))
-        lines.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
+        // re-splits the whole file otherwise. The batch's lease frees it
+        // and the graph's row pin together.
+        graft.Lease.scoped { l =>
+          val lines = l.hold(batch.rdd
+            .flatMap(_.getString(0).split("\\r\\n|\\r|\\n", -1)))
           if (!lines.isEmpty()) {
-            val g = GedcomGraph.fromTextRdd(batch.sparkSession, lines)
-            try {
-              // idempotent per-batch output: a replayed batch (crash between
-              // the writes and the checkpoint commit) overwrites its own
-              // directory instead of appending duplicates — this is what
-              // makes the pipeline exactly-once rather than at-least-once
-              g.nodes.write.mode("overwrite").parquet(s"$outDir/nodes/batch=$batchId")
-              g.edges.write.mode("overwrite").parquet(s"$outDir/edges/batch=$batchId")
-            } finally g.release() // RDD-level pin: Dataset.unpersist can't free it
+            val g = GedcomGraph.fromTextRdd(batch.sparkSession, lines, lease = l)
+            // idempotent per-batch output: a replayed batch (crash between
+            // the writes and the checkpoint commit) overwrites its own
+            // directory instead of appending duplicates — this is what
+            // makes the pipeline exactly-once rather than at-least-once
+            g.nodes.write.mode("overwrite").parquet(s"$outDir/nodes/batch=$batchId")
+            g.edges.write.mode("overwrite").parquet(s"$outDir/edges/batch=$batchId")
           }
-        } finally lines.unpersist(blocking = false)
+        }
       }
       .start()
 }

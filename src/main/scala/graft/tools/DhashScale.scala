@@ -22,8 +22,8 @@ object DhashScale {
       val groups = Multimodal.DHASH_GROUPS * s
       val times = (1 to 2).map { _ =>
         val t0 = System.nanoTime()
-        val hashes = Multimodal.imageDhashes(
-          Multimodal.syntheticImageCorpusOf(spark, groups)).cache()
+        val hashes = graft.Caches.lease(Multimodal.imageDhashes(
+          Multimodal.syntheticImageCorpusOf(spark, groups)))
         val ex = hashes.groupBy(col("dhash")).agg(count(lit(1)).as("cnt"))
         val pairs = Multimodal.imageNearDupPairs(hashes, maxHamming = 2)
         // mirror q141's registered shape: one endpoint stream via explode
@@ -33,6 +33,7 @@ object DhashScale {
         val n = hashes.join(ex, Seq("dhash"))
           .join(near, Seq("asset_id"), "left").count()
         spark.catalog.clearCache()
+        graft.Caches.release()
         ((System.nanoTime() - t0) / 1e9, n)
       }
       val nPairs = Multimodal.imageNearDupPairs(

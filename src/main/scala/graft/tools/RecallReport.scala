@@ -49,7 +49,7 @@ object RecallReport {
     println(f"q86_knn_ivfpq mean recall@5 vs q39: ${knnRecall("q86_knn_ivfpq", knnExact)}%.3f")
 
     // q79: removal-set recall vs the exact all-pairs removal list
-    val e = graft.functions.Similarity.prepared(spark, sf).cache()
+    val e = graft.Caches.lease(graft.functions.Similarity.prepared(spark, sf))
     val exactRemoved = e.alias("a").join(e.alias("b"),
         col("a.vec_id") < col("b.vec_id"))
       .filter(graft.functions.VectorOps.cosinePre(
@@ -63,6 +63,7 @@ object RecallReport {
       if (exactRemoved.isEmpty) 1.0
       else semRemoved.count(exactRemoved).toDouble / exactRemoved.size
     println(f"q79_semdedup removal recall vs all-pairs: $semRecall%.3f")
+    graft.Caches.release()
     spark.stop()
   }
 }

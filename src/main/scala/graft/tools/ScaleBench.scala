@@ -232,7 +232,7 @@ object ScaleBench {
         val ix = Dedup.buildCellIndex(
           graft.functions.Similarity.prepared(s, dir), 0.4)
         ix.idx.write.mode("overwrite").parquet(store)
-        ix.e.unpersist(false)
+        graft.Caches.free(ix.e)
         (ix.cents, ix.thr, ix.n)
       })
       val idx = s.read.parquet(store)
@@ -257,12 +257,11 @@ object ScaleBench {
     "q64_probe_stored" -> ((s, dir) => {
       import graft.functions.{Dedup, Similarity}
       val store = scratchStore(dir, "embeddings.parquet", "lshindex.parquet")
-      val (p, _) = lshMemo.getOrElseUpdate(store, {
-        val e = Similarity.prepared(s, dir).cache()
+      val (p, _) = lshMemo.getOrElseUpdate(store, graft.Lease.scoped { l =>
+        val e = l.cache(Similarity.prepared(s, dir))
         val n = e.count()
         val planes = Similarity.planesForCorpus(n, 32)
         Dedup.lshCodeIndex(e, planes, 2).write.mode("overwrite").parquet(store)
-        e.unpersist(false)
         (planes, n)
       })
       val index = s.read.parquet(store)
@@ -290,13 +289,13 @@ object ScaleBench {
       // missing/partial parquet instead of rebuilding (the getOrElseUpdate
       // memos above don't insert on exception; this Set must match)
       if (!mhBuilt.contains(bandStore)) {
-        val sigs = Dedup.minhashSignaturesRowwise(
-          graft.Tables.documents(s, dir), Seq("lang", "source")).cache()
-        try {
+        graft.Lease.scoped { l =>
+          val sigs = l.cache(Dedup.minhashSignaturesRowwise(
+            graft.Tables.documents(s, dir), Seq("lang", "source")))
           sigs.write.mode("overwrite").parquet(sigStore)
           Dedup.minhashBandIndex(sigs, Seq("lang", "source"))
             .write.mode("overwrite").parquet(bandStore)
-        } finally sigs.unpersist(false)
+        }
         mhBuilt.add(bandStore)
       }
       val sigs = s.read.parquet(sigStore)

@@ -74,10 +74,21 @@ class IterativeGraphSpec extends SparkSpec {
     assert(labels.size == 64 && labels.values.toSet == Set("v00"))
   }
 
-  test("pointer jump: labels agree with the unshortcut shape on random graphs") {
-    // the r21 path-compression fold (spark.graft.ccShortcut) must induce
-    // exactly the same vertex partition as the plain alternating rounds,
-    // on shapes that stress it: random multigraph, hub fan-in, long chain
+  /** Driver-side union-find: each vertex's component as a member set. */
+  private def unionFind(edges: Seq[(String, String)]): Set[Set[String]] = {
+    val parent = scala.collection.mutable.Map.empty[String, String]
+    def find(x: String): String = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) => parent(find(a)) = find(b) }
+    parent.keys.toSeq.groupBy(find).values.map(_.toSet).toSet
+  }
+
+  test("pointer jump: labels agree with union-find on random, hub, chain") {
+    // the path-compression fold in every star round must induce exactly
+    // the reference partition on shapes that stress it: random
+    // multigraph, hub fan-in, long chain
     val rnd = new scala.util.Random(17)
     val rand = Seq.fill(400)((s"v${rnd.nextInt(90)}", s"v${rnd.nextInt(90)}"))
       .filter { case (a, b) => a != b }
@@ -86,30 +97,28 @@ class IterativeGraphSpec extends SparkSpec {
     val chain = (0 until 40).map(i => (f"c$i%02d", f"c${i + 1}%02d"))
     for (edges <- Seq(rand, hub, chain)) {
       val df = edges.map { case (a, b) => (a, b, "e") }.toDF("src", "dst", "relType")
-      val withJump = partitionOf(IterativeGraph.connectedComponents(df))
-      spark.conf.set("spark.graft.ccShortcut", "false")
-      val noJump =
-        try partitionOf(IterativeGraph.connectedComponents(df))
-        finally spark.conf.set("spark.graft.ccShortcut", "true")
-      assert(withJump == noJump)
+      assert(partitionOf(IterativeGraph.connectedComponents(df)) == unionFind(edges))
     }
   }
 
-  test("pointer jump converges a chain in no more rounds than the plain shape") {
+  test("pointer jump converges the 64-chain in 3 rounds") {
+    // the plain alternating rounds took 6 on this chain
     val edges = (0 until 63).map(i => (f"v$i%02d", f"v${i + 1}%02d", "e"))
       .toDF("src", "dst", "relType")
-    def rounds(): Int = {
-      var r = 0
-      IterativeGraph.connectedComponents(edges, roundHook = (i, _, _) => r = i)
-        .count()
-      r
-    }
-    val withJump = rounds()
-    spark.conf.set("spark.graft.ccShortcut", "false")
-    val noJump = try rounds() finally spark.conf.set("spark.graft.ccShortcut", "true")
-    assert(withJump <= noJump, s"jump=$withJump plain=$noJump")
-    assert(withJump < noJump, // on a 64-chain the compression must actually bite
-      s"pointer jump should cut rounds on a long chain: jump=$withJump plain=$noJump")
+    var rounds = 0
+    IterativeGraph.connectedComponents(edges, roundHook = (i, _, _) => rounds = i)
+      .count()
+    assert(rounds == 3, s"ran $rounds rounds")
+  }
+
+  test("CC that exhausts maxIter throws and frees every pin") {
+    val edges = (0 until 63).map(i => (f"v$i%02d", f"v${i + 1}%02d", "e"))
+      .toDF("src", "dst", "relType")
+    val before = persistentIds()
+    intercept[IllegalStateException](
+      IterativeGraph.connectedComponents(edges, maxIter = 1))
+    val left = residualRdds(before)
+    assert(left.isEmpty, s"pins left after the throw: ${left.mkString(", ")}")
   }
 
   test("an input that is already a star terminates in one round, unchanged") {
@@ -216,6 +225,26 @@ class IterativeGraphSpec extends SparkSpec {
     assert(got == r)
   }
 
+  test("pageRank's overflow guard throws and frees every pin") {
+    // 85 * V * scale overflows a long on two vertices at scale 1e17
+    val sym = Seq((0L, 1L), (1L, 0L)).toDF("src", "dst")
+    val before = persistentIds()
+    intercept[IllegalArgumentException](
+      IterativeGraph.pageRank(sym, 2, 100000000000000000L))
+    val left = residualRdds(before)
+    assert(left.isEmpty, s"pins left after the throw: ${left.mkString(", ")}")
+  }
+
+  test("pageRankWeighted with non-integer weights throws and frees every pin") {
+    val sym = Seq((0L, 1L, 0.5), (1L, 0L, 0.5)).toDF("src", "dst", "w")
+    val before = persistentIds()
+    val err = intercept[IllegalArgumentException](
+      IterativeGraph.pageRankWeighted(sym, 2, 1000000L))
+    assert(err.getMessage.contains("INTEGER weights"), err.getMessage)
+    val left = residualRdds(before)
+    assert(left.isEmpty, s"pins left after the throw: ${left.mkString(", ")}")
+  }
+
   // ---- labelPropagation ----
 
   private def lpa(sym: Seq[(Long, Long)], seeds: Seq[(Long, Long)],
@@ -266,39 +295,72 @@ class IterativeGraphSpec extends SparkSpec {
       s"moved counts should be positive then zero: $rounds")
   }
 
+  /** Driver-side reference of the plurality recurrence: a seed keeps its
+    * label; every other vertex takes its labeled neighbors' plurality
+    * label (ties to the smallest), or keeps its own when none is labeled. */
+  private def refLpa(sym: Seq[(Long, Long)], seeds: Seq[(Long, Long)],
+      iters: Int): Map[Long, Option[Long]] = {
+    val edges = sym.distinct
+    val verts = edges.map(_._1).distinct
+    val nbrs = edges.groupBy(_._2).map { case (v, es) => v -> es.map(_._1) }
+    val seedOf = seeds.toMap
+    var lbl = verts.map(v => v -> seedOf.get(v)).toMap
+    for (_ <- 1 to iters) {
+      lbl = verts.map { v =>
+        val ls = nbrs.getOrElse(v, Nil).flatMap(lbl(_))
+        v -> seedOf.get(v).orElse(
+          if (ls.isEmpty) lbl(v)
+          else Some(-ls.groupBy(identity).toSeq.map { case (l, n) => (n.size, -l) }.max._2))
+      }.toMap
+    }
+    lbl
+  }
+
+  /** [[lpa]], also reporting whether its rounds took the pivoted path. */
+  private def lpaPivoted(sym: Seq[(Long, Long)], seeds: Seq[(Long, Long)],
+      iters: Int): (Map[Long, Option[Long]], Boolean) = {
+    var pivoted = false
+    val out = graft.PlanProbe.withSink { (label, df) =>
+      if (label == "lpa.round")
+        pivoted = df.queryExecution.logical.toString.contains("__c0")
+    }(lpa(sym, seeds, iters))
+    (out, pivoted)
+  }
+
   test("labelPropagation pivot round agrees with the general path on random graphs") {
-    // the bounded-label-space pivot (one vertex-keyed aggregation with
-    // per-label counts; default on) must be output-identical to the
-    // general (v,lbl)-count + argmax path on arbitrary graphs — plurality,
-    // min-label tie-break, clamping, null propagation and all
+    // the bounded-label-space pivot (4 seed labels) and the general
+    // (v,lbl)-count + argmax path (65 seed labels, past the pivot cap)
+    // must both equal the reference recurrence on arbitrary graphs —
+    // plurality, min-label tie-break, clamping, null propagation and all
     val rnd = new scala.util.Random(11)
     for (trial <- 1 to 3) {
-      val sym = Seq.fill(200)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
+      val sym = Seq.fill(300)((rnd.nextInt(100).toLong, rnd.nextInt(100).toLong))
         .filter { case (a, b) => a != b }
         .flatMap { case (a, b) => Seq((a, b), (b, a)) }
-      val seeds = Seq.fill(12)((rnd.nextInt(60).toLong, (rnd.nextInt(4) + 1).toLong))
-      val pivot = lpa(sym, seeds, 3)
-      val general =
-        try {
-          spark.conf.set("spark.graft.lpaPivotLabels", "0")
-          lpa(sym, seeds, 3)
-        } finally spark.conf.unset("spark.graft.lpaPivotLabels")
-      assert(pivot == general, s"trial $trial: pivot != general")
+      val seeded = rnd.shuffle((0L until 100L).toList)
+      val few = seeded.take(12).map(v => (v, (rnd.nextInt(4) + 1).toLong))
+      val many = seeded.take(65).zipWithIndex.map { case (v, i) => (v, 1000L - i) }
+      for ((seeds, pivot) <- Seq((few, true), (many, false))) {
+        val (got, pivoted) = lpaPivoted(sym, seeds, 3)
+        assert(pivoted == pivot, s"trial $trial: pivoted=$pivoted")
+        assert(got == refLpa(sym, seeds, 3), s"trial $trial: pivoted=$pivoted")
+      }
     }
   }
 
   test("labelPropagation label spaces past the pivot cap fall back correctly") {
-    // 3 distinct labels with the cap forced to 2: the probe must reject
-    // the pivot and the general path must produce the known answer
-    val sym = Seq((1L, 10L), (2L, 10L), (3L, 10L))
+    // 65 distinct seed labels, one past the cap: the probe must reject
+    // the pivot and the general path must produce the known answer. The
+    // 62 extra seeds label pairs of their own, away from vertex 10.
+    val sym = (Seq((1L, 10L), (2L, 10L), (3L, 10L)) ++
+        (0L until 62L).map(i => (100L + i, 200L + i)))
       .flatMap { case (a, b) => Seq((a, b), (b, a)) }
-    val seeds = Seq((1L, 5L), (2L, 7L), (3L, 2L))
-    val out =
-      try {
-        spark.conf.set("spark.graft.lpaPivotLabels", "2")
-        lpa(sym, seeds, 1)
-      } finally spark.conf.unset("spark.graft.lpaPivotLabels")
+    val seeds = Seq((1L, 5L), (2L, 7L), (3L, 2L)) ++
+      (0L until 62L).map(i => (100L + i, 100L + i))
+    val (out, pivoted) = lpaPivoted(sym, seeds, 1)
+    assert(!pivoted)
     assert(out(10L) == Some(2L)) // three-way tie, min label wins
+    assert(out == refLpa(sym, seeds, 1))
   }
 
   test("labelPropagation clamps seeds against contradicting neighborhoods") {
@@ -464,8 +526,8 @@ class IterativeGraphSpec extends SparkSpec {
     // on the key, (2) the row multiset is unchanged, (3) an equi-join on
     // the declared key matches the plain DataFrame join exactly.
     val df = (1L to 5000L).map(i => (i % 97, i)).toDF("src", "dst")
-    val (pinned, rdd) = IterativeGraph.pinPartitioned(df, Seq("src"))
-    try {
+    Lease.scoped { lease =>
+      val (pinned, _) = lease.pinPartitioned(df, Seq("src"))
       pinned.queryExecution.executedPlan.outputPartitioning match {
         case h: HashPartitioning =>
           assert(h.expressions.map(_.references.head.name) == Seq("src"))
@@ -481,6 +543,6 @@ class IterativeGraphSpec extends SparkSpec {
         .select(col("src"), col("dst"), col("w"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
       assert(got == want, "join through the declared layout diverged")
-    } finally rdd.unpersist(blocking = false)
+    }
   }
 }

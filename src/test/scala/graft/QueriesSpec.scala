@@ -1,8 +1,10 @@
 package graft
 
 /** Smoke: every registered query runs at sf0.001 and (except two that are
-  * legitimately empty at this tiny scale) returns rows. The value-level
-  * check is the driver's DuckDB oracle at sf0.01 (tools/selfcheck.py). */
+  * legitimately empty at this tiny scale) returns rows, and leaves no
+  * pinned block once the harness's per-query release has run. The
+  * value-level check is the driver's DuckDB oracle at sf0.01
+  * (tools/selfcheck.py). */
 class QueriesSpec extends SparkSpec {
 
   // too selective to produce rows on ~1k-row inputs; non-empty at sf0.01+
@@ -10,8 +12,15 @@ class QueriesSpec extends SparkSpec {
 
   SparkEntry.all.foreach { q =>
     test(s"${q.name} runs at sf0.001") {
+      val before = persistentIds()
       val n = q.fn(spark, SF).count()
       if (!emptyOkAtTinyScale(q.name)) assert(n > 0, s"${q.name} returned no rows")
+      // the harness order (Bench/Verify/Prof): clearCache, then release
+      spark.catalog.clearCache()
+      Caches.release()
+      assert(Caches.liveCount == 0)
+      val left = residualRdds(before)
+      assert(left.isEmpty, s"${q.name} left pinned blocks: ${left.mkString(", ")}")
     }
   }
 

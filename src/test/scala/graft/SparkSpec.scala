@@ -7,6 +7,22 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val SF: String = "/root/testdata/sf0.001"
+
+  /** Ids of every RDD currently marked persistent. */
+  def persistentIds(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** The RDDs outside `before` that still hold cached partitions, polled
+    * for up to `waitMs` until there are none: removal after a
+    * non-blocking unpersist is asynchronous. Empty when everything pinned
+    * since `before` was freed. */
+  def residualRdds(before: Set[Int], waitMs: Long = 5000L): Seq[String] = {
+    def left = spark.sparkContext.getRDDStorageInfo.toSeq
+      .filter(i => !before(i.id) && i.numCachedPartitions > 0)
+    val until = System.nanoTime() + waitMs * 1000000L
+    var l = left
+    while (l.nonEmpty && System.nanoTime() < until) { Thread.sleep(20); l = left }
+    l.map(i => s"rdd ${i.id} (${i.numCachedPartitions} cached partitions)")
+  }
 }
 
 object SparkSpec {
