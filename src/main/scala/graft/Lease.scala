@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{Filter, LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.filter.{AbstractFilter, CompositeFilter}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -115,13 +118,17 @@ class Lease extends AutoCloseable {
 
   /** Free one pin before the lease closes — a loop's swap of the
     * previous round. */
-  def free(rdd: RDD[_]): Unit = synchronized { rdds -= rdd; rdd.unpersist(blocking = false) }
+  def free(rdd: RDD[_]): Unit = synchronized {
+    Lease.quietCheckpointWarning()
+    rdds -= rdd; rdd.unpersist(blocking = false)
+  }
 
   /** Free one [[cache]]d frame before the lease closes. */
   def free(df: DataFrame): Unit = synchronized { frames -= df; df.unpersist(false) }
 
   /** Free everything held. Idempotent; the lease can hold again after. */
   def close(): Unit = synchronized {
+    Lease.quietCheckpointWarning()
     rdds.foreach(_.unpersist(blocking = false))
     frames.foreach(_.unpersist(false))
     rdds.clear(); frames.clear()
@@ -137,5 +144,33 @@ object Lease {
   def scoped[T](body: Lease => T): T = {
     val l = new Lease
     try body(l) finally l.close()
+  }
+
+  /** Denies the WARN Spark logs on every unpersist of a locally
+    * checkpointed RDD ("RDD N was locally checkpointed, its lineage has
+    * been truncated and cannot be recomputed after unpersisting"): true
+    * and expected for each pin a lease frees, and otherwise most of a
+    * run's log. Every other event passes. */
+  private object CheckpointWarning
+      extends AbstractFilter(Filter.Result.DENY, Filter.Result.NEUTRAL) {
+    override def filter(e: LogEvent): Filter.Result =
+      if (e.getLevel == Level.WARN && e.getMessage.getFormattedMessage
+          .contains("was locally checkpointed, its lineage has been truncated")) onMatch
+      else onMismatch
+  }
+  CheckpointWarning.start()
+
+  /** Puts [[CheckpointWarning]] on the root logger config, unless it is
+    * there already; a reloaded logging config gets it again on the next
+    * free. */
+  private def quietCheckpointWarning(): Unit = LogManager.getContext(false) match {
+    case ctx: LoggerContext =>
+      val root = ctx.getConfiguration.getRootLogger
+      val present = root.getFilter match {
+        case c: CompositeFilter => c.getFiltersArray.contains(CheckpointWarning)
+        case f => f eq CheckpointWarning
+      }
+      if (!present) root.addFilter(CheckpointWarning)
+    case _ => // not log4j-core: nothing to configure
   }
 }

@@ -1,6 +1,6 @@
 package graft.gedcom
 
-import java.io.BufferedOutputStream
+import java.io.{BufferedOutputStream, CharArrayWriter}
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import org.apache.hadoop.fs.{FSDataOutputStream, FileSystem, Path, RawLocalFileSystem}
@@ -8,9 +8,13 @@ import org.apache.hadoop.io.Text
 import org.apache.hadoop.mapred.{FileOutputFormat, JobConf, RecordWriter, TextOutputFormat}
 import org.apache.hadoop.mapred.lib.MultipleOutputFormat
 import org.apache.hadoop.util.Progressable
-import org.apache.spark.sql.{Column, Row, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.MapData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DateType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Partitioned multiplexing CSV sink (reference R15, lib/csv_writer.js:85-113):
   * one output per (kind, raw-tag), `nodes-<TAG>` with the union of that
@@ -25,12 +29,13 @@ import org.apache.spark.sql.types.StructType
   * parse pass (or, on the shuffle path, one aggregation scan).
   *
   * Like the reference's one streaming pass, every output is written by ONE
-  * Spark job: each node and edge row is rendered to its CSV line by
-  * `to_csv` (the same Univocity generator and defaults as the DataFrame
-  * CSV writer, so the bytes match), keyed by its output dir, and a
-  * multiplexing output format routes it to `<dir>/part-NNNNN.csv`. Each
-  * part file opens with its dir's header; `neo4j-import` receives one
-  * `--<kind>` group per part.
+  * Spark job that scans the pinned flat rows once: each row's node line and
+  * its edge lines are rendered in the same pass, keyed by their output dir,
+  * and a multiplexing output format routes them to `<dir>/part-NNNNN.csv`.
+  * Lines are rendered by Spark's own `UnivocityGenerator` with the options
+  * `to_csv` uses (defaults, UTC), the generator of the DataFrame CSV
+  * writer, so the bytes match it. Each part file opens with its dir's
+  * header; `neo4j-import` receives one `--<kind>` group per part.
   */
 object CsvSink {
 
@@ -46,87 +51,172 @@ object CsvSink {
     special ++ keys.diff(Set("Gedcom Id:ID", ":LABEL")).toSeq.sorted :+ ":LABEL"
   }
 
-  /** (name, value) pairs of [[typedNodeColumns]]. */
+  /** [[nodeColumns]], each with the names of the parsed pair that follows
+    * it in typed-date mode: `K:date` + `K Qualifier` after each
+    * date-grammar column K (the `:date` header suffix is `neo4j-import`'s
+    * own typed-property convention, so the bulk load ingests real dates
+    * with zero extra ceremony), none otherwise. */
   private def typedNodeFields(keys: Set[String],
-      typedDates: Boolean): Seq[(String, Column)] =
-    nodeColumns(keys).flatMap { k =>
-      val raw = col("props").getItem(k)
-      if (typedDates && GedcomDates.isDateKey(k))
-        Seq(k -> raw,
-          s"$k:date" -> GedcomDates.typedDateCol(raw),
-          s"$k Qualifier" -> GedcomDates.qualifierCol(raw))
-      else Seq(k -> raw)
+      typedDates: Boolean): Seq[(String, Seq[String])] =
+    nodeColumns(keys).map { k =>
+      k -> (if (typedDates && GedcomDates.isDateKey(k)) Seq(s"$k:date", s"$k Qualifier")
+        else Nil)
     }
 
   /** Select list over the `props` map for one node tag: the ordered raw
-    * columns, and — in typed-date mode — a parsed `K:date` + `K Qualifier`
-    * pair directly after each date-grammar column K (the `:date` header
-    * suffix is `neo4j-import`'s own typed-property convention, so the bulk
-    * load ingests real dates with zero extra ceremony). Shared by the CSV
-    * sink and [[GedcomGraph.nodesWide]] so the two surfaces cannot drift. */
+    * columns and, in typed-date mode, each date column's parsed pair —
+    * the layout of the tag's CSV, as a frame ([[GedcomGraph.nodesWide]]). */
   def typedNodeColumns(keys: Set[String],
       typedDates: Boolean): Seq[Column] =
-    typedNodeFields(keys, typedDates).map { case (n, c) => c.as(n) }
+    typedNodeFields(keys, typedDates).flatMap {
+      case (k, Seq()) => Seq(col("props").getItem(k).as(k))
+      case (k, Seq(date, qualifier)) =>
+        val raw = col("props").getItem(k)
+        Seq(raw.as(k), GedcomDates.typedDateCol(raw).as(date),
+          GedcomDates.qualifierCol(raw).as(qualifier))
+    }
+
+  /** `to_csv`'s generator options: all defaults, UTC (dates carry no zone). */
+  private def csvOptions = new CSVOptions(Map.empty[String, String], true, "UTC")
+
+  /** A write task's renderer for one node tag: a slot table from each
+    * prop key (as the props map's own UTF-8 bytes) to its column, and one
+    * reused row, so a row costs one walk of its map — not one map probe
+    * per column. */
+  private final class NodeRenderer(tag: String, fields: Seq[(String, Seq[String])]) {
+    val dir: String = s"nodes-$tag"
+    private val slots = new java.util.HashMap[UTF8String, Integer]()
+    private val dated = new Array[Boolean](fields.map(1 + _._2.size).sum)
+    fields.foldLeft(0) { case (i, (k, pair)) =>
+      slots.put(UTF8String.fromString(k), i)
+      dated(i) = pair.nonEmpty
+      i + 1 + pair.size
+    }
+    private val values = new Array[Any](dated.length)
+    private val row = new GenericInternalRow(values)
+    private val gen = new UnivocityGenerator(
+      StructType(fields.flatMap { case (k, pair) =>
+        StructField(k, StringType) +: pair.zip(Seq(DateType, StringType)).map {
+          case (n, t) => StructField(n, t)
+        }
+      }),
+      new CharArrayWriter, csvOptions)
+
+    def render(props: MapData): String = {
+      java.util.Arrays.fill(values.asInstanceOf[Array[AnyRef]], null)
+      val ks = props.keyArray()
+      val vs = props.valueArray()
+      var i = 0
+      while (i < props.numElements()) {
+        val slot = slots.get(ks.getUTF8String(i))
+        if (slot != null) {
+          val v = vs.getUTF8String(i)
+          values(slot) = v
+          if (dated(slot) && v != null) {
+            // the functions the typed-date columns' udf wraps
+            val d = GedcomDates.parse(v.toString)
+            values(slot + 1) =
+              GedcomDates.toLocalDate(d).map(_.toEpochDay.toInt: Any).orNull
+            values(slot + 2) = UTF8String.fromString(d.qualifier)
+          }
+        }
+        i += 1
+      }
+      gen.writeToString(row)
+    }
+  }
+
+  /** `m(k)`, made on a miss; the key is stored as a copy, since a row's
+    * bytes are reused for the next row. */
+  private def memo[V <: AnyRef](m: java.util.HashMap[UTF8String, V], k: UTF8String)(
+      make: => V): V = {
+    var v = m.get(k)
+    if (v == null) { v = make; m.put(k.clone(), v) }
+    v
+  }
+
+  /** The column names as one CSV line, by the generator that renders the
+    * rows — names can carry commas, quotes and leading spaces (EVEN types
+    * become column prefixes). */
+  private def headerLine(names: Seq[String]): String =
+    new UnivocityGenerator(
+      StructType(names.indices.map(i => StructField(s"c$i", StringType))),
+      new CharArrayWriter, csvOptions)
+      .writeToString(new GenericInternalRow(names.map(UTF8String.fromString(_): Any).toArray))
+
+  private val EdgeColumns = Seq(":START_ID", ":END_ID", ":TYPE")
 
   def write(graph: GedcomGraph.Graph, outDir: String,
       typedDates: Boolean = false): Seq[Output] = {
-    // no extra cache layer: graph.flat is already pinned as blocks of raw
-    // UnsafeRows, and the one write job scans them directly
-    val nodes = graph.nodes
-    val spark = nodes.sparkSession
+    val flat = graph.flat
+    val spark = flat.sparkSession
 
     // per-tag column union: free when the parse pass folded it (text fast
     // path); otherwise one distinct (tag, key) scan — driver-side size is
     // bounded by the tag-dictionary x flattened-key vocabulary, not by rows
     val keysByTag: Map[String, Set[String]] = graph.summary.map(_.keysByTag).getOrElse(
-      nodes
+      graph.nodes
         .select(col("rawTag"), explode(map_keys(col("props"))).as("k"))
         .distinct().collect()
         .groupBy(_.getString(0)).map { case (t, rs) => t -> rs.map(_.getString(1)).toSet })
-    val nodeFields = keysByTag.toSeq.sortBy(_._1).map { case (tag, keys) =>
-      tag -> typedNodeFields(keys, typedDates)
-    }
-
-    // (output dir, CSV line) for every row of the import: a node's line
-    // picks its tag's column list; edge dirs are named like a
-    // partitionBy("rawTag") write
-    val edgeLines = graph.edges.select(
-      concat(lit("relationships/rawTag="), col("rawTag")),
-      to_csv(struct(col("src"), col("dst"), col("relType"))))
-    val lines = nodeFields.map { case (tag, fields) =>
-      tag -> to_csv(struct(fields.map(_._2): _*))
-    } match {
-      case Seq() => edgeLines
-      case (t0, l0) +: rest =>
-        val line = rest.foldLeft(when(col("rawTag") === t0, l0)) {
-          case (c, (t, l)) => c.when(col("rawTag") === t, l)
-        }
-        nodes.select(concat(lit("nodes-"), col("rawTag")), line).union(edgeLines)
-    }
+    val tags = keysByTag.keys.toSeq.sorted
+    val fields = keysByTag.map { case (t, keys) => t -> typedNodeFields(keys, typedDates) }
 
     val conf = new JobConf(spark.sparkContext.hadoopConfiguration)
     // the -t dir is the user's: no _SUCCESS marker beside their files
     conf.setBoolean("mapreduce.fileoutputcommitter.marksuccessfuljobs", false)
-    renderHeaders(spark,
-      nodeFields.map { case (tag, fields) => s"nodes-$tag" -> fields.map(_._1) } :+
-        ("relationships" -> Seq(":START_ID", ":END_ID", ":TYPE")))
-      .foreach { case (dir, h) => conf.set(HeaderKey + dir, h) }
+    fields.foreach { case (t, cols) =>
+      conf.set(HeaderKey + s"nodes-$t", headerLine(cols.flatMap { case (k, pair) => k +: pair }))
+    }
+    conf.set(HeaderKey + "relationships", headerLine(EdgeColumns))
 
     // SaveMode.Overwrite: drop what an earlier run left in the dirs this
     // run writes, and nothing else
     val base = new Path(outDir)
     val fs = base.getFileSystem(conf)
-    (nodeFields.map(t => s"nodes-${t._1}") :+ "relationships")
+    (tags.map(t => s"nodes-$t") :+ "relationships")
       .foreach(d => fs.delete(new Path(base, d), true))
 
-    lines.queryExecution.toRdd
-      .mapPartitions { it =>
+    // one scan of the pin: every flat row yields its node line (a non-skipped
+    // record with props, like graph.nodes) and one line per edge (like
+    // graph.edges), keyed by output dir; edge dirs are named like a
+    // partitionBy("rawTag") write
+    val schema = flat.schema
+    val Seq(tagAt, skippedAt, propsAt, edgesAt) =
+      Seq("rawTag", "skipped", "props", "edges").map(schema.fieldIndex)
+    flat.queryExecution.toRdd
+      .mapPartitions { rows =>
+        val nodeRenderers = new java.util.HashMap[UTF8String, NodeRenderer]()
+        val edgeDirs = new java.util.HashMap[UTF8String, String]()
+        val edgeValues = new Array[Any](EdgeColumns.size)
+        val edgeRow = new GenericInternalRow(edgeValues)
+        val edgeGen = new UnivocityGenerator(
+          StructType(EdgeColumns.map(StructField(_, StringType))), new CharArrayWriter, csvOptions)
         val line = new Text()
-        it.map { r => line.set(r.getUTF8String(1).getBytes); (r.getUTF8String(0).toString, line) }
+        rows.flatMap { r =>
+          val node =
+            if (r.getBoolean(skippedAt) || r.isNullAt(propsAt) ||
+                r.getMap(propsAt).numElements() == 0) Nil
+            else {
+              val tag = r.getUTF8String(tagAt)
+              val nr = memo(nodeRenderers, tag)(new NodeRenderer(tag.toString, fields(tag.toString)))
+              List(nr.dir -> nr.render(r.getMap(propsAt)))
+            }
+          val edges = if (r.isNullAt(edgesAt)) null else r.getArray(edgesAt)
+          val edgeLines = if (edges == null) Nil else List.tabulate(edges.numElements()) { j =>
+            // (src, dst, relType, rawTag): the line is the first three
+            val e = edges.getStruct(j, 4)
+            var i = 0
+            while (i < edgeValues.length) { edgeValues(i) = e.getUTF8String(i); i += 1 }
+            val tag = e.getUTF8String(3)
+            memo(edgeDirs, tag)(s"relationships/rawTag=$tag") -> edgeGen.writeToString(edgeRow)
+          }
+          node ::: edgeLines
+        }.map { case (dir, s) => line.set(s); (dir, line) }
       }
       .saveAsHadoopFile(outDir, classOf[String], classOf[Text], classOf[CsvDirsFormat], conf)
 
-    nodeFields.map { case (tag, _) => Output("nodes", tag, s"$outDir/nodes-$tag") } ++
+    tags.map(t => Output("nodes", t, s"$outDir/nodes-$t")) ++
       edgeOutputs(fs, new Path(base, "relationships"))
   }
 
@@ -146,19 +236,6 @@ object CsvSink {
         Output("relationships", p.getName.stripPrefix("rawTag="), pathStr)
       }
       .sortBy(_.rawTag)
-
-  /** Each (dir, column names) header rendered by the same `to_csv`
-    * generator as the rows — names can carry commas, quotes and leading
-    * spaces (EVEN types become column prefixes). The names are literals
-    * over a one-row local relation, so the driver folds it without a job. */
-  private def renderHeaders(spark: SparkSession,
-      headers: Seq[(String, Seq[String])]): Seq[(String, String)] = {
-    val one = spark.createDataFrame(java.util.List.of(Row.empty), StructType(Nil))
-    val row = one.select(headers.map { case (_, names) =>
-      to_csv(struct(names.zipWithIndex.map { case (n, i) => lit(n).as(s"c$i") }: _*))
-    }: _*).collect().head
-    headers.indices.map(i => headers(i)._1 -> row.getString(i))
-  }
 
   /** `neo4j-admin import`-style argument list from the written outputs
     * (reference index.js:81-84 builds `--<kind> <path>` pairs). Every part

@@ -1,6 +1,7 @@
 package graft.gedcom
 
 import java.sql.Date
+import java.time.LocalDate
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.udf
@@ -70,12 +71,14 @@ object GedcomDates {
   /** Best-effort java.sql.Date (missing month/day floor to 1);
     * calendar-invalid combinations like "31 FEB 1900" yield None rather
     * than throwing. */
-  def toDate(d: GedDate): Option[Date] =
+  def toDate(d: GedDate): Option[Date] = toLocalDate(d).map(Date.valueOf)
+
+  /** [[toDate]] as a proleptic-Gregorian `LocalDate` — what a `DateType`
+    * value holds (its epoch day), with no `java.sql.Date` calendar hop. */
+  def toLocalDate(d: GedDate): Option[LocalDate] =
     d.year.flatMap { y =>
-      try {
-        val ld = java.time.LocalDate.of(y, d.month.getOrElse(1), d.day.getOrElse(1))
-        Some(Date.valueOf(ld))
-      } catch { case _: java.time.DateTimeException => None }
+      try Some(LocalDate.of(y, d.month.getOrElse(1), d.day.getOrElse(1)))
+      catch { case _: java.time.DateTimeException => None }
     }
 
   private val parseUdf = udf { s: String =>

@@ -137,8 +137,10 @@ object GedcomGraph {
     val boundaryFlat = stitchBounds(bounds)
     val stats = (bounds.values.map(_.stats) ++ Seq(SplitStats.of(boundaryFlat)))
       .reduce(SplitStats.merge)
-    // union of pinned blocks + a driver-local handful needs no re-pinning
-    fromFlat(containedDF.unionByName(spark.createDataset(boundaryFlat).toDF()),
+    // union of pinned blocks + a driver-local handful needs no re-pinning;
+    // the handful rides in ONE partition, not spread over the cores, so
+    // every scan of the graph pays one task for it
+    fromFlat(containedDF.unionByName(spark.createDataset(boundaryFlat).toDF().coalesce(1)),
       lease, Some(stats))
   }
 

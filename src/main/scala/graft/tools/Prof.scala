@@ -43,7 +43,8 @@ import graft.gedcom.{CsvSink, GedcomGraph}
   * `--plans` writes `<dir>/<query>.txt`: `explain("formatted")` of the
   * top-level frame and of the first emission of every probe label.
   * `--stages` adds one line per completed stage. `--ged` profiles the
-  * GEDCOM -> CSV pipeline: parse and CSV walls, MB/s and the pinned
+  * GEDCOM -> CSV pipeline: parse and CSV walls, the CSV write's task
+  * count, executor CPU and generated classes, MB/s and the pinned
   * memory/disk bytes before each pass's `release()`.
   */
 object Prof {
@@ -186,24 +187,36 @@ object Prof {
     } finally sc.removeSparkListener(c)
   }
 
-  /** GEDCOM -> CSV passes over `path`, releasing each pass's pinned rows. */
+  /** GEDCOM -> CSV passes over `path`, releasing each pass's pinned rows;
+    * the CSV write's work (tasks, executor CPU, generated classes) is
+    * printed beside its wall. */
   def ged(spark: SparkSession, path: String, passes: Int): Unit = {
+    val sc = spark.sparkContext
+    val c = new Counters(perStage = false)
     val mb = new java.io.File(path).length() / 1e6
     val out = Files.createTempDirectory("graft-prof-csv").toString
-    for (p <- 1 to passes) {
+    sc.addSparkListener(c)
+    try for (p <- 1 to passes) {
       val t0 = System.nanoTime()
       val graph = GedcomGraph.fromFile(spark, path)
       // the parse job is the flat frame's materialization; force it alone
       graph.flat.queryExecution.toRdd.count()
       val t1 = System.nanoTime()
-      val outputs = CsvSink.write(graph, out)
+      GraftSqlBridge.drainListeners(sc)
+      c.reset()
+      val n0 = compiled
       val t2 = System.nanoTime()
-      val storage = spark.sparkContext.getRDDStorageInfo
+      val outputs = CsvSink.write(graph, out)
+      val t3 = System.nanoTime()
+      GraftSqlBridge.drainListeners(sc)
+      val storage = sc.getRDDStorageInfo
       graph.release()
-      println(f"pass $p: parse=${(t1 - t0) / 1e9}%6.2f s csv=${(t2 - t1) / 1e9}%6.2f s " +
-        f"${mb / ((t2 - t0) / 1e9)}%6.1f MB/s outputs=${outputs.size} " +
+      println(f"pass $p: parse=${(t1 - t0) / 1e9}%6.2f s csv=${(t3 - t2) / 1e9}%6.2f s " +
+        f"csvTasks=${c.tasks.sum}%3d csvCpu=${c.cpuNs.sum / 1e9}%5.2f s " +
+        f"csvClasses=${compiled - n0}%3d " +
+        f"${mb / ((t1 - t0 + t3 - t2) / 1e9)}%6.1f MB/s outputs=${outputs.size} " +
         s"pinnedMem=${storage.map(_.memSize).sum} pinnedDisk=${storage.map(_.diskSize).sum}")
-    }
+    } finally sc.removeSparkListener(c)
   }
 
   private val usage =

@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.functions._
 
@@ -17,7 +17,8 @@ import graft.gedcom._
   * carries the quoting corners: an EVEN TYPE with a comma, quotes and a
   * leading space (it becomes a column-name prefix), values with a
   * backslash, quotes, an embedded newline and a trailing space, an empty
-  * value, and keys missing on one row. */
+  * value, and keys missing on one row. A generated file repeats them at a
+  * wide tag and key vocabulary. */
 class CsvSinkSpec extends SparkSpec {
 
   private def resource(name: String): String = getClass.getResource(s"/$name").getPath
@@ -78,30 +79,118 @@ class CsvSinkSpec extends SparkSpec {
 
   private def tmp(prefix: String): File = Files.createTempDirectory(prefix).toFile
 
+  /** Writes `path`'s graph with the sink and with the per-tag writer, and
+    * compares every output dir and the Output list. */
+  private def assertParity(path: String, typedDates: Boolean): Unit = {
+    val graph = GedcomGraph.fromFile(spark, path)
+    try {
+      val (got, want) = (tmp("csv-sink"), tmp("csv-ref"))
+      val outputs = CsvSink.write(graph, got.getPath, typedDates)
+      referenceWrite(graph, want.getPath, typedDates)
+      val (g, w) = (contents(got), contents(want))
+      assert(g.keySet == w.keySet)
+      g.foreach { case (dir, (headers, recs)) =>
+        assert(headers.size == 1, s"$dir: parts disagree on the header")
+        assert(headers == w(dir)._1, s"$dir: header")
+        assert(recs == w(dir)._2, s"$dir: data records")
+      }
+      // the Output list: every node tag, then every written edge dir
+      def rel(p: String) = got.toPath.relativize(Paths.get(p)).toString
+      assert(outputs.map(o => (o.kind, o.rawTag, rel(o.path))) ==
+        w.keySet.toSeq.sorted.map { d =>
+          if (d.startsWith("nodes-")) ("nodes", d.stripPrefix("nodes-"), d)
+          else ("relationships", d.stripPrefix("relationships/rawTag="), d)
+        }.sortBy(o => (o._1, o._2)))
+    } finally graph.release()
+  }
+
   for (fixture <- fixtures; typedDates <- Seq(false, true)) {
     val mode = if (typedDates) "typed-date" else "raw"
     test(s"$fixture ($mode): headers and data records match the per-tag writer") {
-      val graph = GedcomGraph.fromFile(spark, resource(fixture))
-      try {
-        val (got, want) = (tmp("csv-sink"), tmp("csv-ref"))
-        val outputs = CsvSink.write(graph, got.getPath, typedDates)
-        referenceWrite(graph, want.getPath, typedDates)
-        val (g, w) = (contents(got), contents(want))
-        assert(g.keySet == w.keySet)
-        g.foreach { case (dir, (headers, recs)) =>
-          assert(headers.size == 1, s"$dir: parts disagree on the header")
-          assert(headers == w(dir)._1, s"$dir: header")
-          assert(recs == w(dir)._2, s"$dir: data records")
-        }
-        // the Output list: every node tag, then every written edge dir
-        def rel(p: String) = got.toPath.relativize(Paths.get(p)).toString
-        assert(outputs.map(o => (o.kind, o.rawTag, rel(o.path))) ==
-          w.keySet.toSeq.sorted.map { d =>
-            if (d.startsWith("nodes-")) ("nodes", d.stripPrefix("nodes-"), d)
-            else ("relationships", d.stripPrefix("relationships/rawTag="), d)
-          }.sortBy(o => (o._1, o._2)))
-      } finally graph.release()
+      assertParity(resource(fixture), typedDates)
     }
+  }
+
+  /** A GEDCOM of 30 record tags whose rows flatten to 40+ keys each: every
+    * value quoting corner (comma, quote, backslash, CONT newline, leading
+    * and trailing space, empty), date keys in each shape of the grammar
+    * (and invalid ones), edges, and every child left out of some rows. */
+  private lazy val wideGedcom: String = {
+    val rnd = new scala.util.Random(5)
+    def pick[T](xs: Seq[T]): T = xs(rnd.nextInt(xs.size))
+    val recordTags = Seq("INDI", "FAM", "SOUR", "REPO", "OBJE", "SUBM", "SUBN",
+      "_EVENT_DEFN", "ABBR", "AGNC", "ALIA", "ANCE", "AUTH", "CALN", "CAST", "CHAR",
+      "CORP", "DATA", "DESC", "DSCR", "EDUC", "FILE", "FORM", "IDNO", "LANG", "MEDI",
+      "NATI", "OCCU", "PROP", "PUBL")
+    val plain = Seq("ADDR", "ADR1", "ADR2", "AFN", "AGE", "CAUS", "CITY", "COPR", "CTRY",
+      "_EMAIL", "_AKA", "_UID", "_RIN", "_STAT", "NICK", "NPFX", "NSFX", "PAGE", "PHON",
+      "POST", "QUAY", "REFN", "RELI", "RESN", "ROLE", "SEX", "SPFX", "SSN", "STAE", "TEXT",
+      "TITL", "TIME", "VERS", "NAME", "PLAC", "TEMP", "_LDS")
+    val events = Seq("BIRT", "DEAT", "BURI", "CHR", "BAPM", "ADOP", "CREM", "EMIG",
+      "IMMI", "NATU")
+    val values = Seq("plain", "a,b", "say \"hi\"", "back\\slash", " lead", "trail ",
+      " both, \"x\" \\ y ", "", "Smith /Jones/", "SLAKE", "XYZ")
+    val dates = Seq("12 JAN 1900", "ABT 1850", "BET 1900 AND 1910", "FROM 1 MAR 1901 TO 1905",
+      "31 FEB 1900", "INT 1890 (census)", "not a date", "900", "EST MAR 1777",
+      "29 FEB 2000", "1 JAN 1900, maybe", "")
+    val perTag = 12
+    val ids = for (t <- recordTags.indices; i <- 0 until perTag) yield s"X${t}_$i"
+    val b = new StringBuilder
+    for ((tag, t) <- recordTags.zipWithIndex; i <- 0 until perTag) {
+      b ++= s"0 @X${t}_$i@ $tag\n"
+      def maybe(body: => Unit): Unit = if (rnd.nextDouble() < 0.85) body
+      plain.foreach(c => maybe(b ++= s"1 $c ${pick(values)}\n"))
+      events.foreach(e => maybe(b ++= s"1 $e\n2 DATE ${pick(dates)}\n2 PLAC ${pick(values)}\n"))
+      maybe(b ++= s"1 DATE ${pick(dates)}\n")
+      maybe(b ++= s"1 NOTE ${pick(values)}\n2 CONT ${pick(values)}\n")
+      maybe(b ++= "1 EVEN\n2 TYPE  Moved, \"far\"\n2 DATE " + pick(dates) + "\n")
+      Seq("ASSO", "CHIL", "HUSB").foreach(e => maybe(b ++= s"1 $e @${pick(ids)}@\n"))
+    }
+    b ++= "0 TRLR\n"
+    val f = Files.createTempFile("wide", ".ged")
+    Files.writeString(f, b.toString)
+    f.toString
+  }
+
+  test("the wide fixture has 30 node tags of 40+ columns and edges") {
+    val graph = GedcomGraph.fromFile(spark, wideGedcom)
+    try {
+      val keys = graph.summary.get.keysByTag
+      assert(keys.size == 30, keys.keySet)
+      assert(keys.values.forall(_.size >= 40), keys.map { case (t, k) => t -> k.size })
+      assert(keys.values.forall(_.exists(GedcomDates.isDateKey)))
+      assert(graph.summary.get.edges > 0)
+    } finally graph.release()
+  }
+
+  for (typedDates <- Seq(false, true)) {
+    val mode = if (typedDates) "typed-date" else "raw"
+    test(s"wide vocabulary ($mode): headers and data records match the per-tag writer") {
+      assertParity(wideGedcom, typedDates)
+    }
+  }
+
+  test("the CSV write is one job of one stage with one task per flat partition") {
+    val graph = GedcomGraph.fromFile(spark, resource("m1.ged"))
+    try {
+      val sc = spark.sparkContext
+      val (jobs, stages, tasks) = (new AtomicInteger, new AtomicInteger, new AtomicInteger)
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+        override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+          stages.incrementAndGet()
+          tasks.addAndGet(e.stageInfo.numTasks): Unit
+        }
+      }
+      GraftSqlBridge.drainListeners(sc)
+      sc.addSparkListener(listener)
+      try {
+        CsvSink.write(graph, tmp("csv-sink").getPath)
+        GraftSqlBridge.drainListeners(sc)
+      } finally sc.removeSparkListener(listener)
+      assert((jobs.get, stages.get) == ((1, 1)))
+      assert(tasks.get == graph.flat.rdd.getNumPartitions)
+    } finally graph.release()
   }
 
   test("an EVEN type with a comma, quotes and a leading space is one quoted header field") {

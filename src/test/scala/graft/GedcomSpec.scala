@@ -271,4 +271,13 @@ class GedcomSpec extends SparkSpec {
       .select("props").as[Map[String, String]].head()
     assert(sample("Note") == "note42")
   }
+
+  test("the stitched boundary records ride in one partition beside the splits") {
+    val splits = spark.sparkContext
+      .textFile(fixture, spark.sparkContext.defaultParallelism * 2).getNumPartitions
+    assert(graph.flat.rdd.getNumPartitions == splits + 1)
+    // every record still lands in the graph exactly once
+    assert(graph.flat.count() == graph.summary.get.nodes + graph.summary.get.skipped +
+      graph.flat.filter(!col("skipped") && size(map_keys(col("props"))) === 0).count())
+  }
 }

@@ -4,6 +4,11 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
+
 import org.apache.spark.sql.functions._
 
 import graft.gedcom.GedcomGraph
@@ -80,5 +85,24 @@ class LeaseSpec extends SparkSpec {
     assert(residualRdds(before, waitMs = 0).nonEmpty)
     g.release()
     assert(residualRdds(before).isEmpty)
+  }
+
+  test("freeing a checkpointed pin logs no lineage warning; other warnings still log") {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("lease-spec", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage): Unit
+    }
+    capture.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(capture, Level.WARN, null)
+    try {
+      val l = new Lease
+      assert(l.checkpoint(spark.range(10).toDF("id")).count() == 10)
+      l.close()
+      LogManager.getLogger("org.apache.spark.rdd.MapPartitionsRDD").warn("an unrelated warning")
+    } finally root.removeAppender("lease-spec")
+    assert(!seen.asScala.exists(_.contains("was locally checkpointed")), seen)
+    assert(seen.asScala.exists(_ == "an unrelated warning"), seen)
   }
 }
