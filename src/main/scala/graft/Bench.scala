@@ -83,18 +83,8 @@ object Bench {
         def pass(): Double = {
           loads += loadavg1().getOrElse(-1.0)
           val t0 = System.nanoTime()
-          val res =
-            gedcom.GedcomPipeline.run(spark, path, s"/tmp/graft-bench-gedcsv-$label")
-          val dt = (System.nanoTime() - t0) / 1e9
-          // r21 measurement-bug fix (declared in OPTIMIZATION_r21.md): each
-          // pass pins ~650 MB (150 MB leg) / ~4.4 GB (1 GB leg) of row
-          // blocks that GedcomGraph's contract says a long-lived caller
-          // must release per batch; unreleased, pass N timed pass N-1's
-          // eviction/spill storm (repeat-pass A/B: warm passes 5.0-18.7 s
-          // leaked vs 3.4-7.2 s released on the same quiet machine). The
-          // release runs AFTER the timestamp, outside the timed pass.
-          res.graph.release()
-          dt
+          gedcom.GedcomPipeline.run(spark, path, s"/tmp/graft-bench-gedcsv-$label")
+          (System.nanoTime() - t0) / 1e9
         }
         val (s1, s2) = (pass(), pass())
         var passes =

@@ -1,20 +1,22 @@
 package graft.gedcom
 
-import java.io.{BufferedOutputStream, CharArrayWriter}
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.io.{BufferedOutputStream, CharArrayWriter, IOException, OutputStream}
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 
-import org.apache.hadoop.fs.{FSDataOutputStream, FileSystem, Path, RawLocalFileSystem}
-import org.apache.hadoop.io.Text
-import org.apache.hadoop.mapred.{FileOutputFormat, JobConf, RecordWriter, TextOutputFormat}
-import org.apache.hadoop.mapred.lib.MultipleOutputFormat
-import org.apache.hadoop.util.Progressable
-import org.apache.spark.sql.Column
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, Encoders, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.MapData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
+
+import graft.gedcom.RecordAssembler.FlatRecord
 
 /** Partitioned multiplexing CSV sink (reference R15, lib/csv_writer.js:85-113):
   * one output per (kind, raw-tag), `nodes-<TAG>` with the union of that
@@ -25,25 +27,22 @@ import org.apache.spark.unsafe.types.UTF8String
   * Documented fix over the reference (SURVEY §4.3.1): fast-csv derives the
   * header from early rows and silently misaligns later rows with novel
   * columns; here each tag's schema is the union of all its rows' keys
-  * (`Gedcom Id:ID` first, properties sorted, `:LABEL` last), folded by the
-  * parse pass (or, on the shuffle path, one aggregation scan).
+  * (`Gedcom Id:ID` first, properties sorted, `:LABEL` last), folded by a
+  * pass over the records before any line is written.
   *
-  * Like the reference's one streaming pass, every output is written by ONE
-  * Spark job that scans the pinned flat rows once: each row's node line and
-  * its edge lines are rendered in the same pass, keyed by their output dir,
-  * and a multiplexing output format routes them to `<dir>/part-NNNNN.csv`.
-  * Lines are rendered by Spark's own `UnivocityGenerator` with the options
-  * `to_csv` uses (defaults, UTC), the generator of the DataFrame CSV
-  * writer, so the bytes match it. Each part file opens with its dir's
-  * header; `neo4j-import` receives one `--<kind>` group per part.
+  * Like the reference's one streaming pass, each task renders its split's
+  * records straight to part files as they stream by: a record's node line
+  * and its edge lines go to `<dir>/part-<split>.csv` of their output dirs,
+  * each part opened on its first line with the dir's header. Lines are
+  * rendered by Spark's own `UnivocityGenerator` with the options `to_csv`
+  * uses (defaults, UTC), the generator of the DataFrame CSV writer, so the
+  * bytes match it. [[render]] streams records parsed from the text (after
+  * [[GedcomGraph.summaryPass]]); [[write]] streams a built graph's rows.
+  * `neo4j-import` receives one `--<kind>` group per part.
   */
 object CsvSink {
 
   final case class Output(kind: String, rawTag: String, path: String)
-
-  /** Job-conf key prefix of a dir's rendered header line (edge dirs share
-    * the one under "relationships"). */
-  private[gedcom] val HeaderKey = "gedcom.csvsink.header."
 
   /** Column order for a node tag given the union of its prop keys. */
   def nodeColumns(keys: Set[String]): Seq[String] = {
@@ -80,15 +79,15 @@ object CsvSink {
   private def csvOptions = new CSVOptions(Map.empty[String, String], true, "UTC")
 
   /** A write task's renderer for one node tag: a slot table from each
-    * prop key (as the props map's own UTF-8 bytes) to its column, and one
-    * reused row, so a row costs one walk of its map — not one map probe
-    * per column. */
+    * prop key to its column, and one reused row, so a row costs one walk
+    * of its map — not one map probe per column. */
   private final class NodeRenderer(tag: String, fields: Seq[(String, Seq[String])]) {
     val dir: String = s"nodes-$tag"
-    private val slots = new java.util.HashMap[UTF8String, Integer]()
+    val header: String = headerLine(fields.flatMap { case (k, pair) => k +: pair })
+    private val slots = new java.util.HashMap[String, Integer]()
     private val dated = new Array[Boolean](fields.map(1 + _._2.size).sum)
     fields.foldLeft(0) { case (i, (k, pair)) =>
-      slots.put(UTF8String.fromString(k), i)
+      slots.put(k, i)
       dated(i) = pair.nonEmpty
       i + 1 + pair.size
     }
@@ -102,37 +101,23 @@ object CsvSink {
       }),
       new CharArrayWriter, csvOptions)
 
-    def render(props: MapData): String = {
+    def render(props: scala.collection.Map[String, String]): String = {
       java.util.Arrays.fill(values.asInstanceOf[Array[AnyRef]], null)
-      val ks = props.keyArray()
-      val vs = props.valueArray()
-      var i = 0
-      while (i < props.numElements()) {
-        val slot = slots.get(ks.getUTF8String(i))
+      props.foreachEntry { (k, v) =>
+        val slot = slots.get(k)
         if (slot != null) {
-          val v = vs.getUTF8String(i)
-          values(slot) = v
+          values(slot) = UTF8String.fromString(v)
           if (dated(slot) && v != null) {
             // the functions the typed-date columns' udf wraps
-            val d = GedcomDates.parse(v.toString)
+            val d = GedcomDates.parse(v)
             values(slot + 1) =
               GedcomDates.toLocalDate(d).map(_.toEpochDay.toInt: Any).orNull
             values(slot + 2) = UTF8String.fromString(d.qualifier)
           }
         }
-        i += 1
       }
       gen.writeToString(row)
     }
-  }
-
-  /** `m(k)`, made on a miss; the key is stored as a copy, since a row's
-    * bytes are reused for the next row. */
-  private def memo[V <: AnyRef](m: java.util.HashMap[UTF8String, V], k: UTF8String)(
-      make: => V): V = {
-    var v = m.get(k)
-    if (v == null) { v = make; m.put(k.clone(), v) }
-    v
   }
 
   /** The column names as one CSV line, by the generator that renders the
@@ -146,96 +131,152 @@ object CsvSink {
 
   private val EdgeColumns = Seq(":START_ID", ":END_ID", ":TYPE")
 
-  def write(graph: GedcomGraph.Graph, outDir: String,
-      typedDates: Boolean = false): Seq[Output] = {
-    val flat = graph.flat
-    val spark = flat.sparkSession
+  /** One split's part files, `<dir>/<name>` under `root`, opened on their
+    * dir's first line. Each is written under a hidden attempt-unique name
+    * and renamed into place by [[commit]]; [[abort]] deletes them, so a
+    * failed attempt leaves no part behind. `conf` is absent for the local
+    * FS, which is written through NIO: without its native library,
+    * Hadoop's local FS forks `chmod`/`stat` for each file and dir it
+    * creates (~10 ms a file). */
+  private final class Parts(root: String, name: String, attempt: String,
+      conf: Option[Broadcast[SerializableConfiguration]]) {
+    private val open = new java.util.LinkedHashMap[String, OutputStream]()
+    private lazy val fs = conf.map(c => new Path(root).getFileSystem(c.value.value))
+    var bytes = 0L
 
-    // per-tag column union: free when the parse pass folded it (text fast
-    // path); otherwise one distinct (tag, key) scan — driver-side size is
-    // bounded by the tag-dictionary x flattened-key vocabulary, not by rows
-    val keysByTag: Map[String, Set[String]] = graph.summary.map(_.keysByTag).getOrElse(
-      graph.nodes
-        .select(col("rawTag"), explode(map_keys(col("props"))).as("k"))
-        .distinct().collect()
-        .groupBy(_.getString(0)).map { case (t, rs) => t -> rs.map(_.getString(1)).toSet })
-    val tags = keysByTag.keys.toSeq.sorted
-    val fields = keysByTag.map { case (t, keys) => t -> typedNodeFields(keys, typedDates) }
+    private def path(dir: String, file: String) = new Path(new Path(root, dir), file)
+    private def tmp(dir: String) = path(dir, s".$name.$attempt")
 
-    val conf = new JobConf(spark.sparkContext.hadoopConfiguration)
-    // the -t dir is the user's: no _SUCCESS marker beside their files
-    conf.setBoolean("mapreduce.fileoutputcommitter.marksuccessfuljobs", false)
-    fields.foreach { case (t, cols) =>
-      conf.set(HeaderKey + s"nodes-$t", headerLine(cols.flatMap { case (k, pair) => k +: pair }))
+    def line(dir: String, header: => String, s: String): Unit = {
+      var out = open.get(dir)
+      if (out == null) {
+        out = fs match {
+          case Some(f) => f.create(tmp(dir), false)
+          case None =>
+            val p = Paths.get(tmp(dir).toUri)
+            Files.createDirectories(p.getParent)
+            new BufferedOutputStream(Files.newOutputStream(p, StandardOpenOption.CREATE_NEW), 1 << 16)
+        }
+        open.put(dir, out)
+        put(out, header)
+      }
+      put(out, s)
     }
-    conf.set(HeaderKey + "relationships", headerLine(EdgeColumns))
+
+    private def put(out: OutputStream, s: String): Unit = {
+      val b = s.getBytes(StandardCharsets.UTF_8)
+      out.write(b)
+      out.write('\n')
+      bytes += b.length + 1
+    }
+
+    /** Closes every part and renames it into place; returns their dirs. */
+    def commit(): Seq[String] = {
+      open.values.forEach(_.close())
+      open.keySet.toArray(Array.empty[String]).toSeq.map { dir =>
+        val (from, to) = (tmp(dir), path(dir, name))
+        fs match {
+          case Some(f) =>
+            f.delete(to, false)
+            if (!f.rename(from, to)) throw new IOException(s"could not rename $from to $to")
+          case None =>
+            Files.move(Paths.get(from.toUri), Paths.get(to.toUri), StandardCopyOption.ATOMIC_MOVE)
+        }
+        dir
+      }
+    }
+
+    def abort(): Unit = open.forEach { (dir, out) =>
+      try out.close()
+      finally fs match {
+        case Some(f) => f.delete(tmp(dir), false)
+        case None => Files.deleteIfExists(Paths.get(tmp(dir).toUri))
+      }
+    }
+  }
+
+  /** Renders `records` into part `part` of every dir they reach: each
+    * non-skipped record with props as a node line (like `graph.nodes`),
+    * each edge as a line of its edge dir (like `graph.edges`, named like a
+    * `partitionBy("rawTag")` write). Returns the dirs written. */
+  private def writePart(records: Iterator[FlatRecord],
+      fields: Map[String, Seq[(String, Seq[String])]], root: String, part: Int,
+      attempt: String, conf: Option[Broadcast[SerializableConfiguration]]): Seq[String] = {
+    val parts = new Parts(root, f"part-$part%05d.csv", attempt, conf)
+    val nodeRenderers = new java.util.HashMap[String, NodeRenderer]()
+    val edgeDirs = new java.util.HashMap[String, String]()
+    val edgeValues = new Array[Any](EdgeColumns.size)
+    val edgeRow = new GenericInternalRow(edgeValues)
+    val edgeGen = new UnivocityGenerator(
+      StructType(EdgeColumns.map(StructField(_, StringType))), new CharArrayWriter, csvOptions)
+    lazy val edgeHeader = headerLine(EdgeColumns)
+    try {
+      records.foreach { r =>
+        if (!r.skipped && r.props.nonEmpty) {
+          val nr = nodeRenderers.computeIfAbsent(r.rawTag, t => new NodeRenderer(t, fields(t)))
+          parts.line(nr.dir, nr.header, nr.render(r.props))
+        }
+        r.edges.foreach { e =>
+          edgeValues(0) = UTF8String.fromString(e.src)
+          edgeValues(1) = UTF8String.fromString(e.dst)
+          edgeValues(2) = UTF8String.fromString(e.relType)
+          parts.line(edgeDirs.computeIfAbsent(e.rawTag, t => s"relationships/rawTag=$t"),
+            edgeHeader, edgeGen.writeToString(edgeRow))
+        }
+      }
+      val dirs = parts.commit()
+      Option(TaskContext.get()).foreach(GraftSqlBridge.addBytesWritten(_, parts.bytes))
+      dirs
+    } catch {
+      case t: Throwable => parts.abort(); throw t
+    }
+  }
+
+  /** One job writes each partition of `records` as part `<partition>`,
+    * then the driver writes `driverRecords` as one part after them. The
+    * node dirs are those of `keysByTag`, each headed by its union. */
+  private def writeAll(records: RDD[FlatRecord], driverRecords: Seq[FlatRecord],
+      keysByTag: Map[String, Set[String]], outDir: String,
+      typedDates: Boolean): Seq[Output] = {
+    val sc = records.sparkContext
+    val fields = keysByTag.map { case (t, keys) => t -> typedNodeFields(keys, typedDates) }
+    val base = new Path(outDir)
+    val fs = base.getFileSystem(sc.hadoopConfiguration)
+    val root = fs.makeQualified(base).toString
+    val conf =
+      if (fs.getScheme == "file") None
+      else Some(sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration)))
 
     // SaveMode.Overwrite: drop what an earlier run left in the dirs this
     // run writes, and nothing else
-    val base = new Path(outDir)
-    val fs = base.getFileSystem(conf)
-    (tags.map(t => s"nodes-$t") :+ "relationships")
+    (fields.keys.toSeq.map(t => s"nodes-$t") :+ "relationships")
       .foreach(d => fs.delete(new Path(base, d), true))
+    val dirs = sc.runJob(records, (ctx: TaskContext, it: Iterator[FlatRecord]) =>
+      writePart(it, fields, root, ctx.partitionId, ctx.taskAttemptId.toString, conf)).flatten ++
+      writePart(driverRecords.iterator, fields, root, records.getNumPartitions, "driver", conf)
 
-    // one scan of the pin: every flat row yields its node line (a non-skipped
-    // record with props, like graph.nodes) and one line per edge (like
-    // graph.edges), keyed by output dir; edge dirs are named like a
-    // partitionBy("rawTag") write
-    val schema = flat.schema
-    val Seq(tagAt, skippedAt, propsAt, edgesAt) =
-      Seq("rawTag", "skipped", "props", "edges").map(schema.fieldIndex)
-    flat.queryExecution.toRdd
-      .mapPartitions { rows =>
-        val nodeRenderers = new java.util.HashMap[UTF8String, NodeRenderer]()
-        val edgeDirs = new java.util.HashMap[UTF8String, String]()
-        val edgeValues = new Array[Any](EdgeColumns.size)
-        val edgeRow = new GenericInternalRow(edgeValues)
-        val edgeGen = new UnivocityGenerator(
-          StructType(EdgeColumns.map(StructField(_, StringType))), new CharArrayWriter, csvOptions)
-        val line = new Text()
-        rows.flatMap { r =>
-          val node =
-            if (r.getBoolean(skippedAt) || r.isNullAt(propsAt) ||
-                r.getMap(propsAt).numElements() == 0) Nil
-            else {
-              val tag = r.getUTF8String(tagAt)
-              val nr = memo(nodeRenderers, tag)(new NodeRenderer(tag.toString, fields(tag.toString)))
-              List(nr.dir -> nr.render(r.getMap(propsAt)))
-            }
-          val edges = if (r.isNullAt(edgesAt)) null else r.getArray(edgesAt)
-          val edgeLines = if (edges == null) Nil else List.tabulate(edges.numElements()) { j =>
-            // (src, dst, relType, rawTag): the line is the first three
-            val e = edges.getStruct(j, 4)
-            var i = 0
-            while (i < edgeValues.length) { edgeValues(i) = e.getUTF8String(i); i += 1 }
-            val tag = e.getUTF8String(3)
-            memo(edgeDirs, tag)(s"relationships/rawTag=$tag") -> edgeGen.writeToString(edgeRow)
-          }
-          node ::: edgeLines
-        }.map { case (dir, s) => line.set(s); (dir, line) }
-      }
-      .saveAsHadoopFile(outDir, classOf[String], classOf[Text], classOf[CsvDirsFormat], conf)
-
-    tags.map(t => Output("nodes", t, s"$outDir/nodes-$t")) ++
-      edgeOutputs(fs, new Path(base, "relationships"))
+    val edgeTags = dirs.filter(_.startsWith("relationships/"))
+      .map(_.stripPrefix("relationships/rawTag=")).distinct.sorted
+    fields.keys.toSeq.sorted.map(t => Output("nodes", t, s"$outDir/nodes-$t")) ++
+      edgeTags.map(t => Output("relationships", t, s"$outDir/relationships/rawTag=$t"))
   }
 
-  /** The per-tag edge dirs the write produced (none for an input without
-    * edges), enumerated through the Hadoop FS of the output path —
-    * java.io.File would silently return nothing for any non-plain-local
-    * URI and the import command would drop all edges. */
-  private def edgeOutputs(fs: FileSystem, base: Path): Seq[Output] =
-    (if (fs.exists(base)) fs.listStatus(base).toSeq else Nil)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("rawTag="))
-      .map { st =>
-        val p = st.getPath
-        // keep plain local paths plain (the bulk-import command and the
-        // part-file scan are local-process consumers)
-        val pathStr =
-          if (p.toUri.getScheme == "file") p.toUri.getPath else p.toString
-        Output("relationships", p.getName.stripPrefix("rawTag="), pathStr)
-      }
-      .sortBy(_.rawTag)
+  /** The bulk load's render pass, after [[GedcomGraph.summaryPass]] over
+    * the same `raw` returned `boundary` and `stats`: each task parses its
+    * split's contained records again and streams them to its parts; the
+    * driver writes the stitched boundary records as one more part. Headers
+    * are the summary's unions. Nothing is encoded or pinned. */
+  def render(raw: RDD[String], boundary: Seq[FlatRecord], stats: GedcomGraph.SplitStats,
+      outDir: String, typedDates: Boolean = false): Seq[Output] =
+    writeAll(GedcomGraph.containedRecords(raw, None), boundary, stats.keysByTag, outDir,
+      typedDates)
+
+  /** Writes a built graph's CSVs in one job over its flat rows, through
+    * the same renderer and part files as [[render]]. */
+  def write(graph: GedcomGraph.Graph, outDir: String,
+      typedDates: Boolean = false): Seq[Output] =
+    writeAll(graph.flat.as(Encoders.product[FlatRecord]).rdd, Nil, graph.stats.keysByTag,
+      outDir, typedDates)
 
   /** `neo4j-admin import`-style argument list from the written outputs
     * (reference index.js:81-84 builds `--<kind> <path>` pairs). Every part
@@ -273,41 +314,4 @@ object CsvSink {
     new java.io.File(outDir, "relationships").delete(): Unit
     new java.io.File(outDir).delete(): Unit
   }
-}
-
-/** Multiplexing text output for [[CsvSink.write]]: each (dir, line) record
-  * goes to `<dir>/part-NNNNN.csv` of its task, a file that opens with the
-  * dir's header (carried in the job conf) and then holds bare lines. The
-  * output root is the user's scratch dir, which may already exist, so the
-  * output-exists check is skipped; the sink clears its own dirs first. */
-final class CsvDirsFormat extends MultipleOutputFormat[String, Text] {
-  override protected def generateFileNameForKeyValue(
-      dir: String, line: Text, name: String): String = s"$dir/$name.csv"
-
-  override protected def generateActualKey(dir: String, line: Text): String = null
-
-  override protected def getBaseRecordWriter(fs: FileSystem, job: JobConf,
-      name: String, progress: Progressable): RecordWriter[String, Text] = {
-    val file = FileOutputFormat.getTaskOutputPath(job, name)
-    val out =
-      if (file.toUri.getScheme == "file") {
-        // Hadoop's local FS forks `chmod`/`stat` for each file and dir it
-        // creates when its native library is absent (~10 ms a file, most of
-        // this job's wall on a 4 MB input). NIO writes the same bytes,
-        // minus the .crc sidecars, still counted in the task's output
-        // metrics; the committer moves them like any other file.
-        val p = Paths.get(file.toUri)
-        Files.createDirectories(p.getParent)
-        new FSDataOutputStream(
-          new BufferedOutputStream(Files.newOutputStream(p, StandardOpenOption.CREATE_NEW), 1 << 16),
-          FileSystem.getStatistics("file", classOf[RawLocalFileSystem]))
-      } else file.getFileSystem(job).create(file, progress)
-    val w = new TextOutputFormat.LineRecordWriter[String, Text](out)
-    // "nodes-<TAG>/part-NNNNN.csv" or "relationships/rawTag=<TAG>/part-..."
-    val dir = name.substring(0, name.indexOf('/'))
-    w.write(null, new Text(job.get(CsvSink.HeaderKey + dir)))
-    w
-  }
-
-  override def checkOutputSpecs(ignored: FileSystem, job: JobConf): Unit = ()
 }

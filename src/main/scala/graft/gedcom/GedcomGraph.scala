@@ -18,7 +18,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * summary (per-tag column union, row counts, diagnostics), so the CSV
   * sink and the CLI need no further scan. Pre-parsed lines ([[fromLines]])
   * take one hash shuffle on recordNo and fold nothing. Per-record work is
-  * bounded by record size either way.
+  * bounded by record size either way. The bulk load reads the text
+  * without building a graph: [[summaryPass]] folds the same summary and
+  * pins nothing, and [[CsvSink.render]] streams the records to the CSVs.
   */
 object GedcomGraph {
 
@@ -40,6 +42,17 @@ object GedcomGraph {
       * Long-lived callers MUST free each batch's graph, by this or by
       * building it on a lease they close (the streaming ingest does). */
     def release(): Unit = lease.close()
+
+    /** [[summary]], else (the shuffle path) the same figures scanned from
+      * the frames above. */
+    lazy val stats: SplitStats = summary.getOrElse {
+      def strings(df: DataFrame) = df.collect().map(_.getString(0)).toSet
+      val keysByTag = nodes.select(col("rawTag"), explode(map_keys(col("props"))).as("k"))
+        .distinct().collect()
+        .groupBy(_.getString(0)).map { case (t, rs) => t -> rs.map(_.getString(1)).toSet }
+      SplitStats(keysByTag, nodes.count(), edges.count(), skipped.count(),
+        strings(unusedTags), strings(missingTemples))
+    }
   }
 
   /** General path for pre-parsed line Datasets: one hash shuffle on
@@ -101,15 +114,14 @@ object GedcomGraph {
     import spark.implicits._
     if (raw.getNumPartitions > maxStitchSplits)
       return fromLines(GedcomParser.fromLineRdd(spark, raw), lease)
-    val acc = new BoundsAccumulator
-    spark.sparkContext.register(acc, "gedcomBounds")
+    val acc = boundsAccumulator(raw)
     // hot path: InternalRows built by hand — the reflective product encoder
     // (ExternalMapToCatalyst per props entry + nested serializers) measured
     // ~2.7 s of pure overhead on the 150 MB bench vs ~0 for direct rows.
     // One UnsafeProjection per partition compacts them so the downstream
     // checkpoint pins flat byte rows, not boxed object graphs.
     val schema = flatSchema
-    val unsafeRows = containedRecords(raw, acc).mapPartitions { it =>
+    val unsafeRows = containedRecords(raw, Some(acc)).mapPartitions { it =>
       val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(schema)
       // prop keys / tags / labels / relTypes repeat across nearly every
       // record (bounded vocabulary) — intern their UTF8 encodings per
@@ -131,17 +143,41 @@ object GedcomGraph {
     // EAGER materialization = the one real job over the text; afterwards
     // the accumulator holds every split's boundary fragments for the stitch
     pinnedRdd.count()
-    val bounds = acc.value
-    require(bounds.size == raw.getNumPartitions,
-      s"boundary accumulator saw ${bounds.size} of ${raw.getNumPartitions} splits")
-    val boundaryFlat = stitchBounds(bounds)
-    val stats = (bounds.values.map(_.stats) ++ Seq(SplitStats.of(boundaryFlat)))
-      .reduce(SplitStats.merge)
+    val (boundaryFlat, stats) = stitched(raw, acc)
     // union of pinned blocks + a driver-local handful needs no re-pinning;
     // the handful rides in ONE partition, not spread over the cores, so
     // every scan of the graph pays one task for it
     fromFlat(containedDF.unionByName(spark.createDataset(boundaryFlat).toDF().coalesce(1)),
       lease, Some(stats))
+  }
+
+  /** The bulk load's first pass over the text: the parse of
+    * [[fromTextRdd]] (one job, no shuffle), with nothing encoded or
+    * pinned. Returns the stitched boundary records and the summary of
+    * every record, the stitched ones included. A second pass re-derives
+    * the contained records from `raw` with [[containedRecords]]. */
+  def summaryPass(raw: RDD[String]): (Seq[RecordAssembler.FlatRecord], SplitStats) = {
+    val acc = boundsAccumulator(raw)
+    containedRecords(raw, Some(acc)).foreach(_ => ())
+    stitched(raw, acc)
+  }
+
+  private def boundsAccumulator(raw: RDD[String]): BoundsAccumulator = {
+    val acc = new BoundsAccumulator
+    raw.sparkContext.register(acc, "gedcomBounds")
+    acc
+  }
+
+  /** After the pass that filled `acc`: the stitched boundary records, and
+    * the splits' summaries merged with theirs. */
+  private def stitched(raw: RDD[String],
+      acc: BoundsAccumulator): (Seq[RecordAssembler.FlatRecord], SplitStats) = {
+    val bounds = acc.value
+    require(bounds.size == raw.getNumPartitions,
+      s"boundary accumulator saw ${bounds.size} of ${raw.getNumPartitions} splits")
+    val boundaryFlat = stitchBounds(bounds)
+    (boundaryFlat, (bounds.values.map(_.stats) ++ Seq(SplitStats.of(boundaryFlat)))
+      .reduce(SplitStats.merge))
   }
 
   /** Schema of the flat frame — taken from the case-class encoder so the
@@ -237,10 +273,10 @@ object GedcomGraph {
   }
 
   /** The single parse pass: assembles every record fully contained in its
-    * split and reports the split's boundary fragments through `acc` when
-    * the iterator exhausts. */
-  private[gedcom] def containedRecords(
-      raw: RDD[String], acc: BoundsAccumulator): RDD[RecordAssembler.FlatRecord] =
+    * split and, given `acc`, reports the split's boundary fragments
+    * through it when the iterator exhausts. */
+  private[gedcom] def containedRecords(raw: RDD[String],
+      acc: Option[BoundsAccumulator]): RDD[RecordAssembler.FlatRecord] =
     raw.mapPartitionsWithIndex { (pi, it) =>
       new Iterator[RecordAssembler.FlatRecord] {
         private var j = 0L
@@ -274,7 +310,7 @@ object GedcomGraph {
           // fragment — report fragments + folded stats exactly once
           if (pending.isEmpty && !lines.hasNext && !reported) {
             reported = true
-            acc.add(Bound(pi, prefix.toSeq, group.toSeq, seen0, stats))
+            acc.foreach(_.add(Bound(pi, prefix.toSeq, group.toSeq, seen0, stats)))
           }
         }
         override def hasNext: Boolean = { advance(); pending.nonEmpty }
@@ -327,10 +363,12 @@ object GedcomGraph {
   }
 
   def fromFile(spark: SparkSession, path: String,
-      lease: graft.Lease = new graft.Lease): Graph = {
-    val minParts = spark.sparkContext.defaultParallelism * 2
-    fromTextRdd(spark, spark.sparkContext.textFile(path, minParts), lease = lease)
-  }
+      lease: graft.Lease = new graft.Lease): Graph =
+    fromTextRdd(spark, textLines(spark, path), lease = lease)
+
+  /** A text file's lines, in two splits per core. */
+  def textLines(spark: SparkSession, path: String): RDD[String] =
+    spark.sparkContext.textFile(path, spark.sparkContext.defaultParallelism * 2)
 
   /** Wide, directly queryable table for one record type: the union of the
     * tag's flattened property keys as real columns (same layout as the

@@ -2,6 +2,7 @@ package graft.gedcom
 
 import java.nio.file.{Files, Path, StandardCopyOption}
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 
 /** End-to-end GEDCOM -> property-graph CSV pipeline with the reference's
@@ -9,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   * per-(kind,tag) CSVs, build the bulk-import command, and publish the new
   * database directory atomically with backup/rollback.
   *
-  * The Spark job ends at the CSV fan-out; everything after (neo4j-admin
+  * The Spark work ends at the CSV fan-out; everything after (neo4j-admin
   * import, directory swap, process restart) is plain driver-side
   * orchestration exactly as in the reference (index.js:81-114,
   * lib/neo4j.js:31-110) — the CSVs are the interchange.
@@ -17,7 +18,7 @@ import org.apache.spark.sql.SparkSession
 object GedcomPipeline {
 
   final case class Result(
-      graph: GedcomGraph.Graph,
+      stats: GedcomGraph.SplitStats, // nodes, edges, skips and the diagnostics
       outputs: Seq[CsvSink.Output],
       importArgs: Seq[String])
 
@@ -26,10 +27,29 @@ object GedcomPipeline {
     * ([[CsvSink.typedNodeColumns]]); the default stays raw reference
     * parity. */
   def run(spark: SparkSession, gedcomPath: String, csvOutDir: String,
-      typedDates: Boolean = false): Result = {
-    val graph = GedcomGraph.fromFile(spark, gedcomPath)
-    val outputs = CsvSink.write(graph, csvOutDir, typedDates)
-    Result(graph, outputs, CsvSink.importArgs(outputs))
+      typedDates: Boolean = false): Result =
+    fromTextRdd(spark, GedcomGraph.textLines(spark, gedcomPath), csvOutDir, typedDates)
+
+  /** The bulk load of GEDCOM text lines, in two jobs over the text that
+    * pin nothing: [[GedcomGraph.summaryPass]] folds the per-tag column
+    * unions and diagnostics, then [[CsvSink.render]] parses again and
+    * streams every record to its CSV lines (each dir's header needs the
+    * whole input's union before its first line). Past `maxStitchSplits`
+    * it takes the shuffle path's graph instead, written by
+    * [[CsvSink.write]] and released here. */
+  def fromTextRdd(spark: SparkSession, raw: RDD[String], csvOutDir: String,
+      typedDates: Boolean = false,
+      maxStitchSplits: Int = GedcomGraph.MAX_STITCH_SPLITS): Result = {
+    val (stats, outputs) =
+      if (raw.getNumPartitions > maxStitchSplits) {
+        val graph = GedcomGraph.fromLines(GedcomParser.fromLineRdd(spark, raw))
+        try (graph.stats, CsvSink.write(graph, csvOutDir, typedDates))
+        finally graph.release()
+      } else {
+        val (boundary, stats) = GedcomGraph.summaryPass(raw)
+        (stats, CsvSink.render(raw, boundary, stats, csvOutDir, typedDates))
+      }
+    Result(stats, outputs, CsvSink.importArgs(outputs))
   }
 
   /** Full `neo4j-admin` bulk import command (reference lib/neo4j.js:78-99

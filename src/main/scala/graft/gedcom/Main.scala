@@ -79,13 +79,7 @@ object Main {
     def log(s: String): Unit = if (!opts.quiet) println(s)
 
     log(f"Finished writing intermediate csv files. Time elapsed: ${(System.nanoTime() - t0) / 1e9}%.2fs")
-    // the parse pass folded these; only the shuffle path has to scan
-    val g = res.graph
-    val stats = g.summary.getOrElse {
-      def strings(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.getString(0)).toSet
-      GedcomGraph.SplitStats(Map.empty, g.nodes.count(), g.edges.count(),
-        g.skipped.count(), strings(g.unusedTags), strings(g.missingTemples))
-    }
+    val stats = res.stats
     log(s"nodes: ${stats.nodes}  edges: ${stats.edges}  skipped: ${stats.skipped}")
     if (stats.unusedTags.nonEmpty)
       log(s"Missing Tags: ${stats.unusedTags.toSeq.sorted.mkString(", ")}")

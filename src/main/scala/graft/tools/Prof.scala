@@ -43,9 +43,8 @@ import graft.gedcom.{CsvSink, GedcomGraph}
   * `--plans` writes `<dir>/<query>.txt`: `explain("formatted")` of the
   * top-level frame and of the first emission of every probe label.
   * `--stages` adds one line per completed stage. `--ged` profiles the
-  * GEDCOM -> CSV pipeline: parse and CSV walls, the CSV write's task
-  * count, executor CPU and generated classes, MB/s and the pinned
-  * memory/disk bytes before each pass's `release()`.
+  * GEDCOM -> CSV bulk load: for its summary and render passes the wall,
+  * jobs, tasks, executor CPU and pinned bytes, and MB/s over both.
   */
 object Prof {
 
@@ -187,35 +186,32 @@ object Prof {
     } finally sc.removeSparkListener(c)
   }
 
-  /** GEDCOM -> CSV passes over `path`, releasing each pass's pinned rows;
-    * the CSV write's work (tasks, executor CPU, generated classes) is
-    * printed beside its wall. */
+  /** The GEDCOM bulk load over `path`, pass by pass: its summary pass and
+    * render pass, each with its wall, jobs, tasks, executor CPU and the
+    * bytes left pinned after it (the load pins nothing, so 0). */
   def ged(spark: SparkSession, path: String, passes: Int): Unit = {
     val sc = spark.sparkContext
     val c = new Counters(perStage = false)
     val mb = new java.io.File(path).length() / 1e6
     val out = Files.createTempDirectory("graft-prof-csv").toString
-    sc.addSparkListener(c)
-    try for (p <- 1 to passes) {
-      val t0 = System.nanoTime()
-      val graph = GedcomGraph.fromFile(spark, path)
-      // the parse job is the flat frame's materialization; force it alone
-      graph.flat.queryExecution.toRdd.count()
-      val t1 = System.nanoTime()
+    /** Runs `body` alone on the counters; its wall and one line of work. */
+    def step[T](name: String)(body: => T): (T, Double, String) = {
       GraftSqlBridge.drainListeners(sc)
       c.reset()
-      val n0 = compiled
-      val t2 = System.nanoTime()
-      val outputs = CsvSink.write(graph, out)
-      val t3 = System.nanoTime()
+      val t0 = System.nanoTime()
+      val r = body
+      val s = (System.nanoTime() - t0) / 1e9
       GraftSqlBridge.drainListeners(sc)
-      val storage = sc.getRDDStorageInfo
-      graph.release()
-      println(f"pass $p: parse=${(t1 - t0) / 1e9}%6.2f s csv=${(t3 - t2) / 1e9}%6.2f s " +
-        f"csvTasks=${c.tasks.sum}%3d csvCpu=${c.cpuNs.sum / 1e9}%5.2f s " +
-        f"csvClasses=${compiled - n0}%3d " +
-        f"${mb / ((t1 - t0 + t3 - t2) / 1e9)}%6.1f MB/s outputs=${outputs.size} " +
-        s"pinnedMem=${storage.map(_.memSize).sum} pinnedDisk=${storage.map(_.diskSize).sum}")
+      val pinned = sc.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum
+      (r, s, f"$name=$s%6.2f s jobs=${c.jobs.sum}%d tasks=${c.tasks.sum}%3d " +
+        f"cpu=${c.cpuNs.sum / 1e9}%5.2f s pinned=$pinned")
+    }
+    sc.addSparkListener(c)
+    try for (p <- 1 to passes) {
+      val raw = GedcomGraph.textLines(spark, path)
+      val ((boundary, stats), s1, summary) = step("summary")(GedcomGraph.summaryPass(raw))
+      val (outputs, s2, render) = step("render")(CsvSink.render(raw, boundary, stats, out))
+      println(f"pass $p: $summary | $render | ${mb / (s1 + s2)}%6.1f MB/s outputs=${outputs.size}")
     } finally sc.removeSparkListener(c)
   }
 

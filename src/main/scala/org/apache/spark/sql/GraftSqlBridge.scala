@@ -26,6 +26,13 @@ object GraftSqlBridge {
   def drainListeners(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
 
+  /** Counts `n` bytes in a task's output metrics, as Spark's own writers
+    * do (`setBytesWritten` is `private[spark]`). */
+  def addBytesWritten(ctx: org.apache.spark.TaskContext, n: Long): Unit = {
+    val m = ctx.taskMetrics().outputMetrics
+    m.setBytesWritten(m.bytesWritten + n)
+  }
+
   /** DataFrame straight from an RDD of InternalRows (UnsafeRow-compatible),
     * bypassing the Scala-object encoder entirely — `internalCreateDataFrame`
     * is `private[sql]`. Caller guarantees rows match `schema`. */

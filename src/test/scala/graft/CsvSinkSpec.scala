@@ -1,7 +1,6 @@
 package graft
 
 import java.io.File
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -11,9 +10,10 @@ import org.apache.spark.sql.functions._
 
 import graft.gedcom._
 
-/** The one-job CSV sink against the per-tag `DataFrameWriter.csv` loop it
-  * replaced: for every output dir, the header bytes and the multiset of
-  * data records must be identical, in raw and typed-date mode. m3.ged
+/** The CSV sink, streamed from the text and written from a built graph,
+  * against the per-tag `DataFrameWriter.csv` loop it replaced: for every
+  * output dir, the header bytes and the multiset of data records must be
+  * identical, in raw and typed-date mode. m3.ged
   * carries the quoting corners: an EVEN TYPE with a comma, quotes and a
   * leading space (it becomes a column-name prefix), values with a
   * backslash, quotes, an embedded newline and a trailing space, an empty
@@ -40,67 +40,35 @@ class CsvSinkSpec extends SparkSpec {
       .csv(s"$outDir/relationships")
   }
 
-  /** CSV records of a file, split on newlines outside quoted fields (the
-    * writer escapes quotes inside a field with a backslash). */
-  private def records(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var start = 0
-    var quoted = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quoted && c == '\\') i += 1
-      else if (c == '"') quoted = !quoted
-      else if (c == '\n' && !quoted) { out += s.substring(start, i); start = i + 1 }
-      i += 1
-    }
-    if (start < s.length) out += s.substring(start)
-    out.toSeq
-  }
+  import CsvFiles.{contents, tmp}
 
-  /** Per output dir (relative to `root`): the distinct header records of
-    * its part files and the multiset of their data records. */
-  private def contents(root: File): Map[String, (Set[String], Map[String, Int])] = {
-    def dirs(d: File): Seq[File] =
-      d +: Option(d.listFiles()).toSeq.flatten.filter(_.isDirectory).flatMap(dirs)
-    dirs(root).flatMap { d =>
-      val parts = Option(d.listFiles()).toSeq.flatten
-        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".csv"))
-      if (parts.isEmpty) None
-      else {
-        val recs = parts.map(f => records(
-          new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)))
-        val rel = root.toPath.relativize(d.toPath).toString
-        Some(rel -> (recs.flatMap(_.headOption).toSet,
-          recs.flatMap(_.drop(1)).groupBy(identity).map { case (r, rs) => r -> rs.size }))
-      }
-    }.toMap
-  }
-
-  private def tmp(prefix: String): File = Files.createTempDirectory(prefix).toFile
-
-  /** Writes `path`'s graph with the sink and with the per-tag writer, and
-    * compares every output dir and the Output list. */
+  /** Writes `path` with the streamed bulk load, with the sink over its
+    * built graph and with the per-tag writer, and compares every output
+    * dir and the Output lists. */
   private def assertParity(path: String, typedDates: Boolean): Unit = {
     val graph = GedcomGraph.fromFile(spark, path)
     try {
-      val (got, want) = (tmp("csv-sink"), tmp("csv-ref"))
-      val outputs = CsvSink.write(graph, got.getPath, typedDates)
+      val (streamed, got, want) = (tmp("csv-stream"), tmp("csv-sink"), tmp("csv-ref"))
+      val outputs = GedcomPipeline.run(spark, path, streamed.getPath, typedDates).outputs
+      val graphOutputs = CsvSink.write(graph, got.getPath, typedDates)
       referenceWrite(graph, want.getPath, typedDates)
-      val (g, w) = (contents(got), contents(want))
-      assert(g.keySet == w.keySet)
-      g.foreach { case (dir, (headers, recs)) =>
-        assert(headers.size == 1, s"$dir: parts disagree on the header")
-        assert(headers == w(dir)._1, s"$dir: header")
-        assert(recs == w(dir)._2, s"$dir: data records")
+      val w = contents(want)
+      for ((root, outs) <- Seq(streamed -> outputs, got -> graphOutputs)) {
+        val g = contents(root)
+        assert(g.keySet == w.keySet)
+        g.foreach { case (dir, (headers, recs)) =>
+          assert(headers.size == 1, s"$dir: parts disagree on the header")
+          assert(headers == w(dir)._1, s"$dir: header")
+          assert(recs == w(dir)._2, s"$dir: data records")
+        }
+        // the Output list: every node tag, then every written edge dir
+        def rel(p: String) = root.toPath.relativize(Paths.get(p)).toString
+        assert(outs.map(o => (o.kind, o.rawTag, rel(o.path))) ==
+          w.keySet.toSeq.sorted.map { d =>
+            if (d.startsWith("nodes-")) ("nodes", d.stripPrefix("nodes-"), d)
+            else ("relationships", d.stripPrefix("relationships/rawTag="), d)
+          }.sortBy(o => (o._1, o._2)))
       }
-      // the Output list: every node tag, then every written edge dir
-      def rel(p: String) = got.toPath.relativize(Paths.get(p)).toString
-      assert(outputs.map(o => (o.kind, o.rawTag, rel(o.path))) ==
-        w.keySet.toSeq.sorted.map { d =>
-          if (d.startsWith("nodes-")) ("nodes", d.stripPrefix("nodes-"), d)
-          else ("relationships", d.stripPrefix("relationships/rawTag="), d)
-        }.sortBy(o => (o._1, o._2)))
     } finally graph.release()
   }
 
@@ -220,10 +188,13 @@ class CsvSinkSpec extends SparkSpec {
     Files.writeString(ged, "0 HEAD\n1 SOUR t\n0 @I1@ INDI\n1 NAME A /B/\n0 TRLR\n")
     val graph = GedcomGraph.fromFile(spark, ged.toString)
     try {
-      val out = tmp("csv-sink")
+      val (out, streamed) = (tmp("csv-sink"), tmp("csv-stream"))
       val outputs = CsvSink.write(graph, out.getPath)
+      assert(GedcomPipeline.run(spark, ged.toString, streamed.getPath).outputs.map(_.rawTag) ==
+        outputs.map(_.rawTag))
       assert(outputs.map(o => (o.kind, o.rawTag)).toSet == Set(("nodes", "HEAD"), ("nodes", "INDI")))
       assert(!new File(out, "relationships").exists())
+      assert(!new File(streamed, "relationships").exists())
       assert(CsvSink.importArgs(outputs).count(_ == "--relationships") == 0)
     } finally graph.release()
   }
@@ -233,16 +204,27 @@ class CsvSinkSpec extends SparkSpec {
     try {
       val out = tmp("csv-sink")
       Files.writeString(out.toPath.resolve("precious.txt"), "user data")
-      CsvSink.write(graph, out.getPath)
+      val opts = Main.Opts(src = Some(resource("m1.ged")), tmpDir = out.getPath, quiet = true)
+      assert(Main.run(opts, spark) == 0)
       val first = contents(out)
+      // the graph's write replaces the bulk load's CSVs with the same
+      // ones, and the bulk load replaces them again
       CsvSink.write(graph, out.getPath)
+      assert(contents(out) == first)
+      assert(Main.run(opts, spark) == 0)
       assert(contents(out) == first)
       assert(out.listFiles().map(_.getName).toSet ==
         Set("precious.txt", "relationships") ++ first.keySet.filter(_.startsWith("nodes-")))
     } finally graph.release()
   }
 
-  test("Main.run without -d runs two Spark jobs: the parse and the CSV write") {
+  private def mainRun(): Unit = {
+    val opts = Main.Opts(src = Some(resource("m1.ged")), tmpDir = tmp("csv-cli").getPath,
+      quiet = true)
+    assert(Main.run(opts, spark) == 0)
+  }
+
+  test("Main.run without -d runs two Spark jobs: the summary pass and the render pass") {
     val sc = spark.sparkContext
     val jobs = new AtomicInteger
     val listener = new SparkListener {
@@ -251,11 +233,63 @@ class CsvSinkSpec extends SparkSpec {
     GraftSqlBridge.drainListeners(sc)
     sc.addSparkListener(listener)
     try {
-      val opts = Main.Opts(src = Some(resource("m1.ged")), tmpDir = tmp("csv-cli").getPath,
-        quiet = true)
-      assert(Main.run(opts, spark) == 0)
+      mainRun()
       GraftSqlBridge.drainListeners(sc)
     } finally sc.removeSparkListener(listener)
-    assert(jobs.get <= 2, s"${jobs.get} jobs")
+    assert(jobs.get == 2, s"${jobs.get} jobs")
   }
+
+  test("Main.run pins nothing: no persistent RDD and no stored bytes") {
+    val before = persistentIds()
+    mainRun()
+    assert(persistentIds() == before)
+    assert(spark.sparkContext.getRDDStorageInfo.filterNot(i => before(i.id))
+      .map(i => i.memSize + i.diskSize).sum == 0)
+  }
+
+  test("a render attempt that throws midway leaves no part; a rerun leaves one part per dir and split") {
+    val sc = spark.sparkContext
+    val text = Files.readAllLines(Paths.get(wideGedcom)).toArray(Array.empty[String]).toSeq
+    val raw = sc.parallelize(text, 3)
+    val (boundary, stats) = GedcomGraph.summaryPass(raw)
+    val clean = tmp("csv-clean")
+    CsvSink.render(raw, boundary, stats, clean.getPath)
+    def parts(root: File): Seq[String] =
+      CsvFiles.dirs(root).flatMap(d => Option(d.listFiles()).toSeq.flatten)
+        .filter(_.isFile).map(f => root.toPath.relativize(f.toPath).toString)
+    assert(parts(clean).exists(_.endsWith("/part-00001.csv")))
+
+    // split 1 throws halfway through its lines, the first time it renders
+    val half = text.size / 6
+    CsvSinkSpec.failures.set(1)
+    val failing = raw.mapPartitionsWithIndex { (pi, it) =>
+      it.zipWithIndex.map { case (l, i) =>
+        if (pi == 1 && i == half && CsvSinkSpec.failures.getAndDecrement() > 0)
+          throw new IllegalStateException("injected render failure")
+        l
+      }
+    }
+    val out = tmp("csv-commit")
+    val e = intercept[org.apache.spark.SparkException] {
+      CsvSink.render(failing, boundary, stats, out.getPath)
+    }
+    assert(e.getMessage.contains("injected render failure"))
+    // the job's other tasks may still be finishing
+    val until = System.nanoTime() + 10000000000L
+    while (sc.statusTracker.getExecutorInfos.map(_.numRunningTasks).sum > 0 &&
+        System.nanoTime() < until) Thread.sleep(10)
+    assert(!parts(out).exists(_.contains("part-00001")), parts(out))
+
+    // the retry: exactly the clean run's files, nothing left over
+    CsvSink.render(failing, boundary, stats, out.getPath)
+    assert(parts(out).sorted == parts(clean).sorted)
+    assert(parts(out).forall(_.matches("""(nodes-[^/]+|relationships/rawTag=[^/]+)/part-\d{5}\.csv""")),
+      parts(out))
+    assert(contents(out) == contents(clean))
+  }
+}
+
+object CsvSinkSpec {
+  /** Render failures still to inject (tasks run in this JVM). */
+  val failures = new AtomicInteger
 }

@@ -154,6 +154,30 @@ object GedcomProps extends Properties("gedcom") {
         folded.missingTemples == strings(viaShuffle.missingTemples)
     }
 
+  /** The streamed bulk load (summary pass, then render pass with one part
+    * per split and one for the stitched records) must write the CSVs the
+    * shuffle path's graph writes, with the same summary; so must its
+    * fallback past the split cap. */
+  property("streamed CSVs == the shuffle path's graph written, for any split count") =
+    Prop.forAll(batchGen, Gen.chooseNum(1, 7)) { (rs, slices) =>
+      val rdd = spark.sparkContext.parallelize(serialize(rs), slices)
+      val viaShuffle = run(rs)
+      val dirs @ Seq(streamed, fallback, written) = Seq.fill(3)(CsvFiles.tmp("ged-props"))
+      try {
+        val outs = Seq(
+          GedcomPipeline.fromTextRdd(spark, rdd, streamed.getPath),
+          GedcomPipeline.fromTextRdd(spark, rdd, fallback.getPath, maxStitchSplits = 0))
+        val wantOuts = CsvSink.write(viaShuffle, written.getPath).map(o => (o.kind, o.rawTag))
+        outs.forall(_.stats == viaShuffle.stats) &&
+          outs.forall(_.outputs.map(o => (o.kind, o.rawTag)) == wantOuts) &&
+          CsvFiles.contents(streamed) == CsvFiles.contents(written) &&
+          CsvFiles.contents(fallback) == CsvFiles.contents(written)
+      } finally {
+        viaShuffle.release()
+        dirs.foreach(CsvFiles.delete)
+      }
+    }
+
   /** The split-count guard: past maxStitchSplits, fromTextRdd must refuse
     * the driver-side stitch and take the shuffle path — same graph out. */
   property("fromTextRdd falls back to the shuffle path above the split cap") =
