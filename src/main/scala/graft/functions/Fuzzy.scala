@@ -80,9 +80,8 @@ object Fuzzy {
     * key, pair every record with the w-1 records that follow it. The
     * global rank is computed WITHOUT a single-partition window: range-
     * partition + local sort, then `zipWithIndex` (per-partition counts →
-    * prefix offsets — driver state is one count per partition, the
-    * GedcomParser record-numbering discipline). Rank is well-defined by
-    * the (key, id) total order, so the output is independent of
+    * prefix offsets — driver state is one count per partition). Rank is
+    * well-defined by the (key, id) total order, so the output is independent of
     * partition boundaries. Pairing is an equi join on rank: each record
     * explodes into w-1 probe ranks — candidate volume is (w-1)·N,
     * linear at any corpus size, vs the deletion-neighborhood join whose

@@ -1,7 +1,7 @@
 package graft.gedcom
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.rdd.{PartitionCoalescer, PartitionGroup, RDD}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
@@ -12,15 +12,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * graph (nodes + edges + diagnostics), the Spark analog of the reference's
   * streaming CsvWriter stage (SURVEY §3.2).
   *
-  * Text input ([[fromTextRdd]]) is one pass with no shuffle: each split
-  * assembles the records it holds, and the driver stitches the records
-  * that straddle split boundaries. The same pass folds a [[SplitStats]]
-  * summary (per-tag column union, row counts, diagnostics), so the CSV
-  * sink and the CLI need no further scan. Pre-parsed lines ([[fromLines]])
-  * take one hash shuffle on recordNo and fold nothing. Per-record work is
-  * bounded by record size either way. The bulk load reads the text
-  * without building a graph: [[summaryPass]] folds the same summary and
-  * pins nothing, and [[CsvSink.render]] streams the records to the CSVs.
+  * GEDCOM text is read one way, like the reference's one in-order stream:
+  * each split assembles the records it holds, in one pass with no
+  * shuffle, and the driver stitches the records that straddle split
+  * boundaries. The same pass folds a [[SplitStats]] summary (per-tag
+  * column union, row counts, diagnostics), so the CSV sink and the CLI
+  * need no further scan. Per-record work is bounded by record size.
+  * [[fromTextRdd]] pins the records as a [[Graph]]; the bulk load reads
+  * the text without building one: [[summaryPass]] folds the same summary
+  * and pins nothing, and [[CsvSink.render]] streams the records to the
+  * CSVs.
   */
 object GedcomGraph {
 
@@ -31,9 +32,7 @@ object GedcomGraph {
       skipped: DataFrame, // recordNo, rawTag
       unusedTags: DataFrame,      // tag (distinct)
       missingTemples: DataFrame,  // code (distinct)
-      // folded by the text fast path's parse pass; None (the shuffle path)
-      // means every figure in it has to be scanned from the frames above
-      summary: Option[SplitStats],
+      stats: SplitStats,  // folded by the parse pass: the figures of the frames above
       lease: graft.Lease) {
 
     /** Closes `lease`, freeing the RDD-level row pin behind `flat` (and so
@@ -42,54 +41,40 @@ object GedcomGraph {
       * Long-lived callers MUST free each batch's graph, by this or by
       * building it on a lease they close (the streaming ingest does). */
     def release(): Unit = lease.close()
+  }
 
-    /** [[summary]], else (the shuffle path) the same figures scanned from
-      * the frames above. */
-    lazy val stats: SplitStats = summary.getOrElse {
-      def strings(df: DataFrame) = df.collect().map(_.getString(0)).toSet
-      val keysByTag = nodes.select(col("rawTag"), explode(map_keys(col("props"))).as("k"))
-        .distinct().collect()
-        .groupBy(_.getString(0)).map { case (t, rs) => t -> rs.map(_.getString(1)).toSet }
-      SplitStats(keysByTag, nodes.count(), edges.count(), skipped.count(),
-        strings(unusedTags), strings(missingTemples))
+  /** The most splits the driver stitches. Each split parks up to one
+    * record of boundary lines on the driver, so a literal 100 TB text
+    * input (~800k x 128 MB splits) could park GBs; 2^16 splits (~8 TB at
+    * 128 MB splits) keeps the fragment memory at a comfortable bound.
+    * Wider inputs have runs of adjacent splits merged ([[adjacentSplits]]). */
+  val MAX_STITCH_SPLITS: Int = 1 << 16
+
+  /** `raw` with runs of adjacent splits merged, in file order, into at
+    * most `maxSplits` partitions; `raw` itself when it has no more. Each
+    * text entry point applies it once, before the parse, so every pass
+    * and the stitch see the same splits. */
+  private[gedcom] def adjacentSplits(raw: RDD[String],
+      maxSplits: Int = MAX_STITCH_SPLITS): RDD[String] =
+    if (raw.getNumPartitions <= maxSplits) raw
+    else raw.coalesce(maxSplits, shuffle = false, Some(AdjacentCoalescer))
+
+  /** Groups consecutive partition indices into even runs. Spark's default
+    * coalescer groups by locality, which would splice splits that are not
+    * neighbours in the file into one partition. */
+  private object AdjacentCoalescer extends PartitionCoalescer with Serializable {
+    override def coalesce(maxPartitions: Int, parent: RDD[_]): Array[PartitionGroup] = {
+      val n = parent.partitions.length
+      Array.tabulate(maxPartitions) { g =>
+        val group = new PartitionGroup()
+        group.partitions ++= parent.partitions.slice(
+          (g.toLong * n / maxPartitions).toInt, ((g + 1L) * n / maxPartitions).toInt)
+        group
+      }
     }
   }
 
-  /** General path for pre-parsed line Datasets: one hash shuffle on
-    * recordNo + one Tungsten sort per partition, then streaming assembly
-    * over contiguous ordered groups. The row pin goes to `lease`. */
-  def fromLines(lines: Dataset[GedLine],
-      lease: graft.Lease = new graft.Lease): Graph = {
-    val spark = lines.sparkSession
-    import spark.implicits._
-    val flat = lines
-      .repartition(col("recordNo"))
-      .sortWithinPartitions(col("recordNo"), col("lineNo"))
-      .mapPartitions { it =>
-        new Iterator[RecordAssembler.FlatRecord] {
-          private val buf = it.buffered
-          override def hasNext: Boolean = buf.hasNext
-          override def next(): RecordAssembler.FlatRecord = {
-            val recNo = buf.head.recordNo
-            val group = new scala.collection.mutable.ArrayBuffer[GedLine]()
-            while (buf.hasNext && buf.head.recordNo == recNo) group += buf.next()
-            RecordAssembler.flatten(recNo, RecordAssembler.assemble(group.iterator))
-          }
-        }
-      }
-    fromFlat(lease.pin(flat.toDF())._1, lease, None)
-  }
-
-  /** Above this split count the stitch path's driver state stops being
-    * negligible — each split parks up to one record of boundary lines on
-    * the driver, so a literal 100 TB text input (~800k x 128 MB splits)
-    * could park GBs. 2^16 splits (~8 TB at 128 MB splits) caps the
-    * fragment memory at a comfortable bound; past it the shuffle path is
-    * the right plan anyway (its one shuffle amortizes better the bigger
-    * the input). */
-  val MAX_STITCH_SPLITS: Int = 1 << 16
-
-  /** Fast path for text input — zero shuffle, ONE pass over the text.
+  /** Text input — zero shuffle, ONE pass over the text.
     *
     * GEDCOM records are contiguous runs of lines, so grouping them never
     * needs a cluster-wide shuffle: each input split assembles the records
@@ -99,29 +84,21 @@ object GedcomGraph {
     * driver to be stitched. The fragments ride back on a partition-keyed
     * accumulator populated by the SAME pass that assembles the contained
     * records (keying by partition index makes retried/speculated tasks
-    * idempotent), so the whole parse is one scan — replacing the
-    * parse->persist->count->assign->shuffle->sort chain; at 100 TB that
-    * removes both the full-data shuffle and the second read.
-    *
-    * Inputs wider than `maxStitchSplits` fall back to [[fromLines]] (the
-    * shuffle path) so driver fragment memory stays bounded; GedcomProps
-    * proves the two paths produce identical graphs. The row pin goes to
+    * idempotent), so the whole parse is one scan. The row pin goes to
     * `lease`; a registered query passes `graft.Caches`.
     */
   def fromTextRdd(spark: SparkSession, raw: RDD[String],
-      maxStitchSplits: Int = MAX_STITCH_SPLITS,
       lease: graft.Lease = new graft.Lease): Graph = {
     import spark.implicits._
-    if (raw.getNumPartitions > maxStitchSplits)
-      return fromLines(GedcomParser.fromLineRdd(spark, raw), lease)
-    val acc = boundsAccumulator(raw)
+    val lines = adjacentSplits(raw)
+    val acc = boundsAccumulator(lines)
     // hot path: InternalRows built by hand — the reflective product encoder
     // (ExternalMapToCatalyst per props entry + nested serializers) measured
     // ~2.7 s of pure overhead on the 150 MB bench vs ~0 for direct rows.
     // One UnsafeProjection per partition compacts them so the downstream
     // checkpoint pins flat byte rows, not boxed object graphs.
     val schema = flatSchema
-    val unsafeRows = containedRecords(raw, Some(acc)).mapPartitions { it =>
+    val unsafeRows = containedRecords(lines, Some(acc)).mapPartitions { it =>
       val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(schema)
       // prop keys / tags / labels / relTypes repeat across nearly every
       // record (bounded vocabulary) — intern their UTF8 encodings per
@@ -143,12 +120,12 @@ object GedcomGraph {
     // EAGER materialization = the one real job over the text; afterwards
     // the accumulator holds every split's boundary fragments for the stitch
     pinnedRdd.count()
-    val (boundaryFlat, stats) = stitched(raw, acc)
+    val (boundaryFlat, stats) = stitched(lines, acc)
     // union of pinned blocks + a driver-local handful needs no re-pinning;
     // the handful rides in ONE partition, not spread over the cores, so
     // every scan of the graph pays one task for it
     fromFlat(containedDF.unionByName(spark.createDataset(boundaryFlat).toDF().coalesce(1)),
-      lease, Some(stats))
+      lease, stats)
   }
 
   /** The bulk load's first pass over the text: the parse of
@@ -344,7 +321,7 @@ object GedcomGraph {
     * typed-lambda version spent most of its runtime doing exactly that).
     * `flat` reads blocks `lease` holds. */
   private def fromFlat(flat: DataFrame, lease: graft.Lease,
-      summary: Option[SplitStats]): Graph = {
+      stats: SplitStats): Graph = {
     val nodes = flat
       .filter(!col("skipped") && size(map_keys(col("props"))) > 0)
       .select(col("recordNo"), col("rawTag"), col("label"), col("props"))
@@ -358,8 +335,7 @@ object GedcomGraph {
     val unusedTags = flat.select(explode(col("unusedTags")).as("tag")).distinct()
     val missingTemples = flat.select(explode(col("missingTemples")).as("code")).distinct()
 
-    Graph(flat, nodes, edges, skipped, unusedTags, missingTemples,
-      summary, lease)
+    Graph(flat, nodes, edges, skipped, unusedTags, missingTemples, stats, lease)
   }
 
   def fromFile(spark: SparkSession, path: String,
@@ -382,11 +358,8 @@ object GedcomGraph {
     * string columns are untouched in both modes. */
   def nodesWide(graph: Graph, rawTag: String,
       typedDates: Boolean = false): DataFrame = {
-    val forTag = graph.nodes.filter(col("rawTag") === rawTag)
-    val keys = forTag
-      .select(explode(map_keys(col("props"))).as("k"))
-      .distinct().collect().map(_.getString(0)).toSet
-    forTag.select(
-      CsvSink.typedNodeColumns(keys, typedDates): _*)
+    val keys = graph.stats.keysByTag.getOrElse(rawTag, Set.empty)
+    graph.nodes.filter(col("rawTag") === rawTag)
+      .select(CsvSink.typedNodeColumns(keys, typedDates): _*)
   }
 }

@@ -1,30 +1,21 @@
 package graft.gedcom
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-
-/** One parsed GEDCOM line. `recordNo` is the global 1-based index of the
-  * level-0 record the line belongs to. */
+/** One parsed GEDCOM line. `lineNo` orders the lines of a file. */
 final case class GedLine(
     lineNo: Long,
-    recordNo: Long,
     level: Int,
     xref: Option[String],
     tag: String,
     value: String)
 
-/** Distributed GEDCOM line parser (reference capability R2-R4, SURVEY §2.1;
-  * the reference delegates tokenizing to the external `gedcom-stream`
-  * package — index.js:5,70,77).
+/** GEDCOM line parser (reference capability R2-R4, SURVEY §2.1; the
+  * reference delegates tokenizing to the external `gedcom-stream` package
+  * — index.js:5,70,77).
   *
-  * Grammar per line: `LEVEL [@XREF@] TAG [VALUE]`.
-  *
-  * Record assignment — "which level-0 record does this line belong to" — is
-  * a global running count of level-0 lines. A naive
-  * `Window.orderBy(lineNo)` collapses to a single partition, so this uses
-  * the two-pass per-partition prefix-sum plan from SURVEY §4.2: pass 1
-  * counts level-0 lines per partition (tiny driver collect: one long per
-  * partition), pass 2 assigns `recordNo` with the broadcast prefix offsets.
-  * No shuffle at all; scales to any number of input splits.
+  * Grammar per line: `LEVEL [@XREF@] TAG [VALUE]`. Which record a line
+  * belongs to is decided by its position, not here: each split of the text
+  * groups its lines at every level-0 line, and the driver stitches the
+  * records that cross split boundaries ([[GedcomGraph.containedRecords]]).
   */
 object GedcomParser {
 
@@ -35,7 +26,7 @@ object GedcomParser {
     * are property-tested identical in GedcomParserProps). */
   def parseLineRegex(raw: String, lineNo: Long): Option[GedLine] = raw match {
     case LineRe(level, xref, tag, value) =>
-      Some(GedLine(lineNo, -1L, level.toInt, Option(xref), tag,
+      Some(GedLine(lineNo, level.toInt, Option(xref), tag,
         Option(value).getOrElse("")))
     case _ => None
   }
@@ -77,54 +68,6 @@ object GedcomParser {
     val tag = raw.substring(ts, i)
     // value: exactly one whitespace then the rest verbatim
     val value = if (i < n) raw.substring(i + 1) else ""
-    Some(GedLine(lineNo, -1L, level, Option(xref), tag, value))
-  }
-
-  def parse(spark: SparkSession, path: String): Dataset[GedLine] = {
-    // explicit split count: the default 128 MB file split would give a
-    // ~150 MB file two partitions and serialize the whole parse stage;
-    // byte-range splits keep global line order across partition indexes
-    val minParts = spark.sparkContext.defaultParallelism * 2
-    fromLineRdd(spark, spark.sparkContext.textFile(path, minParts))
-  }
-
-  def fromLines(raw: Dataset[String]): Dataset[GedLine] =
-    fromLineRdd(raw.sparkSession, raw.rdd)
-
-  def fromLineRdd(spark: SparkSession, raw: org.apache.spark.rdd.RDD[String]): Dataset[GedLine] = {
-    import spark.implicits._
-
-    // Ordering key without zipWithIndex's extra counting pass over the
-    // input: (partitionIndex << 40) | localLineNo is monotonically
-    // increasing in file order (byte-range splits are ordered by index),
-    // so the single real pass over the text both parses and keys.
-    val parsed = raw.mapPartitionsWithIndex { (pi, it) =>
-      var j = 0L
-      it.flatMap { line =>
-        j += 1
-        parseLine(line, (pi.toLong << 40) | j)
-      }
-    }
-
-    // pass 1: per-partition level-0 counts -> global prefix offsets
-    val counts = parsed
-      .mapPartitionsWithIndex((i, it) => Iterator((i, it.count(_.level == 0).toLong)))
-      .collect().sortBy(_._1).map(_._2)
-    val offsets = counts.scanLeft(0L)(_ + _)
-    val bc = spark.sparkContext.broadcast(offsets)
-
-    // pass 2: assign recordNo by per-partition running count + offset.
-    // Deliberately uncached: pass 1 only counts, so caching the parsed
-    // lines would cost a full materialization with a single reader — the
-    // recompute is cheaper and leaves nothing pinned in the block manager.
-    val assigned = parsed.mapPartitionsWithIndex { (i, it) =>
-      var rec = bc.value(i)
-      it.map { l =>
-        if (l.level == 0) rec += 1
-        l.copy(recordNo = rec)
-      }
-    }
-    // recordNo 0 = preamble junk before the first level-0 line
-    spark.createDataset(assigned).filter(_.recordNo > 0L)
+    Some(GedLine(lineNo, level, Option(xref), tag, value))
   }
 }

@@ -28,27 +28,20 @@ object GedcomPipeline {
     * parity. */
   def run(spark: SparkSession, gedcomPath: String, csvOutDir: String,
       typedDates: Boolean = false): Result =
-    fromTextRdd(spark, GedcomGraph.textLines(spark, gedcomPath), csvOutDir, typedDates)
+    fromTextRdd(GedcomGraph.textLines(spark, gedcomPath), csvOutDir, typedDates)
 
   /** The bulk load of GEDCOM text lines, in two jobs over the text that
     * pin nothing: [[GedcomGraph.summaryPass]] folds the per-tag column
     * unions and diagnostics, then [[CsvSink.render]] parses again and
     * streams every record to its CSV lines (each dir's header needs the
-    * whole input's union before its first line). Past `maxStitchSplits`
-    * it takes the shuffle path's graph instead, written by
-    * [[CsvSink.write]] and released here. */
-  def fromTextRdd(spark: SparkSession, raw: RDD[String], csvOutDir: String,
-      typedDates: Boolean = false,
-      maxStitchSplits: Int = GedcomGraph.MAX_STITCH_SPLITS): Result = {
-    val (stats, outputs) =
-      if (raw.getNumPartitions > maxStitchSplits) {
-        val graph = GedcomGraph.fromLines(GedcomParser.fromLineRdd(spark, raw))
-        try (graph.stats, CsvSink.write(graph, csvOutDir, typedDates))
-        finally graph.release()
-      } else {
-        val (boundary, stats) = GedcomGraph.summaryPass(raw)
-        (stats, CsvSink.render(raw, boundary, stats, csvOutDir, typedDates))
-      }
+    * whole input's union before its first line). Both passes read the
+    * same splits: past [[GedcomGraph.MAX_STITCH_SPLITS]], adjacent ones
+    * merged. */
+  def fromTextRdd(raw: RDD[String], csvOutDir: String,
+      typedDates: Boolean = false): Result = {
+    val lines = GedcomGraph.adjacentSplits(raw)
+    val (boundary, stats) = GedcomGraph.summaryPass(lines)
+    val outputs = CsvSink.render(lines, boundary, stats, csvOutDir, typedDates)
     Result(stats, outputs, CsvSink.importArgs(outputs))
   }
 

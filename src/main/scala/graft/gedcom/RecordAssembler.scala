@@ -4,8 +4,9 @@ import scala.collection.mutable
 
 /** Per-record tree assembly + flatten, reproducing the reference's
   * CsvWriter semantics exactly (lib/csv_writer.js:123-186). Runs inside
-  * `Dataset.groupByKey(_.recordNo).mapGroups` — one record at a time,
-  * bounded memory, shuffled only on recordNo.
+  * each split's pass over its lines and in the driver's stitch of the
+  * boundary records ([[GedcomGraph.containedRecords]]) — one record at a
+  * time, bounded memory, no shuffle.
   *
   * Correctness-bearing details preserved (SURVEY §2.1 notes 1-6):
   *   1. a child contributes a value only when `value != ""` or it has no

@@ -250,9 +250,8 @@ object Sitemap {
     * partition + local sort on the full ordering (host, priority DESC
     * NULLS LAST, ord) — a total order, since `ord` is unique within a
     * host — then `zipWithIndex` global ordinals (driver state is one
-    * count per partition, the GedcomParser record-numbering
-    * discipline). Each host occupies a CONTIGUOUS ordinal range under
-    * the host-leading sort, so its per-host seq is the global ordinal
+    * count per partition). Each host occupies a CONTIGUOUS ordinal
+    * range under the host-leading sort, so its per-host seq is the global ordinal
     * minus the host's first ordinal — a partial-agg `min` per host
     * (tiny: one row per host, map-side combined) broadcast back. A
     * mega-host's rows stay spread across every range partition; no

@@ -29,7 +29,7 @@ class CsvSinkSpec extends SparkSpec {
     * job; the reference layout the sink must keep. */
   private def referenceWrite(graph: GedcomGraph.Graph, outDir: String,
       typedDates: Boolean): Unit = {
-    graph.summary.get.keysByTag.foreach { case (tag, keys) =>
+    graph.stats.keysByTag.foreach { case (tag, keys) =>
       graph.nodes.filter(col("rawTag") === tag)
         .select(CsvSink.typedNodeColumns(keys, typedDates): _*)
         .write.mode("overwrite").option("header", true).csv(s"$outDir/nodes-$tag")
@@ -123,11 +123,11 @@ class CsvSinkSpec extends SparkSpec {
   test("the wide fixture has 30 node tags of 40+ columns and edges") {
     val graph = GedcomGraph.fromFile(spark, wideGedcom)
     try {
-      val keys = graph.summary.get.keysByTag
+      val keys = graph.stats.keysByTag
       assert(keys.size == 30, keys.keySet)
       assert(keys.values.forall(_.size >= 40), keys.map { case (t, k) => t -> k.size })
       assert(keys.values.forall(_.exists(GedcomDates.isDateKey)))
-      assert(graph.summary.get.edges > 0)
+      assert(graph.stats.edges > 0)
     } finally graph.release()
   }
 
@@ -225,18 +225,8 @@ class CsvSinkSpec extends SparkSpec {
   }
 
   test("Main.run without -d runs two Spark jobs: the summary pass and the render pass") {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
-    }
-    GraftSqlBridge.drainListeners(sc)
-    sc.addSparkListener(listener)
-    try {
-      mainRun()
-      GraftSqlBridge.drainListeners(sc)
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get == 2, s"${jobs.get} jobs")
+    val (_, jobs) = withJobCount(mainRun())
+    assert(jobs == 2, s"$jobs jobs")
   }
 
   test("Main.run pins nothing: no persistent RDD and no stored bytes") {

@@ -50,12 +50,12 @@ object GedcomProps extends Properties("gedcom") {
       kids <- Gen.listOfN(n, nodeGen(0))
     } yield TRecord(if (hasId) Some(s"R${scala.util.Random.nextInt(1 << 20)}") else None, top, kids)
 
-  private val batchGen: Gen[List[TRecord]] =
+  private[graft] val batchGen: Gen[List[TRecord]] =
     Gen.chooseNum(1, 8).flatMap(n => Gen.listOfN(n, recordGen))
       .map(rs => rs.zipWithIndex.map { case (r, i) =>
         r.copy(xref = r.xref.map(x => s"${x}_$i")) }) // unique xrefs
 
-  private def serialize(rs: List[TRecord]): List[String] =
+  private[graft] def serialize(rs: List[TRecord]): List[String] =
     rs.flatMap { r =>
       val head = r.xref.map(x => s"0 @$x@ ${r.tag}").getOrElse(s"0 ${r.tag}")
       def walk(n: TNode, level: Int): List[String] =
@@ -76,125 +76,112 @@ object GedcomProps extends Properties("gedcom") {
       r.children.map(walk).sum
     }
 
-  private def run(rs: List[TRecord]): GedcomGraph.Graph = {
-    val lines = spark.createDataset(serialize(rs))(org.apache.spark.sql.Encoders.STRING)
-    GedcomGraph.fromLines(GedcomParser.fromLines(lines))
+  /** The reference assembly, on the driver: the serialized batch parsed
+    * line by line, grouped at each level-0 line (a group that does not
+    * open at level 0 is pre-file junk and dropped), and each group
+    * assembled and flattened. */
+  private[graft] def reference(text: Seq[String]): Seq[RecordAssembler.FlatRecord] = {
+    val groups = scala.collection.mutable.ArrayBuffer.empty[Vector[GedLine]]
+    text.zipWithIndex.flatMap { case (s, i) => GedcomParser.parseLine(s, i.toLong) }
+      .foreach { l =>
+        if (l.level == 0 || groups.isEmpty) groups += Vector(l)
+        else groups(groups.length - 1) :+= l
+      }
+    groups.toSeq.filter(_.head.level == 0).zipWithIndex.map { case (g, i) =>
+      RecordAssembler.flatten(i + 1L, RecordAssembler.assemble(g.iterator))
+    }
+  }
+
+  private def run(rs: List[TRecord]): Seq[RecordAssembler.FlatRecord] = reference(serialize(rs))
+
+  private def nodes(recs: Seq[RecordAssembler.FlatRecord]) =
+    recs.filter(r => !r.skipped && r.props.nonEmpty)
+
+  /** The summary of `ref`, scanned from its records without
+    * `SplitStats.add`, so a fault in the fold cannot hide on both sides. */
+  private def referenceStats(ref: Seq[RecordAssembler.FlatRecord]): GedcomGraph.SplitStats =
+    GedcomGraph.SplitStats(
+      nodes(ref).groupBy(_.rawTag).map { case (t, rs) => t -> rs.flatMap(_.props.keys).toSet },
+      nodes(ref).size.toLong, ref.map(_.edges.size.toLong).sum, ref.count(_.skipped).toLong,
+      ref.flatMap(_.unusedTags).toSet, ref.flatMap(_.missingTemples).toSet)
+
+  private def multiset[A](xs: Seq[A]): Map[A, Int] =
+    xs.groupBy(identity).map { case (x, g) => x -> g.size }
+
+  /** `g` holds exactly the records of `ref`, counting multiplicities (set
+    * equality is blind to dropped or doubled duplicates of structurally
+    * identical records), and its folded stats are those of `ref`. */
+  private[graft] def sameGraph(g: GedcomGraph.Graph,
+      ref: Seq[RecordAssembler.FlatRecord]): Boolean = {
+    def strings(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.getString(0)).toSet
+    multiset(g.nodes.select("rawTag", "props").collect().toSeq
+        .map(r => (r.getString(0), r.getAs[Map[String, String]](1)))) ==
+      multiset(nodes(ref).map(r => (r.rawTag, r.props.toMap))) &&
+      multiset(g.edges.collect().toSeq.map(_.toSeq)) ==
+        multiset(ref.flatMap(_.edges).map(e => Seq(e.src, e.dst, e.relType, e.rawTag))) &&
+      multiset(g.skipped.select("rawTag").collect().toSeq.map(_.getString(0))) ==
+        multiset(ref.filter(_.skipped).map(_.rawTag)) &&
+      strings(g.unusedTags) == ref.flatMap(_.unusedTags).toSet &&
+      strings(g.missingTemples) == ref.flatMap(_.missingTemples).toSet &&
+      g.stats == referenceStats(ref)
   }
 
   property("edge count matches mapped-chain pointers; srcs are root xrefs") =
     Prop.forAll(batchGen) { rs =>
-      val g = run(rs)
-      val edges = g.edges.collect()
+      val edges = run(rs).flatMap(_.edges)
       val want = rs.map(expectedEdges).sum
       val xrefs = rs.flatMap(_.xref).toSet
       edges.length == want &&
-        edges.forall(e => xrefs.contains(e.getAs[String]("src"))) &&
-        edges.forall(e => !e.getAs[String]("dst").contains("@"))
+        edges.forall(e => xrefs.contains(e.src)) &&
+        edges.forall(e => !e.dst.contains("@"))
     }
 
   property("every mapped record with an id yields exactly one node row") =
     Prop.forAll(batchGen) { rs =>
-      val g = run(rs)
-      val ids = g.nodes.select("props").collect()
-        .flatMap(r => r.getAs[Map[String, String]](0).get("Gedcom Id:ID"))
+      val ids = nodes(run(rs)).flatMap(_.props.get("Gedcom Id:ID"))
       val want = rs.filter(r => r.xref.isDefined && Dictionaries.tagNames.contains(r.tag))
         .flatMap(_.xref)
-      ids.sorted.toSeq == want.sorted
+      ids.sorted == want.sorted
     }
 
   property("no flattened column name leaks an unmapped raw tag") =
     Prop.forAll(batchGen) { rs =>
-      val g = run(rs)
-      val keys = g.nodes.select("props").collect()
-        .flatMap(_.getAs[Map[String, String]](0).keys)
-      keys.forall(k => !unmappedTags.exists(k.contains))
+      nodes(run(rs)).flatMap(_.props.keys).forall(k => !unmappedTags.exists(k.contains))
     }
 
   property("skips are exactly the unmapped-top records") =
     Prop.forAll(batchGen) { rs =>
-      run(rs).skipped.count() ==
-        rs.count(r => !Dictionaries.tagNames.contains(r.tag))
+      run(rs).count(_.skipped) == rs.count(r => !Dictionaries.tagNames.contains(r.tag))
     }
 
-  /** The production zero-shuffle boundary-stitch path must produce exactly
-    * the same graph as the shuffle path, for any record batch and any
-    * split count (splits land mid-record on purpose). */
-  property("boundary-stitch path == shuffle path for any split count") =
+  /** The production zero-shuffle boundary-stitch path must build exactly
+    * the reference's records, for any record batch and any split count
+    * (splits land mid-record on purpose). */
+  property("boundary-stitch path == the driver-side reference for any split count") =
     Prop.forAll(batchGen, Gen.chooseNum(1, 7)) { (rs, slices) =>
       val text = serialize(rs)
-      val viaShuffle = run(rs)
-      val viaBoundary = GedcomGraph.fromTextRdd(spark,
-        spark.sparkContext.parallelize(text, slices))
-      def nodeSet(g: GedcomGraph.Graph) =
-        g.nodes.select("rawTag", "props").collect()
-          .map(r => (r.getString(0), r.getAs[Map[String, String]](1))).toSet
-      def edgeSet(g: GedcomGraph.Graph) =
-        g.edges.collect().map(_.toSeq).toSet
-      def strings(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(_.getString(0)).toSet
-      // the summary the parse pass folded == the same figures scanned from
-      // the shuffle path's frames (which fold nothing)
-      val folded = viaBoundary.summary.get
-      val scannedKeys = viaShuffle.nodes.select("rawTag", "props").collect()
-        .groupBy(_.getString(0))
-        .map { case (t, rs) => t -> rs.flatMap(_.getAs[Map[String, String]](1).keys).toSet }
-      // counts too: set equality alone is blind to dropped/doubled
-      // duplicates of structurally identical records
-      viaShuffle.summary.isEmpty &&
-        nodeSet(viaBoundary) == nodeSet(viaShuffle) &&
-        edgeSet(viaBoundary) == edgeSet(viaShuffle) &&
-        viaBoundary.nodes.count() == viaShuffle.nodes.count() &&
-        viaBoundary.edges.count() == viaShuffle.edges.count() &&
-        viaBoundary.skipped.count() == viaShuffle.skipped.count() &&
-        folded.nodes == viaShuffle.nodes.count() &&
-        folded.edges == viaShuffle.edges.count() &&
-        folded.skipped == viaShuffle.skipped.count() &&
-        folded.keysByTag == scannedKeys &&
-        folded.unusedTags == strings(viaShuffle.unusedTags) &&
-        folded.missingTemples == strings(viaShuffle.missingTemples)
+      val g = GedcomGraph.fromTextRdd(spark, spark.sparkContext.parallelize(text, slices))
+      try sameGraph(g, reference(text)) finally g.release()
     }
 
   /** The streamed bulk load (summary pass, then render pass with one part
-    * per split and one for the stitched records) must write the CSVs the
-    * shuffle path's graph writes, with the same summary; so must its
-    * fallback past the split cap. */
-  property("streamed CSVs == the shuffle path's graph written, for any split count") =
+    * per split and one for the stitched records) must fold the reference's
+    * stats and write the CSVs that a graph built over one split writes. */
+  property("streamed CSVs == a built graph written; stats == the reference's") =
     Prop.forAll(batchGen, Gen.chooseNum(1, 7)) { (rs, slices) =>
-      val rdd = spark.sparkContext.parallelize(serialize(rs), slices)
-      val viaShuffle = run(rs)
-      val dirs @ Seq(streamed, fallback, written) = Seq.fill(3)(CsvFiles.tmp("ged-props"))
+      val text = serialize(rs)
+      val graph = GedcomGraph.fromTextRdd(spark, spark.sparkContext.parallelize(text, 1))
+      val dirs @ Seq(streamed, written) = Seq.fill(2)(CsvFiles.tmp("ged-props"))
       try {
-        val outs = Seq(
-          GedcomPipeline.fromTextRdd(spark, rdd, streamed.getPath),
-          GedcomPipeline.fromTextRdd(spark, rdd, fallback.getPath, maxStitchSplits = 0))
-        val wantOuts = CsvSink.write(viaShuffle, written.getPath).map(o => (o.kind, o.rawTag))
-        outs.forall(_.stats == viaShuffle.stats) &&
-          outs.forall(_.outputs.map(o => (o.kind, o.rawTag)) == wantOuts) &&
-          CsvFiles.contents(streamed) == CsvFiles.contents(written) &&
-          CsvFiles.contents(fallback) == CsvFiles.contents(written)
+        val out = GedcomPipeline.fromTextRdd(
+          spark.sparkContext.parallelize(text, slices), streamed.getPath)
+        val wantOuts = CsvSink.write(graph, written.getPath).map(o => (o.kind, o.rawTag))
+        out.stats == referenceStats(reference(text)) &&
+          out.outputs.map(o => (o.kind, o.rawTag)) == wantOuts &&
+          CsvFiles.contents(streamed) == CsvFiles.contents(written)
       } finally {
-        viaShuffle.release()
+        graph.release()
         dirs.foreach(CsvFiles.delete)
       }
-    }
-
-  /** The split-count guard: past maxStitchSplits, fromTextRdd must refuse
-    * the driver-side stitch and take the shuffle path — same graph out. */
-  property("fromTextRdd falls back to the shuffle path above the split cap") =
-    Prop.forAll(batchGen, Gen.chooseNum(2, 7)) { (rs, slices) =>
-      val text = serialize(rs)
-      val rdd = spark.sparkContext.parallelize(text, slices)
-      // cap below the split count -> the fallback branch MUST run; its
-      // graph has no folded parse stats (those exist only on the stitch
-      // path), which pins that the fallback actually engaged
-      val viaFallback = GedcomGraph.fromTextRdd(spark, rdd, maxStitchSplits = 1)
-      val viaStitch = GedcomGraph.fromTextRdd(spark, rdd)
-      def nodeSet(g: GedcomGraph.Graph) =
-        g.nodes.select("rawTag", "props").collect()
-          .map(r => (r.getString(0), r.getAs[Map[String, String]](1))).toSet
-      viaFallback.summary.isEmpty && viaStitch.summary.nonEmpty &&
-        nodeSet(viaFallback) == nodeSet(viaStitch) &&
-        viaFallback.edges.count() == viaStitch.edges.count() &&
-        viaFallback.skipped.count() == viaStitch.skipped.count()
     }
 }

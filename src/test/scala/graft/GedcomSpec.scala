@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.gedcom._
@@ -21,9 +23,13 @@ class GedcomSpec extends SparkSpec {
       .select("props").as[Map[String, String]].head()
 
   test("parser assigns records and levels") {
-    val lines = GedcomParser.parse(spark, fixture).collect()
-    assert(lines.map(_.recordNo).distinct.length == 6) // HEAD,I1,I2,F1,ZZZZ,TRLR
+    val text = scala.io.Source.fromFile(fixture, "UTF-8")
+    val lines = try text.getLines().zipWithIndex
+      .flatMap { case (s, i) => GedcomParser.parseLine(s, i.toLong) }.toList
+      finally text.close()
+    // HEAD,I1,I2,F1,ZZZZ,TRLR: one record per level-0 line, each in the graph
     assert(lines.count(_.level == 0) == 6)
+    assert(graph.flat.count() == 6)
     assert(lines.find(_.tag == "INDI").flatMap(_.xref).contains("I1"))
   }
 
@@ -147,9 +153,9 @@ class GedcomSpec extends SparkSpec {
     // EVEN has no TYPE child) and string-joins it into the composite key —
     // the columns come out prefixed with the literal string "undefined".
     val lines = Seq(
-      GedLine(1, 1, 0, Some("I9"), "INDI", ""),
-      GedLine(2, 1, 1, None, "EVEN", ""),
-      GedLine(3, 1, 2, None, "DATE", "1910"))
+      GedLine(1, 0, Some("I9"), "INDI", ""),
+      GedLine(2, 1, None, "EVEN", ""),
+      GedLine(3, 2, None, "DATE", "1910"))
     val r = RecordAssembler.flattenRecord(1, lines)
     assert(r.props("undefined Date") == "1910")
     assert(!r.props.contains(" Date") && !r.props.contains("Event Date"))
@@ -159,7 +165,9 @@ class GedcomSpec extends SparkSpec {
     // the reference's own TODO (README.md:55): opt-in parsed dates. Raw
     // columns stay byte-identical; each date key K gains K:date (a real
     // DateType) and K Qualifier directly after it.
-    val wide = GedcomGraph.nodesWide(graph2, "INDI", typedDates = true)
+    val g2 = graph2
+    val (wide, jobs) = withJobCount(GedcomGraph.nodesWide(g2, "INDI", typedDates = true))
+    assert(jobs == 0, s"building the wide frame ran $jobs jobs")
     assert(wide.schema("Birth Date:date").dataType ==
       org.apache.spark.sql.types.DateType)
     val cols = wide.columns.toSeq
@@ -199,7 +207,9 @@ class GedcomSpec extends SparkSpec {
   }
 
   test("nodesWide exposes the graph as a queryable wide table") {
-    val wide = GedcomGraph.nodesWide(graph, "INDI")
+    val g = graph
+    val (wide, jobs) = withJobCount(GedcomGraph.nodesWide(g, "INDI"))
+    assert(jobs == 0, s"building the wide frame ran $jobs jobs")
     assert(wide.columns.head == "Gedcom Id:ID" && wide.columns.last == ":LABEL")
     // relational query straight over the property graph: join individuals
     // to their family edges
@@ -260,24 +270,42 @@ class GedcomSpec extends SparkSpec {
     val text = (0 until 500).flatMap { i =>
       Seq(s"0 @X$i@ INDI", "1 SEX M", s"1 NOTE note$i")
     }
-    val ds = spark.createDataset(text)(org.apache.spark.sql.Encoders.STRING).repartition(13)
-    // repartition shuffles line order, so feed via the order-preserving path:
-    val lines = GedcomParser.fromLines(spark.createDataset(text)(org.apache.spark.sql.Encoders.STRING))
-    val grouped = lines.groupByKey(_.recordNo).mapGroups((k, it) => (k, it.size)).collect()
-    assert(grouped.length == 500 && grouped.forall(_._2 == 3))
-    val g = GedcomGraph.fromLines(lines)
-    assert(g.nodes.count() == 500)
-    val sample = g.nodes.filter(col("props").getItem("Gedcom Id:ID") === "X42")
-      .select("props").as[Map[String, String]].head()
-    assert(sample("Note") == "note42")
+    val g = GedcomGraph.fromTextRdd(spark, spark.sparkContext.parallelize(text, 13))
+    try {
+      // 13 splits cut records mid-way; each record still keeps its 3 lines
+      assert(g.flat.count() == 500 && g.stats.nodes == 500)
+      val props = g.nodes.select("props").as[Map[String, String]].collect()
+      assert(props.map(_("Gedcom Id:ID")).toSet == (0 until 500).map(i => s"X$i").toSet)
+      assert(props.forall(p => p("Sex") == "M" && p("Note") == s"note${p("Gedcom Id:ID").drop(1)}"))
+    } finally g.release()
+  }
+
+  test("no gedcom source reads text but GedcomGraph.textLines: one split policy") {
+    // split so this file does not match itself
+    val needle = "textFile" + "("
+    val files = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft/gedcom"))
+      try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    }
+    assert(files.exists(_.endsWith("gedcom/GedcomGraph.scala")))
+    // each call must sit in the body of `def textLines`, the last def above it
+    val offenders = files.flatMap { f =>
+      val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      Iterator.iterate(text.indexOf(needle))(i => text.indexOf(needle, i + 1))
+        .takeWhile(_ >= 0)
+        .filterNot(i => f.endsWith("gedcom/GedcomGraph.scala") &&
+          text.lastIndexOf("def ", i) == text.lastIndexOf("def textLines(", i))
+        .map(i => s"$f: offset $i")
+    }
+    assert(offenders.isEmpty, offenders.mkString(", "))
   }
 
   test("the stitched boundary records ride in one partition beside the splits") {
-    val splits = spark.sparkContext
-      .textFile(fixture, spark.sparkContext.defaultParallelism * 2).getNumPartitions
+    val splits = GedcomGraph.textLines(spark, fixture).getNumPartitions
     assert(graph.flat.rdd.getNumPartitions == splits + 1)
     // every record still lands in the graph exactly once
-    assert(graph.flat.count() == graph.summary.get.nodes + graph.summary.get.skipped +
+    assert(graph.flat.count() == graph.stats.nodes + graph.stats.skipped +
       graph.flat.filter(!col("skipped") && size(map_keys(col("props"))) === 0).count())
   }
 }

@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session base: one lazy local session per suite. */
@@ -10,6 +13,22 @@ trait SparkSpec extends AnyFunSuite {
 
   /** Ids of every RDD currently marked persistent. */
   def persistentIds(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** `body`'s result and the number of Spark jobs started while it ran. */
+  def withJobCount[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    GraftSqlBridge.drainListeners(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      GraftSqlBridge.drainListeners(sc)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 
   /** The RDDs outside `before` that still hold cached partitions, polled
     * for up to `waitMs` until there are none: removal after a
