@@ -20,10 +20,34 @@ final case class QueryDef(
     oracle: Option[String],
     doc: String = "")
 
-/** Parquet table loaders for the driver testdata star schema (TESTDATA.md). */
+/** Parquet table loaders for the driver testdata star schema (TESTDATA.md).
+  *
+  * A table is `<sfDir>/<name>.parquet`: one file, or a directory of parts
+  * (`tools.ScaleUp` output). Every read passes the schema in, read from a
+  * parquet footer on the driver ([[parquet]]), so loading a table starts
+  * no Spark job: `spark.read.parquet(path)` without a schema starts one
+  * per read, only to fetch that footer. The query modules read tables
+  * only through here (TablesSpec scans for strays). */
 object Tables {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  /** The parquet file or directory at `path`, with the schema Spark's
+    * inference would give it, read on the driver. */
+  def parquet(spark: SparkSession, path: String): DataFrame = listed(spark, path)._1
+
+  /** [[parquet]] and the summed bytes of its data files, from one listing.
+    * Where no footer can be read on the driver (a missing path, a
+    * directory with no parquet file) the read falls back to Spark's
+    * inference, which raises its own PATH_NOT_FOUND or
+    * UNABLE_TO_INFER_SCHEMA error. */
+  private def listed(spark: SparkSession, path: String): (DataFrame, Long) = {
+    import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
+    val files = GraftParquetBridge.leafFiles(spark, path)
+    val df = GraftParquetBridge.inferSchema(spark, files)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+    (df, files.filterNot(GraftParquetBridge.isSummary).map(_.getLen).sum)
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")
@@ -101,7 +125,7 @@ object Tables {
     * their fused work is cheap arithmetic and many of their consumers pin
     * exchange counts.
     *
-    * Scale-gated, not a local[32] constant: fires only when the file is
+    * Scale-gated, not a local[32] constant: fires only when the table is
     * too small to fill the session parallelism at the configured split
     * size (bytes < shuffle.partitions x maxPartitionBytes) — a
     * production-sized table splits naturally and pays nothing. The
@@ -112,8 +136,9 @@ object Tables {
     * PushedFilters/ReadSchema.
     *
     * The partition COUNT is derived from the data, not the core count
-    * (r20 verdict item 2): ceil(fileBytes / chunk) capped at
-    * shuffle.partitions, where `chunk` (per table: file bytes per spread
+    * (r20 verdict item 2): ceil(dataBytes / chunk) capped at
+    * shuffle.partitions, where dataBytes sums the table's data files (a
+    * directory's parts, not its inode) and `chunk` (per table: bytes per spread
     * partition, sized to the table's fused per-row work) keeps per-task
     * fixed costs (sort/hash init, shuffle segment setup, codegen entry)
     * amortized over real work. The previous
@@ -125,10 +150,7 @@ object Tables {
     * measurement follows the data. */
   private def spread(s: SparkSession, d: String, name: String,
       key: String, chunk: Long): DataFrame = {
-    val df = table(s, d, name)
-    val bytes =
-      try java.nio.file.Files.size(java.nio.file.Paths.get(s"$d/$name.parquet"))
-      catch { case _: Exception => Long.MaxValue }
+    val (df, bytes) = listed(s, s"$d/$name.parquet")
     val maxN = s.conf.get("spark.sql.shuffle.partitions").toInt
     // byteStringAsBytes, not filter(_.isDigit): a "128MB"-suffixed conf
     // parsed as 128 BYTES silently disabled the spread (r20 verdict item)

@@ -795,11 +795,12 @@ object StreamingOps {
     * fixture has shipped as both TIMESTAMP(NANOS) (surfaced as raw long
     * nanos under the legacy conf) and TIMESTAMP(MICROS) (surfaced as
     * TIMESTAMP_NTZ), so the stream's schema comes from one driver-side
-    * footer probe of the directory rather than a hardcoded vintage. */
+    * footer read of the directory ([[graft.Tables.parquet]]) rather than a
+    * hardcoded vintage. */
   def readEventStream(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = spark.read.parquet(dir).schema
+    val fileSchema = graft.Tables.parquet(spark, dir).schema
     val raw = spark.readStream.schema(fileSchema).parquet(dir)
     raw.schema("ts").dataType match {
       case LongType            => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))

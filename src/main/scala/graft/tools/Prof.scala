@@ -24,7 +24,8 @@ import graft.gedcom.{CsvSink, GedcomGraph}
   * work counters beside the walls:
   *   - walls: total, frame build (operators that run prelude jobs pay
   *     here), analyze, optimize, physical plan, execute (noop sink);
-  *   - work: executor CPU, jobs, stages, tasks;
+  *   - work: executor CPU, stages, tasks, and jobs split into those the
+  *     frame build starts (`frameJobs`) and the rest (`execJobs`);
   *   - data: shuffle-write rows and bytes, input bytes, spill bytes;
   *   - codegen: Janino compile ms and generated classes (pass 1 of a
   *     fresh JVM is the cold number, later passes the warm floor);
@@ -105,13 +106,14 @@ object Prof {
   final case class Pass(query: String, pass: Int,
       wall: Double, build: Double, analyze: Double, optimize: Double,
       plan: Double, execute: Double,
-      cpuS: Double, jobs: Long, stages: Long, tasks: Long,
+      cpuS: Double, jobs: Long, frameJobs: Long, stages: Long, tasks: Long,
       shuffleRows: Long, shuffleBytes: Long, inputBytes: Long, spillBytes: Long,
       janinoMs: Long, classes: Long, plans: PlanCounts) {
     def line: String =
       f"$query%-24s p$pass wall=$wall%7.2f build=$build%6.2f " +
         f"analyze=$analyze%5.2f opt=$optimize%5.2f plan=$plan%5.2f " +
-        f"exec=$execute%7.2f cpu=$cpuS%7.2f jobs=$jobs%3d stages=$stages%4d " +
+        f"exec=$execute%7.2f cpu=$cpuS%7.2f frameJobs=$frameJobs%3d " +
+        f"execJobs=${jobs - frameJobs}%3d stages=$stages%4d " +
         f"tasks=$tasks%5d shufRows=$shuffleRows%10d shufBytes=$shuffleBytes%11d " +
         f"inBytes=$inputBytes%11d spillBytes=$spillBytes%d " +
         f"janinoMs=$janinoMs%6d classes=$classes%4d " +
@@ -151,6 +153,10 @@ object Prof {
         if (!sections.contains(label)) sections(label) = capture(frame.queryExecution)
       }(q.fn(spark, sfDir))
       val tBuild = System.nanoTime()
+      // the frame's jobs, counted off the walls
+      GraftSqlBridge.drainListeners(sc)
+      val frameJobs = c.jobs.sum
+      val tAna0 = System.nanoTime()
       val qe = df.queryExecution
       qe.assertAnalyzed()
       val tAna = System.nanoTime()
@@ -176,9 +182,9 @@ object Prof {
         Files.write(dir.resolve(s"$name.txt"), body.toString.getBytes(StandardCharsets.UTF_8))
       }
       def s(a: Long, b: Long) = (b - a) / 1e9
-      val r = Pass(name, p, s(t0, tPlan) + s(tExec0, tExec), s(t0, tBuild),
-        s(tBuild, tAna), s(tAna, tOpt), s(tOpt, tPlan), s(tExec0, tExec),
-        c.cpuNs.sum / 1e9, c.jobs.sum, c.stages.sum, c.tasks.sum,
+      val r = Pass(name, p, s(t0, tBuild) + s(tAna0, tPlan) + s(tExec0, tExec),
+        s(t0, tBuild), s(tAna0, tAna), s(tAna, tOpt), s(tOpt, tPlan), s(tExec0, tExec),
+        c.cpuNs.sum / 1e9, c.jobs.sum, frameJobs, c.stages.sum, c.tasks.sum,
         c.shuffleRows.sum, c.shuffleBytes.sum, c.inputBytes.sum, c.spillBytes.sum,
         ms, n, sections.values.map(_._1).foldLeft(topCounts)(_ + _))
       println(r.line)

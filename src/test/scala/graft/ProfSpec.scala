@@ -13,4 +13,9 @@ class ProfSpec extends SparkSpec {
       s"$p1\n$p2")
     assert(p1.plans.exchanges >= 1 && p2.plans === p1.plans, s"$p1\n$p2")
   }
+
+  test("Prof counts frame-build jobs apart: q01_agg's table read starts none") {
+    val Seq(p) = tools.Prof.queries(spark, SF, 1, Seq("q01_agg"))
+    assert(p.frameJobs == 0 && p.jobs >= 1, p)
+  }
 }
