@@ -137,12 +137,13 @@ object Dedup {
     * (250k rows x 560 B ~ 140 MB). */
   private val VECTOR_ROW_BYTES = 560L
 
-  /** Estimated broadcast bytes per narrow index row ((vec_id, t, code) or
-    * (vec_id, cid) — a few longs): ~20x lighter than a vector row, so an
-    * index side sized by the RAW vector-row cap would flip to
-    * SHUFFLE_HASH at ~7 MB of actual build data and pay a full shuffle
-    * of the giant probe relation while a broadcast was still cheap. */
-  private val INDEX_ROW_BYTES = 28L
+  /** Estimated bytes per narrow build row of a few longs — an index row
+    * ((vec_id, t, code), (vec_id, cid)) or a graph key row ((u, v),
+    * (x, d)): ~20x lighter than a vector row, so a narrow side sized by
+    * the RAW vector-row cap would flip to SHUFFLE_HASH at ~7 MB of actual
+    * build data and pay a full shuffle of the giant probe relation while
+    * a broadcast was still cheap. */
+  private[graft] val NARROW_ROW_BYTES = 28L
 
   /** A corpus-bounded join side planned by MEASURED size — `nRows` is a
     * count the call site already holds (every generator counts its corpus
@@ -540,7 +541,7 @@ object Dedup {
     val incBands = minhashBandIndex(incoming, scope)
     def pairsAgainst(build: DataFrame, nBuild: Long) =
       incBands.alias("x")
-        .join(sizedBuildSide(build.alias("y"), nBuild, INDEX_ROW_BYTES), joinKeys)
+        .join(sizedBuildSide(build.alias("y"), nBuild, NARROW_ROW_BYTES), joinKeys)
         .filter(col("x.doc_id") =!= col("y.doc_id"))
         .select(least(col("x.doc_id"), col("y.doc_id")).as("ia"),
           greatest(col("x.doc_id"), col("y.doc_id")).as("ib"))
@@ -661,7 +662,7 @@ object Dedup {
       // sort-free against a hash-built index instead of being SMJ-sorted
       .join(sizedBuildSide(
         coded.select(col("vec_id").as("ib"), col("t"), col("code")),
-        n * nTables, INDEX_ROW_BYTES), Seq("t", "code"))
+        n * nTables, NARROW_ROW_BYTES), Seq("t", "code"))
       .filter(col("ia") < col("ib"))
       .select(col("ia"), col("ib"))
     // within one table a pair matches through exactly one mask, so a
@@ -810,7 +811,7 @@ object Dedup {
     val cand = probes
       .join(sizedBuildSide(
         ix.idx.select(col("vec_id").as("x"), col("cid")), ix.n,
-        INDEX_ROW_BYTES), Seq("cid"))
+        NARROW_ROW_BYTES), Seq("cid"))
       .filter(col("q") =!= col("x"))
       // normalize: an incoming-incoming pair may arrive both ways;
       // cosVerifyGrouped dedups inside its own first exchange
@@ -889,7 +890,7 @@ object Dedup {
     val incCodes = lshCodeIndex(incoming, p, nTables)
       .select(col("vec_id").as("x"), col("t"), col("code"))
     def pairsAgainst(build: DataFrame, nBuild: Long) =
-      probes.join(sizedBuildSide(build, nBuild, INDEX_ROW_BYTES), Seq("t", "code"))
+      probes.join(sizedBuildSide(build, nBuild, NARROW_ROW_BYTES), Seq("t", "code"))
         .filter(col("q") =!= col("x"))
         .select(least(col("q"), col("x")).as("ia"),
           greatest(col("q"), col("x")).as("ib"))

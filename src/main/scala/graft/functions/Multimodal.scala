@@ -981,11 +981,6 @@ object Multimodal {
     * [[imageNearDupPairsIncremental]] on the indexed corpus (pigeonhole
     * exactness is unchanged; MultimodalSpec pins the identity). At scale
     * the index is bucketed on (band, bv) so the corpus never shuffles. */
-  /** Bytes per (asset_id, dhash, band, bv) index row — what the
-    * [[Dedup.sizedBuildSide]] row cap is scaled by for the image member
-    * (three longs + an int; the Dedup INDEX_ROW_BYTES convention). */
-  private val IMG_INDEX_ROW_BYTES = 28L
-
   def probeImageBandIndex(index: DataFrame, incoming: DataFrame,
       maxHamming: Int): DataFrame = {
     require(maxHamming <= DHASH_BANDS - 1,
@@ -1007,7 +1002,7 @@ object Multimodal {
     def pairsAgainst(build: org.apache.spark.sql.DataFrame, nBuild: Long) =
       inc.alias("x")
         .join(Dedup.sizedBuildSide(build.alias("y"), nBuild,
-          IMG_INDEX_ROW_BYTES), Seq("band", "bv"))
+          Dedup.NARROW_ROW_BYTES), Seq("band", "bv"))
         .filter(col("x.asset_id") =!= col("y.asset_id"))
         .select(least(col("x.asset_id"), col("y.asset_id")).as("ia"),
           greatest(col("x.asset_id"), col("y.asset_id")).as("ib"),

@@ -1573,14 +1573,9 @@ object Web {
           .filter(col("internal") === 0)
           .select(col("src_host").as("src"), col("dst_host").as("dst"),
             col("n_links").as("w"))
-        // inline-symmetrize, not union: each union branch re-executes the
-        // documents scan + HTML synthesis + outlink parse inside the
-        // loop's pin job; inline emits both directions from ONE pass
-        val sym = ext.select(inline(array(
-          struct(col("src"), col("dst"), col("w")),
-          struct(col("dst").as("src"), col("src").as("dst"), col("w")))))
-        graft.operators.IterativeGraph
-          .pageRankWeighted(sym, HOST_RANK_ITERS, HOST_RANK_SCALE)
+        graft.operators.IterativeGraph.pageRankWeighted(
+            graft.operators.IterativeGraph.symmetrized(ext, carry = Seq("w")),
+            HOST_RANK_ITERS, HOST_RANK_SCALE)
           .select(col("v").as("host"), col("r"))
       },
       Some(HOST_RANK_ORACLE),

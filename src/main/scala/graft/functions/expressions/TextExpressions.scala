@@ -76,146 +76,86 @@ object UnicodeNormalize {
   }
 }
 
-/** `size(array_intersect(a, b))` for two SORTED string arrays, as one
-  * codegen'd merge — the exact-Jaccard verify kernel of the prefix-dedup
-  * family (q65/q68/q96/q138/q139 run it per candidate pair).
+/** `size(array_intersect(a, b))` for two SORTED arrays of the same
+  * element type, `array<string>` or `array<bigint>`, as one codegen'd
+  * merge. It is the exact-Jaccard verify kernel of the prefix-dedup family
+  * (q65/q68/q96/q138/q139 run it per candidate pair, on token arrays) and
+  * the triangle census's closing kernel (q120, on oriented adjacency
+  * lists: per oriented edge the triangle count through it is the
+  * distinct-common-element count of `adj(a)` and `adj(b)`).
   *
   * `array_intersect` builds a hash set over one side and an output array
-  * per row pair, only for `size` to throw the array away. Both verify
-  * sides here are sorted by construction (`array_sort`), so the distinct
-  * common-element COUNT is a single allocation-free merge over the two
-  * unsafe arrays. Equal runs advance past duplicates on both sides, so
-  * duplicate elements count once — exactly `array_intersect`'s distinct
-  * semantics; null elements (sorted last by `array_sort`) compare equal
-  * to each other and above every non-null, also matching.
+  * per row pair, only for `size` to throw the array away. Both sides here
+  * are sorted by construction (`array_sort`), so the distinct common-element
+  * COUNT is a single allocation-free merge over the two unsafe arrays —
+  * on q120 it replaces the materialized wedge stream, the largest relation
+  * the wedge-closure shape touches. Equal runs advance past duplicates on
+  * both sides, so duplicate elements count once — exactly
+  * `array_intersect`'s distinct semantics; null elements (sorted last by
+  * `array_sort`) compare equal to each other and above every non-null,
+  * also matching.
   *
   * CORRECTNESS CONTRACT: both inputs must be sorted ascending in
-  * `UTF8String` binary order (what `array_sort`/`sort_array` produce for
-  * string arrays). Unsorted input returns an undercount — call sites own
-  * the guarantee; TextExpressionsSpec pins equality with
-  * `size(array_intersect)` on randomized sorted arrays with duplicates.
-  * (Custom-operator ladder step (b), the VecDot pattern.)
+  * `array_sort` order — `UTF8String` binary order for strings, nulls LAST
+  * (`sort_array`'s default asc puts nulls first and would break the
+  * merge). Unsorted input returns an undercount — call sites own the
+  * guarantee; SortedIntersectSizeSpec and SortedLongIntersectSizeSpec pin
+  * equality with `size(array_intersect)` on randomized sorted arrays with
+  * duplicates. The element type selects the merge body, so each call site
+  * compiles to a direct call of one monomorphic loop.
+  * (Custom-operator ladder step (b), the VecDot pattern; interpreted eval
+  * and codegen share one body.)
   */
 case class SortedIntersectSize(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  import org.apache.spark.sql.catalyst.util.ArrayData
-  import org.apache.spark.sql.types.{ArrayType, IntegerType}
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), ArrayType(StringType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        TypeCheckResult.TypeCheckFailure(
-          s"sorted_intersect_size requires two array<string> inputs, got ${l.sql} / ${r.sql}")
-    }
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "sorted_intersect_size"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    SortedIntersectSize.merge(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.expressions.SortedIntersectSize.merge($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedIntersectSize =
-    copy(left = newLeft, right = newRight)
-}
-
-/** [[SortedIntersectSize]] for two SORTED long arrays — the triangle
-  * census's closing kernel (q120): oriented adjacency lists are long
-  * arrays, and per oriented edge the triangle count through that edge is
-  * exactly the distinct-common-element count of `adj(a)` and `adj(b)`.
-  * One allocation-free merge of two unsafe long arrays replaces a
-  * per-wedge hash probe AND the materialization of the wedge stream
-  * itself (the largest relation the wedge-closure shape touches).
-  *
-  * Same contract as the string kernel: both inputs sorted ascending
-  * (`array_sort` order — nulls LAST; `sort_array`'s default asc puts
-  * nulls first and would break the merge), duplicates count once,
-  * matching `size(array_intersect)` exactly — pinned on randomized
-  * arrays in SortedIntersectSizeSpec. (Custom-operator ladder step (b),
-  * the VecDot pattern; interpreted eval and codegen share one body.)
-  */
-case class SortedLongIntersectSize(left: Expression, right: Expression)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
   import org.apache.spark.sql.catalyst.util.ArrayData
   import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
+      case (ArrayType(StringType, _), ArrayType(StringType, _)) |
+           (ArrayType(LongType, _), ArrayType(LongType, _)) =>
         TypeCheckResult.TypeCheckSuccess
       case (l, r) =>
-        TypeCheckResult.TypeCheckFailure(
-          s"sorted_long_intersect_size requires two array<bigint> inputs, got ${l.sql} / ${r.sql}")
+        TypeCheckResult.TypeCheckFailure("sorted_intersect_size requires two " +
+          s"array<string> or two array<bigint> inputs, got ${l.sql} / ${r.sql}")
     }
   override def dataType: DataType = IntegerType
-  override def prettyName: String = "sorted_long_intersect_size"
+  override def prettyName: String = "sorted_intersect_size"
 
-  override def nullSafeEval(a: Any, b: Any): Any =
-    SortedLongIntersectSize.merge(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.expressions.SortedLongIntersectSize.merge($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedLongIntersectSize =
-    copy(left = newLeft, right = newRight)
-}
-
-object SortedLongIntersectSize {
-  import org.apache.spark.sql.catalyst.util.ArrayData
-
-  /** Shared eval/codegen body: distinct-count merge over two sorted long
-    * arrays. Null elements sort above every value (array_sort order). */
-  def merge(a: ArrayData, b: ArrayData): Int = {
-    val n = a.numElements(); val m = b.numElements()
-    var i = 0; var j = 0; var c = 0
-    while (i < n && j < m) {
-      val an = a.isNullAt(i); val bn = b.isNullAt(j)
-      if (an && bn) { c += 1; i = n; j = m } // nulls are last; one match
-      else if (an) j += 1 // null > any long: advance the smaller side
-      else if (bn) i += 1
-      else {
-        val av = a.getLong(i); val bv = b.getLong(j)
-        if (av < bv) i += 1
-        else if (av > bv) j += 1
-        else {
-          c += 1
-          i += 1; j += 1
-          while (i < n && !a.isNullAt(i) && a.getLong(i) == av) i += 1
-          while (j < m && !b.isNullAt(j) && b.getLong(j) == bv) j += 1
-        }
-      }
-    }
-    c
+  @transient private lazy val longs = left.dataType match {
+    case ArrayType(LongType, _) => true
+    case _ => false
   }
 
-  /** Column wrapper. */
-  def sortedLongIntersectSize(a: org.apache.spark.sql.Column,
-      b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.GraftSqlBridge.column(SortedLongIntersectSize(
-      org.apache.spark.sql.GraftSqlBridge.expression(a),
-      org.apache.spark.sql.GraftSqlBridge.expression(b)))
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    if (longs) SortedIntersectSize.mergeLongs(x, y)
+    else SortedIntersectSize.mergeStrings(x, y)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = " +
+      "graft.functions.expressions.SortedIntersectSize." +
+      s"${if (longs) "mergeLongs" else "mergeStrings"}($a, $b);")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): SortedIntersectSize =
+    copy(left = newLeft, right = newRight)
 }
 
 object SortedIntersectSize {
   import org.apache.spark.sql.catalyst.util.ArrayData
 
-  /** Shared eval/codegen body: distinct-count merge over two sorted
-    * string arrays. Null sorts above every value (array_sort order). */
-  def merge(a: ArrayData, b: ArrayData): Int = {
+  /** Merge body over two sorted string arrays: the distinct-common-element
+    * count. Null sorts above every value (array_sort order). */
+  def mergeStrings(a: ArrayData, b: ArrayData): Int = {
     val n = a.numElements(); val m = b.numElements()
     var i = 0; var j = 0; var c = 0
     while (i < n && j < m) {
       val an = a.isNullAt(i); val bn = b.isNullAt(j)
       if (an && bn) { c += 1; i = n; j = m } // nulls are last; one match
-      else if (an) j += 1 // null > any string: advance the smaller side
+      else if (an) j += 1 // null > any value: advance the smaller side
       else if (bn) i += 1
       else {
         val av = a.getUTF8String(i); val bv = b.getUTF8String(j)
@@ -227,6 +167,30 @@ object SortedIntersectSize {
           i += 1; j += 1
           while (i < n && !a.isNullAt(i) && a.getUTF8String(i).binaryCompare(av) == 0) i += 1
           while (j < m && !b.isNullAt(j) && b.getUTF8String(j).binaryCompare(bv) == 0) j += 1
+        }
+      }
+    }
+    c
+  }
+
+  /** [[mergeStrings]] over two sorted long arrays. */
+  def mergeLongs(a: ArrayData, b: ArrayData): Int = {
+    val n = a.numElements(); val m = b.numElements()
+    var i = 0; var j = 0; var c = 0
+    while (i < n && j < m) {
+      val an = a.isNullAt(i); val bn = b.isNullAt(j)
+      if (an && bn) { c += 1; i = n; j = m }
+      else if (an) j += 1
+      else if (bn) i += 1
+      else {
+        val av = a.getLong(i); val bv = b.getLong(j)
+        if (av < bv) i += 1
+        else if (av > bv) j += 1
+        else {
+          c += 1
+          i += 1; j += 1
+          while (i < n && !a.isNullAt(i) && a.getLong(i) == av) i += 1
+          while (j < m && !b.isNullAt(j) && b.getLong(j) == bv) j += 1
         }
       }
     }

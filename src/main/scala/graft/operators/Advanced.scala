@@ -1,10 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Money, QueryDef, Tables}
+import graft.functions.Dedup.{sizedBuildSide, NARROW_ROW_BYTES}
 
 /** Second wave of relational coverage: native pivot, correlated scalar
   * subquery, GROUPING SETS + grouping_id, exact interpolated percentiles,
@@ -273,6 +274,37 @@ $body,
            (SELECT cast(sum(d * (d - 1) // 2) AS bigint) FROM deg) AS n_wedges,
            n_triangles
     FROM tri"""
+
+  /** The customer<->supplier trade graph's edge stream, orders ⋈
+    * lineitemSpread: one row per traded lineitem, NOT deduplicated, its
+    * endpoints [[customerVertex]] and [[supplierVertex]]. */
+  private def tradeEdges(s: SparkSession, d: String): DataFrame =
+    orders(s, d).select(col("o_orderkey"), col("o_custkey"))
+      .join(lineitemSpread(s, d).select(col("l_orderkey"), col("l_suppkey")),
+        col("l_orderkey") === col("o_orderkey"))
+
+  /** [[tradeEdges]]' endpoints dictionary-encode to disjoint longs
+    * (customer -> 2k, supplier -> 2k+1) so loop shuffles move 8-byte
+    * keys. */
+  private def customerVertex: Column = col("o_custkey").cast("long") * 2
+  private def supplierVertex: Column = col("l_suppkey").cast("long") * 2 + 1
+
+  /** The part co-purchase graph's pair stream: parts are adjacent when
+    * some order contains both. The lineitemSpread self-join explodes each
+    * order's item set into its C(L,2) `(u, v)` pairs with u < v (L is the
+    * order's line count, bounded ~7 in TPC-H-shaped data, so the
+    * explosion is a constant factor of lineitem); NOT deduplicated.
+    * lineitemSpread: on the one-row-group scan the explosion ran on 3
+    * tasks; spreading by the join key parallelizes it and the self-join
+    * reuses the layout (gate off at production sizes). */
+  private def coPurchasePairs(s: SparkSession, d: String): DataFrame = {
+    val li = lineitemSpread(s, d).select(col("l_orderkey"),
+      col("l_partkey").cast("long").as("p"))
+    li.select(col("l_orderkey"), col("p").as("u"))
+      .join(li.select(col("l_orderkey"), col("p").as("v")), "l_orderkey")
+      .filter(col("u") < col("v"))
+      .select(col("u"), col("v"))
+  }
 
   val defs: Seq[QueryDef] = Seq(
     QueryDef(
@@ -582,23 +614,13 @@ $body,
         // lineitem), 5 damped iterations in exact integer arithmetic —
         // the result is bit-identical across partitionings, engines, and
         // runs, which is what lets an iterative numeric algorithm run
-        // UNDER the driver's hash gate at all. Vertices dictionary-encode
-        // to disjoint longs (customer -> 2k, supplier -> 2k+1) so loop
-        // shuffles move 8-byte keys. Top-100 by (rank, id) — bounded
-        // output via TakeOrderedAndProject, no global sort exchange.
-        val pairs = orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-          .join(lineitemSpread(s, d).select(col("l_orderkey"), col("l_suppkey")),
-            col("l_orderkey") === col("o_orderkey"))
-          .select((col("o_custkey").cast("long") * 2).as("src"),
-            (col("l_suppkey").cast("long") * 2 + 1).as("dst"))
-        // no distinct here: pageRank canonicalizes (one shuffle over the
+        // UNDER the driver's hash gate at all. Top-100 by (rank, id) —
+        // bounded output via TakeOrderedAndProject, no global sort
+        // exchange.
+        // No distinct here: pageRank canonicalizes (one shuffle over the
         // symmetrized stream instead of two over pairs-then-sym).
-        // inline-symmetrize, not union: each union branch re-executes the
-        // orders x lineitem join inside the loop's pin job; inline emits
-        // both directions from ONE pass over the join output
-        val sym = pairs.select(inline(array(
-          struct(col("src"), col("dst")),
-          struct(col("dst").as("src"), col("src").as("dst")))))
+        val sym = IterativeGraph.symmetrized(tradeEdges(s, d)
+          .select(customerVertex.as("src"), supplierVertex.as("dst")))
         IterativeGraph.pageRank(sym, PAGERANK_ITERS, PAGERANK_SCALE)
           .orderBy(col("r").desc, col("v").asc)
           .limit(100)
@@ -609,20 +631,10 @@ $body,
     QueryDef(
       "q120_triangles",
       (s, d) => {
-        // Triangle census of the part co-purchase graph: parts are
-        // adjacent when some order contains both. The self-join explodes
-        // each order's item set into C(L,2) pairs (L is per-order line
-        // count, bounded ~7 in TPC-H-shaped data, so the explosion is a
-        // constant factor of lineitem). Counting uses the degree-ordered
-        // orientation so hub parts cannot concentrate wedge enumeration
-        // into one task.
-        val li = lineitemSpread(s, d).select(col("l_orderkey"),
-          col("l_partkey").cast("long").as("p"))
-        val pairs = li.select(col("l_orderkey"), col("p").as("u"))
-          .join(li.select(col("l_orderkey"), col("p").as("v")), "l_orderkey")
-          .filter(col("u") < col("v"))
-          .select(col("u"), col("v"))
-        IterativeGraph.triangleStats(pairs) // dedups internally
+        // Triangle census of the part co-purchase graph. Counting uses
+        // the degree-ordered orientation so hub parts cannot concentrate
+        // wedge enumeration into one task.
+        IterativeGraph.triangleStats(coPurchasePairs(s, d)) // dedups internally
       },
       Some(TRIANGLE_ORACLE_SQL),
       "exact triangle census via degree-ordered wedge closure (Suri-Vassilvitskii orientation)"),
@@ -636,22 +648,8 @@ $body,
         // the rest of the graph. Output is the class histogram (-1 =
         // never reached). The deterministic min-tiebreak plurality rule
         // is what lets an LPA-family algorithm run under the hash gate.
-        // lineitemSpread: the C(L,2) pair explosion + symmetrize fused
-        // onto the one-row-group scan ran on 3 tasks (3.1 CPU-s
-        // serialized); spreading by the join key parallelizes it and the
-        // self-join reuses the layout (gate off at production sizes)
-        val li = lineitemSpread(s, d).select(col("l_orderkey"),
-          col("l_partkey").cast("long").as("p"))
-        val pairs = li.select(col("l_orderkey"), col("p").as("u"))
-          .join(li.select(col("l_orderkey"), col("p").as("v")), "l_orderkey")
-          .filter(col("u") < col("v"))
-          .select(col("u"), col("v"))
-        // labelPropagation dedups the symmetrized set in one shuffle;
-        // inline-symmetrize so the lineitem self-join runs once, not per
-        // union branch (see q119)
-        val sym = pairs.select(inline(array(
-          struct(col("u").as("src"), col("v").as("dst")),
-          struct(col("v").as("src"), col("u").as("dst")))))
+        // labelPropagation dedups the symmetrized set in one shuffle.
+        val sym = IterativeGraph.symmetrized(coPurchasePairs(s, d), ("u", "v"))
         val seeds = part(s, d).filter(col("p_size") <= 5)
           .select(col("p_partkey").cast("long").as("v"),
             col("p_size").cast("long").as("seed"))
@@ -671,15 +669,8 @@ $body,
         // Output is the reachability histogram (-1 = unreached) — the
         // "blast radius" shape of lineage/contamination tracing over a
         // relationship graph.
-        val pairs = orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-          .join(lineitemSpread(s, d).select(col("l_orderkey"), col("l_suppkey")),
-            col("l_orderkey") === col("o_orderkey"))
-          .select((col("o_custkey").cast("long") * 2).as("src"),
-            (col("l_suppkey").cast("long") * 2 + 1).as("dst"))
-        // inline-symmetrize: one pass over the join output (see q119)
-        val sym = pairs.select(inline(array(
-          struct(col("src"), col("dst")),
-          struct(col("dst").as("src"), col("src").as("dst")))))
+        val sym = IterativeGraph.symmetrized(tradeEdges(s, d)
+          .select(customerVertex.as("src"), supplierVertex.as("dst")))
         val srcs = supplier(s, d).filter(col("s_nationkey") === 0)
           .select((col("s_suppkey").cast("long") * 2 + 1).as("v"))
         IterativeGraph.bfsDistances(sym, srcs, BFS_DEPTH)
@@ -769,18 +760,12 @@ $body,
         // of degrees onto edges; no windows, nothing quadratic.
         // (m*sxy needs ~m^2*maxdeg^2 < 2^63: fine to ~1e7 edges of this
         // density; past that, center degrees on the mean first.)
-        val li = lineitemSpread(s, d).select(col("l_orderkey"),
-          col("l_partkey").cast("long").as("p"))
         // lease-cache the edge set: it feeds both union branches of sym
         // AND the degree aggregation — uncached, the lineitem pair
         // generation re-executes per consumer. The count prices the
         // degree build sides below (deg is vertex-cardinality, <= 2E)
         // and doubles as the lease's materialization.
-        val e = graft.Caches.lease(li.select(col("l_orderkey"), col("p").as("u"))
-          .join(li.select(col("l_orderkey"), col("p").as("v")), "l_orderkey")
-          .filter(col("u") < col("v"))
-          .select(col("u"), col("v"))
-          .distinct())
+        val e = graft.Caches.lease(coPurchasePairs(s, d).distinct())
         val nE = e.count()
         val sym = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
         val deg = sym.groupBy(col("u")).agg(count(lit(1)).as("d"))
@@ -788,12 +773,11 @@ $body,
         // degree joins' exchanges (the SortMergeJoin default exchanged
         // AND sorted it twice); above the cap SHUFFLE_HASH still never
         // sorts it. The moments then reduce map-side to one row.
-        import graft.functions.Dedup.sizedBuildSide
         sym
           .join(sizedBuildSide(
-            deg.select(col("u"), col("d").as("du")), 2L * nE, 28L), "u")
+            deg.select(col("u"), col("d").as("du")), 2L * nE, NARROW_ROW_BYTES), "u")
           .join(sizedBuildSide(
-            deg.select(col("u").as("v"), col("d").as("dv")), 2L * nE, 28L), "v")
+            deg.select(col("u").as("v"), col("d").as("dv")), 2L * nE, NARROW_ROW_BYTES), "v")
           .agg(count(lit(1)).as("m"),
             min(col("du")).as("min_degree"),
             max(col("du")).as("max_degree"),
@@ -837,13 +821,9 @@ $body,
         // before expensive per-vertex work. Six synchronous peels; the
         // spec pins that the fixture graphs reach the peeling fixpoint
         // within the budget (a seventh peel changes nothing).
-        val pairs = orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-          .join(lineitemSpread(s, d).select(col("l_orderkey"), col("l_suppkey")),
-            col("l_orderkey") === col("o_orderkey"))
-          .select(least(col("o_custkey").cast("long") * 2,
-              col("l_suppkey").cast("long") * 2 + 1).as("u"),
-            greatest(col("o_custkey").cast("long") * 2,
-              col("l_suppkey").cast("long") * 2 + 1).as("v"))
+        val pairs = tradeEdges(s, d)
+          .select(least(customerVertex, supplierVertex).as("u"),
+            greatest(customerVertex, supplierVertex).as("v"))
         val core = IterativeGraph.kCoreEdges(pairs, KCORE_K, KCORE_ROUNDS)
         val deg = core.select(col("u").as("x")).unionAll(
             core.select(col("v").as("x")))
@@ -865,19 +845,12 @@ $body,
         // represents, so mass flows along trade intensity, not mere
         // adjacency. Same exact-integer contract (per-edge
         // (r*w) div out-weight), same pinned one-join-per-round shape.
-        val pairs = orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-          .join(lineitemSpread(s, d).select(col("l_orderkey"), col("l_suppkey")),
-            col("l_orderkey") === col("o_orderkey"))
-          .select((col("o_custkey").cast("long") * 2).as("src"),
-            (col("l_suppkey").cast("long") * 2 + 1).as("dst"),
+        val pairs = tradeEdges(s, d)
+          .select(customerVertex.as("src"), supplierVertex.as("dst"),
             col("o_orderkey"))
           .distinct()
           .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
-        // inline-symmetrize: the union form re-ran the join + distinct +
-        // weight agg once per branch inside the loop's pin job (see q119)
-        val sym = pairs.select(inline(array(
-          struct(col("src"), col("dst"), col("w")),
-          struct(col("dst").as("src"), col("src").as("dst"), col("w")))))
+        val sym = IterativeGraph.symmetrized(pairs, carry = Seq("w"))
         IterativeGraph.pageRankWeighted(sym, PAGERANK_ITERS, PAGERANK_SCALE)
           .orderBy(col("r").desc, col("v").asc)
           .limit(100)
@@ -903,8 +876,6 @@ $body,
         // (i*10000 div (du+dv-i)); top-50 by (jac4, u, v) is a bounded
         // TakeOrderedAndProject, no global sort exchange.
         val SUPPORT = 2
-        val li = lineitemSpread(s, d).select(col("l_orderkey"),
-          col("l_partkey").cast("long").as("p"))
         // lease-cache BOTH relations: edges is consumed twice (the
         // union's two branches) and sym three times (degrees + both
         // wedge sides) — uncached, the lineitem pair-generation stage
@@ -912,10 +883,7 @@ $body,
         // the plan). The thresholded edge set is tiny (true co-purchase
         // signal, not the pair space). Harnesses clearCache per query;
         // library callers release via graft.Caches.
-        val edges = graft.Caches.lease(
-          li.select(col("l_orderkey"), col("p").as("u"))
-            .join(li.select(col("l_orderkey"), col("p").as("v")), "l_orderkey")
-            .filter(col("u") < col("v"))
+        val edges = graft.Caches.lease(coPurchasePairs(s, d)
             .groupBy(col("u"), col("v")).agg(count(lit(1)).as("s"))
             .filter(col("s") >= SUPPORT)
             .select(col("u"), col("v")))
@@ -933,18 +901,17 @@ $body,
         // here — flows from its aggregation straight into the bounded
         // top-k with no exchange and no sort (SortMergeJoin exchanged and
         // sorted it twice); above the cap SHUFFLE_HASH still never sorts.
-        import graft.functions.Dedup.sizedBuildSide
         val common = sym.select(col("u").as("w"), col("v").as("a"))
           .join(sizedBuildSide(
-            sym.select(col("u").as("w"), col("v").as("b")), 2L * nE, 28L), "w")
+            sym.select(col("u").as("w"), col("v").as("b")), 2L * nE, NARROW_ROW_BYTES), "w")
           .filter(col("a") < col("b"))
           .groupBy(col("a").as("u"), col("b").as("v"))
           .agg(count(lit(1)).as("common_n"))
         common
           .join(sizedBuildSide(
-            deg.select(col("x").as("u"), col("d").as("du")), 2L * nE, 28L), "u")
+            deg.select(col("x").as("u"), col("d").as("du")), 2L * nE, NARROW_ROW_BYTES), "u")
           .join(sizedBuildSide(
-            deg.select(col("x").as("v"), col("d").as("dv")), 2L * nE, 28L), "v")
+            deg.select(col("x").as("v"), col("d").as("dv")), 2L * nE, NARROW_ROW_BYTES), "v")
           .select(col("u"), col("v"), col("common_n"), col("du"), col("dv"),
             expr("(common_n * 10000) div (du + dv - common_n)").as("jac4"))
           .orderBy(col("jac4").desc, col("u"), col("v"))

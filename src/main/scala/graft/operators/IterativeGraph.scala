@@ -1,19 +1,146 @@
 package graft.operators
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 import graft.{Caches, Lease}
+import graft.functions.Dedup.{sizedBuildSide, NARROW_ROW_BYTES}
 
 /** Iterative graph algorithms expressed purely in the DataFrame API —
   * the Catalyst-planned alternative to GraphX's RDD machinery for the
   * simple label-propagation family.
   * Each algorithm pins in one [[Lease.scoped]], freed when it returns or
-  * throws; its result is a query-scope [[Caches.checkpoint]].
+  * throws; its result is a query-scope [[Caches.checkpoint]]. Every loop
+  * runs its rounds through [[iterate]]; build-side sizing decisions are
+  * denominated in [[NARROW_ROW_BYTES]] over MEASURED row counts
+  * (pinned-RDD counts), never Catalyst estimates, since a pinned
+  * LogicalRDD has no stats.
   */
 object IterativeGraph {
+
+  /** Both directions `(src, dst, carry...)` of every row of `edges`,
+    * whose endpoints are the columns `ends`, emitted by
+    * `inline(array(struct, struct))` from ONE pass over it — a union
+    * would re-execute the caller's edge subtree (a join, a parse) once
+    * per branch inside the loop's pin job. */
+  def symmetrized(edges: DataFrame, ends: (String, String) = ("src", "dst"),
+      carry: Seq[String] = Nil): DataFrame = {
+    val (a, b, rest) = (col(ends._1), col(ends._2), carry.map(col))
+    edges.select(inline(array(
+      struct(a.as("src") +: b.as("dst") +: rest: _*),
+      struct(b.as("src") +: a.as("dst") +: rest: _*))))
+  }
+
+  /** One materialized round of a loop: its state frame, the blocks it
+    * pinned, the signal its job returned, and whether it is the fixpoint.
+    * `side` is a frame pinned beside the state (CC's vertex degrees). */
+  private final case class Round(df: DataFrame, pins: Seq[RDD[InternalRow]],
+      signal: Long, converged: Boolean = false, side: DataFrame = null)
+
+  /** The one round loop of this module: pin, materialize, free the
+    * previous round, swap. Round k (from 1) pins `step(previous, k)`
+    * under the [[graft.PlanProbe]] label `probe`; `measure` runs the ONE
+    * job that materializes the pin and decides convergence (it may pin
+    * more beside it, listed in the round's pins); then the previous
+    * round's pins are freed. An unmaterialized pin is inert: without the
+    * job, each round's plan would hold the whole chain of earlier rounds
+    * (DAG depth O(rounds), a lost block recomputing every one of them).
+    * Stops at the first converged round or after `budget` rounds;
+    * `hook(round, signal)`, when set, sees every round. */
+  private def iterate(l: Lease, probe: String, init: Round, budget: Int,
+      hook: (Int, Long) => Unit)(step: (Round, Int) => DataFrame)(
+      measure: (Round, DataFrame, RDD[InternalRow]) => Round): Round = {
+    var cur = init
+    var round = 0
+    while (!cur.converged && round < budget) {
+      round += 1
+      val (df, rdd) = l.pin(step(cur, round), probe)
+      val next = measure(cur, df, rdd)
+      cur.pins.foreach(l.free)
+      cur = next
+      if (hook != null) hook(round, cur.signal)
+    }
+    cur
+  }
+
+  /** [[iterate]]'s measure for count-signalled loops: the round's row
+    * count is its job and its signal; with `fixpoint`, a count equal to
+    * the previous round's ends the loop. */
+  private def counted(fixpoint: Boolean)(prev: Round, df: DataFrame,
+      rdd: RDD[InternalRow]): Round = {
+    val n = rdd.count()
+    Round(df, Seq(rdd), n, fixpoint && n == prev.signal)
+  }
+
+  /** One alternating large-star + small-star round over a canonically
+    * (u > v) oriented, self-loop-free edge set; output keeps the
+    * orientation. Pure plan construction — no jobs, no materialization.
+    *
+    * large-star over the symmetric neighbor relation: m = min(N(u) ∪ u);
+    * emit (v, m) for larger neighbors v. No distinct after it: duplicate
+    * rows can't change small-star's min and the round's final distinct
+    * drops them — saves a shuffle per round. small-star: `large`'s
+    * neighbors of u are all smaller, m = their minimum; relink them (and
+    * u itself) to m. minS(u, m) already IS the distinct (u, m) row set,
+    * so only the relinked neighbors join.
+    *
+    * Pointer jump: the round's output is path-compressed through ITSELF
+    * before the distinct —
+    * f(x) = min target of x over the round's own rows, and every row
+    * (u, v) relabels to (u, min(v, f(v))). One vertex-cardinality
+    * aggregation + one sized join per round (union-find path halving,
+    * the "shortcutting" step of the SV/FastSV family, folded into the
+    * star round). Why the OUTPUT and not the input mappings: the chains
+    * that cost an extra round are created DURING the round — small-star's
+    * relink links a stale hub down to the root in the same round its
+    * followers relink to the stale hub (measured on q61's trade graph:
+    * round 2 leaves exactly the (follower -> hub -> root) 2-chains that
+    * forced round 3) — so only a jump over the freshly-built rows can see
+    * them. Invariants are untouched: targets only move DOWN within the
+    * component (f(v) < v, and f stays inside v's component), u > v
+    * orientation and self-loop freedom are strict (f(v) < v < u), and
+    * every vertex survives (a relabeled target v keeps its own (v, f(v))
+    * row; connectivity follows by induction on the larger endpoint: u
+    * joins f(v) directly and v joins f(v) through its own jumped row).
+    * Fixpoints are unchanged — on a canonical star f is the identity on
+    * targets, so the jump is a no-op exactly where the structural
+    * convergence test fires; maxIter still throws on any input that
+    * fails to converge rather than mislabeling. Measured: q61's graph
+    * converges in 2 rounds instead of 3 with round-1 output 95k rows
+    * instead of 482k (the jump collapses chains before the distinct);
+    * agreement with a union-find reference is spec-pinned on random, hub
+    * and chain graphs (IterativeGraphSpec). */
+  private def starRound(e: DataFrame, nEdges: Long): DataFrame = {
+    val sym = e.select(col("u"), col("v"))
+      .union(e.select(col("v").as("u"), col("u").as("v")))
+    // minL/minS are vertex-cardinality (bounded by 2x the measured edge
+    // count): sized build sides keep the edge-cardinality relations (sym,
+    // large) out of the relink joins' exchanges under the cap — the round
+    // then exchanges only aggregation partials and the final distinct —
+    // and above the cap SHUFFLE_HASH still never sorts the big side
+    val nVertBound = 2L * math.max(nEdges, 1L)
+    val minL = sym.groupBy(col("u"))
+      .agg(min(col("v")).as("mn"))
+      .select(col("u"), least(col("mn"), col("u")).as("m"))
+    val large = sym.join(sizedBuildSide(minL, nVertBound, NARROW_ROW_BYTES), "u")
+      .filter(col("v") > col("u"))
+      .select(col("v").as("u"), col("m").as("v"))
+    val minS = large.groupBy(col("u")).agg(min(col("v")).as("m"))
+    val out0 = large.join(sizedBuildSide(minS, nVertBound, NARROW_ROW_BYTES), "u")
+      .filter(col("v") =!= col("m"))
+      .select(col("v").as("u"), col("m").as("v"))
+      .union(minS.select(col("u"), col("m").as("v")))
+    val f = out0.groupBy(col("u")).agg(min(col("v")).as("__fv"))
+      .select(col("u").as("__ju"), col("__fv"))
+    out0.join(sizedBuildSide(f, nVertBound, NARROW_ROW_BYTES),
+        col("v") === col("__ju"), "left")
+      .select(col("u"),
+        least(col("v"), coalesce(col("__fv"), col("v"))).as("v"))
+      .distinct()
+  }
 
   /** Connected components via alternating large-star / small-star
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -64,83 +191,8 @@ object IterativeGraph {
     * returning it would yield duplicate xrefs with conflicting labels —
     * worse than a silently-wrong answer.
     */
-  /** One alternating large-star + small-star round over a canonically
-    * (u > v) oriented, self-loop-free edge set; output keeps the
-    * orientation. Pure plan construction — no jobs, no materialization.
-    *
-    * large-star over the symmetric neighbor relation: m = min(N(u) ∪ u);
-    * emit (v, m) for larger neighbors v. No distinct after it: duplicate
-    * rows can't change small-star's min and the round's final distinct
-    * drops them — saves a shuffle per round. small-star: `large`'s
-    * neighbors of u are all smaller, m = their minimum; relink them (and
-    * u itself) to m. minS(u, m) already IS the distinct (u, m) row set,
-    * so only the relinked neighbors join.
-    *
-    * Pointer jump: the round's output is path-compressed through ITSELF
-    * before the distinct —
-    * f(x) = min target of x over the round's own rows, and every row
-    * (u, v) relabels to (u, min(v, f(v))). One vertex-cardinality
-    * aggregation + one sized join per round (union-find path halving,
-    * the "shortcutting" step of the SV/FastSV family, folded into the
-    * star round). Why the OUTPUT and not the input mappings: the chains
-    * that cost an extra round are created DURING the round — small-star's
-    * relink links a stale hub down to the root in the same round its
-    * followers relink to the stale hub (measured on q61's trade graph:
-    * round 2 leaves exactly the (follower -> hub -> root) 2-chains that
-    * forced round 3) — so only a jump over the freshly-built rows can see
-    * them. Invariants are untouched: targets only move DOWN within the
-    * component (f(v) < v, and f stays inside v's component), u > v
-    * orientation and self-loop freedom are strict (f(v) < v < u), and
-    * every vertex survives (a relabeled target v keeps its own (v, f(v))
-    * row; connectivity follows by induction on the larger endpoint: u
-    * joins f(v) directly and v joins f(v) through its own jumped row).
-    * Fixpoints are unchanged — on a canonical star f is the identity on
-    * targets, so the jump is a no-op exactly where the structural
-    * convergence test fires; maxIter still throws on any input that
-    * fails to converge rather than mislabeling. Measured: q61's graph
-    * converges in 2 rounds instead of 3 with round-1 output 95k rows
-    * instead of 482k (the jump collapses chains before the distinct);
-    * agreement with a union-find reference is spec-pinned on random, hub
-    * and chain graphs (IterativeGraphSpec). */
-  private def starRound(e: DataFrame, nEdges: Long): DataFrame = {
-    import graft.functions.Dedup.sizedBuildSide
-    val sym = e.select(col("u"), col("v"))
-      .union(e.select(col("v").as("u"), col("u").as("v")))
-    // minL/minS are vertex-cardinality (bounded by 2x the measured edge
-    // count): sized build sides keep the edge-cardinality relations (sym,
-    // large) out of the relink joins' exchanges under the cap — the round
-    // then exchanges only aggregation partials and the final distinct —
-    // and above the cap SHUFFLE_HASH still never sorts the big side
-    val nVertBound = 2L * math.max(nEdges, 1L)
-    val minL = sym.groupBy(col("u"))
-      .agg(min(col("v")).as("mn"))
-      .select(col("u"), least(col("mn"), col("u")).as("m"))
-    val large = sym.join(sizedBuildSide(minL, nVertBound, KEY_ROW_BYTES), "u")
-      .filter(col("v") > col("u"))
-      .select(col("v").as("u"), col("m").as("v"))
-    val minS = large.groupBy(col("u")).agg(min(col("v")).as("m"))
-    val out0 = large.join(sizedBuildSide(minS, nVertBound, KEY_ROW_BYTES), "u")
-      .filter(col("v") =!= col("m"))
-      .select(col("v").as("u"), col("m").as("v"))
-      .union(minS.select(col("u"), col("m").as("v")))
-    val f = out0.groupBy(col("u")).agg(min(col("v")).as("__fv"))
-      .select(col("u").as("__ju"), col("__fv"))
-    out0.join(sizedBuildSide(f, nVertBound, KEY_ROW_BYTES),
-        col("v") === col("__ju"), "left")
-      .select(col("u"),
-        least(col("v"), coalesce(col("__fv"), col("v"))).as("v"))
-      .distinct()
-  }
-
-  /** ~bytes per built hash-relation row of 2-3 longs (the Dedup-family
-    * INDEX_ROW_BYTES estimate) — what [[graft.functions.Dedup.sizedBuildSide]]
-    * sizing decisions in this module are denominated in; row counts are
-    * always measured (pinned-RDD counts), never Catalyst estimates, since
-    * a pinned LogicalRDD has no stats. */
-  private val KEY_ROW_BYTES = 28L
-
   def connectedComponents(edges: DataFrame, maxIter: Int = 50,
-      roundHook: (Int, Long, Long) => Unit = null): DataFrame = Lease.scoped { l =>
+      roundHook: (Int, Long) => Unit = null): DataFrame = Lease.scoped { l =>
 
     // canonical orientation u >= v; pinned WITH self-loops so the final
     // vertex derivation reads these blocks instead of re-running the
@@ -150,10 +202,6 @@ object IterativeGraph {
       .select(greatest(col("src"), col("dst")).as("u"),
         least(col("src"), col("dst")).as("v"))
       .distinct())
-    var e = canon.filter(col("u") =!= col("v"))
-    var eRdd: RDD[InternalRow] = null // round edges; canon stays pinned for verts
-    var deg: DataFrame = null // pinned per-vertex (x, nu, nt) of the last round
-    var degRdd: RDD[InternalRow] = null
     // one stats job doubles as canon's pin materialization: total row
     // count drives the trivial-input short-circuit, the self-loop count
     // lets the final labeling omit its residue branch entirely when (as
@@ -161,22 +209,21 @@ object IterativeGraph {
     val statsRow = canon
       .agg(count(lit(1)), count(when(col("u") === col("v"), 1))).head()
     val hasSelfLoops = statsRow.getLong(1) > 0L
-    var converged = statsRow.getLong(0) == statsRow.getLong(1) // no real edges
-    // measured row count of the current edge set (canon rows initially,
-    // then each round's sum(nu) — one u per mat row): sizes starRound's
-    // vertex-cardinality build sides without any extra job
-    var curEdges = statsRow.getLong(0)
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val t0 = System.nanoTime()
+    // a round's signal is the measured row count of its edge set (canon
+    // rows initially, then each round's sum(nu) — one u per row): it
+    // sizes the next starRound's vertex-cardinality build sides without
+    // any extra job. canon stays pinned for the final vertex set.
+    val last = iterate(l, "cc.round",
+        Round(canon.filter(col("u") =!= col("v")), Nil, statsRow.getLong(0),
+          converged = statsRow.getLong(0) == statsRow.getLong(1)), // no real edges
+        maxIter, roundHook) { (prev, _) =>
       // One star round per materialized job: a round references its input
       // four times (sym twice, sym consumed by two operators), so chaining
       // rounds WITHOUT a pin in between multiplies the upstream subtree
       // ~4x per chained round — measured 2.5x slower at 2 rounds/job.
       // The pin is what keeps every subtree computed exactly once.
-      val roundF = starRound(e, curEdges)
-      graft.PlanProbe.emit("cc.round", roundF)
-      val (mat, matRdd) = l.pin(roundF)
+      starRound(prev.df, prev.signal)
+    } { (_, mat, matRdd) =>
       // ONE job: computes the round, fills the persisted blocks, and runs
       // the exact star test over them. A vertex breaks the star iff it
       // appears as u more than once, or as both u and v; sum of breakers
@@ -185,7 +232,7 @@ object IterativeGraph {
       // degree frame is ITSELF pinned: at the fixpoint it already holds
       // the roots (nu == 0) and the vertex set, so the final labeling
       // reads these blocks instead of re-deriving either with a shuffle.
-      val (degF, degRddNew) = l.pin(mat
+      val (degF, degRdd) = l.pin(mat
         .select(col("u").as("x"), lit(1L).as("us"))
         .union(mat.select(col("v").as("x"), lit(0L).as("us")))
         .groupBy(col("x"))
@@ -195,18 +242,9 @@ object IterativeGraph {
         coalesce(sum(when(col("nu") > 1 ||
           (col("nu") > 0 && col("nu") < col("nt")), 1L).otherwise(0L)), lit(0L)))
         .head()
-      if (eRdd != null) l.free(eRdd)
-      if (degRdd != null) l.free(degRdd)
-      e = mat
-      eRdd = matRdd
-      deg = degF
-      degRdd = degRddNew
-      converged = row.getLong(1) == 0L
-      curEdges = row.getLong(0)
-      iter += 1
-      if (roundHook != null) roundHook(iter, row.getLong(0), System.nanoTime() - t0)
+      Round(mat, Seq(matRdd, degRdd), row.getLong(0), row.getLong(1) == 0L, degF)
     }
-    if (!converged)
+    if (!last.converged)
       throw new IllegalStateException(
         s"connectedComponents: no fixpoint after $maxIter rounds " +
           "(intermediate edge sets carry conflicting labels; raise maxIter)")
@@ -218,6 +256,7 @@ object IterativeGraph {
     // whose every input edge was a self-loop: they appear only in the
     // pinned canonical set and label themselves; the branch is omitted
     // from the plan entirely when the stats job saw no self-loops.
+    val (e, deg) = (last.df, last.side)
     val nonRoots = e.select(col("u").as("xref"), col("v").as("component"))
     val roots =
       if (deg == null) e.limit(0).select(col("u").as("xref"), col("v").as("component"))
@@ -246,6 +285,8 @@ object IterativeGraph {
   /** Fixed-iteration PageRank over a symmetric `(src, dst)` edge set, in
     * EXACT integer arithmetic so the result is a deterministic function of
     * the edge set — independent of partitioning, task order, and engine.
+    * It is [[pageRankWeighted]]'s loop over unit weights: `(r * 1) div d`
+    * is `r div d`.
     *
     * Why integers: the textbook double formulation is order-dependent
     * (partial-aggregation sum order differs run to run and engine to
@@ -279,63 +320,9 @@ object IterativeGraph {
     * Returns `(v: long, r: long)` — rank in scale units, materialized
     * eagerly so the pinned edge/degree blocks can be released.
     */
-  def pageRank(edgesSym: DataFrame, iters: Int, scale: Long): DataFrame = Lease.scoped { l =>
-    require(iters >= 1, s"pageRank: iters must be >= 1, got $iters")
-    require(scale > 0 && scale % 100L == 0,
-      s"pageRank: scale must be positive and divisible by 100, got $scale")
-    // the edge pin DECLARES its hash distribution on src: every round's
-    // contributions join (and the initial degree aggregation) then plans
-    // with no exchange over the O(E) side — one repartition at pin time
-    // replaces `iters` per-round edge shuffles (guide §2.4)
-    val (e, _) =
-      l.pinPartitioned(edgesSym.select(col("src"), col("dst")).distinct(),
-        Seq("src"), "pagerank.prelude")
-    // the out-degree RIDES IN the rank state (it is per-vertex constant),
-    // so a round needs only ONE keyed join (state onto edges) + one
-    // partial-agg sum + one left join back — not a second ranks-to-degree
-    // join per round (the pinned state is a LogicalRDD with no stats, so
-    // that join would plan as a full shuffle every round)
-    var (ranks, ranksRdd) = l.pin(e.groupBy(col("src").as("v"))
-      .agg(count(lit(1)).as("d"))
-      .select(col("v"), col("d"), lit(scale).as("r")))
-    // materializing the initial pin yields V for free, arming the
-    // documented sizing rule BEFORE any round can overflow silently:
-    // every per-vertex sum is bounded by the total mass V*scale, and the
-    // damping update multiplies it by 85
-    val nVerts = ranksRdd.count()
-    require(nVerts <= Long.MaxValue / 85L / scale,
-      s"pageRank: 85 * V * scale must fit a long, got V=$nVerts scale=$scale" +
-        " — lower the scale (1e10 holds to ~1.08e7 vertices)")
-    for (_ <- 1 to iters) {
-      val contrib = ranks.select(col("v").as("src"), expr("r div d").as("c"))
-      // SHUFFLE_HASH builds on the O(V) state side: the pinned edge side
-      // streams its declared partitioning with no exchange AND no sort
-      // (the SortMergeJoin default would re-sort the edge set each round)
-      val sums = e.join(contrib.hint("SHUFFLE_HASH"), "src")
-        .groupBy(col("dst").as("v"))
-        .agg(sum(col("c")).as("s"))
-      // pin each round AND materialize it (count) before releasing the
-      // previous round — an unmaterialized persist/localCheckpoint is
-      // inert, leaving one deep final DAG whose protection is only
-      // same-job shuffle reuse. The count keeps DAG depth O(1) per round
-      // and makes a lost block recompute one round, not the whole chain
-      // (same discipline as connectedComponents' per-round stats job).
-      // both spine sides are O(V): hash-build the aggregated side so
-      // neither is sorted (sums already leaves its agg hash-partitioned)
-      val roundF = ranks.select(col("v"), col("d"))
-        .join(sums.hint("SHUFFLE_HASH"), Seq("v"), "left")
-        .select(col("v"), col("d"),
-          (lit(15L * (scale / 100L)) +
-            expr("(85 * coalesce(s, cast(0 as bigint))) div 100")).as("r"))
-      graft.PlanProbe.emit("pagerank.round", roundF)
-      val (nr, nrRdd) = l.pin(roundF)
-      nrRdd.count()
-      l.free(ranksRdd)
-      ranks = nr
-      ranksRdd = nrRdd
-    }
-    Caches.checkpoint(ranks.select(col("v"), col("r")))
-  }
+  def pageRank(edgesSym: DataFrame, iters: Int, scale: Long): DataFrame =
+    rank(edgesSym.select(col("src"), col("dst")).distinct(), lit(1L),
+      iters, scale, "pagerank")
 
   /** [[pageRank]] over WEIGHTED symmetric edges `(src, dst, w)` with
     * positive integer weights: a vertex's mass splits in proportion to
@@ -343,59 +330,68 @@ object IterativeGraph {
     * `W_src` the vertex's total out-weight. Same exact-integer
     * determinism contract and physical shape as the unweighted form (the
     * weight rides on the pinned edge rows; total out-weights ride in the
-    * rank state). `scale * maxWeight * V` must fit a long.
+    * rank state). `scale * max(85, maxWeight) * V` must fit a long.
     */
-  def pageRankWeighted(edgesSym: DataFrame, iters: Int, scale: Long): DataFrame = Lease.scoped { l =>
-    require(iters >= 1, s"pageRankWeighted: iters must be >= 1, got $iters")
+  def pageRankWeighted(edgesSym: DataFrame, iters: Int, scale: Long): DataFrame =
+    rank(edgesSym.groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w")),
+      col("w"), iters, scale, "pagerank_weighted")
+
+  /** The PageRank loop over the deduplicated `(src, dst, ...)` edge set
+    * `edges`, with per-edge weight `w`; `probe` prefixes its PlanProbe
+    * labels and its error messages. */
+  private def rank(edges: DataFrame, w: Column, iters: Int, scale: Long,
+      probe: String): DataFrame = Lease.scoped { l =>
+    require(iters >= 1, s"$probe: iters must be >= 1, got $iters")
     require(scale > 0 && scale % 100L == 0,
-      s"pageRankWeighted: scale must be positive and divisible by 100, got $scale")
-    // declared src distribution: see pageRank — kills the per-round edge
-    // exchange and the initial out-weight aggregation's exchange
-    val (e, _) = l.pinPartitioned(edgesSym
-      .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w")),
-      Seq("src"), "pagerank_weighted.prelude")
-    var (ranks, ranksRdd) = l.pin(e.groupBy(col("src").as("v"))
-      .agg(sum(col("w")).as("tw"))
-      .select(col("v"), col("tw"), lit(scale).as("r")))
-    // arm the documented sizing rule with the ACTUAL graph: ranks are
-    // bounded by the total mass V*scale, so the per-edge product r*w
-    // needs V*scale*maxW and the damping update 85*V*scale to fit
-    val nVerts = ranksRdd.count()
-    val maxW = e.agg(max(col("w"))).head.get(0) match {
-      case null => 85L // no edges: only the damping bound applies
-      case w: java.lang.Long => math.max(w.longValue, 85L)
-      case w: java.lang.Integer => math.max(w.longValue, 85L)
-      case other => throw new IllegalArgumentException(
-        // falling back to the no-edges bound here would silently skip
-        // the overflow guard for exactly the misuse it exists to catch
-        s"pageRankWeighted: positive INTEGER weights required, got " +
-          s"${other.getClass.getSimpleName} — cast the weight column first")
-    }
+      s"$probe: scale must be positive and divisible by 100, got $scale")
+    val wType = edges.select(w).schema.head.dataType
+    // a fractional weight would skip the overflow guard below and break
+    // the exact-integer contract
+    require(wType == LongType, s"$probe: positive INTEGER weights required," +
+      s" got ${wType.simpleString} — cast the weight column first")
+    // the edge pin DECLARES its hash distribution on src: every round's
+    // contributions join (and the initial out-weight aggregation) then
+    // plans with no exchange over the O(E) side — one repartition at pin
+    // time replaces `iters` per-round edge shuffles (guide §2.4)
+    val (e0, _) = l.pinPartitioned(edges, Seq("src"), s"$probe.prelude")
+    val e = e0.select(col("src"), col("dst"), w.as("w"))
+    // the total out-weight RIDES IN the rank state (it is per-vertex
+    // constant), so a round needs only ONE keyed join (state onto edges)
+    // + one partial-agg sum + one left join back — not a second
+    // ranks-to-weight join per round (the pinned state is a LogicalRDD
+    // with no stats, so that join would plan as a full shuffle every round)
+    val (ranks, ranksRdd) = l.pin(e.groupBy(col("src").as("v"))
+      .agg(sum(col("w")).as("tw"), max(col("w")).as("mw"))
+      .select(col("v"), col("tw"), col("mw"), lit(scale).as("r")))
+    // the one job that materializes the initial pin also arms the sizing
+    // rule with the ACTUAL graph, before any round can overflow silently:
+    // ranks are bounded by the total mass V*scale, so the per-edge
+    // product r*w needs V*scale*maxW and the damping update 85*V*scale
+    // to fit
+    val (nVerts, maxW) = ranksRdd.aggregate((0L, 85L))(
+      (a, row) => (a._1 + 1L, math.max(a._2, row.getLong(2))),
+      (a, b) => (a._1 + b._1, math.max(a._2, b._2)))
     require(nVerts <= Long.MaxValue / maxW / scale,
-      s"pageRankWeighted: V * scale * max(85, maxWeight) must fit a long," +
+      s"$probe: V * scale * max(85, maxWeight) must fit a long," +
         s" got V=$nVerts scale=$scale maxW=$maxW — lower the scale")
-    for (_ <- 1 to iters) {
-      val contrib = ranks.select(col("v").as("src"), col("tw"), col("r"))
-      // hash-build the O(V) state side; the pinned edge side streams with
-      // no exchange and no sort (see pageRank's loop)
-      val sums = e.join(contrib.hint("SHUFFLE_HASH"), "src")
+    val last = iterate(l, s"$probe.round", Round(ranks, Seq(ranksRdd), nVerts),
+        iters, null) { (prev, _) =>
+      // SHUFFLE_HASH builds on the O(V) state side: the pinned edge side
+      // streams its declared partitioning with no exchange AND no sort
+      // (the SortMergeJoin default would re-sort the edge set each round)
+      val sums = e.join(prev.df.select(col("v").as("src"), col("tw"), col("r"))
+          .hint("SHUFFLE_HASH"), "src")
         .groupBy(col("dst").as("v"))
         .agg(sum(expr("(r * w) div tw")).as("s"))
-      // pin + materialize each round before releasing the previous one —
-      // see pageRank's loop for why the count is what makes the pin real
-      val roundF = ranks.select(col("v"), col("tw"))
+      // both spine sides are O(V): hash-build the aggregated side so
+      // neither is sorted (sums already leaves its agg hash-partitioned)
+      prev.df.select(col("v"), col("tw"))
         .join(sums.hint("SHUFFLE_HASH"), Seq("v"), "left")
         .select(col("v"), col("tw"),
           (lit(15L * (scale / 100L)) +
             expr("(85 * coalesce(s, cast(0 as bigint))) div 100")).as("r"))
-      graft.PlanProbe.emit("pagerank_weighted.round", roundF)
-      val (nr, nrRdd) = l.pin(roundF)
-      nrRdd.count()
-      l.free(ranksRdd)
-      ranks = nr
-      ranksRdd = nrRdd
-    }
-    Caches.checkpoint(ranks.select(col("v"), col("r")))
+    }(counted(fixpoint = false))
+    Caches.checkpoint(last.df.select(col("v"), col("r")))
   }
 
   private val LpaPivotLabels = 64 // most seed labels the pivoted LPA round takes
@@ -451,7 +447,7 @@ object IterativeGraph {
     // count, one aggregate argmax, and one left join back — no per-round
     // seeds join (the pinned seed frame is a LogicalRDD with no stats,
     // so that join would plan as a full shuffle every round)
-    var (labels, labelsRdd) = l.pin(e.select(col("src").as("v")).distinct()
+    val (labels, labelsRdd) = l.pin(e.select(col("src").as("v")).distinct()
       .join(seeds.select(col("v"), col("seed")).distinct(), Seq("v"), "left")
       .select(col("v"), col("seed"), col("seed").as("lbl")))
     // bounded-label-space probe (one tiny job over the seed frame): the
@@ -465,11 +461,10 @@ object IterativeGraph {
     }
     def litOf(v: Any) = GraftSqlBridge.column(
       org.apache.spark.sql.catalyst.expressions.Literal.create(v, seedType))
-    var round = 1
-    var converged = false
-    while (round <= iters && !converged) {
+    val last = iterate(l, "lpa.round", Round(labels, Seq(labelsRdd), 0L),
+        iters, roundHook) { (prev, _) =>
       val counted = e
-        .join(labels.filter(col("lbl").isNotNull)
+        .join(prev.df.filter(col("lbl").isNotNull)
           .select(col("v").as("src"), col("lbl")).hint("SHUFFLE_HASH"), "src")
       val best = if (pivotLabels.nonEmpty) {
         // pivoted plurality: per-label conditional counts in ONE
@@ -492,30 +487,29 @@ object IterativeGraph {
           .agg(max(struct(col("c"), (-col("lbl")).as("nl"))).as("m"))
           .select(col("v"), (-col("m.nl")).as("blbl"))
       }
-      // pin + materialize each round before releasing the previous one
-      // (the state is referenced twice per round — neighbor counts + the
-      // update spine); see pageRank's loop for why the count is what
-      // makes the pin real. The update carries the previous label so the
-      // SAME job that materializes the round also detects the fixpoint:
+      // the state is referenced twice per round (neighbor counts + the
+      // update spine). The update carries the previous label so the SAME
+      // job that materializes the round also detects the fixpoint:
       // plurality LPA's fixpoint is ABSORBING (unchanged labels reproduce
       // themselves), so stopping once no label moved is output-identical
       // to running the full budget — the same argument that gave BFS and
       // k-core their early exits, and what keeps the fixed-round oracle
-      // exact. The moved signal rides a longAccumulator on the RDD pass
-      // that materializes the pinned blocks — zero extra jobs, stages, or
-      // per-round Catalyst compiles (a DataFrame agg here costs a fresh
-      // codegen plan plus a final-agg stage EVERY round; measured ~0.2 s
-      // per round on q122). Retry-safety: a re-run task can only inflate
-      // a nonzero count, never zero a nonzero one, and the exit tests
-      // moved == 0 exactly.
-      val roundF = labels.select(col("v"), col("seed"),
-          col("lbl").as("prev"))
+      // exact.
+      prev.df.select(col("v"), col("seed"), col("lbl").as("prev"))
         .join(best.hint("SHUFFLE_HASH"), Seq("v"), "left")
         .select(col("v"), col("seed"), col("prev"),
           when(col("seed").isNotNull, col("seed"))
             .otherwise(coalesce(col("blbl"), col("prev"))).as("lbl"))
-      graft.PlanProbe.emit("lpa.round", roundF)
-      val (nl, nlRdd) = l.pin(roundF)
+    } { (_, nl, nlRdd) =>
+      // The moved signal rides a longAccumulator on the RDD pass that
+      // materializes the pinned blocks — zero extra jobs, stages, or
+      // per-round Catalyst compiles (a DataFrame agg here costs a fresh
+      // codegen plan plus a final-agg stage EVERY round; measured ~0.2 s
+      // per round on q122). Retry-safety: a re-run task can only inflate
+      // a nonzero count, never zero a nonzero one, and the exit tests
+      // moved == 0 exactly. The hook sees it, so the spec can prove the
+      // early exit fires (output identity alone holds trivially by the
+      // absorbing property, so it cannot catch a dead exit).
       val prevOrd = nl.schema.fieldIndex("prev")
       val lblOrd = nl.schema.fieldIndex("lbl")
       val lblType = nl.schema(lblOrd).dataType // scalar by contract
@@ -527,18 +521,9 @@ object IterativeGraph {
             else r.get(prevOrd, lblType) != r.get(lblOrd, lblType))
           moved.add(1L)
       }
-      converged = moved.value == 0L
-      // observability + testability: the spec counts hook firings to
-      // prove the early exit actually fires (output identity alone holds
-      // trivially by the absorbing property, so it cannot catch a dead
-      // exit)
-      if (roundHook != null) roundHook(round, moved.value)
-      l.free(labelsRdd)
-      labels = nl
-      labelsRdd = nlRdd
-      round += 1
+      Round(nl, Seq(nlRdd), moved.value, moved.value == 0L)
     }
-    Caches.checkpoint(labels.select(col("v"), col("lbl")))
+    Caches.checkpoint(last.df.select(col("v"), col("lbl")))
   }
 
   /** Multi-source BFS over a symmetric `(src, dst)` edge set: the exact
@@ -567,37 +552,26 @@ object IterativeGraph {
       l.pinPartitioned(edgesSym.select(col("src"), col("dst")).distinct(),
         Seq("src"), "bfs.prelude")
     val (verts, _) = l.pin(e.select(col("src").as("v")).distinct())
-    var (dist, distRdd) = l.pin(verts
+    val (dist, distRdd) = l.pin(verts
       .join(sources.select(col("v")).distinct(), Seq("v"), "left_semi")
       .select(col("v"), lit(0L).as("d")))
-    var prevCount = distRdd.count() // materializes the initial pin too
-    var k = 1
-    var converged = false
-    while (k <= maxDepth && !converged) {
-      val frontier = dist.filter(col("d") === (k - 1))
+    // the round count doubles as the FIXPOINT test: a reached vertex's d
+    // can never change (BFS levels are monotone — any shorter path was
+    // found in an earlier round), so an unchanged row count means the
+    // frontier added nothing and every remaining round is a no-op. Early
+    // exit changes no output row; it stops a diameter-6 graph at round 7
+    // instead of burning the full budget.
+    val last = iterate(l, "bfs.round",
+        Round(dist, Seq(distRdd), distRdd.count()), // materializes the initial pin too
+        maxDepth, null) { (prev, k) =>
+      val frontier = prev.df.filter(col("d") === (k - 1))
         .select(col("v").as("src"))
       val next = e.join(frontier.hint("SHUFFLE_HASH"), "src")
         .select(col("dst").as("v"), lit(k.toLong).as("d"))
-      val roundF = dist.unionAll(next)
+      prev.df.unionAll(next)
         .groupBy(col("v")).agg(min(col("d")).as("d"))
-      graft.PlanProbe.emit("bfs.round", roundF)
-      val (nd, ndRdd) = l.pin(roundF)
-      // materialize before releasing the previous round (see pageRank);
-      // the same count doubles as the FIXPOINT test: a reached vertex's
-      // d can never change (BFS levels are monotone — any shorter path
-      // was found in an earlier round), so an unchanged row count means
-      // the frontier added nothing and every remaining round is a no-op.
-      // Early exit changes no output row; it stops a diameter-6 graph at
-      // round 7 instead of burning the full budget.
-      val n = ndRdd.count()
-      converged = n == prevCount
-      prevCount = n
-      l.free(distRdd)
-      dist = nd
-      distRdd = ndRdd
-      k += 1
-    }
-    Caches.checkpoint(verts.join(dist, Seq("v"), "left")
+    }(counted(fixpoint = true))
+    Caches.checkpoint(verts.join(last.df, Seq("v"), "left")
       .select(col("v"), coalesce(col("d"), lit(-1L)).as("d")))
   }
 
@@ -619,13 +593,17 @@ object IterativeGraph {
   def kCoreEdges(pairs: DataFrame, k: Int, rounds: Int): DataFrame = Lease.scoped { l =>
     require(k >= 1 && rounds >= 1,
       s"kCoreEdges: k and rounds must be >= 1, got k=$k rounds=$rounds")
-    var (e, eRdd) = l.pin(probe = "kcore.prelude", df =
+    val (e, eRdd) = l.pin(probe = "kcore.prelude", df =
       pairs.select(col("u"), col("v")).filter(col("u") < col("v")).distinct())
-    var prevCount = eRdd.count() // materializes the initial pin too
-    var r = 1
-    var converged = false
-    while (r <= rounds && !converged) {
-      val keep = e.select(col("u").as("x")).unionAll(e.select(col("v").as("x")))
+    // the round count doubles as the FIXPOINT test: peeling only removes
+    // edges, so an unchanged edge count means no vertex fell below k and
+    // every remaining peel is the identity. Early exit changes no output
+    // row — it just stops burning the budget once converged.
+    val last = iterate(l, "kcore.round",
+        Round(e, Seq(eRdd), eRdd.count()), // materializes the initial pin too
+        rounds, null) { (prev, _) =>
+      val keep = prev.df.select(col("u").as("x"))
+        .unionAll(prev.df.select(col("v").as("x")))
         .groupBy(col("x")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k)
       // `keep` is vertex-cardinality (<= 2x the measured surviving edge
@@ -633,29 +611,14 @@ object IterativeGraph {
       // exchanges under the cap (it streams once per round), and above
       // the cap SHUFFLE_HASH still never sorts it — the SortMergeJoin
       // default exchanged AND sorted the edge set twice per peel
-      import graft.functions.Dedup.sizedBuildSide
-      val roundF = e
+      prev.df
         .join(sizedBuildSide(keep.select(col("x").as("u")),
-          2L * prevCount, KEY_ROW_BYTES), Seq("u"), "left_semi")
+          2L * prev.signal, NARROW_ROW_BYTES), Seq("u"), "left_semi")
         .join(sizedBuildSide(keep.select(col("x").as("v")),
-          2L * prevCount, KEY_ROW_BYTES), Seq("v"), "left_semi")
+          2L * prev.signal, NARROW_ROW_BYTES), Seq("v"), "left_semi")
         .select(col("u"), col("v"))
-      graft.PlanProbe.emit("kcore.round", roundF)
-      val (ne, neRdd) = l.pin(roundF)
-      // materialize before releasing the previous round (see pageRank);
-      // the count doubles as the FIXPOINT test: peeling only removes
-      // edges, so an unchanged edge count means no vertex fell below k
-      // and every remaining peel is the identity. Early exit changes no
-      // output row — it just stops burning the budget once converged.
-      val n = neRdd.count()
-      converged = n == prevCount
-      prevCount = n
-      l.free(eRdd)
-      e = ne
-      eRdd = neRdd
-      r += 1
-    }
-    Caches.checkpoint(e)
+    }(counted(fixpoint = true))
+    Caches.checkpoint(last.df)
   }
 
   /** Exact triangle census of an undirected graph given as canonical
@@ -688,12 +651,6 @@ object IterativeGraph {
       e.select(col("u").as("x")).union(e.select(col("v").as("x")))
         .groupBy(col("x")).agg(count(lit(1)).as("d")))
     val nVerts = degRdd.count()
-    // ~bytes per built hash-relation row of 2-3 longs (the Dedup-family
-    // INDEX_ROW_BYTES estimate): the sizing decisions below compare
-    // measured row counts, never Catalyst estimates (a pinned LogicalRDD
-    // has no stats, so the auto-broadcast path can't see these sides)
-    val ROW_BYTES = 28L
-    import graft.functions.Dedup.sizedBuildSide
     // rank = (degree, id) lexicographically; u < v already, so on a
     // degree tie the orientation keeps (u -> v).
     val lowFirst = col("du") < col("dv") ||
@@ -702,9 +659,9 @@ object IterativeGraph {
     // the edge set out of BOTH orientation exchanges (it streams once)
     val (ori, _) = l.pin(e
       .join(sizedBuildSide(
-        deg.select(col("x").as("u"), col("d").as("du")), nVerts, ROW_BYTES), "u")
+        deg.select(col("x").as("u"), col("d").as("du")), nVerts, NARROW_ROW_BYTES), "u")
       .join(sizedBuildSide(
-        deg.select(col("x").as("v"), col("d").as("dv")), nVerts, ROW_BYTES), "v")
+        deg.select(col("x").as("v"), col("d").as("dv")), nVerts, NARROW_ROW_BYTES), "v")
       .select(
         when(lowFirst, col("u")).otherwise(col("v")).as("a"),
         when(lowFirst, col("v")).otherwise(col("u")).as("b")))
@@ -713,7 +670,7 @@ object IterativeGraph {
     // longs, the edge set itself), each oriented edge (a, b) attaches
     // adj(a) and adj(b) via sized build sides and counts their common
     // out-neighbors with the allocation-free sorted merge
-    // (SortedLongIntersectSize). A triangle {x,y,z} with rank x<y<z is
+    // (SortedIntersectSize). A triangle {x,y,z} with rank x<y<z is
     // seen exactly once, at edge (x,y): z ∈ adj(x) ∩ adj(y), while at
     // (x,z) and (y,z) the third vertex is not an out-neighbor of the
     // higher-ranked endpoint. The wedge stream — sum od^2 rows, the
@@ -721,7 +678,7 @@ object IterativeGraph {
     // executor-CPU-s at sf0.1 even after its joins were sized) — is
     // never materialized: the same comparisons run as primitive long
     // merges inside one codegen stage.
-    import graft.functions.expressions.SortedLongIntersectSize.sortedLongIntersectSize
+    import graft.functions.expressions.SortedIntersectSize.sortedIntersectSize
     // array_sort, not sort_array: the merge kernel's contract is
     // nulls-LAST order (none occur here — collect_list skips nulls —
     // but the contract is pinned once, in the expression's spec)
@@ -734,10 +691,10 @@ object IterativeGraph {
     // inner join dropping it is exact.
     val tri = ori
       .join(sizedBuildSide(
-        adj.select(col("a"), col("nb").as("na")), m, ROW_BYTES), Seq("a"))
+        adj.select(col("a"), col("nb").as("na")), m, NARROW_ROW_BYTES), Seq("a"))
       .join(sizedBuildSide(
-        adj.select(col("a").as("b"), col("nb")), m, ROW_BYTES), Seq("b"))
-      .select(sortedLongIntersectSize(col("na"), col("nb")).as("t"))
+        adj.select(col("a").as("b"), col("nb")), m, NARROW_ROW_BYTES), Seq("b"))
+      .select(sortedIntersectSize(col("na"), col("nb")).as("t"))
       .agg(coalesce(sum(col("t")), lit(0L)).as("n_triangles"))
     val stats = deg
       .agg(count(lit(1)).as("n_vertices"),
@@ -751,3 +708,4 @@ object IterativeGraph {
     Caches.checkpoint(stats)
   }
 }
+

@@ -106,7 +106,7 @@ class IterativeGraphSpec extends SparkSpec {
     val edges = (0 until 63).map(i => (f"v$i%02d", f"v${i + 1}%02d", "e"))
       .toDF("src", "dst", "relType")
     var rounds = 0
-    IterativeGraph.connectedComponents(edges, roundHook = (i, _, _) => rounds = i)
+    IterativeGraph.connectedComponents(edges, roundHook = (i, _) => rounds = i)
       .count()
     assert(rounds == 3, s"ran $rounds rounds")
   }
@@ -126,7 +126,7 @@ class IterativeGraphSpec extends SparkSpec {
       .toDF("src", "dst", "relType")
     var rounds = 0
     val labels = IterativeGraph.connectedComponents(edges,
-        roundHook = (i, _, _) => rounds = i)
+        roundHook = (i, _) => rounds = i)
       .as[(String, String)].collect().toMap
     assert(rounds == 1, s"star input should be recognized after round 1, ran $rounds")
     assert(labels == Map("a" -> "a", "b" -> "a", "c" -> "a", "d" -> "a"))
@@ -516,6 +516,45 @@ class IterativeGraphSpec extends SparkSpec {
     val negIds = triRow(base.map { case (a, b) => (a - 100L, b - 100L) })
     assert(bigIds == smallIds, "ids past 2^31 diverged")
     assert(negIds == smallIds, "negative ids diverged")
+  }
+
+  test("each entry point starts a pinned number of jobs on a fixed small graph") {
+    // a 20-edge chain, a 6-leaf star and a triangle. BFS from the
+    // triangle stops at its fixpoint in round 2; the k-core peel of the
+    // chain runs out its 4-round budget. pageRankWeighted starts as many
+    // jobs as pageRank: its max(w) overflow guard rides the job that
+    // materializes the initial rank state.
+    val pairs = (0L until 20L).map(i => (i, i + 1)) ++
+      (31L to 36L).map(i => (30L, i)) ++ Seq((40L, 41L), (41L, 42L), (40L, 42L))
+    val sym = (pairs ++ pairs.map(_.swap)).toDF("src", "dst")
+    def jobs(body: => org.apache.spark.sql.DataFrame): Int = withJobCount(body)._2
+    val got = Map(
+      "connectedComponents" -> jobs(IterativeGraph.connectedComponents(pairs.toDF("src", "dst"))),
+      "pageRank" -> jobs(IterativeGraph.pageRank(sym, 3, 1000000L)),
+      "pageRankWeighted" -> jobs(IterativeGraph.pageRankWeighted(
+        sym.withColumn("w", lit(2L)), 3, 1000000L)),
+      "labelPropagation" -> jobs(IterativeGraph.labelPropagation(sym,
+        Seq((0L, 1L), (30L, 2L)).toDF("v", "seed"), 3)),
+      "bfsDistances" -> jobs(IterativeGraph.bfsDistances(sym, Seq(40L).toDF("v"), 4)),
+      "kCoreEdges" -> jobs(IterativeGraph.kCoreEdges(pairs.toDF("u", "v"), 2, 4)),
+      "triangleStats" -> jobs(IterativeGraph.triangleStats(pairs.toDF("u", "v"))))
+    assert(got == Map("connectedComponents" -> 36, "pageRank" -> 18,
+      "pageRankWeighted" -> 18, "labelPropagation" -> 23, "bfsDistances" -> 16,
+      "kCoreEdges" -> 15, "triangleStats" -> 12))
+  }
+
+  test("only the round driver frees a pin in IterativeGraph.scala") {
+    // every loop swaps its rounds through IterativeGraph.iterate; a loop
+    // that frees its own previous round is a second copy of the protocol
+    val path = java.nio.file.Paths.get("src/main/scala/graft/operators/IterativeGraph.scala")
+    val lines = new String(java.nio.file.Files.readAllBytes(path), "UTF-8").split("\n")
+    val start = lines.indexWhere(_.contains("private def iterate("))
+    assert(start >= 0, s"$path: no round driver")
+    val end = lines.indexWhere(_.startsWith("  }"), start)
+    val frees = lines.indices.filter(i => lines(i).contains("." + "free"))
+    assert(frees.nonEmpty && frees.forall(i => i > start && i < end),
+      s"$path frees a pin outside the round driver at line(s) " +
+        frees.filterNot(i => i > start && i < end).map(_ + 1).mkString(", "))
   }
 
   test("pinPartitioned: declared hash layout is real — rows, plan, and joins agree") {

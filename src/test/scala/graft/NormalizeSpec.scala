@@ -130,7 +130,7 @@ class SortedIntersectSizeSpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.util.GenericArrayData
     import org.apache.spark.unsafe.types.UTF8String
     def ad(xs: String*) = new GenericArrayData(xs.map(UTF8String.fromString).toArray[Any])
-    val m = graft.functions.expressions.SortedIntersectSize.merge _
+    val m = SortedIntersectSizeSpec.eval(org.apache.spark.sql.types.StringType) _
     assert(m(ad(), ad()) === 0)
     assert(m(ad("a", "a", "b"), ad("a", "b", "b", "c")) === 2)
     assert(m(ad("a", "b", "c"), ad("d", "e")) === 0)
@@ -142,17 +142,29 @@ class SortedIntersectSizeSpec extends SparkSpec {
     import org.apache.spark.unsafe.types.UTF8String
     def adn(xs: Option[String]*) = new GenericArrayData(
       xs.map(_.map(UTF8String.fromString).orNull).toArray[Any])
-    val m = graft.functions.expressions.SortedIntersectSize.merge _
+    val m = SortedIntersectSizeSpec.eval(org.apache.spark.sql.types.StringType) _
     assert(m(adn(Some("a"), None), adn(Some("a"), None)) === 2)
     assert(m(adn(Some("a"), None), adn(Some("b"), None)) === 1)
     assert(m(adn(None), adn(Some("a"))) === 0)
   }
 }
 
+object SortedIntersectSizeSpec {
+  import org.apache.spark.sql.catalyst.expressions.Literal
+  import org.apache.spark.sql.catalyst.util.ArrayData
+  import org.apache.spark.sql.types.{ArrayType, DataType}
+
+  /** The one expression's interpreted eval over two `elem` arrays. */
+  def eval(elem: DataType)(a: ArrayData, b: ArrayData): Int =
+    graft.functions.expressions.SortedIntersectSize(
+      Literal(a, ArrayType(elem)), Literal(b, ArrayType(elem)))
+      .eval().asInstanceOf[Int]
+}
+
 class SortedLongIntersectSizeSpec extends SparkSpec {
   import org.apache.spark.sql.functions._
   import spark.implicits._
-  import graft.functions.expressions.SortedLongIntersectSize.sortedLongIntersectSize
+  import graft.functions.expressions.SortedIntersectSize.sortedIntersectSize
 
   test("sorted merge == size(array_intersect) on randomized sorted long arrays with duplicates") {
     val rnd = new scala.util.Random(43)
@@ -166,7 +178,7 @@ class SortedLongIntersectSizeSpec extends SparkSpec {
     // sort with Spark's OWN array_sort — the ordering the contract names
     val df = rows.toDF("a0", "b0")
       .select(array_sort(col("a0")).as("a"), array_sort(col("b0")).as("b"))
-      .select(sortedLongIntersectSize(col("a"), col("b")).as("got"),
+      .select(sortedIntersectSize(col("a"), col("b")).as("got"),
         size(array_intersect(col("a"), col("b"))).as("want"))
     assert(df.filter(col("got") =!= col("want")).count() === 0)
     assert(df.filter(col("got") > 0).count() > 0)
@@ -175,7 +187,7 @@ class SortedLongIntersectSizeSpec extends SparkSpec {
   test("interpreted eval matches codegen path") {
     import org.apache.spark.sql.catalyst.util.GenericArrayData
     def ad(xs: Long*) = new GenericArrayData(xs.map(Long.box).toArray[Any])
-    val m = graft.functions.expressions.SortedLongIntersectSize.merge _
+    val m = SortedIntersectSizeSpec.eval(org.apache.spark.sql.types.LongType) _
     assert(m(ad(), ad()) === 0)
     assert(m(ad(1L, 1L, 2L), ad(1L, 2L, 2L, 3L)) === 2)
     assert(m(ad(1L, 2L, 3L), ad(4L, 5L)) === 0)
@@ -187,9 +199,55 @@ class SortedLongIntersectSizeSpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.util.GenericArrayData
     def adn(xs: Option[Long]*) = new GenericArrayData(
       xs.map(_.map(Long.box).orNull).toArray[Any])
-    val m = graft.functions.expressions.SortedLongIntersectSize.merge _
+    val m = SortedIntersectSizeSpec.eval(org.apache.spark.sql.types.LongType) _
     assert(m(adn(Some(1L), None), adn(Some(1L), None)) === 2)
     assert(m(adn(Some(1L), None), adn(Some(2L), None)) === 1)
     assert(m(adn(None), adn(Some(1L))) === 0)
+  }
+
+  test("mixed element types are rejected at analysis") {
+    val err = intercept[Exception] {
+      Seq((Seq(1L), Seq("a"))).toDF("a", "b")
+        .select(sortedIntersectSize(col("a"), col("b"))).collect()
+    }
+    assert(err.getMessage.contains("sorted_intersect_size"), err.getMessage)
+  }
+
+  /** The generated code of every whole-stage codegen span of `df`'s
+    * executed plan, and whether a node outside every span evaluates the
+    * kernel. */
+  private def kernelPlacement(df: org.apache.spark.sql.DataFrame): (Seq[String], Boolean) = {
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import graft.functions.expressions.SortedIntersectSize
+    df.collect() // execute this exact plan so AQE finalizes it
+    val helper = new AdaptiveSparkPlanHelper {}
+    val plan = df.queryExecution.executedPlan
+    def kernel(p: SparkPlan) =
+      p.expressions.exists(_.exists(_.isInstanceOf[SortedIntersectSize]))
+    val spans = helper.collect(plan) { case w: WholeStageCodegenExec => w }
+    def fused(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case _ => p +: p.children.flatMap(fused)
+    }
+    val inSpans = spans.flatMap(w => fused(w.child)).toSet
+    val outside = helper.collect(plan) { case p if kernel(p) => p }.exists(!inSpans(_))
+    (spans.filter(w => fused(w.child).exists(kernel)).map(_.doCodeGen()._2.body), outside)
+  }
+
+  test("q65's verify and q120's closing call the typed merge inside whole-stage codegen") {
+    val (q65, q65Outside) = kernelPlacement(
+      SparkEntry.queries("q65_jaccard_prefix")(spark, SF))
+    assert(!q65Outside && q65.exists(_.contains("SortedIntersectSize.mergeStrings(")),
+      "q65's verify kernel left whole-stage codegen")
+    // the closing frame runs while q120's frame is built: take it from
+    // the probe and run it inside the operator's lease
+    var q120: (Seq[String], Boolean) = null
+    graft.PlanProbe.withSink { (label, df) =>
+      if (label == "triangles.closing") q120 = kernelPlacement(df)
+    }(SparkEntry.queries("q120_triangles")(spark, SF))
+    assert(q120 != null, "q120 emitted no closing frame")
+    assert(!q120._2 && q120._1.exists(_.contains("SortedIntersectSize.mergeLongs(")),
+      "q120's closing kernel left whole-stage codegen")
   }
 }
