@@ -1,62 +1,34 @@
 package graft.gedcom
 
-import org.apache.spark.graphx.{Edge => GXEdge, Graph => GXGraph, VertexId}
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** GraphX layer over the flattened property graph (BASELINE.json north
-  * star: "DataFrame transformations + GraphX for relationship modeling").
-  *
-  * Vertex ids are 64-bit hashes of the xref string (collision odds n^2/2^64
-  * — negligible below ~10^8 vertices; the xref is kept as the vertex
-  * attribute so results join back to the property tables by string id).
+import graft.operators.IterativeGraph
+
+/** Relationship questions over the flattened property graph's edges
+  * `(src, dst, relType)`, keyed by xref string so results join back to
+  * the property tables. The iterative ones run on [[IterativeGraph]]'s
+  * leased loops: their pins are freed when they return, and a result is
+  * a query-scope checkpoint, freed by [[graft.Caches.release]] once read.
   */
 object GraphOps {
 
-  /** Stable 64-bit vertex id from an xref string (FNV-1a). */
-  def vertexId(xref: String): VertexId = {
-    var h = 0xcbf29ce484222325L
-    var i = 0
-    while (i < xref.length) { h ^= xref.charAt(i); h *= 0x100000001b3L; i += 1 }
-    h
-  }
+  /** Connected components — family clusters. Returns `(xref, component)`,
+    * the component named by its minimum xref. */
+  def familyClusters(edges: DataFrame): DataFrame =
+    IterativeGraph.connectedComponents(edges)
 
-  /** Build a GraphX graph from the edges DF (src, dst, relType). Vertices
-    * are the union of endpoints, attributed with their xref. */
-  def toGraphX(edges: DataFrame): GXGraph[String, String] = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val es = edges.select("src", "dst", "relType").as[(String, String, String)]
-      .rdd.map { case (s, d, t) => GXEdge(vertexId(s), vertexId(d), t) }
-    val vs = edges.select(explode(array(col("src"), col("dst"))).as("xref"))
-      .distinct().as[String].rdd.map(x => (vertexId(x), x))
-    GXGraph(vs, es)
-  }
-
-  /** Connected components — family clusters. Returns (xref, componentId). */
-  def familyClusters(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val g = toGraphX(edges)
-    val cc = g.connectedComponents().vertices // (vid, componentVid)
-    g.vertices.join(cc)
-      .map { case (_, (xref, comp)) => (xref, comp) }
-      .toDF("xref", "component")
-  }
-
-  /** In/out/total degree per xref. */
-  def degrees(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val g = toGraphX(edges)
-    val in = g.inDegrees
-    val out = g.outDegrees
-    g.vertices.leftOuterJoin(in).leftOuterJoin(out)
-      .map { case (_, ((xref, i), o)) =>
-        (xref, i.getOrElse(0), o.getOrElse(0), i.getOrElse(0) + o.getOrElse(0))
-      }
-      .toDF("xref", "in_degree", "out_degree", "degree")
-  }
+  /** In/out/total degree per xref. Every edge row counts, duplicates
+    * included, so the degrees sum to twice the edge rows. */
+  def degrees(edges: DataFrame): DataFrame =
+    edges.select(inline(array(
+        struct(col("src").as("xref"), lit(1).as("out")),
+        struct(col("dst").as("xref"), lit(0).as("out")))))
+      .groupBy(col("xref"))
+      .agg(sum(col("out")).cast("int").as("out_degree"),
+        count(lit(1)).cast("int").as("degree"))
+      .select(col("xref"), (col("degree") - col("out_degree")).as("in_degree"),
+        col("out_degree"), col("degree"))
 
   /** child -> parent edges derived from the family topology: family F with
     * `Child` edge to C and `Husband`/`Wife` edge to P gives C -> P.
@@ -69,72 +41,35 @@ object GraphOps {
     children.join(parents, "family").select(col("child"), col("parent")).distinct()
   }
 
-  /** PageRank over the property graph — relative structural importance of
-    * individuals/families (hub families rank high). Standard GraphX
-    * iterate-until-tolerance implementation. */
-  def pageRank(edges: DataFrame, tol: Double = 1e-4): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val g = toGraphX(edges)
-    g.vertices.join(g.pageRank(tol).vertices)
-      .map { case (_, (xref, rank)) => (xref, rank) }
-      .toDF("xref", "rank")
-  }
-
-  /** Triangle count per vertex over the undirected view — cohesion measure
-    * (in family graphs, triangles arise from intermarriage patterns). */
-  def triangleCounts(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val g = toGraphX(edges)
-      .partitionBy(org.apache.spark.graphx.PartitionStrategy.RandomVertexCut)
-    g.vertices.join(g.triangleCount().vertices)
-      .map { case (_, (xref, n)) => (xref, n) }
-      .toDF("xref", "triangles")
-  }
-
-  /** Undirected hop distance from each vertex to the given landmarks. */
+  /** Undirected hop distance from each vertex to the given landmarks:
+    * `(xref, landmark, hops)`, one row per vertex a landmark reaches. */
   def hopDistances(edges: DataFrame, landmarks: Seq[String]): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val g = toGraphX(edges)
-    // undirected view: add reversed edges
-    val und = GXGraph(g.vertices, g.edges.union(g.edges.reverse))
-    val res = org.apache.spark.graphx.lib.ShortestPaths.run(und, landmarks.map(vertexId))
-    val names = landmarks.map(l => vertexId(l) -> l).toMap
-    g.vertices.join(res.vertices)
-      .flatMap { case (_, (xref, dists)) =>
-        dists.map { case (lm, d) => (xref, names(lm), d) }
-      }
-      .toDF("xref", "landmark", "hops")
+    val sym = IterativeGraph.symmetrized(edges)
+    landmarks.map { lm =>
+      // no depth cap: the BFS stops at its fixpoint
+      IterativeGraph.bfsDistances(sym, vertex(edges, lm), Int.MaxValue)
+        .filter(col("d") >= 0)
+        .select(col("v").as("xref"), lit(lm).as("landmark"), col("d").cast("int").as("hops"))
+    }.reduceOption(_ unionAll _)
+      .getOrElse(edges.select(col("src").as("xref"), col("src").as("landmark"),
+        lit(0).as("hops")).limit(0))
   }
 
-  /** Transitive ancestor closure from `start`, via Pregel BFS over the
-    * child->parent graph. Returns (xref, generation) with generation = 1 for
-    * parents, 2 for grandparents, ... Iterations are bounded by `maxGen` —
-    * at scale this is the iterative-traversal pattern that a self-join loop
-    * cannot express without quadratic shuffles. */
+  /** Transitive ancestor closure from `start`: a BFS over the child ->
+    * parent edges, `maxGen` generations deep. Returns `(xref, generation)`
+    * with generation = 1 for parents, 2 for grandparents, ... */
   def ancestorsOf(edges: DataFrame, start: String, maxGen: Int = 20): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val pe = parentEdges(edges)
-    val es = pe.as[(String, String)].rdd
-      .map { case (c, p) => GXEdge(vertexId(c), vertexId(p), 1) }
-    val vs = pe.select(explode(array(col("child"), col("parent"))).as("x"))
-      .distinct().as[String].rdd.map(x => (vertexId(x), (x, Int.MaxValue)))
-    val startId = vertexId(start)
-    val g = GXGraph(vs, es)
-      .mapVertices((vid, attr) => if (vid == startId) (attr._1, 0) else attr)
-    val res = g.pregel(Int.MaxValue, maxIterations = maxGen)(
-      (_, attr, msg) => if (msg < attr._2) (attr._1, msg) else attr,
-      triplet =>
-        if (triplet.srcAttr._2 != Int.MaxValue &&
-            triplet.srcAttr._2 + 1 < triplet.dstAttr._2)
-          Iterator((triplet.dstId, triplet.srcAttr._2 + 1))
-        else Iterator.empty,
-      math.min)
-    res.vertices.values
-      .filter { case (_, gen) => gen > 0 && gen != Int.MaxValue }
-      .toDF("xref", "generation")
+    // the BFS's vertex set is its edges' sources: a (p, p) self-loop puts
+    // each top-most ancestor in it, and never lowers a distance
+    val up = parentEdges(edges).select(inline(array(
+      struct(col("child").as("src"), col("parent").as("dst")),
+      struct(col("parent").as("src"), col("parent").as("dst")))))
+    IterativeGraph.bfsDistances(up, vertex(edges, start), maxGen)
+      .filter(col("d") > 0)
+      .select(col("v").as("xref"), col("d").cast("int").as("generation"))
   }
+
+  /** A one-row `(v)` frame holding `xref`: a BFS source. */
+  private def vertex(edges: DataFrame, xref: String): DataFrame =
+    edges.sparkSession.range(1).select(lit(xref).as("v"))
 }

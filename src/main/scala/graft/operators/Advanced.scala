@@ -9,8 +9,8 @@ import graft.functions.Dedup.{sizedBuildSide, NARROW_ROW_BYTES}
 
 /** Second wave of relational coverage: native pivot, correlated scalar
   * subquery, GROUPING SETS + grouping_id, exact interpolated percentiles,
-  * argmax-style ordered aggregates, and a GraphX connected-components
-  * query over the part-supplier bipartite graph. */
+  * argmax-style ordered aggregates, and a connected-components query
+  * over the part-supplier bipartite graph. */
 object Advanced {
   import Tables._
 
@@ -553,18 +553,9 @@ $body,
         // (parts and suppliers linked by lineitem co-occurrence) —
         // iterative traversal no SQL engine expresses without recursion.
         // ENGINE: the DataFrame large-star/small-star iteration (same as
-        // q61). The GraphX engine that first carried this query
-        // ([[graft.gedcom.GraphOps.familyClusters]]) remains the
-        // spec-pinned baseline — IterativeGraphSpec proves partition
-        // equivalence and the GEDCOM pipeline still exercises it — but
-        // its RDD machinery measured 3.4-11.9 s at sf0.1 on a quiet host
-        // (r10/r11 re-measure) where this plan runs ~2.9 s, and on a
-        // real cluster the DataFrame form gets Tungsten codegen + AQE
-        // where GraphX gets neither. Vertices dictionary-encode to
-        // disjoint longs (part -> 2k, supplier -> 2k+1 — exactly what
-        // GraphX's Long VertexId forced) so every loop shuffle moves
-        // 8-byte keys; the component summary is invariant under the
-        // relabeling.
+        // q61). Vertices dictionary-encode to disjoint longs (part -> 2k,
+        // supplier -> 2k+1) so every loop shuffle moves 8-byte keys; the
+        // component summary is invariant under the relabeling.
         val edges = lineitem(s, d)
           .select((col("l_partkey").cast("long") * 2).as("src"),
             (col("l_suppkey").cast("long") * 2 + 1).as("dst"))
@@ -580,18 +571,17 @@ $body,
       // Fine at oracle scale (sf0.01 closure ~= |V|^2 rows); the Spark side
       // is the one that has to scale, and it never builds the closure.
       Some(GRAPH_ORACLE_SQL),
-      "connected components over a bipartite co-occurrence graph (DataFrame star iteration; GraphX spec baseline)"),
+      "connected components over a bipartite co-occurrence graph (DataFrame star iteration)"),
 
     QueryDef(
       "q61_cc_dataframe",
       (s, d) => {
         // same computation as q50 through the DataFrame hash-min iteration
-        // (no RDD/GraphX machinery; equivalence proven in IterativeGraphSpec).
+        // (union-find equivalence proven in IterativeGraphSpec).
         // Vertices are dictionary-encoded to disjoint longs (part -> 2k,
-        // supplier -> 2k+1) before iterating — exactly what GraphX's Long
-        // VertexId forces q50 to do — so every loop shuffle moves 8-byte
-        // keys instead of strings; the component summary is invariant
-        // under the relabeling.
+        // supplier -> 2k+1) before iterating, so every loop shuffle moves
+        // 8-byte keys instead of strings; the component summary is
+        // invariant under the relabeling.
         val edges = lineitem(s, d)
           .select((col("l_partkey").cast("long") * 2).as("src"),
             (col("l_suppkey").cast("long") * 2 + 1).as("dst"))

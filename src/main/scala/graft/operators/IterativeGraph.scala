@@ -9,9 +9,9 @@ import org.apache.spark.sql.types.LongType
 import graft.{Caches, Lease}
 import graft.functions.Dedup.{sizedBuildSide, NARROW_ROW_BYTES}
 
-/** Iterative graph algorithms expressed purely in the DataFrame API —
-  * the Catalyst-planned alternative to GraphX's RDD machinery for the
-  * simple label-propagation family.
+/** Iterative graph algorithms expressed purely in the DataFrame API and
+  * planned by Catalyst: the registry's graph queries and GraphOps' GEDCOM
+  * relationship questions both run on them.
   * Each algorithm pins in one [[Lease.scoped]], freed when it returns or
   * throws; its result is a query-scope [[Caches.checkpoint]]. Every loop
   * runs its rounds through [[iterate]]; build-side sizing decisions are

@@ -2,11 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.gedcom.GraphOps
 import graft.operators.IterativeGraph
 
 /** The DataFrame hash-min connected components must induce exactly the
-  * same partition of vertices as GraphX's implementation. */
+  * same partition of vertices as a driver-side union-find. */
 class IterativeGraphSpec extends SparkSpec {
   import spark.implicits._
 
@@ -14,28 +13,22 @@ class IterativeGraphSpec extends SparkSpec {
     df.as[(String, String)].collect()
       .groupBy(_._2).values.map(_.map(_._1).toSet).toSet
 
-  private def partitionOfLong(df: org.apache.spark.sql.DataFrame): Set[Set[String]] =
-    df.as[(String, Long)].collect()
-      .groupBy(_._2).values.map(_.map(_._1).toSet).toSet
-
-  test("matches GraphX components on the family fixture") {
-    val edges = Seq(
+  test("matches union-find components on the family fixture") {
+    val rows = Seq(
       ("F1", "GP", "Husband"), ("F1", "GM", "Wife"), ("F1", "P", "Child"),
       ("F2", "P", "Husband"), ("F2", "S", "Wife"), ("F2", "C", "Child"),
       ("F9", "Q", "Husband"), ("F9", "Z", "Child"))
-      .toDF("src", "dst", "relType")
+    val edges = rows.toDF("src", "dst", "relType")
     assert(partitionOf(IterativeGraph.connectedComponents(edges)) ==
-      partitionOfLong(GraphOps.familyClusters(edges)))
+      unionFind(rows.map { case (a, b, _) => (a, b) }))
   }
 
-  test("matches GraphX components on a random graph") {
+  test("matches union-find components on a random graph") {
     val rnd = new scala.util.Random(5)
-    val edges = Seq.fill(300)((s"v${rnd.nextInt(120)}", s"v${rnd.nextInt(120)}"))
+    val pairs = Seq.fill(300)((s"v${rnd.nextInt(120)}", s"v${rnd.nextInt(120)}"))
       .filter { case (a, b) => a != b }
-      .map { case (a, b) => (a, b, "e") }
-      .toDF("src", "dst", "relType")
-    assert(partitionOf(IterativeGraph.connectedComponents(edges)) ==
-      partitionOfLong(GraphOps.familyClusters(edges)))
+    val edges = pairs.map { case (a, b) => (a, b, "e") }.toDF("src", "dst", "relType")
+    assert(partitionOf(IterativeGraph.connectedComponents(edges)) == unionFind(pairs))
   }
 
   test("singleton islands and empty edge frames") {

@@ -18,21 +18,31 @@ import graft.gedcom.GedcomGraph
   * once it closes — returned, thrown, or released by its owner. */
 class LeaseSpec extends SparkSpec {
 
+  /** Every `.scala` file under `src/main`. */
+  private def mainSources: List[Path] = {
+    val s = Files.walk(Paths.get("src/main"))
+    try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+    finally s.close()
+  }
+
   test("no source file but Lease.scala persists, caches, checkpoints or unpersists") {
     // split so this file does not match itself
     val needles = Seq(".cache" + "()", ".persist" + "(",
       ".localCheckpoint" + "(", ".unpersist" + "(")
-    val files = {
-      val s = Files.walk(Paths.get("src/main"))
-      try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
-      finally s.close()
-    }
+    val files = mainSources
     assert(files.exists(_.endsWith("graft/Lease.scala")))
     val offenders = files.filterNot(_.endsWith("graft/Lease.scala")).flatMap { f =>
       val text = new String(Files.readAllBytes(f), "UTF-8")
       needles.filter(text.contains).map(n => s"$f: $n")
     }
     assert(offenders.isEmpty, offenders.mkString(", "))
+  }
+
+  test("no source file imports GraphX") {
+    // split so this file does not match itself
+    val needle = "org.apache.spark." + "graphx"
+    val offenders = mainSources.filter(f => new String(Files.readAllBytes(f), "UTF-8").contains(needle))
+    assert(offenders.isEmpty, s"GraphX in ${offenders.mkString(", ")}")
   }
 
   test("close frees pins, cached frames and checkpoints, and is idempotent") {
