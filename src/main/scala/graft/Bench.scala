@@ -53,6 +53,14 @@ object Bench {
     // the pass vectors alone could prove the dispute but not adjudicate
     // it — the contention evidence now rides in the artifact per pass
     val legLoadPasses = scala.collection.mutable.LinkedHashMap.empty[String, Vector[Double]]
+    // every individual pass, in order, per leg and query, with its work —
+    // the forensic record for adjudicating artifact-vs-quiet-host
+    // discrepancies (WHICH pass carried the excess, and did its work move)
+    val passLog = scala.collection.mutable.LinkedHashMap.empty[String, Vector[Metrics.Measured[_]]]
+    def logged(k: String, m: Metrics.Measured[_]): Double = {
+      passLog(k) = passLog.getOrElse(k, Vector.empty) :+ m
+      m.wall
+    }
     // prior round's five-pass band best MB/s per leg, read from the
     // LATEST checked-in BAND_r<N>.json at bench start (advisor r18: the
     // hardcoded map went stale the round anyone forgot the manual
@@ -82,9 +90,8 @@ object Bench {
         val loads = scala.collection.mutable.ArrayBuffer.empty[Double]
         def pass(): Double = {
           loads += loadavg1().getOrElse(-1.0)
-          val t0 = System.nanoTime()
-          gedcom.GedcomPipeline.run(spark, path, s"/tmp/graft-bench-gedcsv-$label")
-          (System.nanoTime() - t0) / 1e9
+          logged(s"gedcom_$label", Metrics.around(spark.sparkContext)(
+            gedcom.GedcomPipeline.run(spark, path, s"/tmp/graft-bench-gedcsv-$label")))
         }
         val (s1, s2) = (pass(), pass())
         var passes =
@@ -130,12 +137,9 @@ object Bench {
     // broadcast-dim join, AQE shuffle join — the operator families the
     // suite opens with) restores the steady state the suite measures.
     for (qn <- Seq("q01_agg", "q02_join_broadcast", "q03_join_shuffle"))
-      try {
-        SparkEntry.queries(qn)(spark, sfDir).write
-          .format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-        graft.Caches.release()
-      } catch {
+      try SparkEntry.pass(spark, qn)(SparkEntry.queries(qn)(spark, sfDir).write
+        .format("noop").mode("overwrite").save())
+      catch {
         // keep warming on failure, but NEVER silently: a renamed warm-up
         // query would otherwise disable this block and resurrect the
         // exact cold-start phantom regressions it exists to prevent,
@@ -148,29 +152,11 @@ object Bench {
     // two timed passes per query, min taken: the best observation is the
     // least contaminated by co-tenant noise on a shared host, and both
     // passes run the identical full plan
-    def timeOnce(q: QueryDef): Double = {
-      // the trainer query must pay its fit EVERY pass (its contract IS
-      // the training); consumers (q150/q153) keep the memo and measure
-      // their marginal cost given a fitted tokenizer — production shape
-      if (q.name == "q147_bpe_train") graft.functions.Tokenizer.clearMemo()
-      val t0 = System.nanoTime()
-      q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      // queries that cache intermediates (token relations, LSH codes) must
-      // not leave them resident: later queries would run under their memory
-      // pressure and a second pass would measure a half-warm hybrid.
-      // Caches.release() frees the query-scope lease too: the graph
-      // loops' checkpointed results, which clearCache cannot reach, and
-      // the leased frames' driver-side plan objects, which would
-      // otherwise accumulate across a 160-query x 2-pass run.
-      spark.catalog.clearCache()
-      graft.Caches.release()
-      sec
-    }
-    // every individual pass, in order, per query — the forensic record
-    // for adjudicating artifact-vs-quiet-host discrepancies (the q91
-    // residue chase needs to see WHICH pass carried the excess)
-    val passLog = scala.collection.mutable.LinkedHashMap.empty[String, Vector[Double]]
+    // q147 retrains each pass (SparkEntry.pass); its consumers (q150/q153)
+    // keep the memo and measure their marginal cost given a fitted tokenizer
+    def timeOnce(q: QueryDef): Double = SparkEntry.pass(spark, q.name)(logged(q.name,
+      Metrics.around(spark.sparkContext)(
+        q.fn(spark, sfDir).write.format("noop").mode("overwrite").save())))
     // 1-minute loadavg at the START of each pass, per query (r18
     // directive 5): two straight rounds of registry-wide best-of-five
     // band drift on untouched code were adjudicated only by
@@ -183,7 +169,6 @@ object Bench {
         try {
           val ld = loadavg1().getOrElse(-1.0)
           val s = timeOnce(q)
-          passLog(q.name) = passLog.getOrElse(q.name, Vector.empty) :+ s
           loadLog(q.name) = loadLog.getOrElse(q.name, Vector.empty) :+ ld
           Some(s)
         } catch {
@@ -234,7 +219,7 @@ object Bench {
       val legResults = legPasses.toSeq.map { case (k, ps) => k -> ps.min }
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get("target/bench-detail.json"),
-        renderDetailJson(legResults ++ results, legPasses.toMap ++ passLog.toMap,
+        renderDetailJson(legResults ++ results, passLog.toMap,
           legLoadPasses.toMap ++ loadLog.toMap) + "\n")
     } catch {
       case e: java.io.IOException =>
@@ -396,15 +381,19 @@ object Bench {
     * the reported min; `passes` lists every individual observation in run
     * order, so a noisy artifact number can be attributed to a specific
     * pass (first-pass cold cost vs co-tenant spike vs real regression)
-    * without a rerun. */
+    * without a rerun; `work` lists each pass's jobs, stages, tasks, CPU,
+    * shuffle and spill in the same order. */
   def renderDetailJson(results: Seq[(String, Double)],
-      passes: Map[String, Vector[Double]] = Map.empty,
+      passes: Map[String, Vector[Metrics.Measured[_]]] = Map.empty,
       loads: Map[String, Vector[Double]] = Map.empty): String =
     results.map { case (k, v) =>
       val ps = passes.getOrElse(k, Vector.empty)
-        .mkString("[", ",", "]")
       val ld = loads.get(k).map(ls =>
         ",\"loads\":" + ls.mkString("[", ",", "]")).getOrElse("")
-      "\"" + k + "\":{\"best\":" + v + ",\"passes\":" + ps + ld + "}"
+      val work = ps.map(_.work).map(w =>
+        s"""{"jobs":${w.jobs},"stages":${w.stages},"tasks":${w.tasks},"cpu_s":${w.cpuS},""" +
+          s""""shuffle_bytes":${w.shuffleBytes},"spill_bytes":${w.spillBytes}}""")
+      "\"" + k + "\":{\"best\":" + v + ",\"passes\":" + ps.map(_.wall).mkString("[", ",", "]") +
+        ld + work.mkString(",\"work\":[", ",", "]") + "}"
     }.mkString("{", ",", "}")
 }

@@ -6,9 +6,9 @@ import org.apache.spark.sql.DataFrame
   * [[Caches.release]]. A query's leased frames and the graph operators'
   * checkpointed results must stay resident until the RETURNED DataFrame
   * is consumed (an action the builder never sees), so the release point
-  * is the caller's: the harnesses (Bench/Verify/ScaleBench/Prof) call
-  * `spark.catalog.clearCache()` and then [[release]] after every query,
-  * and a library caller releases after consuming each result. A
+  * is the caller's: the harnesses run each query through
+  * [[SparkEntry.pass]], which releases after it, and a library caller
+  * releases after consuming each result. A
   * checkpointed result cannot be read after the release, and clearCache
   * alone does not free it. One scope serves the process. */
 object Caches extends Lease {

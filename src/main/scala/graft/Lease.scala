@@ -6,7 +6,7 @@ import org.apache.logging.log4j.core.filter.{AbstractFilter, CompositeFilter}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
@@ -18,12 +18,15 @@ import org.apache.spark.storage.StorageLevel
   * lease; a `GedcomGraph.Graph` owns one. The only file of `src/main`
   * that calls Spark's persistence methods (LeaseSpec scans for others). */
 class Lease extends AutoCloseable {
-  private val rdds = scala.collection.mutable.LinkedHashSet.empty[RDD[_]]
+  // each held RDD with the plan it was pinned from, if any: the plan's SQL
+  // metrics are accumulators the pin's tasks report to, so it stays
+  // reachable in this JVM until the pin is freed
+  private val rdds = scala.collection.mutable.LinkedHashMap.empty[RDD[_], Option[QueryExecution]]
   private val frames = scala.collection.mutable.LinkedHashSet.empty[DataFrame]
 
   /** Persist `rdd` (MEMORY_AND_DISK) for the life of the lease. */
   def hold[T](rdd: RDD[T]): RDD[T] =
-    synchronized { rdds += rdd; rdd.persist(StorageLevel.MEMORY_AND_DISK) }
+    synchronized { rdds(rdd) = None; rdd.persist(StorageLevel.MEMORY_AND_DISK) }
 
   /** Pin a frame's rows and rebuild it lineage-free — what every graph
     * loop does with a frame its rounds reference many times, each lazy
@@ -41,7 +44,9 @@ class Lease extends AutoCloseable {
     * returned LogicalRDD. */
   def pin(df: DataFrame, probe: String = null): (DataFrame, RDD[InternalRow]) = {
     if (probe != null) PlanProbe.emit(probe, df)
-    pin(df.queryExecution.toRdd.map(_.copy()), df.schema, df.sparkSession)
+    val pinned = pin(df.queryExecution.toRdd.map(_.copy()), df.schema, df.sparkSession)
+    synchronized(rdds(pinned._2) = Some(df.queryExecution))
+    pinned
   }
 
   /** [[pin]] for rows the caller already owns (no copy): persisted,
@@ -93,8 +98,9 @@ class Lease extends AutoCloseable {
     val maxN = spark.conf.get("spark.sql.shuffle.partitions").toLong
     val n = math.max(1L, math.min(maxN,
       (rows * rowBytes + PinPartitionBytes - 1L) / PinPartitionBytes)).toInt
-    val rdd = hold(df0.repartition(n, keys.map(col): _*)
-      .queryExecution.toRdd.map(_.copy()))
+    val qe = df0.repartition(n, keys.map(col): _*).queryExecution
+    val rdd = hold(qe.toRdd.map(_.copy()))
+    synchronized(rdds(rdd) = Some(qe))
     rdd.localCheckpoint()
     rdd.count() // materialize before releasing the staging copy
     free(rdd0)
@@ -112,7 +118,7 @@ class Lease extends AutoCloseable {
     * after [[close]] the returned frame can no longer be read. */
   def checkpoint(df: DataFrame): DataFrame = {
     val out = df.localCheckpoint(true)
-    out.queryExecution.logical.collectFirst { case r: LogicalRDD => synchronized(rdds += r.rdd) }
+    out.queryExecution.logical.collectFirst { case r: LogicalRDD => synchronized(rdds(r.rdd) = None) }
     out
   }
 
@@ -129,7 +135,7 @@ class Lease extends AutoCloseable {
   /** Free everything held. Idempotent; the lease can hold again after. */
   def close(): Unit = synchronized {
     Lease.quietCheckpointWarning()
-    rdds.foreach(_.unpersist(blocking = false))
+    rdds.keys.foreach(_.unpersist(blocking = false))
     frames.foreach(_.unpersist(false))
     rdds.clear(); frames.clear()
   }

@@ -55,6 +55,15 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     all.flatMap(q => q.oracle.map(sql => q.name -> sql.stripMargin.trim)).toMap
 
+  /** One pass of the query or aux table `name`, by the rule every harness
+    * keeps: q147's trainer pays its fit each pass, so its memo is cleared
+    * first, and the SQL cache and the query-scope lease are released in a
+    * `finally`, so a pass that throws leaves no pin behind. */
+  def pass[T](spark: SparkSession, name: String)(body: => T): T = {
+    if (name == "q147_bpe_train") functions.Tokenizer.clearMemo()
+    try body finally { spark.catalog.clearCache(); Caches.release() }
+  }
+
   /** Oracle-support tables: deterministically-trained artifacts (Lloyd
     * codebooks) that are out of single-statement SQL reach. Verify dumps
     * each beside the query results and substitutes the

@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -11,18 +12,19 @@ object Verify {
     val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      } finally {
-        spark.catalog.clearCache() // no cross-query cache residue
-        graft.Caches.release() // and no query-scope pin or reference left
+    /** Each table's result written to `dir/<name>`, one pass each; a
+      * failure is reported and the dump goes on. */
+    def dump(dir: java.io.File, label: String,
+        tables: Map[String, (SparkSession, String) => DataFrame]): Unit =
+      tables.foreach { case (name, fn) =>
+        try SparkEntry.pass(spark, name)(fn(spark, sfDir).coalesce(1).write
+          .mode("overwrite").parquet(new java.io.File(dir, name).getPath))
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] $label$name failed: ${e.getMessage}")
+        }
       }
-    }
+    dump(new java.io.File(outDir), "",
+      SparkEntry.queries.filter { case (name, _) => only.isEmpty || only(name) })
     // oracle-support tables (trained codebooks): always dumped — cheap
     // (bounded by codebook size, never the corpus) and the codebook
     // oracles need them even in a filtered local run. They go to a
@@ -41,13 +43,7 @@ object Verify {
       if (sib.isDirectory || sib.mkdirs()) sib
       else { val sub = new java.io.File(outDir, "_aux"); sub.mkdirs(); sub }
     }
-    SparkEntry.auxTables.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(new java.io.File(auxDirFile, name).getPath)
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] aux $name failed: ${e.getMessage}")
-      } finally spark.catalog.clearCache()
-    }
+    dump(auxDirFile, "aux ", SparkEntry.auxTables)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

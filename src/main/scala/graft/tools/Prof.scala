@@ -2,39 +2,31 @@ package graft.tools
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.atomic.LongAdder
 
-import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
+import org.apache.spark.scheduler.StageInfo
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{ExplainMode, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 
-import graft.{Caches, PlanProbe, Session, SparkEntry}
+import graft.{Metrics, PlanProbe, Session, SparkEntry}
 import graft.gedcom.{CsvSink, GedcomGraph}
 
 /** The profiler: per registered query and pass, where the time went and
-  * what the work cost, on Bench's session configuration.
-  *
-  * Wall time swings several-fold under host co-tenancy while the work a
-  * plan does is stable run to run, so every line carries deterministic
-  * work counters beside the walls:
+  * what the work cost, on Bench's session configuration. Each pass runs
+  * through [[SparkEntry.pass]], and its line carries, beside the walls,
+  * the [[Metrics.Work]] that [[Metrics.around]] counted:
   *   - walls: total, frame build (operators that run prelude jobs pay
   *     here), analyze, optimize, physical plan, execute (noop sink);
-  *   - work: executor CPU, stages, tasks, and jobs split into those the
-  *     frame build starts (`frameJobs`) and the rest (`execJobs`);
-  *   - data: shuffle-write rows and bytes, input bytes, spill bytes;
-  *   - codegen: Janino compile ms and generated classes (pass 1 of a
-  *     fresh JVM is the cold number, later passes the warm floor);
+  *   - work: jobs split into those the frame build starts (`frameJobs`,
+  *     a nested `around`) and the rest (`execJobs`); Janino's pass 1 in a
+  *     fresh JVM is the cold number, later passes the warm floor;
   *   - plan: Exchange, SortMergeJoin and BroadcastHashJoin counts over
   *     the top-level plan plus every [[PlanProbe]] section — iterative
   *     operators run their interesting plans while the frame is built.
   *
-  * Each pass follows Bench's rules: q147's trainer memo is cleared first,
-  * and the SQL cache and lease registry are released after the pass.
   * `GRAFT_CONF="k=v;k2=v2"` sets session confs for A/B runs.
   *
   * Run:
@@ -48,34 +40,6 @@ import graft.gedcom.{CsvSink, GedcomGraph}
   * jobs, tasks, executor CPU and pinned bytes, and MB/s over both.
   */
 object Prof {
-
-  /** Listener-bus work counters; read them only after a drain. */
-  private final class Counters(perStage: Boolean) extends SparkListener {
-    val jobs, stages, tasks, cpuNs, shuffleRows, shuffleBytes, inputBytes,
-      spillBytes = new LongAdder
-    def reset(): Unit = Seq(jobs, stages, tasks, cpuNs, shuffleRows,
-      shuffleBytes, inputBytes, spillBytes).foreach(_.reset())
-
-    override def onJobStart(e: SparkListenerJobStart): Unit = jobs.increment()
-    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-      val info = e.stageInfo
-      stages.increment()
-      tasks.add(info.numTasks)
-      val m = info.taskMetrics
-      if (m != null) {
-        cpuNs.add(m.executorCpuTime)
-        shuffleRows.add(m.shuffleWriteMetrics.recordsWritten)
-        shuffleBytes.add(m.shuffleWriteMetrics.bytesWritten)
-        inputBytes.add(m.inputMetrics.bytesRead)
-        spillBytes.add(m.memoryBytesSpilled + m.diskBytesSpilled)
-        if (perStage)
-          println(f"  [stage ${info.stageId}%4d] " +
-            f"cpu=${m.executorCpuTime / 1e9}%7.2f " +
-            f"shufRows=${m.shuffleWriteMetrics.recordsWritten}%9d " +
-            f"tasks=${info.numTasks}%3d " + info.name.take(90))
-      }
-    }
-  }
 
   /** Exchange / SortMergeJoin / BroadcastHashJoin counts of one plan. */
   final case class PlanCounts(exchanges: Int, smj: Int, bhj: Int) {
@@ -102,14 +66,14 @@ object Prof {
       ops.count(_.isInstanceOf[BroadcastHashJoinExec]))
   }
 
-  /** One query pass: walls in seconds, everything else a per-pass delta. */
+  /** One query pass: walls in seconds, the pass's work and the jobs its
+    * frame build started. */
   final case class Pass(query: String, pass: Int,
       wall: Double, build: Double, analyze: Double, optimize: Double,
-      plan: Double, execute: Double,
-      cpuS: Double, jobs: Long, frameJobs: Long, stages: Long, tasks: Long,
-      shuffleRows: Long, shuffleBytes: Long, inputBytes: Long, spillBytes: Long,
-      janinoMs: Long, classes: Long, plans: PlanCounts) {
-    def line: String =
+      plan: Double, execute: Double, work: Metrics.Work, frameJobs: Long,
+      plans: PlanCounts) {
+    def line: String = {
+      import work._
       f"$query%-24s p$pass wall=$wall%7.2f build=$build%6.2f " +
         f"analyze=$analyze%5.2f opt=$optimize%5.2f plan=$plan%5.2f " +
         f"exec=$execute%7.2f cpu=$cpuS%7.2f frameJobs=$frameJobs%3d " +
@@ -118,21 +82,25 @@ object Prof {
         f"inBytes=$inputBytes%11d spillBytes=$spillBytes%d " +
         f"janinoMs=$janinoMs%6d classes=$classes%4d " +
         s"exch=${plans.exchanges} smj=${plans.smj} bhj=${plans.bhj}"
+    }
   }
-
-  private def compileMs = CodegenMetrics.METRIC_COMPILATION_TIME.getSnapshot.getValues.sum
-  private def compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Profile `names` for `passes` passes each, printing one line per pass. */
   def queries(spark: SparkSession, sfDir: String, passes: Int,
       names: Seq[String], plansDir: Option[Path] = None,
       perStage: Boolean = false): Seq[Pass] = {
     val sc = spark.sparkContext
-    val c = new Counters(perStage)
     val mode = ExplainMode.fromString("formatted")
     plansDir.foreach(Files.createDirectories(_))
-    sc.addSparkListener(c)
-    try for {
+    val onStage: StageInfo => Unit =
+      if (!perStage) _ => ()
+      else info => Option(info.taskMetrics).foreach { m =>
+        println(f"  [stage ${info.stageId}%4d] " +
+          f"cpu=${m.executorCpuTime / 1e9}%7.2f " +
+          f"shufRows=${m.shuffleWriteMetrics.recordsWritten}%9d " +
+          f"tasks=${info.numTasks}%3d " + info.name.take(90))
+      }
+    for {
       name <- names
       q = SparkEntry.all.find(_.name == name)
         .getOrElse(sys.error(s"unknown query: $name"))
@@ -143,37 +111,26 @@ object Prof {
       // adaptive plan right after emitting it
       def capture(qe: QueryExecution): (PlanCounts, String) =
         (planCounts(qe.executedPlan), if (withText) qe.explainString(mode) else "")
-      if (name == "q147_bpe_train") graft.functions.Tokenizer.clearMemo()
-      GraftSqlBridge.drainListeners(sc)
-      c.reset()
-      val (ms0, n0) = (compileMs, compiled)
+      def secs(body: => Any): Double = {
+        val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
+      }
       val sections = scala.collection.mutable.LinkedHashMap.empty[String, (PlanCounts, String)]
-      val t0 = System.nanoTime()
-      val df = PlanProbe.withSink { (label, frame) =>
-        if (!sections.contains(label)) sections(label) = capture(frame.queryExecution)
-      }(q.fn(spark, sfDir))
-      val tBuild = System.nanoTime()
-      // the frame's jobs, counted off the walls
-      GraftSqlBridge.drainListeners(sc)
-      val frameJobs = c.jobs.sum
-      val tAna0 = System.nanoTime()
-      val qe = df.queryExecution
-      qe.assertAnalyzed()
-      val tAna = System.nanoTime()
-      qe.optimizedPlan
-      val tOpt = System.nanoTime()
-      qe.executedPlan
-      val tPlan = System.nanoTime()
-      // the noop write plans its own command, so this frame's adaptive
-      // plan stays the pre-execution one that --plans records
-      val (topCounts, topText) = capture(qe)
-      val tExec0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      val tExec = System.nanoTime()
-      GraftSqlBridge.drainListeners(sc)
-      val (ms, n) = (compileMs - ms0, compiled - n0)
-      spark.catalog.clearCache()
-      Caches.release()
+      val run = SparkEntry.pass(spark, name)(Metrics.around(sc, onStage) {
+        // the frame's jobs, counted apart and off the walls
+        val frame = Metrics.around(sc)(PlanProbe.withSink { (label, f) =>
+          if (!sections.contains(label)) sections(label) = capture(f.queryExecution)
+        }(q.fn(spark, sfDir)))
+        val qe = frame.result.queryExecution
+        val analyze = secs(qe.assertAnalyzed())
+        val optimize = secs(qe.optimizedPlan)
+        val plan = secs(qe.executedPlan)
+        // the noop write plans its own command, so this frame's adaptive
+        // plan stays the pre-execution one that --plans records
+        val top = capture(qe)
+        val execute = secs(frame.result.write.format("noop").mode("overwrite").save())
+        (frame, analyze, optimize, plan, execute, top)
+      })
+      val (frame, analyze, optimize, plan, execute, (topCounts, topText)) = run.result
       if (withText) plansDir.foreach { dir =>
         val body = new StringBuilder(s"==== $name :: top-level ====\n$topText\n")
         sections.foreach { case (label, (_, text)) =>
@@ -181,15 +138,12 @@ object Prof {
         }
         Files.write(dir.resolve(s"$name.txt"), body.toString.getBytes(StandardCharsets.UTF_8))
       }
-      def s(a: Long, b: Long) = (b - a) / 1e9
-      val r = Pass(name, p, s(t0, tBuild) + s(tAna0, tPlan) + s(tExec0, tExec),
-        s(t0, tBuild), s(tAna0, tAna), s(tAna, tOpt), s(tOpt, tPlan), s(tExec0, tExec),
-        c.cpuNs.sum / 1e9, c.jobs.sum, frameJobs, c.stages.sum, c.tasks.sum,
-        c.shuffleRows.sum, c.shuffleBytes.sum, c.inputBytes.sum, c.spillBytes.sum,
-        ms, n, sections.values.map(_._1).foldLeft(topCounts)(_ + _))
+      val r = Pass(name, p, frame.wall + analyze + optimize + plan + execute,
+        frame.wall, analyze, optimize, plan, execute, run.work, frame.work.jobs,
+        sections.values.map(_._1).foldLeft(topCounts)(_ + _))
       println(r.line)
       r
-    } finally sc.removeSparkListener(c)
+    }
   }
 
   /** The GEDCOM bulk load over `path`, pass by pass: its summary pass and
@@ -197,28 +151,21 @@ object Prof {
     * bytes left pinned after it (the load pins nothing, so 0). */
   def ged(spark: SparkSession, path: String, passes: Int): Unit = {
     val sc = spark.sparkContext
-    val c = new Counters(perStage = false)
     val mb = new java.io.File(path).length() / 1e6
     val out = Files.createTempDirectory("graft-prof-csv").toString
-    /** Runs `body` alone on the counters; its wall and one line of work. */
+    /** Runs `body` alone on its own counters; its wall and one line of work. */
     def step[T](name: String)(body: => T): (T, Double, String) = {
-      GraftSqlBridge.drainListeners(sc)
-      c.reset()
-      val t0 = System.nanoTime()
-      val r = body
-      val s = (System.nanoTime() - t0) / 1e9
-      GraftSqlBridge.drainListeners(sc)
+      val m = Metrics.around(sc)(body)
       val pinned = sc.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum
-      (r, s, f"$name=$s%6.2f s jobs=${c.jobs.sum}%d tasks=${c.tasks.sum}%3d " +
-        f"cpu=${c.cpuNs.sum / 1e9}%5.2f s pinned=$pinned")
+      (m.result, m.wall, f"$name=${m.wall}%6.2f s jobs=${m.work.jobs}%d " +
+        f"tasks=${m.work.tasks}%3d cpu=${m.work.cpuS}%5.2f s pinned=$pinned")
     }
-    sc.addSparkListener(c)
-    try for (p <- 1 to passes) {
+    for (p <- 1 to passes) {
       val raw = GedcomGraph.textLines(spark, path)
       val ((boundary, stats), s1, summary) = step("summary")(GedcomGraph.summaryPass(raw))
       val (outputs, s2, render) = step("render")(CsvSink.render(raw, boundary, stats, out))
       println(f"pass $p: $summary | $render | ${mb / (s1 + s2)}%6.1f MB/s outputs=${outputs.size}")
-    } finally sc.removeSparkListener(c)
+    }
   }
 
   private val usage =

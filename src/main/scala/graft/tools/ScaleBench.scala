@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-import graft.SparkEntry
+import graft.{Metrics, SparkEntry}
 
 /** Scale-up study: times representative queries at 1x/2x/4x/8x the sf0.1
   * corpus (disjoint-universe amplification, [[ScaleUp]]) and reports the
@@ -353,17 +353,10 @@ object ScaleBench {
     spark.sparkContext.setLogLevel("ERROR")
 
     val ks = Iterator.iterate(1)(_ * 2).takeWhile(_ <= maxK).toSeq
-    def timeOnce(name: String, dir: String): Double = {
-      // trainer pays its fit every pass (Bench's rule, same rationale)
-      if (name == "q147_bpe_train") graft.functions.Tokenizer.clearMemo()
-      val t0 = System.nanoTime()
-      Extra.getOrElse(name, SparkEntry.queries(name))(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      graft.Caches.release() // drop lease-registry references too
-      sec
-    }
+    def timeOnce(name: String, dir: String): Double =
+      SparkEntry.pass(spark, name)(Metrics.around(spark.sparkContext)(
+        Extra.getOrElse(name, SparkEntry.queries(name))(spark, dir)
+          .write.format("noop").mode("overwrite").save())).wall
     // warmup
     timeOnce("q01_agg", s"$base/x1")
 

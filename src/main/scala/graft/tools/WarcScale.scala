@@ -2,10 +2,9 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.functions._
 
+import graft.Metrics
 import graft.sources.Warc
 
 /** Multi-file WARC ingestion audit (VERDICT r20 item 7): the registered
@@ -38,16 +37,11 @@ object WarcScale {
       // synthetic docs frame with the columns the q183 fixture reads
       // (doc_id, text, source); text sized so a record lands ~1.5 KB
       val words = (1 to 40).map(i => s"w$i").mkString(" ")
-      import spark.implicits._
       val docs = spark.range(nFiles.toLong * docsPer)
         .select(col("id").as("doc_id"),
           concat(lit(words + " body "), col("id").cast("string")).as("text"),
           concat(lit("src"), (col("id") % 97).cast("string")).as("source"))
-      // one container per gid of `docsPer` docs: override the fixture's
-      // (doc_id / 4) grouping by scaling ids — simplest is to reuse the
-      // fixture on a re-keyed frame where 4 consecutive ids = one file,
-      // then coalesce groups client-side per target file count. Instead
-      // build per-file containers directly: gid = doc_id / docsPer.
+      // one container file per `docsPer` consecutive doc ids
       val containers = Warc.syntheticBinaryContainersGrouped(docs, docsPer)
         .collect()
       containers.foreach { r =>
@@ -57,27 +51,21 @@ object WarcScale {
       System.err.println(s"[warcscale] wrote ${containers.length} files to $dir")
     }
 
-    val taskCounts = scala.collection.mutable.ArrayBuffer.empty[Int]
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        taskCounts += sc.stageInfo.numTasks
-    })
     (1 to passes).foreach { p =>
-      taskCounts.clear()
-      val t0 = System.nanoTime()
-      val files = spark.read.format("binaryFile").load(dir.toString)
-        .select(col("path"), col("content"))
-      val recs = Warc.warcBinaryRecordsRel(files, col("content"),
-        maxRecords = docsPer + 2, keys = Seq("path"))
-        .select(col("path"), explode(col("records")).as("r"))
-        .filter(col("r.typ") === "response")
-        .select(col("path"), Warc.httpPayload(col("r.payload")).as("h"))
-        .select(octet_length(col("h.body")).as("n"))
-      recs.write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      GraftSqlBridge.drainListeners(spark.sparkContext)
+      val taskCounts = scala.collection.mutable.ArrayBuffer.empty[Int]
+      val m = Metrics.around(spark.sparkContext, taskCounts += _.numTasks) {
+        val files = spark.read.format("binaryFile").load(dir.toString)
+          .select(col("path"), col("content"))
+        val recs = Warc.warcBinaryRecordsRel(files, col("content"),
+          maxRecords = docsPer + 2, keys = Seq("path"))
+          .select(col("path"), explode(col("records")).as("r"))
+          .filter(col("r.typ") === "response")
+          .select(col("path"), Warc.httpPayload(col("r.payload")).as("h"))
+          .select(octet_length(col("h.body")).as("n"))
+        recs.write.format("noop").mode("overwrite").save()
+      }
       val bytes = Files.list(dir).mapToLong(p => Files.size(p)).sum()
-      println(f"pass $p: ${dt}%.2f s  ${bytes / 1e6 / dt}%.1f MB/s  " +
+      println(f"pass $p: ${m.wall}%.2f s  ${bytes / 1e6 / m.wall}%.1f MB/s  " +
         s"stageTasks=${taskCounts.toList.sortBy(-_).take(3)} cpus=$cpus")
     }
     spark.stop()

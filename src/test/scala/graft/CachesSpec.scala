@@ -40,4 +40,16 @@ class CachesSpec extends SparkSpec {
     Caches.release()
     assert(Caches.liveCount === 0)
   }
+
+  test("a pass that throws leaves no pins") {
+    Caches.release()
+    val before = persistentIds()
+    val e = intercept[IllegalStateException](SparkEntry.pass(spark, "q01_agg") {
+      Caches.lease(spark.range(100).toDF("id")).count()
+      throw new IllegalStateException("boom")
+    })
+    assert(e.getMessage == "boom")
+    assert(Caches.liveCount === 0)
+    assert(residualRdds(before).isEmpty)
+  }
 }

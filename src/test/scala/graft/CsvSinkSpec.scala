@@ -3,9 +3,6 @@ package graft
 import java.io.File
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.functions._
 
 import graft.gedcom._
@@ -141,23 +138,9 @@ class CsvSinkSpec extends SparkSpec {
   test("the CSV write is one job of one stage with one task per flat partition") {
     val graph = GedcomGraph.fromFile(spark, resource("m1.ged"))
     try {
-      val sc = spark.sparkContext
-      val (jobs, stages, tasks) = (new AtomicInteger, new AtomicInteger, new AtomicInteger)
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
-        override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-          stages.incrementAndGet()
-          tasks.addAndGet(e.stageInfo.numTasks): Unit
-        }
-      }
-      GraftSqlBridge.drainListeners(sc)
-      sc.addSparkListener(listener)
-      try {
-        CsvSink.write(graph, tmp("csv-sink").getPath)
-        GraftSqlBridge.drainListeners(sc)
-      } finally sc.removeSparkListener(listener)
-      assert((jobs.get, stages.get) == ((1, 1)))
-      assert(tasks.get == graph.flat.rdd.getNumPartitions)
+      val w = Metrics.around(spark.sparkContext)(CsvSink.write(graph, tmp("csv-sink").getPath)).work
+      assert((w.jobs, w.stages) == ((1, 1)))
+      assert(w.tasks == graph.flat.rdd.getNumPartitions)
     } finally graph.release()
   }
 

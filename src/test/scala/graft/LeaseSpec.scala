@@ -38,6 +38,16 @@ class LeaseSpec extends SparkSpec {
     assert(offenders.isEmpty, offenders.mkString(", "))
   }
 
+  test("no source file but Metrics.scala registers a listener") {
+    // split so this file does not match itself
+    val needle = "addSpark" + "Listener"
+    val files = mainSources
+    assert(files.exists(_.endsWith("graft/Metrics.scala")))
+    val offenders = files.filterNot(_.endsWith("graft/Metrics.scala"))
+      .filter(f => new String(Files.readAllBytes(f), "UTF-8").contains(needle))
+    assert(offenders.isEmpty, s"$needle in ${offenders.mkString(", ")}")
+  }
+
   test("no source file imports GraphX") {
     // split so this file does not match itself
     val needle = "org.apache.spark." + "graphx"

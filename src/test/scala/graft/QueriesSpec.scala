@@ -13,11 +13,9 @@ class QueriesSpec extends SparkSpec {
   SparkEntry.all.foreach { q =>
     test(s"${q.name} runs at sf0.001") {
       val before = persistentIds()
-      val n = q.fn(spark, SF).count()
+      // one pass by the harnesses' rule: clearCache, then release
+      val n = SparkEntry.pass(spark, q.name)(q.fn(spark, SF).count())
       if (!emptyOkAtTinyScale(q.name)) assert(n > 0, s"${q.name} returned no rows")
-      // the harness order (Bench/Verify/Prof): clearCache, then release
-      spark.catalog.clearCache()
-      Caches.release()
       assert(Caches.liveCount == 0)
       val left = residualRdds(before)
       assert(left.isEmpty, s"${q.name} left pinned blocks: ${left.mkString(", ")}")
@@ -47,6 +45,19 @@ class QueriesSpec extends SparkSpec {
 
   test("oracle map only references registered queries") {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+  }
+
+  test("bench-detail.json lists each pass's work beside its wall, in pass order") {
+    val w = Metrics.Work(jobs = 2, stages = 3, tasks = 8, cpuNs = 1500000000L,
+      shuffleRows = 10, shuffleBytes = 200, inputBytes = 300, spillBytes = 0,
+      janinoMs = 5, classes = 1)
+    val passes = Vector(Metrics.Measured((), 0.7, w),
+      Metrics.Measured((), 0.5, w.copy(jobs = 1, cpuNs = 500000000L)))
+    val detail = Bench.renderDetailJson(Seq("q1" -> 0.5), Map("q1" -> passes),
+      Map("q1" -> Vector(1.0, 2.0)))
+    assert(detail == """{"q1":{"best":0.5,"passes":[0.7,0.5],"loads":[1.0,2.0],""" +
+      """"work":[{"jobs":2,"stages":3,"tasks":8,"cpu_s":1.5,"shuffle_bytes":200,"spill_bytes":0},""" +
+      """{"jobs":1,"stages":3,"tasks":8,"cpu_s":0.5,"shuffle_bytes":200,"spill_bytes":0}]}}""")
   }
 
   test("a failed bench query poisons the headline JSON") {

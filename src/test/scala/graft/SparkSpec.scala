@@ -1,9 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session base: one lazy local session per suite. */
@@ -16,18 +13,8 @@ trait SparkSpec extends AnyFunSuite {
 
   /** `body`'s result and the number of Spark jobs started while it ran. */
   def withJobCount[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
-    }
-    GraftSqlBridge.drainListeners(sc)
-    sc.addSparkListener(listener)
-    try {
-      val r = body
-      GraftSqlBridge.drainListeners(sc)
-      (r, jobs.get)
-    } finally sc.removeSparkListener(listener)
+    val m = Metrics.around(spark.sparkContext)(body)
+    (m.result, m.work.jobs.toInt)
   }
 
   /** The RDDs outside `before` that still hold cached partitions, polled
