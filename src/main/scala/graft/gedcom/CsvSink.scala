@@ -1,6 +1,6 @@
 package graft.gedcom
 
-import java.io.{BufferedOutputStream, CharArrayWriter, IOException, OutputStream}
+import java.io.{BufferedOutputStream, IOException, OutputStream}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 
@@ -9,12 +9,12 @@ import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, Encoders, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.catalyst.util.{DateFormatter, LegacyDateFormats}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DateType, StringType, StructField, StructType}
-import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
+
+import com.univocity.parsers.csv.CsvWriter
 
 import graft.gedcom.RecordAssembler.FlatRecord
 
@@ -34,10 +34,12 @@ import graft.gedcom.RecordAssembler.FlatRecord
   * records straight to part files as they stream by: a record's node line
   * and its edge lines go to `<dir>/part-<split>.csv` of their output dirs,
   * each part opened on its first line with the dir's header. Lines are
-  * rendered by Spark's own `UnivocityGenerator` with the options `to_csv`
-  * uses (defaults, UTC), the generator of the DataFrame CSV writer, so the
-  * bytes match it. [[render]] streams records parsed from the text (after
-  * [[GedcomGraph.summaryPass]]); [[write]] streams a built graph's rows.
+  * rendered from `String` rows by univocity's `CsvWriter` on the settings
+  * and date formatter of Spark's `UnivocityGenerator` with the options
+  * `to_csv` uses (defaults, UTC), the generator of the DataFrame CSV
+  * writer, so the bytes match it. [[render]] streams records parsed from
+  * the text (after [[GedcomGraph.summaryPass]]); [[write]] streams a built
+  * graph's rows.
   * `neo4j-import` receives one `--<kind>` group per part.
   */
 object CsvSink {
@@ -75,15 +77,29 @@ object CsvSink {
           GedcomDates.qualifierCol(raw).as(qualifier))
     }
 
-  /** `to_csv`'s generator options: all defaults, UTC (dates carry no zone). */
-  private def csvOptions = new CSVOptions(Map.empty[String, String], true, "UTC")
+  /** A write task's CSV line writer: univocity's `CsvWriter` on the
+    * settings `UnivocityGenerator` writes with under `to_csv`'s options
+    * (all defaults, UTC: dates carry no zone), fed `String` rows in which
+    * an absent value is `null` (an empty field, where `""` would be
+    * written quoted), and the `DateFormatter` the generator formats a
+    * `DateType` column with. */
+  private final class CsvLines {
+    private val options = new CSVOptions(Map.empty[String, String], true, "UTC")
+    private val writer = new CsvWriter(options.asWriterSettings)
+    val dates: DateFormatter = DateFormatter(options.dateFormatInWrite, options.locale,
+      LegacyDateFormats.FAST_DATE_FORMAT, isParsing = false)
+    def apply(row: Array[String]): String = writer.writeRowToString(row)
+  }
 
   /** A write task's renderer for one node tag: a slot table from each
     * prop key to its column, and one reused row, so a row costs one walk
     * of its map — not one map probe per column. */
-  private final class NodeRenderer(tag: String, fields: Seq[(String, Seq[String])]) {
+  private final class NodeRenderer(tag: String, fields: Seq[(String, Seq[String])],
+      lines: CsvLines) {
     val dir: String = s"nodes-$tag"
-    val header: String = headerLine(fields.flatMap { case (k, pair) => k +: pair })
+    // names can carry commas, quotes and leading spaces (EVEN types become
+    // column prefixes): the header is quoted like a row
+    val header: String = lines(fields.flatMap { case (k, pair) => k +: pair }.toArray)
     private val slots = new java.util.HashMap[String, Integer]()
     private val dated = new Array[Boolean](fields.map(1 + _._2.size).sum)
     fields.foldLeft(0) { case (i, (k, pair)) =>
@@ -91,45 +107,28 @@ object CsvSink {
       dated(i) = pair.nonEmpty
       i + 1 + pair.size
     }
-    private val values = new Array[Any](dated.length)
-    private val row = new GenericInternalRow(values)
-    private val gen = new UnivocityGenerator(
-      StructType(fields.flatMap { case (k, pair) =>
-        StructField(k, StringType) +: pair.zip(Seq(DateType, StringType)).map {
-          case (n, t) => StructField(n, t)
-        }
-      }),
-      new CharArrayWriter, csvOptions)
+    private val values = new Array[String](dated.length)
 
     def render(props: scala.collection.Map[String, String]): String = {
       java.util.Arrays.fill(values.asInstanceOf[Array[AnyRef]], null)
       props.foreachEntry { (k, v) =>
         val slot = slots.get(k)
         if (slot != null) {
-          values(slot) = UTF8String.fromString(v)
+          values(slot) = v
           if (dated(slot) && v != null) {
             // the functions the typed-date columns' udf wraps
             val d = GedcomDates.parse(v)
-            values(slot + 1) =
-              GedcomDates.toLocalDate(d).map(_.toEpochDay.toInt: Any).orNull
-            values(slot + 2) = UTF8String.fromString(d.qualifier)
+            values(slot + 1) = GedcomDates.toLocalDate(d)
+              .map(day => lines.dates.format(day.toEpochDay.toInt)).orNull
+            values(slot + 2) = d.qualifier
           }
         }
       }
-      gen.writeToString(row)
+      lines(values)
     }
   }
 
-  /** The column names as one CSV line, by the generator that renders the
-    * rows — names can carry commas, quotes and leading spaces (EVEN types
-    * become column prefixes). */
-  private def headerLine(names: Seq[String]): String =
-    new UnivocityGenerator(
-      StructType(names.indices.map(i => StructField(s"c$i", StringType))),
-      new CharArrayWriter, csvOptions)
-      .writeToString(new GenericInternalRow(names.map(UTF8String.fromString(_): Any).toArray))
-
-  private val EdgeColumns = Seq(":START_ID", ":END_ID", ":TYPE")
+  private val EdgeColumns = Array(":START_ID", ":END_ID", ":TYPE")
 
   /** One split's part files, `<dir>/<name>` under `root`, opened on their
     * dir's first line. Each is written under a hidden attempt-unique name
@@ -203,25 +202,23 @@ object CsvSink {
       fields: Map[String, Seq[(String, Seq[String])]], root: String, part: Int,
       attempt: String, conf: Option[Broadcast[SerializableConfiguration]]): Seq[String] = {
     val parts = new Parts(root, f"part-$part%05d.csv", attempt, conf)
+    val lines = new CsvLines
     val nodeRenderers = new java.util.HashMap[String, NodeRenderer]()
     val edgeDirs = new java.util.HashMap[String, String]()
-    val edgeValues = new Array[Any](EdgeColumns.size)
-    val edgeRow = new GenericInternalRow(edgeValues)
-    val edgeGen = new UnivocityGenerator(
-      StructType(EdgeColumns.map(StructField(_, StringType))), new CharArrayWriter, csvOptions)
-    lazy val edgeHeader = headerLine(EdgeColumns)
+    val edgeValues = new Array[String](EdgeColumns.length)
+    lazy val edgeHeader = lines(EdgeColumns)
     try {
       records.foreach { r =>
         if (!r.skipped && r.props.nonEmpty) {
-          val nr = nodeRenderers.computeIfAbsent(r.rawTag, t => new NodeRenderer(t, fields(t)))
+          val nr = nodeRenderers.computeIfAbsent(r.rawTag, t => new NodeRenderer(t, fields(t), lines))
           parts.line(nr.dir, nr.header, nr.render(r.props))
         }
         r.edges.foreach { e =>
-          edgeValues(0) = UTF8String.fromString(e.src)
-          edgeValues(1) = UTF8String.fromString(e.dst)
-          edgeValues(2) = UTF8String.fromString(e.relType)
+          edgeValues(0) = e.src
+          edgeValues(1) = e.dst
+          edgeValues(2) = e.relType
           parts.line(edgeDirs.computeIfAbsent(e.rawTag, t => s"relationships/rawTag=$t"),
-            edgeHeader, edgeGen.writeToString(edgeRow))
+            edgeHeader, lines(edgeValues))
         }
       }
       val dirs = parts.commit()
@@ -243,9 +240,7 @@ object CsvSink {
     val base = new Path(outDir)
     val fs = base.getFileSystem(sc.hadoopConfiguration)
     val root = fs.makeQualified(base).toString
-    val conf =
-      if (fs.getScheme == "file") None
-      else Some(sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration)))
+    val conf = LocalOrHadoop.conf(sc, fs)
 
     // SaveMode.Overwrite: drop what an earlier run left in the dirs this
     // run writes, and nothing else

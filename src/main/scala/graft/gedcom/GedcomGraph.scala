@@ -199,31 +199,46 @@ object GedcomGraph {
     * field equals the matching scan of the [[Graph]] frames. */
   final case class SplitStats(
       keysByTag: Map[String, Set[String]], nodes: Long, edges: Long,
-      skipped: Long, unusedTags: Set[String], missingTemples: Set[String]) {
-    def add(r: RecordAssembler.FlatRecord): SplitStats = {
-      val isNode = !r.skipped && r.props.nonEmpty
-      SplitStats(
-        if (isNode)
-          keysByTag.updated(r.rawTag,
-            keysByTag.getOrElse(r.rawTag, Set.empty) ++ r.props.keysIterator)
-        else keysByTag,
-        nodes + (if (isNode) 1 else 0),
-        edges + r.edges.size,
-        skipped + (if (r.skipped) 1 else 0),
-        unusedTags ++ r.unusedTags,
-        missingTemples ++ r.missingTemples)
-    }
-  }
+      skipped: Long, unusedTags: Set[String], missingTemples: Set[String])
   object SplitStats {
     val empty: SplitStats = SplitStats(Map.empty, 0L, 0L, 0L, Set.empty, Set.empty)
-    def of(rs: Iterable[RecordAssembler.FlatRecord]): SplitStats =
-      rs.foldLeft(empty)(_.add(_))
+    def of(rs: Iterable[RecordAssembler.FlatRecord]): SplitStats = {
+      val b = new Builder
+      rs.foreach(b.add)
+      b.result()
+    }
     def merge(a: SplitStats, b: SplitStats): SplitStats = SplitStats(
       b.keysByTag.foldLeft(a.keysByTag) { case (m, (t, ks)) =>
         m.updated(t, m.getOrElse(t, Set.empty) ++ ks)
       },
       a.nodes + b.nodes, a.edges + b.edges, a.skipped + b.skipped,
       a.unusedTags ++ b.unusedTags, a.missingTemples ++ b.missingTemples)
+
+    /** Folds one split's records into mutable sets, converted once by
+      * [[result]] when the split is exhausted. */
+    final class Builder {
+      private val keys = new java.util.HashMap[String, java.util.HashSet[String]]()
+      private val unused, temples = new java.util.HashSet[String]()
+      private var nodes, edges, skipped = 0L
+
+      def add(r: RecordAssembler.FlatRecord): Unit = {
+        if (r.skipped) skipped += 1
+        else if (r.props.nonEmpty) {
+          nodes += 1
+          val ks = keys.computeIfAbsent(r.rawTag, _ => new java.util.HashSet[String]())
+          r.props.keysIterator.foreach(ks.add)
+        }
+        edges += r.edges.size
+        r.unusedTags.foreach(unused.add)
+        r.missingTemples.foreach(temples.add)
+      }
+
+      def result(): SplitStats = {
+        import scala.jdk.CollectionConverters._
+        SplitStats(keys.asScala.iterator.map { case (t, ks) => t -> ks.asScala.toSet }.toMap,
+          nodes, edges, skipped, unused.asScala.toSet, temples.asScala.toSet)
+      }
+    }
   }
 
   /** A split's boundary fragments: the lines before its first level-0 line
@@ -250,49 +265,56 @@ object GedcomGraph {
   }
 
   /** The single parse pass: assembles every record fully contained in its
-    * split and, given `acc`, reports the split's boundary fragments
-    * through it when the iterator exhausts. */
+    * split and, given `acc`, reports the split's boundary fragments and
+    * folded summary through it when the iterator exhausts. Without `acc`
+    * nothing is folded. */
   private[gedcom] def containedRecords(raw: RDD[String],
       acc: Option[BoundsAccumulator]): RDD[RecordAssembler.FlatRecord] =
     raw.mapPartitionsWithIndex { (pi, it) =>
       new Iterator[RecordAssembler.FlatRecord] {
         private var j = 0L
-        private val lines = it.flatMap { s =>
-          val l = GedcomParser.parseLine(s, (pi.toLong << 40) | j); j += 1; l
-        }.buffered
-        // capture this split's prefix fragment (stitched on the driver)
+        // this split's prefix fragment (stitched on the driver): its lines
+        // before the first level-0 line
         private val prefix = scala.collection.mutable.ArrayBuffer.empty[GedLine]
-        locally {
-          while (lines.hasNext && lines.head.level != 0) prefix += lines.next()
-        }
-        private val seen0 = lines.hasNext
-        private var group = scala.collection.mutable.ArrayBuffer.empty[GedLine]
-        private var pending: Option[RecordAssembler.FlatRecord] = None
+        private var seen0 = false
+        private val group = scala.collection.mutable.ArrayBuffer.empty[GedLine]
+        private var pending: RecordAssembler.FlatRecord = null
         private var recIdx = 0L
         private var reported = false
-        private var stats = SplitStats.empty
+        private val stats = acc.map(_ => new SplitStats.Builder)
         private def advance(): Unit = {
-          while (pending.isEmpty && lines.hasNext) {
-            val l = lines.next()
-            if (l.level == 0 && group.nonEmpty) {
-              recIdx += 1
-              val rec = RecordAssembler.flatten((pi.toLong << 40) | recIdx,
-                RecordAssembler.assemble(group.iterator))
-              stats = stats.add(rec)
-              pending = Some(rec)
-              group = scala.collection.mutable.ArrayBuffer(l)
-            } else group += l
+          while (pending == null && it.hasNext) {
+            val parsed = GedcomParser.parseLine(it.next(), (pi.toLong << 40) | j)
+            j += 1
+            if (parsed.isDefined) {
+              val l = parsed.get
+              if (!seen0 && l.level != 0) prefix += l
+              else {
+                seen0 = true
+                if (l.level == 0 && group.nonEmpty) {
+                  recIdx += 1
+                  pending = RecordAssembler.flatten((pi.toLong << 40) | recIdx,
+                    RecordAssembler.assemble(group.iterator))
+                  stats.foreach(_.add(pending))
+                  group.clear()
+                }
+                group += l
+              }
+            }
           }
           // at exhaustion the trailing group is this split's suffix
           // fragment — report fragments + folded stats exactly once
-          if (pending.isEmpty && !lines.hasNext && !reported) {
+          if (pending == null && !it.hasNext && !reported) {
             reported = true
-            acc.foreach(_.add(Bound(pi, prefix.toSeq, group.toSeq, seen0, stats)))
+            acc.foreach(_.add(Bound(pi, prefix.toSeq, group.toSeq, seen0,
+              stats.get.result())))
           }
         }
-        override def hasNext: Boolean = { advance(); pending.nonEmpty }
+        override def hasNext: Boolean = { advance(); pending != null }
         override def next(): RecordAssembler.FlatRecord = {
-          advance(); val r = pending.get; pending = None; r
+          advance()
+          if (pending == null) throw new NoSuchElementException
+          val r = pending; pending = null; r
         }
       }
     }
@@ -342,9 +364,10 @@ object GedcomGraph {
       lease: graft.Lease = new graft.Lease): Graph =
     fromTextRdd(spark, textLines(spark, path), lease = lease)
 
-  /** A text file's lines, in two splits per core. */
+  /** A text file's lines, in two splits per core: the lines and splits
+    * `SparkContext.textFile` would give, read by [[TextSplits]]. */
   def textLines(spark: SparkSession, path: String): RDD[String] =
-    spark.sparkContext.textFile(path, spark.sparkContext.defaultParallelism * 2)
+    TextSplits(spark.sparkContext, path, spark.sparkContext.defaultParallelism * 2)
 
   /** Wide, directly queryable table for one record type: the union of the
     * tag's flattened property keys as real columns (same layout as the

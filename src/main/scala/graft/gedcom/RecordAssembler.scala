@@ -29,12 +29,23 @@ import scala.collection.mutable
   */
 object RecordAssembler {
 
-  /** Mutable record-tree node (mirrors the §1.1 record shape). */
-  final class Tree(
-      val id: Option[String],
-      val name: String,
-      var value: String,
-      val children: mutable.ArrayBuffer[Tree] = mutable.ArrayBuffer.empty)
+  /** Mutable record-tree node (mirrors the §1.1 record shape). A leaf
+    * allocates no child array. */
+  final class Tree(val id: Option[String], val name: String, var value: String) {
+    private var kids: Array[Tree] = null
+    private var n = 0
+    def childCount: Int = n
+    def foreachChild(f: Tree => Unit): Unit = {
+      var i = 0
+      while (i < n) { f(kids(i)); i += 1 }
+    }
+    def add(t: Tree): Unit = {
+      if (kids == null) kids = new Array[Tree](4)
+      else if (n == kids.length) kids = java.util.Arrays.copyOf(kids, n * 2)
+      kids(n) = t
+      n += 1
+    }
+  }
 
   /** Flattened output of one record. `props` is collection.Map so the
     * assembler's LinkedHashMap flows through without a per-record copy
@@ -51,6 +62,15 @@ object RecordAssembler {
 
   final case class Edge(src: String, dst: String, relType: String, rawTag: String)
 
+  /** A dictionary as a `java.util.HashMap`: a probe allocates no `Option`. */
+  private def javaMap(m: Map[String, String]): java.util.HashMap[String, String] = {
+    val j = new java.util.HashMap[String, String](m.size * 2)
+    m.foreach { case (k, v) => j.put(k, v) }
+    j
+  }
+  private val tagLabels = javaMap(Dictionaries.tagNames)
+  private val templeNames = javaMap(Dictionaries.templeCodes)
+
   private val BooleanTags = Set(
     "_DESC_FLAG", "_ITALIC", "_LDS", "_MASTER", "_NONE", "_PAREN", "_PRIM", "_PRIMARY")
 
@@ -58,20 +78,31 @@ object RecordAssembler {
     * the level-0 root). CONC appends to the pending parent value verbatim;
     * CONT appends with a newline. */
   def assemble(lines: Iterator[GedLine]): Tree = {
-    val it = lines.buffered
-    val first = it.next()
+    val first = lines.next()
     val root = new Tree(first.xref, first.tag, first.value)
-    val stack = mutable.ArrayBuffer[(Int, Tree)]((first.level, root))
-    it.foreach { l =>
-      while (stack.length > 1 && stack.last._1 >= l.level) stack.remove(stack.length - 1)
-      val parent = stack.last._2
+    // the open path from the root: each node's level beside it
+    var levels = new Array[Int](8)
+    var nodes = new Array[Tree](8)
+    levels(0) = first.level
+    nodes(0) = root
+    var depth = 1
+    while (lines.hasNext) {
+      val l = lines.next()
+      while (depth > 1 && levels(depth - 1) >= l.level) depth -= 1
+      val parent = nodes(depth - 1)
       l.tag match {
         case "CONC" => parent.value += l.value
         case "CONT" => parent.value += "\n" + l.value
         case _ =>
           val node = new Tree(None, l.tag, l.value)
-          parent.children += node
-          stack += ((l.level, node))
+          parent.add(node)
+          if (depth == levels.length) {
+            levels = java.util.Arrays.copyOf(levels, depth * 2)
+            nodes = java.util.Arrays.copyOf(nodes, depth * 2)
+          }
+          levels(depth) = l.level
+          nodes(depth) = node
+          depth += 1
       }
     }
     root
@@ -79,32 +110,32 @@ object RecordAssembler {
 
   /** Flatten one record tree per the reference's write() + _record_to_node. */
   def flatten(recordNo: Long, root: Tree): FlatRecord = {
-    val edges = mutable.ArrayBuffer.empty[Edge]
-    val unused = mutable.ArrayBuffer.empty[String]
-    val missingTemples = mutable.ArrayBuffer.empty[String]
+    val edges = mutable.ListBuffer.empty[Edge]
+    val unused = mutable.ListBuffer.empty[String]
+    val missingTemples = mutable.ListBuffer.empty[String]
 
-    Dictionaries.tagNames.get(root.name) match {
-      case None =>
+    tagLabels.get(root.name) match {
+      case null =>
         FlatRecord(recordNo, root.name, "", skipped = true, Map.empty, Nil, Nil, Nil)
-      case Some(label) =>
+      case label =>
         val rootId = root.id
 
         def recordToNode(record: Tree, includeId: Boolean): mutable.LinkedHashMap[String, String] = {
           val node = mutable.LinkedHashMap.empty[String, String]
           if (includeId) record.id.foreach(id => node("Gedcom Id:ID") = id)
-          record.children.foreach { child =>
-            Dictionaries.tagNames.get(child.name) match {
-              case None => unused += child.name
-              case Some(mapped) =>
+          record.foreachChild { child =>
+            tagLabels.get(child.name) match {
+              case null => unused += child.name
+              case mapped =>
                 var key = mapped
-                if (child.value != "" || child.children.isEmpty) {
+                if (child.value != "" || child.childCount == 0) {
                   if (child.value.startsWith("@")) {
                     rootId.foreach { id =>
                       edges += Edge(id, child.value.replace("@", ""), key, child.name)
                     }
                   } else applyTransform(node, child.name, key, child.value, missingTemples)
                 }
-                if (child.children.nonEmpty) {
+                if (child.childCount > 0) {
                   val childObj = recordToNode(child, includeId = false)
                   if (key == "Event") {
                     // EVEN promotion: the nested Type value becomes the
@@ -115,7 +146,7 @@ object RecordAssembler {
                     // (SURVEY §4.3; GedcomSpec pins this).
                     key = childObj.remove("Type").getOrElse("undefined")
                   }
-                  childObj.foreach { case (ck, cv) => node(s"$key $ck") = cv }
+                  childObj.foreachEntry { (ck, cv) => node(s"$key $ck") = cv }
                 }
             }
           }
@@ -127,7 +158,7 @@ object RecordAssembler {
           if (node.nonEmpty) { node(":LABEL") = label; node }
           else Map.empty[String, String]
         FlatRecord(recordNo, root.name, label, skipped = false, props,
-          edges.toSeq, unused.distinct.toSeq, missingTemples.distinct.toSeq)
+          edges.toList, unused.toList.distinct, missingTemples.toList.distinct)
     }
   }
 
@@ -137,16 +168,16 @@ object RecordAssembler {
       rawTag: String,
       key: String,
       value: String,
-      missingTemples: mutable.ArrayBuffer[String]): Unit = rawTag match {
+      missingTemples: mutable.ListBuffer[String]): Unit = rawTag match {
     case t if BooleanTags(t) =>
       node(key) = if (value.nonEmpty) "True" else "False"
     case "PLAC" =>
-      node(key) = Dictionaries.templeCodes.get(value)
-        .map(name => s"$name Temple").getOrElse(value)
+      val name = templeNames.get(value)
+      node(key) = if (name == null) value else s"$name Temple"
     case "TEMP" =>
-      Dictionaries.templeCodes.get(value) match {
-        case Some(name) => node(key) = name
-        case None => missingTemples += value; node(key) = value
+      templeNames.get(value) match {
+        case null => missingTemples += value; node(key) = value
+        case name => node(key) = name
       }
     case "NAME" =>
       // "First Middle /Last/": given = pre-slash, surname = between

@@ -34,7 +34,8 @@ import graft.gedcom.{CsvSink, GedcomGraph}
   *   tools/run.sh graft.tools.Prof --ged <file.ged> <passes>
   *
   * `--plans` writes `<dir>/<query>.txt`: `explain("formatted")` of the
-  * top-level frame and of the first emission of every probe label.
+  * top-level frame and of the first emission of every probe label; a
+  * later pass whose plan counts differ writes `<query>.pass<k>.txt`.
   * `--stages` adds one line per completed stage. `--ged` profiles the
   * GEDCOM -> CSV bulk load: for its summary and render passes the wall,
   * jobs, tasks, executor CPU and pinned bytes, and MB/s over both.
@@ -85,13 +86,35 @@ object Prof {
     }
   }
 
+  /** `--plans`' files under `dir`: a query's first pass writes
+    * `<query>.txt`, and a later pass k writes `<query>.pass<k>.txt` when
+    * its plan counts differ from every plan of the query written so far,
+    * so a query whose plan alternates between passes shows each plan. */
+  final class PlanFiles(dir: Path) {
+    Files.createDirectories(dir)
+    private val written = scala.collection.mutable.Map.empty[String, Set[PlanCounts]]
+
+    /** Writes `text` for pass `pass` of `query` if its counts are new;
+      * returns the file written. */
+    def write(query: String, pass: Int, counts: PlanCounts)(text: => String): Option[Path] = {
+      val seen = written.getOrElse(query, Set.empty)
+      if (seen(counts)) None
+      else {
+        written(query) = seen + counts
+        val file = dir.resolve(if (seen.isEmpty) s"$query.txt" else s"$query.pass$pass.txt")
+        Files.write(file, text.getBytes(StandardCharsets.UTF_8))
+        Some(file)
+      }
+    }
+  }
+
   /** Profile `names` for `passes` passes each, printing one line per pass. */
   def queries(spark: SparkSession, sfDir: String, passes: Int,
       names: Seq[String], plansDir: Option[Path] = None,
       perStage: Boolean = false): Seq[Pass] = {
     val sc = spark.sparkContext
     val mode = ExplainMode.fromString("formatted")
-    plansDir.foreach(Files.createDirectories(_))
+    val planFiles = plansDir.map(new PlanFiles(_))
     val onStage: StageInfo => Unit =
       if (!perStage) _ => ()
       else info => Option(info.taskMetrics).foreach { m =>
@@ -106,7 +129,7 @@ object Prof {
         .getOrElse(sys.error(s"unknown query: $name"))
       p <- 1 to passes
     } yield {
-      val withText = p == 1 && plansDir.isDefined
+      val withText = planFiles.isDefined
       // counted (and explained) as built: pins execute their frame's
       // adaptive plan right after emitting it
       def capture(qe: QueryExecution): (PlanCounts, String) =
@@ -131,16 +154,16 @@ object Prof {
         (frame, analyze, optimize, plan, execute, top)
       })
       val (frame, analyze, optimize, plan, execute, (topCounts, topText)) = run.result
-      if (withText) plansDir.foreach { dir =>
+      val counts = sections.values.map(_._1).foldLeft(topCounts)(_ + _)
+      planFiles.foreach(_.write(name, p, counts) {
         val body = new StringBuilder(s"==== $name :: top-level ====\n$topText\n")
         sections.foreach { case (label, (_, text)) =>
           body ++= s"\n==== $name :: $label ====\n$text\n"
         }
-        Files.write(dir.resolve(s"$name.txt"), body.toString.getBytes(StandardCharsets.UTF_8))
-      }
+        body.toString
+      })
       val r = Pass(name, p, frame.wall + analyze + optimize + plan + execute,
-        frame.wall, analyze, optimize, plan, execute, run.work, frame.work.jobs,
-        sections.values.map(_._1).foldLeft(topCounts)(_ + _))
+        frame.wall, analyze, optimize, plan, execute, run.work, frame.work.jobs, counts)
       println(r.line)
       r
     }

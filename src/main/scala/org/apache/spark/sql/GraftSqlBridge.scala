@@ -33,6 +33,11 @@ object GraftSqlBridge {
     m.setBytesWritten(m.bytesWritten + n)
   }
 
+  /** Counts `n` bytes in a task's input metrics, as Spark's own readers
+    * do (`incBytesRead` is `private[spark]`). */
+  def addBytesRead(ctx: org.apache.spark.TaskContext, n: Long): Unit =
+    ctx.taskMetrics().inputMetrics.incBytesRead(n)
+
   /** DataFrame straight from an RDD of InternalRows (UnsafeRow-compatible),
     * bypassing the Scala-object encoder entirely — `internalCreateDataFrame`
     * is `private[sql]`. Caller guarantees rows match `schema`. */

@@ -76,6 +76,23 @@ class CsvSinkSpec extends SparkSpec {
     }
   }
 
+  test("edge lines with quoting corners match the per-tag writer") {
+    // pointers with a comma, quotes, a backslash, leading and trailing
+    // spaces, and none at all (an empty end id)
+    val f = Files.createTempFile("edges", ".ged")
+    Files.writeString(f, Seq(
+      "0 @I,1@ INDI", "1 NAME A /B/", "1 FAMS @F \"1\"@", "1 ASSO @ lead@", "1 ASSO @trail @",
+      "1 ASSO @@", "0 @F \"1\"@ FAM", "1 HUSB @I,1@", "1 CHIL @back\\slash@", "0 TRLR", "")
+      .mkString("\n"))
+    try {
+      assertParity(f.toString, typedDates = false)
+      val g = GedcomGraph.fromFile(spark, f.toString)
+      try assert(g.edges.select("dst").collect().map(_.getString(0)).toSet ==
+        Set("F \"1\"", " lead", "trail ", "", "I,1", "back\\slash"))
+      finally g.release()
+    } finally Files.delete(f)
+  }
+
   /** A GEDCOM of 30 record tags whose rows flatten to 40+ keys each: every
     * value quoting corner (comma, quote, backslash, CONT newline, leading
     * and trailing space, empty), date keys in each shape of the grammar

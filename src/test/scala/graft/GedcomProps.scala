@@ -98,7 +98,7 @@ object GedcomProps extends Properties("gedcom") {
     recs.filter(r => !r.skipped && r.props.nonEmpty)
 
   /** The summary of `ref`, scanned from its records without
-    * `SplitStats.add`, so a fault in the fold cannot hide on both sides. */
+    * `SplitStats.Builder`, so a fault in the fold cannot hide on both sides. */
   private def referenceStats(ref: Seq[RecordAssembler.FlatRecord]): GedcomGraph.SplitStats =
     GedcomGraph.SplitStats(
       nodes(ref).groupBy(_.rawTag).map { case (t, rs) => t -> rs.flatMap(_.props.keys).toSet },

@@ -281,24 +281,34 @@ class GedcomSpec extends SparkSpec {
   }
 
   test("no gedcom source reads text but GedcomGraph.textLines: one split policy") {
-    // split so this file does not match itself
-    val needle = "textFile" + "("
-    val files = {
-      val s = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft/gedcom"))
+    def sources(dir: String) = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
       try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
       finally s.close()
     }
-    assert(files.exists(_.endsWith("gedcom/GedcomGraph.scala")))
-    // each call must sit in the body of `def textLines`, the last def above it
-    val offenders = files.flatMap { f =>
-      val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-      Iterator.iterate(text.indexOf(needle))(i => text.indexOf(needle, i + 1))
-        .takeWhile(_ >= 0)
-        .filterNot(i => f.endsWith("gedcom/GedcomGraph.scala") &&
-          text.lastIndexOf("def ", i) == text.lastIndexOf("def textLines(", i))
-        .map(i => s"$f: offset $i")
-    }
+    def text(f: java.nio.file.Path) = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+    // split so this file does not match itself
+    val anywhere = Seq("textFile" + "(", "hadoopFile" + "(")
+    val outsideReader = Seq("LineRecord" + "Reader", "FileChannel" + ".open(")
+    val reader = sources("src/main/scala/graft/gedcom").filter(_.endsWith("gedcom/TextSplits.scala"))
+    assert(reader.size == 1 && outsideReader.forall(text(reader.head).contains(_)))
+    val offenders =
+      sources("src/main/scala").flatMap(f => anywhere.filter(text(f).contains(_)).map(n => s"$f: $n")) ++
+        sources("src/main/scala/graft/gedcom").filterNot(reader.contains)
+          .flatMap(f => outsideReader.filter(text(f).contains(_)).map(n => s"$f: $n"))
     assert(offenders.isEmpty, offenders.mkString(", "))
+  }
+
+  test("textLines on a file: path starts no job and broadcasts nothing") {
+    val sc = spark.sparkContext
+    val before = org.apache.spark.BroadcastProbe.broadcastIds(sc)
+    val (splits, jobs) = withJobCount(GedcomGraph.textLines(spark, fixture).getNumPartitions)
+    assert(jobs == 0 && splits > 1)
+    assert(org.apache.spark.BroadcastProbe.broadcastIds(sc) -- before == Set.empty)
+    // the probe sees a broadcast made in the same window
+    val b = sc.broadcast(0)
+    try assert(org.apache.spark.BroadcastProbe.broadcastIds(sc) -- before == Set(b.id))
+    finally b.destroy()
   }
 
   test("the stitched boundary records ride in one partition beside the splits") {

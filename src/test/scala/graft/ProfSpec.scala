@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.ListenerBusProbe
 import org.apache.spark.sql.functions.col
 
@@ -22,6 +24,27 @@ class ProfSpec extends SparkSpec {
   test("Prof counts frame-build jobs apart: q01_agg's table read starts none") {
     val Seq(p) = tools.Prof.queries(spark, SF, 1, Seq("q01_agg"))
     assert(p.frameJobs == 0 && p.work.jobs >= 1, p)
+  }
+
+  test("Prof --plans writes each distinct plan of a query once") {
+    val dir = java.nio.file.Files.createTempDirectory("prof-plans")
+    def names = {
+      val s = java.nio.file.Files.list(dir)
+      try s.iterator.asScala.map(_.getFileName.toString).toSet finally s.close()
+    }
+    try {
+      // q01_agg's plan is the same on both passes: one file
+      tools.Prof.queries(spark, SF, 2, Seq("q01_agg"), Some(dir))
+      assert(names == Set("q01_agg.txt"))
+      val files = new tools.Prof.PlanFiles(dir)
+      val (a, b) = (tools.Prof.PlanCounts(17, 0, 2), tools.Prof.PlanCounts(13, 0, 2))
+      assert(files.write("q65", 1, a)("plan a").map(_.getFileName.toString) == Some("q65.txt"))
+      assert(files.write("q65", 2, a)("plan a again").isEmpty)
+      assert(files.write("q65", 3, b)("plan b").map(_.getFileName.toString) == Some("q65.pass3.txt"))
+      assert(files.write("q65", 4, a)("plan a").isEmpty && files.write("q65", 5, b)("plan b").isEmpty)
+      assert(new String(java.nio.file.Files.readAllBytes(dir.resolve("q65.pass3.txt")), "UTF-8") == "plan b")
+      assert(names == Set("q01_agg.txt", "q65.txt", "q65.pass3.txt"))
+    } finally CsvFiles.delete(dir.toFile)
   }
 
   /** A fixed shape: a 4-partition range, one aggregation exchange. */
